@@ -12,7 +12,9 @@ similarity search, text analysis).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,248 +31,50 @@ def entry(spark: SparkSession) -> DataFrame:
     return fn(spark, _SF0001)
 
 
-# The correctness driver records at most ~50 rows, taking them in dict
-# order. Rotation policy since r08 (VERDICT r7 #1): pure staleness
-# order, AMENDED in r12 (VERDICT r11 #1): any query whose operator
-# body changed in round N heads round N+1's window, displacing
-# staleness order — the driver's oracle is the only independent hash
-# authority, and a rebuilt operator must not ship rounds unchecked.
-# r13 window: the 18 queries the r13 persist-fence reverts and the
-# shingle-repartition re-pin touch, then token_count_bpe/wrap_text
-# (displaced from r12's window tail, VERDICT r12 #7), then the r09
-# cohort (stalest; its r13-changed members are hoisted into the head
-# block, and its alphabetical tail past the ~50-slot window slips to
-# r14). Below that, staleness order continues: r10 cohort, r11 cohort,
-# r12-checked block (former r08 cohort + the two suffix rows) last.
-# Any new query splices at the marked insert point, after changed
-# queries, displacing the tail. The committed tools/check_oracle.py
-# triple-gate runs (ORACLE_LOCAL/_EDGE/_SF01: full registry,
-# 0 failures) remain the auditable backstop for the tail the 50-slot
-# window cannot reach.
-_DRIVER_PRIORITY = (
-    # --- operator body changed in r13 (jumps the queue; the policy
-    # amended per VERDICT r11 #1 and kept since): r13 removed the r12
-    # persist fences (embedding_near_dup, minhash bands, semantic asg
-    # re-added after a two-protocol A/B, bloom bits, kmv sk,
-    # char_coverage cnt) and re-pinned the shingle repartition width to
-    # spark.sql.shuffle.partitions — every query whose operator body or
-    # plan shape those touch heads the r13 window. ---------------------
-    "embedding_near_dup",
-    "semantic_dedup",
-    "dedup_minhash_lsh",
+# The external correctness check records at most ~50 rows, taking them in
+# dict order. The queries whose operator body the latest change touched
+# head the window: that check's oracle is the only independent hash
+# authority, and a rebuilt operator must not ship unchecked. Every other query
+# follows in staleness order, derived from the committed
+# CORRECTNESS_r*.json records: last round checked, never-checked first,
+# ties alphabetical. tools/check_oracle.py's triple-gate runs stay the
+# backstop for the tail the window cannot reach.
+_CHANGED = (
+    # reach the shared shingle / MinHash kernels (operators/dedup.py
+    # doc_gram_hashes, minhash_mins)
+    "containment_dedup",
+    "decontaminate_minhash",
+    "dedup_allpairs_prefix",
     "dedup_clusters",
     "dedup_clusters_logstar",
-    "leakage_safe_split",
-    "dedup_ngram_jaccard",
     "dedup_graph_pagerank",
+    "dedup_minhash_lsh",
+    "dedup_ngram_jaccard",
     "dedup_weighted_jaccard",
-    "dedup_allpairs_prefix",
-    "containment_dedup",
     "incremental_dedup",
-    "shingle_novelty",
+    "leakage_safe_split",
     "lsh_parameter_sweep",
-    "probe_minhash_candidates",
-    "bloom_join_prune",
-    "kmv_set_intersection",
-    "char_coverage",
-    # --- displaced from the r12 window's tail (VERDICT r12 #7) ---------
-    "token_count_bpe",
-    "wrap_text",
-    # --- new r13 queries (never driver-checked) insert HERE -------------
-    # --- last driver-checked r09 (stalest cohort; the r13-changed
-    # members above are pulled out of cohort order) ---
-    "ann_cosine_topk_ivfpq",
-    "ann_ivf_persisted",
-    "ann_recall_at_k",
-    "approx_distinct_contract",
-    "approx_quantile_binned",
-    "audio_fingerprint_dedup",
-    "bm25_retrieval",
-    "bucketed_join_agg",
-    "cohort_retention",
-    "copurchase_triangles",
-    "corpus_final_manifest",
-    "corpus_repeated_spans",
-    "crossval_split",
-    "curriculum_manifest",
-    "decontaminate_ngram",
-    "doc_chunking",
-    "dq_checks",
-    "dsir_importance",
-    "embedding_pq_codes",
-    "events_anomaly",
-    "format_string",
-    "funnel_analysis",
-    "hll_registers",
-    "hybrid_retrieval_rerank",
-    "inverted_index_stats",
-    "latest_snapshot",
     "minhash_similarity_estimate",
-    "mixture_temperature",
-    "order_backlog_timeline",
-    "pmi_bigrams",
-    "quality_logit_filter",
-    "reservoir_sample_k",
-    "rolling_features",
-    "scd2_customer_merge",
-    "selection_pipeline_e2e",
-    "skew_salted_join",
-    "suffix_array_ranks",
-    "table_profile",
-    "tfidf_top_terms",
-    "timeseries_resample",
-    "training_shards",
-    "vocab_richness",
-    # --- last driver-checked r10 (the former-r06 cohort) ---
-    "activity_streaks",
-    "asof_join",
-    "bloom_zone_skipping",
-    "bootstrap_ci",
-    "c4_line_filters",
-    "corpus_snapshot_diff",
-    "cube_segment_metrics",
-    "date_functions",
-    "decontaminate_minhash",
-    "embedding_outliers",
-    "entity_resolution",
-    "ewma_events",
-    "gopher_quality_rules",
-    "greedy_coverage_selection",
-    "group_linreg",
-    "join_cardinality_probe",
-    "kcore_peeling",
-    "ks_drift_check",
-    "lang_confusion",
-    "length_quantile_filter",
-    "media_audio_energy",
-    "media_video_pipeline",
-    "oov_rate",
-    "pareto_frontier",
-    "perceptron_train",
-    "pivot_event_type",
-    "probe_events_ts",
-    "probe_events_value_bits",
-    "probe_lineitem_dates",
-    "probe_money_bits",
-    "probe_money_cents",
-    "probe_orders_dates",
-    "probe_orders_priority",
-    "q12_ship_delay_priority",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q8_market_share",
-    "range_interval_window",
-    "rolling_active_users",
-    "session_window_stats",
-    "shuffle_skew_profile",
-    "theilsen_slope",
-    "top_p_selection",
-    "window_functions",
-    "zone_map_pruning",
-    "zorder_layout",
-    # --- last driver-checked r11 (the former-r07 cohort; freshest, so last) ---
-    "cdc_chunking",
-    "edit_distance_join",
-    "exact_percentiles",
-    "grouping_sets",
-    "interval_join_attribution",
-    "join_strings",
-    "jsonpath_scalar",
-    "jsonpath_wildcard_fanout",
-    "length_histogram",
-    "lm_bigram_score",
-    "media_audio_chunk",
-    "media_frame_sample",
-    "media_image_phash",
-    "media_image_resize",
-    "media_image_stats",
-    "merkle_diff",
-    "mixture_sample",
-    "mixture_waterfill",
-    "pack_manifest",
-    "percentile_by_group",
-    "pii_redact",
-    "pipeline_e2e",
-    "planner_advice",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_qty_revenue",
-    "q19_disjunctive_pred",
-    "q22_idle_customers",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "quality_score",
-    "range_join_binned",
-    "rendezvous_sharding",
-    "rollup_lineitem",
-    "schema_cast",
-    "semi_anti_join",
-    "sessionization",
-    "set_ops",
-    "stratified_sample",
-    "token_count",
-    "top_k_per_group",
-    "windowed_agg",
-    "word_frequencies",
-    "zip_merge_positional",
-    # --- last driver-checked r12 (the former-r08 cohort plus the two
-    # suffix rows; freshest, so last — reaches the driver again in r16) ---
-    "agg_distinct",
-    "ann_cosine_topk",
-    "ann_cosine_topk_ivf",
-    "ann_cosine_topk_lsh",
-    "ass_time_format",
-    "bpe_train_merges",
-    "chunk_dedup",
-    "cms_heavy_hitters",
-    "coalesce_priority",
-    "corpus_prep",
-    "dedup_exact",
-    "dedup_simhash",
-    "dedup_stats",
-    "doc_fingerprint",
-    "dup_ngram_coverage",
-    "dup_span_removal",
-    "embedding_kmeans",
-    "embedding_stats",
-    "gather_join_strings",
-    "index_targeting",
-    "json_auto_detect",
-    "lang_id",
-    "normalize_text",
-    "outer_join_agg",
-    "pivot_event_counts",
-    "ppl_bucket_mixture",
-    "q11_important_stock",
-    "q14_promo_revenue",
-    "q16_supplier_part_count",
-    "q18_large_orders",
-    "q20_dominant_supplier",
-    "q21_waiting_supplier",
-    "q2_min_cost_supplier",
-    "q9_product_profit",
-    "repetition_signals",
-    "sequence_packing",
-    "sequence_packing_greedy",
-    "sketch_aggregates",
-    "sketch_error_bounds",
-    "skew_salted_agg",
-    "stop_pipeline_comparators",
-    "subtitles_from_transcription",
-    "text_replace",
-    "corpus_maximal_repeats",
-    "lcp_interval_census",
+    "probe_minhash_candidates",
+    "shingle_novelty",
 )
+
+
+def _last_checked() -> dict[str, int]:
+    """Query name -> last round whose CORRECTNESS record checked it."""
+    last: dict[str, int] = {}
+    for path in Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.split("_r")[1])
+        for name in json.loads(path.read_text()):
+            last[name] = max(rnd, last.get(name, 0))
+    return last
 
 
 def _ordered() -> dict[str, tuple]:
     registry = load_all()
-    out = {n: registry[n] for n in _DRIVER_PRIORITY if n in registry}
-    out.update(registry)
-    return out
+    last = _last_checked()
+    tail = sorted(set(registry) - set(_CHANGED), key=lambda n: (last.get(n, 0), n))
+    return {n: registry[n] for n in (*_CHANGED, *tail)}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

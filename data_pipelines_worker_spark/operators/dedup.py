@@ -40,45 +40,6 @@ PERM_B = [i * 104729 + 12345 for i in range(1, N_PERM + 1)]
 MERSENNE = MOD  # 2^31 - 1
 
 
-def shingles(words: Column, k: int = 3) -> Column:
-    """Distinct word k-grams (space-joined). Empty array when the document
-    has fewer than k words (guarded: Spark's sequence(0, -1) would descend,
-    not produce an empty array)."""
-    idx = F.sequence(F.lit(0), F.size(words) - k)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + j + 1) for j in range(k)]
-        ),
-    )
-    return F.when(F.size(words) >= k, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def hashed_shingles(words: Column, k: int = 3) -> Column:
-    """Distinct word k-grams hashed to 64-bit longs (``xxhash64`` of the
-    space-joined gram).
-
-    The scale representation: every downstream stage (persist, explode
-    shuffle, inverted-index join, candidate verify via ``array_intersect``)
-    carries 8-byte longs instead of ~20-byte gram strings. Jaccard over
-    hashed shingles equals Jaccard over the grams themselves except under
-    64-bit collisions *within a compared pair* — per-pair probability
-    ~|sh|²/2⁶⁴, vanishing even at trillion-shingle corpora."""
-    idx = F.sequence(F.lit(0), F.size(words) - k)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + j + 1) for j in range(k)]
-        ),
-    )
-    hashed = F.transform(grams, lambda g: F.xxhash64(g))
-    return F.when(F.size(words) >= k, F.array_distinct(hashed)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact dedup: every row mapped to the minimum id sharing its content.
 
@@ -101,46 +62,66 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
-    """(doc, sh: array<bigint>) — distinct hashed k-shingles per document.
+def doc_gram_hashes(
+    df: DataFrame, id_col: str, text_col: str, k: int, hash=F.xxhash64
+) -> DataFrame:
+    """(doc, h) — one row per word k-gram of every document, ``hash``-ed.
 
-    Codegen zip form (r12, replacing the r06 window-lead form): the gram
-    array is k shifted ``slice`` views zipped positionally
-    (``curation._ngram_zip`` — whole-stage codegen; the even earlier
-    ``transform(sequence, …)`` lambda chain evaluated ~2 interpreted
-    closures per shingle and stays rejected), exploded and hashed in the
-    stage AFTER an explicit doc-keyed repartition. Same grams, same one
-    exchange as the window form, but the exchange now carries one TEXT
-    row per document instead of one row per token (fewer rows, no pos
-    column) and the per-partition window SORT of the token stream is
-    gone — the downstream ``groupBy(doc)`` reuses the hash(doc)
-    partitioning, so hashing/gram-assembly still parallelize across
-    cores regardless of the scan's input-split count (the r06 concern).
-    sort_array makes the assembled array deterministic.
+    The one shingle kernel of the dedup family: every shingle set and
+    MinHash signature starts here. ``hash`` maps the space-joined gram
+    column to a long — xxhash64 in production; the oracle-pinned queries
+    pass an engine-portable hash DuckDB can reproduce.
+
+    Shape: one doc-keyed exchange of TEXT rows, then the grams are built
+    in whole-stage codegen AFTER the exchange — k shifted ``slice`` views
+    zipped positionally (``curation._ngram_zip``), exploded and hashed.
+    The exchange carries one row per document, not one per token, and a
+    downstream ``groupBy(doc)`` reuses the hash(doc) partitioning. (A
+    ``transform(sequence, …)`` lambda chain evaluates ~2 interpreted
+    closures per shingle; a window-lead form sorts the token stream.)
+
+    The exchange width is ``spark.sql.shuffle.partitions`` (the
+    cluster-sized config), NOT ``defaultParallelism`` (a local-mode core
+    count) and NOT a keyless ``repartition(col)``: a keyless doc exchange
+    is AQE-coalescible, and at the benched SFs AQE coalesced it to ONE
+    partition (measured r13: ``spark_partition_id().distinct() == 1`` vs
+    32 pinned), serializing the gram/hash stage — whose per-gram compute
+    is orders of magnitude heavier than the shuffled text bytes AQE sizes
+    it by. Locally shuffle.partitions == defaultParallelism anyway.
     """
     from .curation import _gram_from_zip, _ngram_zip
 
-    # Explicit width from spark.sql.shuffle.partitions (cluster-sized
-    # config), NOT defaultParallelism (a local-mode core count — ADVICE
-    # r12) and NOT keyless repartition(col): a keyless doc exchange is
-    # AQE-coalescible, and at the benched SFs AQE coalesces it to ONE
-    # partition (measured r13: spark_partition_id().distinct() == 1 vs 32
-    # pinned), serializing the gram-zip/hash stage that follows — the
-    # compute here is per-gram, orders of magnitude heavier than the
-    # shuffled text bytes AQE sizes the stage by. The explicit count
-    # keeps the stage at full width; locally shuffle.partitions ==
-    # defaultParallelism, so the executed plan matches the r12 form.
     npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    grams = (
+    return (
         df.repartition(npart, F.col(id_col))
         .select(
             F.col(id_col).alias("doc"),
             F.explode(_ngram_zip(text_col, k)).alias("_g"),
         )
-        .select("doc", F.xxhash64(_gram_from_zip(k)).alias("h"))
+        .select("doc", hash(_gram_from_zip(k)).alias("h"))
     )
+
+
+def minhash_mins(h: str) -> list[Column]:
+    """The ``N_PERM`` MinHash aggregates ``m0 .. m{N_PERM-1}`` over the
+    long column ``h``: ``min(pmod(h·PERM_A[i] + PERM_B[i], MERSENNE))``.
+    Used as ``groupBy(key).agg(*minhash_mins("h"))`` — the mins combine
+    map-side, so the shuffle carries ``N_PERM`` longs per group."""
+    return [
+        F.min(F.pmod(F.col(h) * PERM_A[i] + PERM_B[i], F.lit(MERSENNE))).alias(
+            f"m{i}"
+        )
+        for i in range(N_PERM)
+    ]
+
+
+def _doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(doc, sh: array<bigint>) — distinct xxhash64 k-shingles per
+    document (:func:`doc_gram_hashes`); sort_array makes the array
+    deterministic. The ``groupBy(doc)`` reuses the kernel's exchange."""
     return (
-        grams.groupBy("doc")
+        doc_gram_hashes(df, id_col, text_col, k)
+        .groupBy("doc")
         .agg(F.sort_array(F.collect_set("h")).alias("sh"))
         .where(F.size("sh") > 0)
     )
@@ -494,25 +475,6 @@ def shingle_novelty(
     )
 
 
-def minhash_signature(sh: Column) -> Column:
-    """64-permutation MinHash signature of a *hashed* shingle array
-    (:func:`hashed_shingles` output — xxhash64 longs).
-
-    Map-only columnar alternative to the explode+aggregate path in
-    :func:`minhash_lsh_pairs` (same permutations, identical values); that
-    path is preferred because the mins partial-aggregate map-side and the
-    shuffle carries 64 longs/doc. Returns array<long> of length N_PERM.
-    """
-    base = F.transform(sh, lambda s: F.pmod(s, F.lit(MERSENNE)))
-    mins = [
-        F.array_min(
-            F.transform(base, lambda h: F.pmod(h * PERM_A[i] + PERM_B[i], F.lit(MERSENNE)))
-        )
-        for i in range(N_PERM)
-    ]
-    return F.array(*mins)
-
-
 def minhash_lsh_pairs(
     df: DataFrame, id_col: str, text_col: str, threshold: float = 0.6, k: int = 3
 ) -> DataFrame:
@@ -540,24 +502,13 @@ def minhash_lsh_pairs(
     reps = members.select(F.col("rep").alias("doc")).distinct()
     d = _doc_shingles(df, id_col, text_col, k).join(reps, "doc").persist()
     # Signature via explode + 64 min-aggregates: each shingle is hashed
-    # ONCE (the columnar minhash_signature() inlines the base-hash transform
-    # into all 64 permutations — 64× the hashing and array churn), and the
-    # mins partial-aggregate map-side, so the shuffle carries only
-    # 64 longs/doc.
-    # sh entries are already xxhash64(gram) (hashed_shingles), so the base
-    # hash is just the modular reduction — signatures are bit-identical to
-    # hashing the gram strings here.
+    # ONCE, and the mins partial-aggregate map-side, so the shuffle
+    # carries only 64 longs/doc. sh entries are already xxhash64(gram),
+    # so the base hash is just the modular reduction.
     ex = d.select("doc", F.explode("sh").alias("s")).withColumn(
         "h", F.pmod(F.col("s"), F.lit(MERSENNE))
     )
-    sig = ex.groupBy("doc").agg(
-        *[
-            F.min(F.pmod(F.col("h") * PERM_A[i] + PERM_B[i], F.lit(MERSENNE))).alias(
-                f"m{i}"
-            )
-            for i in range(N_PERM)
-        ]
-    )
+    sig = ex.groupBy("doc").agg(*minhash_mins("h"))
     band_arr = F.array(
         *[
             F.xxhash64(
@@ -1006,34 +957,21 @@ def _doc_weighted_shingles(
     the streaming prefix-index face so the two cannot fork on what an
     expanded element is. Output-sized: total elements = total grams.
 
-    Gram construction is the codegen zip form (r12 — see
-    :func:`_doc_shingles`): one doc-keyed exchange of TEXT rows, grams
-    zipped/exploded/hashed post-exchange in whole-stage codegen, and the
-    (doc, hg) count plus both downstream doc-keyed aggregates reuse the
-    hash(doc) partitioning — no window sort of the token stream. The
-    expanded element is the hash of (gram-hash, occurrence index), same
-    collision class as hashing the pair directly."""
-    from .curation import _gram_from_zip, _ngram_zip
-
-    # Explicit width from spark.sql.shuffle.partitions — same rationale
-    # as _doc_shingles: config-sized (not a local core count), and
-    # pinned so AQE cannot coalesce the compute-heavy gram stage to one
-    # partition (measured r13).
-    npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    grams = (
-        df.repartition(npart, F.col(id_col))
-        .select(
-            F.col(id_col).alias("doc"),
-            F.explode(_ngram_zip(text_col, k)).alias("_g"),
-        )
-        .select("doc", F.xxhash64(_gram_from_zip(k)).alias("hg"))
+    Grams come from :func:`doc_gram_hashes`; the (doc, gram-hash) count
+    and both downstream doc-keyed aggregates reuse its hash(doc)
+    partitioning. The expanded element is the hash of (gram-hash,
+    occurrence index), same collision class as hashing the pair
+    directly."""
+    counted = (
+        doc_gram_hashes(df, id_col, text_col, k)
+        .groupBy("doc", "h")
+        .agg(F.count("*").alias("c"))
     )
-    counted = grams.groupBy("doc", "hg").agg(F.count("*").alias("c"))
     ex = counted.select(
-        "doc", "hg", F.explode(F.sequence(F.lit(1), F.col("c"))).alias("occ")
+        "doc", "h", F.explode(F.sequence(F.lit(1), F.col("c"))).alias("occ")
     )
     return (
-        ex.select("doc", F.xxhash64("hg", "occ").alias("h"))
+        ex.select("doc", F.xxhash64("h", "occ").alias("h"))
         .groupBy("doc")
         .agg(F.sort_array(F.collect_set("h")).alias("sh"))
         .where(F.size("sh") > 0)

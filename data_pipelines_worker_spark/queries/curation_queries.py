@@ -779,23 +779,16 @@ def q_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-filter would break the exact ">= 32 of 64" contract the oracle
     pins (32 agreements need not concentrate 8 in one band).
     """
-    from ..operators.dedup import PERM_A, PERM_B
+    from ..operators.dedup import minhash_mins
 
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select("doc_id", F.explode(F.split("text", " ", -1)).alias("w"))
     code = (F.ascii(F.substring("w", 1, 1)) + F.length("w")).cast("long")
     codes = w.select("doc_id", code.alias("code")).distinct()
-    sig = codes.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(F.col("code") * PERM_A[i] + PERM_B[i], F.lit(ta.MOD))).alias(
-                f"m{i}"
-            )
-            for i in range(64)
-        ]
     # persist: the benchmark slice and the corpus slice both read sig —
     # without the cut the explode + distinct + 64-min aggregate (a full
     # corpus pass) runs twice (r12 recompute audit)
-    ).persist()
+    sig = codes.groupBy("doc_id").agg(*minhash_mins("code")).persist()
     bench = (
         sig.filter(F.col("doc_id") % 97 == 0)
         .orderBy("doc_id")

@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.intmath import md5_fold60
 from ..operators import dedup
 from ..session import load_table
 from . import register
@@ -530,6 +531,13 @@ def q_shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SWEEP_CONFIGS = ((32, 2), (16, 4), (8, 8), (4, 16))
 
 
+def _portable_gram_hash(gram):
+    """The engine-portable shingle hash of the oracle-pinned MinHash
+    queries: md5 folded to 60 bits, reduced mod 2^31-1 — DuckDB twin
+    ``CAST(concat('0x', substr(md5(gram), 1, 15)) AS BIGINT) % M``."""
+    return F.pmod(md5_fold60(gram), F.lit(dedup.MERSENNE))
+
+
 def _sweep_oracle() -> str:
     from ..operators.dedup import MERSENNE, N_PERM, PERM_A, PERM_B
 
@@ -618,7 +626,7 @@ def q_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     32x2 -> 4x16, exactly the 1-(1-J^r)^b trade. Signatures ride an
     engine-portable shingle hash (md5 hex folded to 60 bits, reduced mod
     2^31-1) so the oracle reproduces every minimum bit-for-bit
-    (operators/dedup.py:minhash_signature is the xxhash64 production
+    (operators/dedup.py:minhash_lsh_pairs is the xxhash64 production
     twin; reference behavior: firewut/data-pipelines-worker has no LSH —
     this is a beyond-reference scale operator).
 
@@ -630,7 +638,6 @@ def q_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB one runs this sweep on a sampled slice to choose the
     config, then the chosen (b, r) drives dedup_minhash_lsh.
     """
-    from ..operators.dedup import MERSENNE, N_PERM, PERM_A, PERM_B
     from ..session import local_df
 
     docs = load_table(spark, sf_dir, "documents")
@@ -641,43 +648,19 @@ def q_lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = docs.join(reps, docs["doc_id"] == reps["doc"], "left_semi")
     words = F.split(F.col("text"), " ", -1)
-    # codegen zip-gram form (r12, the _doc_shingles shape): one doc-keyed
-    # exchange of text rows, grams zipped/exploded/hashed post-exchange —
-    # no token-stream window sort; distinct + the signature aggregate
-    # reuse the hash(doc) partitioning
-    from ..operators.curation import _gram_from_zip, _ngram_zip
-
-    gram = _gram_from_zip(3)
-    h = F.pmod(
-        F.conv(F.substring(F.md5(gram), 1, 15), 16, 10).cast("long"),
-        F.lit(MERSENNE),
-    )
     inv = (
-        base.where(F.size(words) >= 3)
-        .repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), F.col("doc_id")
+        dedup.doc_gram_hashes(
+            base.where(F.size(words) >= 3), "doc_id", "text", 3, _portable_gram_hash
         )
-        .select(
-            F.col("doc_id").alias("doc"),
-            F.explode(_ngram_zip("text", 3)).alias("_g"),
-        )
-        .select("doc", h.alias("h"))
         .distinct()
         # persist: inv feeds the signature aggregate, BOTH sides of the
         # inverted-index self-join, and the set-size aggregate — without
-        # the cut the posexplode + doc-keyed window + distinct pipeline
+        # the cut the gram exchange + explode + distinct pipeline
         # (a full corpus pass) ran FIVE times in one plan (r12 recompute
         # audit: 40 parquet scans of documents in the before plan)
         .persist()
     )
-    sig = inv.groupBy("doc").agg(
-        *[
-            F.min(F.pmod(F.col("h") * PERM_A[i] + PERM_B[i], F.lit(MERSENNE))).alias(
-                f"m{i}"
-            )
-            for i in range(N_PERM)
-        ]
-    )
+    sig = inv.groupBy("doc").agg(*dedup.minhash_mins("h"))
     band_structs = []
     for b, r in _SWEEP_CONFIGS:
         for i in range(b):
@@ -861,41 +844,15 @@ def q_probe_minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size(words) >= 3)
         .select("doc_id", "text")
     )
-    # codegen zip-gram form (r12, the _doc_shingles shape): one doc-keyed
-    # exchange of text rows, no token-stream window sort; distinct and
-    # the signature aggregate reuse the hash(doc_id) partitioning
-    from ..operators.curation import _gram_from_zip, _ngram_zip
-
-    grams = (
-        base.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), F.col("doc_id")
-        )
-        .select("doc_id", F.explode(_ngram_zip("text", 3)).alias("_g"))
-        .select("doc_id", _gram_from_zip(3).alias("gram"))
-    )
-    hcol = F.pmod(
-        F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("long"),
-        F.lit(_M),
-    )
-    dh = grams.select("doc_id", hcol.alias("h")).distinct()
-    sig = dh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.col("h") * F.lit(dedup.PERM_A[i]) + F.lit(dedup.PERM_B[i]),
-                    F.lit(_M),
-                )
-            ).alias(f"m{i}")
-            for i in range(dedup.N_PERM)
-        ]
-    )
+    dh = dedup.doc_gram_hashes(base, "doc_id", "text", 3, _portable_gram_hash)
+    sig = dh.distinct().groupBy("doc").agg(*dedup.minhash_mins("h"))
     band_arr = F.array(
         *[
             F.col(f"m{2 * b}") * F.lit(_M).cast("long") + F.col(f"m{2 * b + 1}")
             for b in range(dedup.N_BANDS)
         ]
     )
-    bands = sig.select("doc_id", F.posexplode(band_arr).alias("band", "bkey"))
+    bands = sig.select("doc", F.posexplode(band_arr).alias("band", "bkey"))
     buckets = bands.groupBy("band", "bkey").agg(F.count("*").alias("c"))
     return buckets.groupBy(F.col("c").alias("bucket_size")).agg(
         F.count("*").cast("long").alias("n_buckets"),

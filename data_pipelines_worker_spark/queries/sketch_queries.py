@@ -503,7 +503,7 @@ def q_minhash_similarity_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: |sources|² pair comparisons on 64-long signatures is the
     *whole point* — compare sketches, never the sets; the exact side
     here is the verifier and would be dropped at 100 TB."""
-    from ..operators.dedup import PERM_A, PERM_B
+    from ..operators.dedup import minhash_mins
     from ..session import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -517,14 +517,7 @@ def q_minhash_similarity_estimate(spark: SparkSession, sf_dir: str) -> DataFrame
     # explode+distinct across all six consumers; a persist only added a
     # materialization barrier
     codes = w.select("source", code.alias("code")).distinct()
-    sig = codes.groupBy("source").agg(
-        *[
-            F.min(F.pmod(F.col("code") * PERM_A[i] + PERM_B[i], F.lit(MOD))).alias(
-                f"m{i}"
-            )
-            for i in range(MH_P)
-        ]
-    )
+    sig = codes.groupBy("source").agg(*minhash_mins("code"))
     a, b = sig.alias("a"), sig.alias("b")
     match_perms = sum(
         (

@@ -2,12 +2,20 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+#: The reference worker's shipped pipeline JSONs, in its checkout beside this
+#: repository. They are not part of this repo; the tests that run them go
+#: through the ``reference_pipelines`` fixture and skip when it is absent.
+REFERENCE_PIPELINES = (
+    Path(__file__).resolve().parents[2] / "reference" / "config" / "pipelines"
+)
 
 # Long-haul tests excluded from the DEFAULT run (pytest.ini deselects the
 # `slowsuite` marker) so the suite fits the external driver's verification
@@ -71,11 +79,27 @@ _SLOWSUITE = {
 }
 
 
+@pytest.hookimpl(tryfirst=True)  # see every item, before -k/-m deselect
 def pytest_collection_modifyitems(config, items):
+    matched, files = set(), set()
     for item in items:
         nid = item.nodeid.split("tests/")[-1]
+        files.add(nid.split("::")[0])
         if nid in _SLOWSUITE:
+            matched.add(nid)
             item.add_marker(pytest.mark.slowsuite)
+    # Fail closed: an entry whose file was collected whole but that matched
+    # no item is stale (renamed, moved or parametrized test) and would let
+    # a long-haul test back into the default run. Files collected only in
+    # part (a node id on the command line) or not at all are not judged.
+    partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
+    stale = sorted(
+        e for e in _SLOWSUITE - matched if e.split("::")[0] in files - partial
+    )
+    if stale:
+        raise pytest.UsageError(
+            "_SLOWSUITE entries match no collected test: " + ", ".join(stale)
+        )
 
 
 @pytest.fixture(scope="session")
@@ -90,3 +114,10 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture(scope="session")
+def reference_pipelines() -> Path:
+    if not REFERENCE_PIPELINES.is_dir():
+        pytest.skip("reference pipeline JSONs not mounted")
+    return REFERENCE_PIPELINES

@@ -16,13 +16,6 @@ def test_exact_dedup_min_id_canonical(spark):
     assert out == {1: (1, False), 3: (1, True), 5: (1, True), 2: (2, False)}
 
 
-def test_shingles_k3(spark):
-    df = spark.createDataFrame([(["a", "b", "c", "d"],), (["a", "b"],)], "w array<string>")
-    out = df.select(dedup.shingles(F.col("w"), 3).alias("s")).collect()
-    assert out[0].s == ["a b c", "b c d"]
-    assert out[1].s == []  # fewer than k words
-
-
 def test_jaccard_pairs_planted_dup(spark):
     base = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"
     near = "w0 w1 w2 w3 w4 w5 w6 w7 w8 zz"  # 8 common of 10 total shingles... high J

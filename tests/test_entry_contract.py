@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from data_pipelines_worker_spark.queries import load_all
 from data_pipelines_worker_spark.session import TABLES
 from tools.check_oracle import value_hash
 
@@ -47,6 +48,21 @@ def test_query_matches_duckdb(spark, sf_dir, name):
     assert len(srows) == len(drows)
     assert sorted(sdf.columns) == sorted(rel.columns)
     assert value_hash(srows, sdf.columns) == value_hash(drows, rel.columns)
+
+
+def test_rotation_changed_head_then_stalest_first():
+    # every registered query exactly once; the hand-kept changed-operator
+    # head first; then staleness order derived from CORRECTNESS_r*.json
+    # (last round checked ascending, never-checked as 0, ties by name)
+    names = list(entrymod.queries())
+    assert len(names) == len(set(names))
+    assert set(names) == set(load_all())
+    head = list(entrymod._CHANGED)
+    assert names[: len(head)] == head
+    last = entrymod._last_checked()
+    assert last  # the committed records were found
+    tail = names[len(head) :]
+    assert tail == sorted(tail, key=lambda n: (last.get(n, 0), n))
 
 
 def test_every_registered_query_analyzes(spark, sf_dir):

@@ -16,7 +16,6 @@ from __future__ import annotations
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from pathlib import Path
 
 import base64
 
@@ -26,8 +25,6 @@ from data_pipelines_worker_spark.operators import external as X
 from data_pipelines_worker_spark.operators import media as M
 from data_pipelines_worker_spark.plans.compiler import PipelineRunner, PipelineSpec
 from data_pipelines_worker_spark.sources import stage_store
-
-FLAGSHIP = Path("/root/reference/config/pipelines/openai-yt-short-generation.json")
 
 STORY = "On this day a curious historical event unfolded, thirty words exactly."
 SEGMENTS = [
@@ -129,8 +126,10 @@ def client(server):
     )
 
 
-def load_spec() -> PipelineSpec:
-    return PipelineSpec.from_json(json.loads(FLAGSHIP.read_text()))
+@pytest.fixture()
+def spec(reference_pipelines) -> PipelineSpec:
+    path = reference_pipelines / "openai-yt-short-generation.json"
+    return PipelineSpec.from_json(json.loads(path.read_text()))
 
 
 def _approve_all(spark):
@@ -151,16 +150,14 @@ EXPECTED_SUMMARY = "A tale of yesterday retold♥ Generated by AI ♥ \n\n"
 EXPECTED_CAPTION = EXPECTED_TITLE + "\n\n" + EXPECTED_SUMMARY
 
 
-def test_flagship_spec_shape():
-    spec = load_spec()
+def test_flagship_spec_shape(spec):
     assert spec.slug == "openai-yt-short-generation"
     assert len(spec.blocks) == 19
     fan_outs = [b.slug for b in spec.blocks if b.fan_out]
     assert "get-event-images" in fan_outs and "add-text-to-event-images" in fan_outs
 
 
-def test_flagship_approve_all(spark, tmp_path, server, client):
-    spec = load_spec()
+def test_flagship_approve_all(spark, tmp_path, server, client, spec):
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
     res = runner.run(spec, decisions=_approve_all(spark))
     assert res.stopped_at is None
@@ -243,8 +240,7 @@ def test_flagship_approve_all(spark, tmp_path, server, client):
     assert send["text"] == EXPECTED_CAPTION
 
 
-def test_flagship_decline_third_stops(spark, tmp_path, server, client):
-    spec = load_spec()
+def test_flagship_decline_third_stops(spark, tmp_path, server, client, spec):
     rows = [(TEXT_GATE, 0, "approve", 100, 1, None)] + [
         (IMG_GATE, i, "approve" if i != 2 else "decline", 101, 10 + i, None)
         for i in range(3)
@@ -262,8 +258,7 @@ def test_flagship_decline_third_stops(spark, tmp_path, server, client):
     assert acts == {0: "approve", 1: "approve", 2: "decline"}
 
 
-def test_flagship_regenerate_third_image(spark, tmp_path, server, client):
-    spec = load_spec()
+def test_flagship_regenerate_third_image(spark, tmp_path, server, client, spec):
     first = [(TEXT_GATE, 0, "approve", 100, 1, None)] + [
         (
             IMG_GATE,

@@ -9,6 +9,8 @@ the source of truth (the plans the judge would read, asserted in CI).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,6 +26,28 @@ def plan_of(df) -> str:
 
 def optimized_of(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _cached_relation_count(spark, df) -> int:
+    """Distinct cached frames the executed plan reads, counted over the
+    plan tree: one per cache entry however often it is scanned, including
+    entries read only inside another cached frame's plan."""
+    identity = spark._jvm.System.identityHashCode
+    seen, stack = set(), [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind == "InMemoryTableScanExec":
+            rel = node.relation()
+            if identity(rel.cacheBuilder()) not in seen:
+                seen.add(identity(rel.cacheBuilder()))
+                stack.append(rel.cachedPlan())
+        else:
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+    return len(seen)
 
 
 @pytest.fixture(scope="module")
@@ -1221,31 +1245,38 @@ class TestR13PersistHygiene:
         # minhash_lsh_pairs keeps exactly its two pre-r12 persists
         # (members, d) — the r12 bands fence regressed
         # leakage_safe_split in every full-session run (VERDICT r12 #2).
-        # Each persist shows as one InMemoryRelation definition per
-        # distinct cached frame in the executed plan tree.
         from data_pipelines_worker_spark.operators.dedup import (
             minhash_lsh_pairs,
         )
 
         docs = load_table(spark, SF, "documents")
-        plan = plan_of(minhash_lsh_pairs(docs, "doc_id", "text", 0.6, 3))
-        # The band fan-out (posexplode of the 6-band xxhash64 array) must
-        # live in the UNCACHED top plan: the tree prints top-down, so if
-        # bands were persisted the first posexplode would only appear
-        # inside an InMemoryRelation definition, after its header.
-        assert "posexplode" in plan
-        assert "InMemoryRelation" not in plan or (
-            plan.find("posexplode") < plan.find("InMemoryRelation")
-        )
+        df = minhash_lsh_pairs(docs, "doc_id", "text", 0.6, 3)
+        assert _cached_relation_count(spark, df) == 2
 
-    def test_doc_shingles_exchange_pinned_to_conf_width(self, spark):
+    @pytest.mark.parametrize(
+        "name",
+        [
+            "_doc_shingles",
+            "_doc_weighted_shingles",
+            "lsh_parameter_sweep",
+            "probe_minhash_candidates",
+        ],
+    )
+    def test_doc_shingles_exchange_pinned_to_conf_width(self, spark, registry, name):
         # A keyless repartition(col) was AQE-coalesced to ONE partition
         # at the benched SFs, serializing the gram-hash stage (r13
-        # measured). Width must come from spark.sql.shuffle.partitions.
-        from data_pipelines_worker_spark.operators.dedup import _doc_shingles
+        # measured). Width must come from spark.sql.shuffle.partitions,
+        # for every consumer of the doc_gram_hashes kernel.
+        from data_pipelines_worker_spark.operators import dedup
 
-        docs = load_table(spark, SF, "documents")
+        if name.startswith("_"):
+            docs = load_table(spark, SF, "documents")
+            df = getattr(dedup, name)(docs, "doc_id", "text", 3)
+        else:
+            df = q(registry, name, spark)
         n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        plan = plan_of(_doc_shingles(docs, "doc_id", "text", 3))
-        assert f"hashpartitioning(doc_id#" in plan
-        assert f", {n})" in plan.split("hashpartitioning", 1)[1][:80]
+        widths = re.findall(
+            r"hashpartitioning\(doc_id#\d+L?, (\d+)\), REPARTITION_BY_NUM",
+            plan_of(df),
+        )
+        assert widths and set(widths) == {str(n)}

@@ -26,7 +26,6 @@ import base64
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from pathlib import Path
 
 import pytest
 
@@ -34,8 +33,6 @@ from data_pipelines_worker_spark.operators import external as X
 from data_pipelines_worker_spark.operators import media as M
 from data_pipelines_worker_spark.plans.compiler import PipelineRunner, PipelineSpec
 from data_pipelines_worker_spark.sources import stage_store
-
-PIPES = Path("/root/reference/config/pipelines")
 
 QUOTE_ANALYSIS = {
     "text": "Fortune favors the bold",
@@ -135,11 +132,16 @@ def client(server):
     )
 
 
-def load(name: str) -> PipelineSpec:
-    return PipelineSpec.from_json(json.loads((PIPES / f"{name}.json").read_text()))
+@pytest.fixture()
+def load(reference_pipelines):
+    def _load(name: str) -> PipelineSpec:
+        path = reference_pipelines / f"{name}.json"
+        return PipelineSpec.from_json(json.loads(path.read_text()))
+
+    return _load
 
 
-def test_podcast_summary_pipeline(spark, tmp_path, server, client):
+def test_podcast_summary_pipeline(spark, tmp_path, server, client, load):
     server.mode = "podcast"
     spec = load("openai-podcast-summary")
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
@@ -166,7 +168,7 @@ def test_podcast_summary_pipeline(spark, tmp_path, server, client):
     assert summary.startswith("SUMMARY[")
 
 
-def test_mux_subtitles_pipeline(spark, tmp_path, server, client):
+def test_mux_subtitles_pipeline(spark, tmp_path, server, client, load):
     spec = load("openai-mux-subtitles-to-video")
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
     img = M.fimg_encode(8, 8, bytes(range(64)))
@@ -183,7 +185,7 @@ def test_mux_subtitles_pipeline(spark, tmp_path, server, client):
     assert M.fvid_meta(final)[3] == 40  # frames untouched by mux
 
 
-def test_motivational_quote_pipeline(spark, tmp_path, server, client):
+def test_motivational_quote_pipeline(spark, tmp_path, server, client, load):
     spec = load("openai-motivational-quote-to-video")
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
     res = runner.run(

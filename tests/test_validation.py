@@ -18,7 +18,11 @@ from data_pipelines_worker_spark.functions.schema_cast import (
 from data_pipelines_worker_spark.plans.compiler import PipelineSpec
 from data_pipelines_worker_spark.plans.validation import SpecValidationError
 
-REFERENCE_PIPELINES = Path("/root/reference/config/pipelines")
+from conftest import REFERENCE_PIPELINES
+
+#: Pipeline specs committed to this repo (the benchmark's yt-short spine
+#: and wrap-join flows).
+REPO_PIPELINES = Path(__file__).resolve().parents[1] / "perfbench" / "specs"
 
 
 def _doc(**overrides):
@@ -47,8 +51,16 @@ def _doc(**overrides):
 
 
 def test_all_shipped_reference_pipelines_validate():
-    # every pipeline the reference actually ships must pass our gate
-    for p in sorted(REFERENCE_PIPELINES.glob("*.json")):
+    # every pipeline spec committed here, and every pipeline the reference
+    # ships when its tree is mounted, must pass our gate — never an empty
+    # glob
+    paths = sorted(REPO_PIPELINES.glob("*.json"))
+    assert paths, REPO_PIPELINES
+    if REFERENCE_PIPELINES.is_dir():
+        shipped = sorted(REFERENCE_PIPELINES.glob("*.json"))
+        assert shipped, REFERENCE_PIPELINES
+        paths += shipped
+    for p in paths:
         PipelineSpec.from_json(json.loads(p.read_text()))
 
 
