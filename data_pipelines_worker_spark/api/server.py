@@ -316,7 +316,11 @@ class PipelineService:
 
     def processings(self, slug: str, processing_id: str | None = None) -> list[dict]:
         root = self.runner.store_root
-        ids = [processing_id] if processing_id else run_log.list_processings(root, slug)
+        ids = (
+            [processing_id]
+            if processing_id
+            else run_log.list_processings(self.runner.spark, root, slug)
+        )
         out = []
         for pid in ids:
             try:

@@ -671,8 +671,6 @@ class PipelineRunner:
         #: parallel_available:false); raise when the gated resource allows
         #: some concurrency. A per-block ``max_concurrency`` input overrides.
         self.non_parallel_slots = max(1, int(non_parallel_slots))
-        #: per-run cache: origin slug → payload-is-binary (reset per run())
-        self._binary_stages: dict[str, bool] = {}
 
     def require_openai(self):
         if self.openai_client is None:
@@ -684,30 +682,34 @@ class PipelineRunner:
 
     # -- input assembly (GetInputConfigData, block.go:193-401) --------------
 
-    def _stage_is_binary(self, slug: str, src: DataFrame) -> bool:
+    @staticmethod
+    def _stage_is_binary(kinds: dict[str, bool], slug: str, src: DataFrame) -> bool:
         """Whether a stage's payload is binary (file-typed in the reference).
 
         The reference binds by the *stored output's* type — a TTS/image stage
         hands bytes downstream without the spec saying ``format:"file"``
-        (GetInputConfigData, block.go:193-254). Stage parquet always carries
-        both payload columns, so the kind is decided from the data: one
-        pruned ``take(1)`` on payload_bin per (run, origin) — control-plane
-        cost, cached for the rest of the run.
+        (GetInputConfigData, block.go:193-254). ``kinds`` is the run's own
+        verdict per origin slug: ``_write`` records text for stages whose
+        operator emitted no payload bytes. Where it is unknown (a rehydrated
+        stage, an operator that emits payload_bin) the kind is decided from
+        the data: one pruned ``take(1)`` on payload_bin, cached for the run.
         """
-        if slug not in self._binary_stages:
-            self._binary_stages[slug] = bool(
-                src.where(F.col("payload_bin").isNotNull()).take(1)
-            )
-        return self._binary_stages[slug]
+        if slug not in kinds:
+            kinds[slug] = bool(src.where(F.col("payload_bin").isNotNull()).take(1))
+        return kinds[slug]
 
     def _bind_origin(
-        self, stages: dict[str, DataFrame], b: InputBinding, fan_out: bool
+        self,
+        stages: dict[str, DataFrame],
+        kinds: dict[str, bool],
+        b: InputBinding,
+        fan_out: bool,
     ) -> DataFrame:
         """One binding → DataFrame(input_index, <param>)."""
         src = stages[b.origin]
         # "$" / absent path = the whole payload (oliveagle jsonpath identity)
         path = b.json_path if b.json_path not in (None, "$") else None
-        if b.binary or (path is None and self._stage_is_binary(b.origin, src)):
+        if b.binary or (path is None and self._stage_is_binary(kinds, b.origin, src)):
             # raw payload bytes: explicit format:"file" (json_schema.go:69-78)
             # or a binary-producing origin (tts/image/video stages). For
             # array_input over binary stages the rows bind as-is — the
@@ -773,6 +775,7 @@ class PipelineRunner:
         self,
         block: BlockSpec,
         stages: dict[str, DataFrame],
+        kinds: dict[str, bool],
         request_input: dict[str, Any],
     ) -> tuple[DataFrame, dict[str, Column]]:
         """Assemble the block's input rows + bound parameter columns.
@@ -783,7 +786,7 @@ class PipelineRunner:
         df: DataFrame | None = None
         bound_params: set[str] = set()
         for b in block.bindings:
-            part = self._bind_origin(stages, b, block.fan_out)
+            part = self._bind_origin(stages, kinds, b, block.fan_out)
             bound_params.add(b.param)
             if df is None:
                 df = part
@@ -825,14 +828,12 @@ class PipelineRunner:
                 if v0 and isinstance(v0[0], (bytes, bytearray)):
                     # multipart file[] uploads arrive as raw bytes
                     # (api/schemas/pipelines.go:117-151)
-                    df = local_df(
-                        self.spark,
+                    df = self._seed(
                         [(i, bytes(x)) for i, x in enumerate(v0)],
                         f"input_index long, {k0} binary",
                     )
                 else:
-                    df = local_df(
-                        self.spark,
+                    df = self._seed(
                         [(i, str(x)) for i, x in enumerate(v0)],
                         f"input_index long, {k0} string",
                     )
@@ -848,17 +849,11 @@ class PipelineRunner:
                 }
                 if bin_params:
                     k0, v0 = next(iter(bin_params.items()))
-                    df = local_df(
-                        self.spark,
-                        [(0, bytes(v0))],
-                        f"input_index long, {k0} binary",
-                    )
+                    df = self._seed([(0, bytes(v0))], f"input_index long, {k0} binary")
                     bound_params = bound_params | {k0}
                     req = {k: v for k, v in req.items() if k != k0}
                 else:
-                    df = self.spark.range(1).select(
-                        F.lit(0).cast("long").alias("input_index")
-                    )
+                    df = self._seed([(0,)], "input_index long")
 
         params: dict[str, Column] = {p: F.col(p) for p in bound_params}
         for k in set(block.input) | set(req):
@@ -888,6 +883,16 @@ class PipelineRunner:
         params["__block_input"] = merged_static
         return df, params
 
+    def _seed(self, rows: list, schema: str) -> DataFrame:
+        """A request-input frame, in one partition.
+
+        ``local_df`` spreads its rows over ``defaultParallelism``
+        partitions. Each partition becomes one stage file and one task of
+        every block downstream, and a Python task costs its worker CPU
+        floor however few rows it gets — an empty one included.
+        """
+        return local_df(self.spark, rows, schema).coalesce(1)
+
     # -- execution -----------------------------------------------------------
 
     def run(
@@ -906,7 +911,9 @@ class PipelineRunner:
         past consumed events (GetUpdates offset semantics,
         block_fetch_moderation_telegram.go:129-133,218-219)."""
         request_input = request_input or {}
-        self._binary_stages = {}
+        #: this run's payload kind per stage slug (_stage_is_binary): local
+        #: to the run, as concurrent runs share the runner
+        kinds: dict[str, bool] = {}
         resuming = processing_id is not None and start_slug is not None
         processing_id = processing_id or uuid.uuid4().hex[:12]
         statuses: dict[str, str] = {}
@@ -925,6 +932,7 @@ class PipelineRunner:
                     decisions,
                     cursors,
                     statuses,
+                    kinds,
                 )
                 if isinstance(res, _Regenerate):
                     cur_start, cur_target = res.goto_slug, res.goto_index
@@ -997,6 +1005,7 @@ class PipelineRunner:
         decisions: DataFrame | None,
         cursors: dict[str, tuple],
         statuses: dict[str, str],
+        kinds: dict[str, bool],
     ):
         """fetch_moderation_tg (block_fetch_moderation_telegram.go:99-245):
         decline ⇒ stop (:237-240), regenerate ⇒ goto block+index (:241-245),
@@ -1038,8 +1047,7 @@ class PipelineRunner:
             ],
             "input_index long, output_index long, payload_str string",
         )
-        out = _canonical(out)
-        self._write(out, spec, processing_id, block.slug)
+        out = self._write(out, spec, processing_id, block.slug, kinds)
         if declined:
             statuses[block.slug] = "stopped"
             return "stopped", out
@@ -1071,6 +1079,7 @@ class PipelineRunner:
         decisions: DataFrame | None,
         cursors: dict[str, tuple],
         statuses: dict[str, str],
+        kinds: dict[str, bool],
     ) -> "RunResult | _Regenerate":
         stages: dict[str, DataFrame] = {}
 
@@ -1083,7 +1092,12 @@ class PipelineRunner:
         if resuming:
             for b in spec.blocks[:start_pos]:
                 stages[b.slug] = stage_store.read_stage(
-                    self.spark, self.store_root, spec.slug, processing_id, b.slug
+                    self.spark,
+                    self.store_root,
+                    spec.slug,
+                    processing_id,
+                    b.slug,
+                    stage_store.STAGE_SCHEMA,
                 )
                 statuses[b.slug] = "loaded"
 
@@ -1092,16 +1106,17 @@ class PipelineRunner:
         for pos, block in enumerate(spec.blocks):
             if pos < start_pos:
                 continue
-            df, params = self._build_inputs(block, stages, request_input)
-            if target_index is not None and pos == start_pos and start_slug is not None:
-                # target-index recompute: only that fan-out index
-                # (pipeline.go:358-377); other indices come from the stored
-                # stage and are merged back below.
-                df = df.where(F.col("input_index") == target_index)
+            df, params = self._build_inputs(block, stages, kinds, request_input)
+            # target-index recompute: only that fan-out index
+            # (pipeline.go:358-377); other indices come from the stored
+            # stage and are merged back when the stage is written.
+            recompute = target_index if pos == start_pos and start_slug is not None else None
+            if recompute is not None:
+                df = df.where(F.col("input_index") == recompute)
 
             if block.id == _MODERATION_FETCH:
                 kind, res = self._eval_moderation(
-                    block, df, spec, processing_id, decisions, cursors, statuses
+                    block, df, spec, processing_id, decisions, cursors, statuses, kinds
                 )
                 if kind == "regenerate":
                     return res
@@ -1128,9 +1143,9 @@ class PipelineRunner:
                         block.input.get("max_concurrency", self.non_parallel_slots)
                     )
                     work = work.repartition(max(1, slots))
-                out = _canonical(_DF_OPERATORS[block.id](self, work, block))
-                out = self._finish_stage(
-                    out, spec, processing_id, block, pos, start_pos, start_slug, target_index
+                out = self._write(
+                    _DF_OPERATORS[block.id](self, work, block),
+                    spec, processing_id, block.slug, kinds, recompute,
                 )
                 stages[block.slug] = out
                 statuses[block.slug] = "completed"
@@ -1144,15 +1159,13 @@ class PipelineRunner:
             if block.id == "upload_file" and dict(df.dtypes).get("file") == "binary":
                 # raw media ingest: payload stays binary, mime sniffed from
                 # magic bytes (types/helpers/storage.go:10-26)
-                out = _canonical(
+                out = self._write(
                     df.select(
                         "input_index",
                         value.alias("payload_bin"),
                         stage_store.sniff_mime(value).alias("mime"),
-                    )
-                )
-                out = self._finish_stage(
-                    out, spec, processing_id, block, pos, start_pos, start_slug, target_index
+                    ),
+                    spec, processing_id, block.slug, kinds, recompute,
                 )
                 stages[block.slug] = out
                 statuses[block.slug] = "completed"
@@ -1176,8 +1189,7 @@ class PipelineRunner:
                     flag.alias("__stop"),
                 )
                 hits = out.where(F.col("__stop")).select("input_index").take(1)
-                out = _canonical(out.drop("__stop"))
-                self._write(out, spec, processing_id, block.slug)
+                out = self._write(out.drop("__stop"), spec, processing_id, block.slug, kinds)
                 stages[block.slug] = out
                 if hits:
                     statuses[block.slug] = "stopped"
@@ -1203,9 +1215,7 @@ class PipelineRunner:
                     value.cast("string").alias("payload_str"),
                 )
 
-            out = self._finish_stage(
-                _canonical(out), spec, processing_id, block, pos, start_pos, start_slug, target_index
-            )
+            out = self._write(out, spec, processing_id, block.slug, kinds, recompute)
             stages[block.slug] = out
             statuses[block.slug] = "completed"
             last_df = out
@@ -1219,36 +1229,37 @@ class PipelineRunner:
             output=last_df,
         )
 
-    def _finish_stage(
+    def _write(
         self,
-        out: DataFrame,
+        df: DataFrame,
         spec: PipelineSpec,
         processing_id: str,
-        block: BlockSpec,
-        pos: int,
-        start_pos: int,
-        start_slug: str | None,
-        target_index: int | None,
+        slug: str,
+        kinds: dict[str, bool],
+        recompute: int | None = None,
     ) -> DataFrame:
-        """Target-index merge + stage materialization + rehydrated read."""
-        if target_index is not None and pos == start_pos and start_slug is not None:
-            # merge recomputed index with previously stored outputs;
-            # eager checkpoint breaks lineage before overwriting the
-            # very files the merge reads (read-overwrite hazard)
-            prior = stage_store.read_stage(
-                self.spark, self.store_root, spec.slug, processing_id, block.slug
-            ).where(F.col("input_index") != target_index)
-            out = prior.select(out.columns).unionByName(out).localCheckpoint(eager=True)
-        self._write(out, spec, processing_id, block.slug)
-        return stage_store.read_stage(
-            self.spark, self.store_root, spec.slug, processing_id, block.slug
-        )
+        """Materialize a block's output stage and return it reopened from
+        the store. With ``recompute`` set, ``df`` holds only that recomputed
+        fan-out index and is merged with the stage's stored other indices.
 
-    def _write(self, df: DataFrame, spec: PipelineSpec, processing_id: str, slug: str):
-        stage_store.write_stage(
-            _canonical(df),
+        An output without a payload_bin column is a text stage — _canonical
+        null-fills the column — so its kind needs no probe job; any other
+        output's kind is left for _stage_is_binary to find out.
+        """
+        if "payload_bin" in df.columns:
+            kinds.pop(slug, None)
+        else:
+            kinds[slug] = False
+        out = _canonical(df)
+        if recompute is None:
+            return stage_store.write_stage(
+                out, self.store_root, spec.slug, processing_id, slug
+            )
+        return stage_store.merge_stage(
+            out,
             self.store_root,
             spec.slug,
             processing_id,
             slug,
+            F.col("input_index") != recompute,
         )

@@ -21,6 +21,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .stage_store import hadoop_fs
+
 STATUS_SCHEMA = (
     "pipeline_slug string, processing_id string, block_slug string, "
     "position int, status string, stopped_at string, updated_at double"
@@ -78,17 +80,23 @@ def read_statuses(
     (``<pipeline>/<processing_id>/part-*.parquet``), so it needs a
     recursive lookup — the `GET /pipelines/:slug/processings` analog of the
     reference's storage walk (pipeline.go:643-700), served by a pruned
-    parquet scan instead."""
-    reader = spark.read
+    parquet scan instead. Every snapshot is written with ``STATUS_SCHEMA``,
+    so the read takes it as given: no schema-inference job."""
+    reader = spark.read.schema(STATUS_SCHEMA)
     if processing_id is None:
         reader = reader.option("recursiveFileLookup", "true")
     return reader.parquet(_status_path(root, pipeline_slug, processing_id))
 
 
-def list_processings(root: str, pipeline_slug: str) -> list[str]:
+def list_processings(spark: SparkSession, root: str, pipeline_slug: str) -> list[str]:
     """Processing ids with a persisted status (storage-scan parity,
-    pipeline.go:643-700)."""
-    p = _status_path(root, pipeline_slug)
-    if not os.path.isdir(p):
+    pipeline.go:643-700), listed through the Hadoop FileSystem API so it
+    serves every root ``write_status`` accepts."""
+    fs, hpath = hadoop_fs(spark, _status_path(root, pipeline_slug))
+    if not fs.exists(hpath):
         return []
-    return sorted(d for d in os.listdir(p) if not d.startswith("_"))
+    return sorted(
+        name
+        for st in fs.listStatus(hpath)
+        if st.isDirectory() and not (name := st.getPath().getName()).startswith("_")
+    )

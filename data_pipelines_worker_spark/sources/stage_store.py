@@ -15,6 +15,7 @@ recompute prunes row groups via min/max stats.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,11 +39,14 @@ def stage_path(root: str, pipeline_slug: str, processing_id: str, block_slug: st
 
 def write_stage(
     df: DataFrame, root: str, pipeline_slug: str, processing_id: str, block_slug: str
-) -> str:
-    """Materialize one block's outputs (checkpoint for resume/regenerate).
+) -> DataFrame:
+    """Materialize one block's outputs (checkpoint for resume/regenerate)
+    and return the stage reopened from the store.
 
     Deliberately not fused across block boundaries (SURVEY §4): the write is
     the durability point the reference's resume/goto semantics rely on.
+    The reopened stage is read with the schema it was just written with, so
+    it costs no footer-reading schema-inference job.
 
     ``root`` is any Hadoop-filesystem URI — a local path in tests, an
     ``s3a://bucket/prefix`` on a real cluster (the MinIO role of the
@@ -51,16 +55,49 @@ def write_stage(
     """
     path = stage_path(root, pipeline_slug, processing_id, block_slug)
     df.write.mode("overwrite").parquet(path)
-    return path
+    return _open(df.sparkSession, path, df.schema)
+
+
+def merge_stage(
+    df: DataFrame,
+    root: str,
+    pipeline_slug: str,
+    processing_id: str,
+    block_slug: str,
+    keep: Column,
+) -> DataFrame:
+    """Replace part of a stored stage — its rows matching ``keep`` plus
+    ``df`` become the stage — and return the stage reopened from the store.
+
+    Target-index recompute (pipeline.go:358-377). The merge reads the very
+    files it replaces, so it is written beside the stage and swapped in by
+    rename rather than overwriting in place; it keeps the stored stage's
+    file count, so the blocks downstream run as many tasks as before.
+    """
+    spark = df.sparkSession
+    path = stage_path(root, pipeline_slug, processing_id, block_slug)
+    fs, hpath = hadoop_fs(spark, path)
+    files = sum(
+        1 for st in fs.listStatus(hpath) if st.getPath().getName().startswith("part-")
+    )
+    prior = _open(spark, path, df.schema).where(keep)
+    tmp = f"{path}.merge-{uuid.uuid4().hex[:8]}"
+    prior.unionByName(df).coalesce(max(1, files)).write.parquet(tmp)
+    _swap_in(spark, tmp, path)
+    return _open(spark, path, df.schema)
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop FileSystem API,
+    which serves every stage-store URI (local, HDFS, viewfs, s3a)."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _has_batch_partition_dirs(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` contains ``batch=<id>`` partition subdirectories
-    (the streaming sink's layout, streaming/sink.py) — checked through the
-    Hadoop FileSystem API so it works on every stage-store URI."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    (the streaming sink's layout, streaming/sink.py)."""
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return False
     for st in fs.listStatus(hpath):
@@ -69,22 +106,54 @@ def _has_batch_partition_dirs(spark: SparkSession, path: str) -> bool:
     return False
 
 
+def _swap_in(spark: SparkSession, tmp: str, path: str) -> None:
+    """Replace the dataset at ``path`` with the one at ``tmp``: two Hadoop FS
+    renames (NOT os.rename, so correct on every supported stage-store URI;
+    on object stores a rename is copy+delete, slower but correct). A reader
+    racing the swap can see a brief stage-missing window, never partial
+    data."""
+    fs, hpath = hadoop_fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    old = Path(f"{path}.old-{uuid.uuid4().hex[:8]}")
+    if not fs.rename(hpath, old):
+        raise IOError(f"stage swap: rename {path} -> {old} failed")
+    if not fs.rename(Path(tmp), hpath):
+        fs.rename(old, hpath)  # roll back
+        raise IOError(f"stage swap: rename {tmp} -> {path} failed")
+    fs.delete(old, True)
+
+
 def read_stage(
-    spark: SparkSession, root: str, pipeline_slug: str, processing_id: str, block_slug: str
+    spark: SparkSession,
+    root: str,
+    pipeline_slug: str,
+    processing_id: str,
+    block_slug: str,
+    schema: T.StructType | None = None,
 ) -> DataFrame:
     """Rehydrate a stage (resume substrate, pipeline.go:195-201).
 
-    Stages written by the streaming sink (streaming/sink.py) land in
-    ``batch=<id>`` subdirectories; Spark's partition discovery surfaces
-    that as a synthetic ``batch`` column, which is sink bookkeeping, not
-    part of the canonical stage schema — drop it so batch pipelines
-    resuming from a streamed stage see the same shape as any other stage.
-    The drop is conditional on the ``batch=`` directory layout actually
-    being present (ADVICE r3): a stage whose *data* legitimately contains
-    a ``batch`` column keeps it.
+    With ``schema`` (a stage of known shape, e.g. ``STAGE_SCHEMA`` for every
+    stage the pipeline runner writes) the read needs no schema-inference
+    job; without it Spark infers the shape from the Parquet footers.
+    Either way a streamed stage drops the sink's ``batch`` column (_open).
     """
     path = stage_path(root, pipeline_slug, processing_id, block_slug)
-    df = spark.read.parquet(path)
+    return _open(spark, path, schema)
+
+
+def _open(spark: SparkSession, path: str, schema: T.StructType | None) -> DataFrame:
+    """Stages written by the streaming sink (streaming/sink.py) land in
+    ``batch=<id>`` subdirectories; Spark's partition discovery surfaces
+    that as a synthetic ``batch`` column (with or without a given schema),
+    which is sink bookkeeping, not part of the canonical stage schema —
+    drop it so batch pipelines resuming from a streamed stage see the same
+    shape as any other stage. The drop is conditional on the ``batch=``
+    directory layout actually being present (ADVICE r3): a stage whose
+    *data* legitimately contains a ``batch`` column keeps it.
+    """
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if "batch" in df.columns and _has_batch_partition_dirs(spark, path):
         df = df.drop("batch")
     return df
@@ -177,12 +246,10 @@ def compact_stage(
     discovery when the resumed sink writes the next ``batch=<id>`` subdir
     or duplicate the replayed batch; this layout survives both.
     """
-    import uuid as _uuid
-
     path = stage_path(root, pipeline_slug, processing_id, block_slug)
     streamed = _has_batch_partition_dirs(spark, path)
     n_rows = None
-    tmp = f"{path}.compact-{_uuid.uuid4().hex[:8]}"
+    tmp = f"{path}.compact-{uuid.uuid4().hex[:8]}"
     if streamed:
         raw = spark.read.parquet(path)  # keep the discovered `batch` column
         max_batch = raw.agg(F.max(F.col("batch").cast("long"))).first()[0]
@@ -205,16 +272,5 @@ def compact_stage(
         n_files = max(1, -(-n_rows // target_rows_per_file))  # ceil div
         df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
 
-    # Hadoop FS rename/delete (NOT os.rename): correct on every supported
-    # stage-store URI, not just the local filesystem
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    old = jvm.org.apache.hadoop.fs.Path(f"{path}.old-{_uuid.uuid4().hex[:8]}")
-    if not fs.rename(hpath, old):
-        raise IOError(f"compact_stage: rename {path} -> {old} failed")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath):
-        fs.rename(old, hpath)  # roll back
-        raise IOError(f"compact_stage: rename {tmp} -> {path} failed")
-    fs.delete(old, True)
+    _swap_in(spark, tmp, path)
     return n_files

@@ -239,7 +239,7 @@ def test_concurrent_processings_are_isolated(spark, tmp_path):
     ).collect()
     assert sorted(r.payload_str for r in out1) == ["<alpha>", "<beta>"]
     assert [r.payload_str for r in out2] == ["<gamma>"]
-    assert set(run_log.list_processings(str(tmp_path), "iso")) == {
+    assert set(run_log.list_processings(spark, str(tmp_path), "iso")) == {
         r1.processing_id,
         r2.processing_id,
     }
@@ -280,7 +280,7 @@ def test_failing_index_aborts_run_and_persists_status(spark, tmp_path):
         )
     # upload completed and is resumable; the failing block never reported
     # completed
-    procs = run_log.list_processings(str(tmp_path), "failing")
+    procs = run_log.list_processings(spark, str(tmp_path), "failing")
     assert len(procs) == 1
     statuses = {
         r.block_slug: r.status
@@ -288,3 +288,66 @@ def test_failing_index_aborts_run_and_persists_status(spark, tmp_path):
     }
     assert statuses.get("up") == "completed"
     assert statuses.get("small") != "completed"
+
+
+def test_concurrent_runs_keep_their_own_payload_kinds(spark, tmp_path, monkeypatch):
+    # The API server runs every processing on its own thread over one
+    # runner. Here two pipelines share the origin slug "src": an upload of
+    # text in one, of bytes in the other, so "src" binds as text in one run
+    # and as bytes in the other. A hook after each stage write interleaves
+    # the runs: the bytes run starts once the text run has written its
+    # "src", and binds its own "src" only after the text run has finished.
+    # Each run must still bind by its own stage's kind.
+    import threading
+
+    from data_pipelines_worker_spark.sources import stage_store
+
+    def spec(slug: str) -> PipelineSpec:
+        return PipelineSpec(
+            slug=slug,
+            blocks=[
+                BlockSpec(id="upload_file", slug="src"),
+                BlockSpec(
+                    id="wrap_text",
+                    slug="wrap",
+                    input={"prefix": "[", "suffix": "]"},
+                    bindings=[InputBinding(param="text", origin="src")],
+                ),
+            ],
+        )
+
+    text_src, bytes_src, text_done = (threading.Event() for _ in range(3))
+    write_stage = stage_store.write_stage
+
+    def hooked(df, root, pipeline_slug, processing_id, block_slug):
+        out = write_stage(df, root, pipeline_slug, processing_id, block_slug)
+        if block_slug == "src" and pipeline_slug == "kinds-text":
+            text_src.set()
+            assert bytes_src.wait(120)
+        elif block_slug == "src" and pipeline_slug == "kinds-bytes":
+            bytes_src.set()
+            assert text_done.wait(120)
+        return out
+
+    monkeypatch.setattr(stage_store, "write_stage", hooked)
+    runner = PipelineRunner(spark, str(tmp_path))
+    results: dict[str, object] = {}
+
+    def run(slug: str, file, done: threading.Event | None = None):
+        try:
+            res = runner.run(spec(slug), request_input={"src": {"file": file}})
+            results[slug] = res.output.first().payload_str
+        except Exception as e:  # noqa: BLE001 - reported by the asserts
+            results[slug] = e
+        finally:
+            if done is not None:
+                done.set()
+
+    text = threading.Thread(target=run, args=("kinds-text", "hello", text_done))
+    text.start()
+    assert text_src.wait(120)
+    raw = threading.Thread(target=run, args=("kinds-bytes", b"hello"))
+    raw.start()
+    text.join(180)
+    raw.join(180)
+    assert results == {"kinds-text": "[hello]", "kinds-bytes": "[hello]"}

@@ -117,9 +117,13 @@ def test_compact_streamed_stage_preserves_partition_layout(spark, tmp_path):
     # committed epochs 0,1 merged into batch=-1; last epoch kept under its id
     assert dirs == ["batch=-1", "batch=2"]
 
-    got = stage_store.read_stage(spark, str(tmp_path), "p", "x", "s")
-    assert got.count() == 300
-    assert "batch" not in got.columns
+    # inferred and given schema alike: partition discovery still surfaces
+    # the sink's `batch` column under a given schema, and it is dropped
+    schemas = (None, stage_store.STAGE_SCHEMA)
+    for schema in schemas:
+        got = stage_store.read_stage(spark, str(tmp_path), "p", "x", "s", schema)
+        assert got.count() == 300
+        assert "batch" not in got.columns
 
     # replay of the last (possibly-uncommitted) epoch overwrites its own
     # directory — no duplication against the merged data
@@ -136,9 +140,11 @@ def test_compact_streamed_stage_preserves_partition_layout(spark, tmp_path):
         "CAST(id AS STRING) AS payload_str",
     )
     _sink_batch(df3, path, 3)
-    got = stage_store.read_stage(spark, str(tmp_path), "p", "x", "s")
-    assert got.count() == 350
-    assert got.agg({"input_index": "sum"}).first()[0] == sum(range(350))
+    for schema in schemas:
+        got = stage_store.read_stage(spark, str(tmp_path), "p", "x", "s", schema)
+        assert "batch" not in got.columns
+        assert got.count() == 350
+        assert got.agg({"input_index": "sum"}).first()[0] == sum(range(350))
 
 
 def test_read_stage_keeps_legit_batch_data_column(spark, tmp_path):
@@ -152,3 +158,58 @@ def test_read_stage_keeps_legit_batch_data_column(spark, tmp_path):
     got = stage_store.read_stage(spark, str(tmp_path), "p", "x", "d")
     assert "batch" in got.columns
     assert sorted(r.batch for r in got.collect()) == [7, 8]
+
+
+def test_written_stage_reopens_with_its_schema(spark, tmp_path):
+    # write_stage hands back the stage read with the schema it was written
+    # with: the same frame a schema-inferring read gives
+    df = spark.createDataFrame(
+        [(0, 0, None, b"\x89PNG", "image/png"), (1, 0, "x", None, "text/plain")],
+        stage_store.STAGE_SCHEMA,
+    )
+    back = stage_store.write_stage(df, str(tmp_path), "p", "x", "b")
+    inferred = stage_store.read_stage(spark, str(tmp_path), "p", "x", "b")
+    assert back.schema == inferred.schema
+    assert sorted(back.collect()) == sorted(inferred.collect()) == sorted(df.collect())
+
+
+def test_merge_stage_keeps_file_count(spark, tmp_path):
+    # target-index merge: stored rows matching `keep` plus the new rows,
+    # written with the stored stage's file count and swapped in by rename
+    import os
+
+    def part_files():
+        path = stage_store.stage_path(str(tmp_path), "p", "x", "b")
+        return sorted(f for f in os.listdir(path) if f.startswith("part-"))
+
+    rows = [(i, 0, f"old{i}", None, None) for i in range(4)]
+    df = spark.createDataFrame(rows, stage_store.STAGE_SCHEMA).coalesce(2)
+    stage_store.write_stage(df, str(tmp_path), "p", "x", "b")
+    assert len(part_files()) == 2
+    new = spark.createDataFrame([(1, 0, "new1", None, None)], stage_store.STAGE_SCHEMA)
+    merged = stage_store.merge_stage(
+        new, str(tmp_path), "p", "x", "b", F.col("input_index") != 1
+    )
+    assert sorted((r.input_index, r.payload_str) for r in merged.collect()) == [
+        (0, "old0"), (1, "new1"), (2, "old2"), (3, "old3")
+    ]
+    assert len(part_files()) == 2
+    assert sorted(os.listdir(tmp_path / "p" / "x")) == ["b"]  # no staging left
+
+
+def test_list_processings_non_file_uri(spark, tmp_path):
+    # the processing listing serves every root write_status accepts; the
+    # viewfs mount is the one test_stage_roundtrip_non_file_uri uses
+    from data_pipelines_worker_spark.sources import run_log
+
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    hconf.set("fs.viewfs.mounttable.statustest.link./stages", tmp_path.as_uri())
+    root = "viewfs://statustest/stages"
+    for pid in ("proc-b", "proc-a"):
+        run_log.write_status(spark, root, "p", pid, {"b": "completed"}, ["b"])
+    assert run_log.list_processings(spark, root, "p") == ["proc-a", "proc-b"]
+    assert run_log.list_processings(spark, root, "absent") == []
+    rows = run_log.read_statuses(spark, root, "p").collect()
+    assert sorted((r.processing_id, r.status) for r in rows) == [
+        ("proc-a", "completed"), ("proc-b", "completed")
+    ]
