@@ -828,12 +828,14 @@ class PipelineRunner:
                 if v0 and isinstance(v0[0], (bytes, bytearray)):
                     # multipart file[] uploads arrive as raw bytes
                     # (api/schemas/pipelines.go:117-151)
-                    df = self._seed(
+                    df = local_df(
+                        self.spark,
                         [(i, bytes(x)) for i, x in enumerate(v0)],
                         f"input_index long, {k0} binary",
                     )
                 else:
-                    df = self._seed(
+                    df = local_df(
+                        self.spark,
                         [(i, str(x)) for i, x in enumerate(v0)],
                         f"input_index long, {k0} string",
                     )
@@ -849,11 +851,17 @@ class PipelineRunner:
                 }
                 if bin_params:
                     k0, v0 = next(iter(bin_params.items()))
-                    df = self._seed([(0, bytes(v0))], f"input_index long, {k0} binary")
+                    df = local_df(
+                        self.spark,
+                        [(0, bytes(v0))],
+                        f"input_index long, {k0} binary",
+                    )
                     bound_params = bound_params | {k0}
                     req = {k: v for k, v in req.items() if k != k0}
                 else:
-                    df = self._seed([(0,)], "input_index long")
+                    # one partition (local_df): a range would hand the
+                    # block's Python tasks defaultParallelism - 1 empty ones
+                    df = local_df(self.spark, [(0,)], "input_index long")
 
         params: dict[str, Column] = {p: F.col(p) for p in bound_params}
         for k in set(block.input) | set(req):
@@ -882,16 +890,6 @@ class PipelineRunner:
             params["__separator_literal"] = merged_static["separator"]
         params["__block_input"] = merged_static
         return df, params
-
-    def _seed(self, rows: list, schema: str) -> DataFrame:
-        """A request-input frame, in one partition.
-
-        ``local_df`` spreads its rows over ``defaultParallelism``
-        partitions. Each partition becomes one stage file and one task of
-        every block downstream, and a Python task costs its worker CPU
-        floor however few rows it gets — an empty one included.
-        """
-        return local_df(self.spark, rows, schema).coalesce(1)
 
     # -- execution -----------------------------------------------------------
 
@@ -1109,10 +1107,12 @@ class PipelineRunner:
             df, params = self._build_inputs(block, stages, kinds, request_input)
             # target-index recompute: only that fan-out index
             # (pipeline.go:358-377); other indices come from the stored
-            # stage and are merged back when the stage is written.
+            # stage and are merged back when the stage is written. The one
+            # index goes in one partition: filtered out of a multi-file
+            # stage it would leave every other file's task empty.
             recompute = target_index if pos == start_pos and start_slug is not None else None
             if recompute is not None:
-                df = df.where(F.col("input_index") == recompute)
+                df = df.where(F.col("input_index") == recompute).coalesce(1)
 
             if block.id == _MODERATION_FETCH:
                 kind, res = self._eval_moderation(
@@ -1256,10 +1256,5 @@ class PipelineRunner:
                 out, self.store_root, spec.slug, processing_id, slug
             )
         return stage_store.merge_stage(
-            out,
-            self.store_root,
-            spec.slug,
-            processing_id,
-            slug,
-            F.col("input_index") != recompute,
+            out, self.store_root, spec.slug, processing_id, slug, recompute
         )

@@ -64,15 +64,21 @@ def merge_stage(
     pipeline_slug: str,
     processing_id: str,
     block_slug: str,
-    keep: Column,
+    index: int,
 ) -> DataFrame:
-    """Replace part of a stored stage — its rows matching ``keep`` plus
-    ``df`` become the stage — and return the stage reopened from the store.
+    """Replace one fan-out index of a stored stage with ``df`` (that index
+    recomputed) and return the stage reopened from the store.
 
     Target-index recompute (pipeline.go:358-377). The merge reads the very
     files it replaces, so it is written beside the stage and swapped in by
-    rename rather than overwriting in place; it keeps the stored stage's
-    file count, so the blocks downstream run as many tasks as before.
+    rename rather than overwriting in place.
+
+    A one-file stage stays one file. In a larger stage the recomputed index
+    becomes a file of its own and a stored file left without rows is not
+    written, so a fan-out of one index per file keeps its file count. The
+    files are not coalesced: that would pack fan-out items into one task
+    of every block downstream, and the partition coalescer may give a task
+    only the emptied file, leaving the stage one file short.
     """
     spark = df.sparkSession
     path = stage_path(root, pipeline_slug, processing_id, block_slug)
@@ -80,9 +86,14 @@ def merge_stage(
     files = sum(
         1 for st in fs.listStatus(hpath) if st.getPath().getName().startswith("part-")
     )
-    prior = _open(spark, path, df.schema).where(keep)
+    prior = _open(spark, path, df.schema).where(F.col("input_index") != index)
     tmp = f"{path}.merge-{uuid.uuid4().hex[:8]}"
-    prior.unionByName(df).coalesce(max(1, files)).write.parquet(tmp)
+    # the recomputed index as the first partition: Spark writes a file for
+    # the first partition even when it is empty, for no other empty one
+    merged = df.coalesce(1).unionByName(prior)
+    if files <= 1:
+        merged = merged.coalesce(1)
+    merged.write.parquet(tmp)
     _swap_in(spark, tmp, path)
     return _open(spark, path, df.schema)
 

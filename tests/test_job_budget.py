@@ -103,11 +103,16 @@ def test_wrap_join_job_budget(spark, tmp_path):
     assert res.output.first().payload_str == "+".join(f"[{t}]" for t in texts)
 
 
-def test_target_index_resume_python_tasks(spark, tmp_path):
-    # fan-out of three images through two Python (mapInPandas) blocks, then
-    # a resume that recomputes one index of the first of them
+def _python_tasks(stages: list[dict]) -> list[int]:
+    return [s["tasks"] for s in stages if s["python"]]
+
+
+def test_request_fanout_runs_one_python_task_per_item(spark, tmp_path):
+    # a request list of three images through two Python (mapInPandas)
+    # blocks: each item is its own stage file and Python task, in the full
+    # run and downstream of a resume that recomputes one index
     spec = PipelineSpec(
-        slug="budget-resume",
+        slug="budget-fanout",
         blocks=[
             BlockSpec(id="upload_file", slug="up", fan_out=True),
             BlockSpec(
@@ -125,25 +130,88 @@ def test_target_index_resume_python_tasks(spark, tmp_path):
         ],
     )
     images = [M.fimg_encode(8, 8, bytes([i]) * 64) for i in range(3)]
+    width = min(len(images), spark.sparkContext.defaultParallelism)
     runner = PipelineRunner(spark, str(tmp_path))
-    full = runner.run(spec, request_input={"up": {"file": images}})
+    full = _run_in_group(
+        spark,
+        "budget-fanout",
+        lambda: runner.run(spec, request_input={"up": {"file": images}}),
+    )
+    _, stages = _group_stages(spark, "budget-fanout")
+    assert _python_tasks(stages) == [width, width], stages
     before = {r.input_index: bytes(r.payload_bin) for r in full.output.collect()}
+
+    res = _run_in_group(
+        spark,
+        "budget-fanout-resume",
+        lambda: runner.run(
+            spec, processing_id=full.processing_id, start_slug="small", target_index=1
+        ),
+    )
+    _, stages = _group_stages(spark, "budget-fanout-resume")
+    # the merged stage keeps its file count, so "soft" still runs one
+    # task per item (the merge's own stage also scans the stored files)
+    python = _python_tasks(stages)
+    assert len(python) == 2 and python[-1] == width, stages
+    after = {r.input_index: bytes(r.payload_bin) for r in res.output.collect()}
+    assert after == before
+
+
+def test_target_index_resume_python_tasks(spark, tmp_path):
+    # a fan-out built from one document, as a generated story's segments
+    # are: a caption per line over one broadcast image, then a resize of
+    # each captioned image. The resume recomputes index 1 of the captions.
+    spec = PipelineSpec(
+        slug="budget-resume",
+        blocks=[
+            BlockSpec(id="upload_file", slug="img"),
+            BlockSpec(id="upload_file", slug="doc"),
+            BlockSpec(
+                id="image_add_text",
+                slug="captioned",
+                fan_out=True,
+                input={"font_size": 4},
+                bindings=[
+                    InputBinding(param="image", origin="img", binary=True),
+                    InputBinding(param="text", origin="doc", json_path="$.lines[*]"),
+                ],
+            ),
+            BlockSpec(
+                id="image_resize",
+                slug="small",
+                input={"width": 4, "height": 4},
+                bindings=[InputBinding(param="image", origin="captioned", binary=True)],
+            ),
+        ],
+    )
+    request = {
+        "img": {"file": M.fimg_encode(8, 8, bytes(range(64)))},
+        "doc": {"file": json.dumps({"lines": ["a", "b", "c"]})},
+    }
+    runner = PipelineRunner(spark, str(tmp_path))
+    full = runner.run(spec, request_input=request)
+    before = {r.input_index: bytes(r.payload_bin) for r in full.output.collect()}
+    assert sorted(before) == [0, 1, 2]
     cached = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     res = _run_in_group(
         spark,
         "budget-resume",
         lambda: runner.run(
-            spec, processing_id=full.processing_id, start_slug="small", target_index=1
+            spec,
+            processing_id=full.processing_id,
+            start_slug="captioned",
+            target_index=1,
+            request_input=request,
         ),
     )
     # the merge leaves no cached RDD behind
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= cached
     _, stages = _group_stages(spark, "budget-resume")
-    python = [s for s in stages if s["python"]]
-    assert python, stages
+    python = _python_tasks(stages)
+    assert len(python) == 2, stages
     # one task per Python stage: no Python task without rows
-    assert sum(s["tasks"] for s in python) == len(python), python
+    assert python == [1, 1], stages
     assert not [s for s in stages if s["infer"]], "schema-inference job on a runner stage"
     after = {r.input_index: bytes(r.payload_bin) for r in res.output.collect()}
     assert after == before

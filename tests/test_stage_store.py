@@ -174,27 +174,27 @@ def test_written_stage_reopens_with_its_schema(spark, tmp_path):
 
 
 def test_merge_stage_keeps_file_count(spark, tmp_path):
-    # target-index merge: stored rows matching `keep` plus the new rows,
-    # written with the stored stage's file count and swapped in by rename
+    # target-index merge: the stored rows of the other indices plus the
+    # recomputed one, swapped in by rename. A one-file stage stays one
+    # file; a stage of one index per file (a request fan-out) keeps its
+    # file count.
     import os
 
-    def part_files():
-        path = stage_store.stage_path(str(tmp_path), "p", "x", "b")
-        return sorted(f for f in os.listdir(path) if f.startswith("part-"))
-
-    rows = [(i, 0, f"old{i}", None, None) for i in range(4)]
-    df = spark.createDataFrame(rows, stage_store.STAGE_SCHEMA).coalesce(2)
-    stage_store.write_stage(df, str(tmp_path), "p", "x", "b")
-    assert len(part_files()) == 2
-    new = spark.createDataFrame([(1, 0, "new1", None, None)], stage_store.STAGE_SCHEMA)
-    merged = stage_store.merge_stage(
-        new, str(tmp_path), "p", "x", "b", F.col("input_index") != 1
-    )
-    assert sorted((r.input_index, r.payload_str) for r in merged.collect()) == [
-        (0, "old0"), (1, "new1"), (2, "old2"), (3, "old3")
-    ]
-    assert len(part_files()) == 2
-    assert sorted(os.listdir(tmp_path / "p" / "x")) == ["b"]  # no staging left
+    for files in (1, 3):
+        block = f"b{files}"
+        path = stage_store.stage_path(str(tmp_path), "p", "x", block)
+        rows = [(i, 0, f"old{i}", None, None) for i in range(3)]
+        df = spark.createDataFrame(rows, stage_store.STAGE_SCHEMA)
+        df = df.repartitionByRange(files, "input_index")
+        stage_store.write_stage(df, str(tmp_path), "p", "x", block)
+        assert len([f for f in os.listdir(path) if f.startswith("part-")]) == files
+        new = spark.createDataFrame([(1, 0, "new1", None, None)], stage_store.STAGE_SCHEMA)
+        merged = stage_store.merge_stage(new, str(tmp_path), "p", "x", block, 1)
+        assert sorted((r.input_index, r.payload_str) for r in merged.collect()) == [
+            (0, "old0"), (1, "new1"), (2, "old2")
+        ]
+        assert len([f for f in os.listdir(path) if f.startswith("part-")]) == files
+    assert sorted(os.listdir(tmp_path / "p" / "x")) == ["b1", "b3"]  # no staging left
 
 
 def test_list_processings_non_file_uri(spark, tmp_path):
