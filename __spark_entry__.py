@@ -40,23 +40,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # ties alphabetical. tools/check_oracle.py's triple-gate runs stay the
 # backstop for the tail the window cannot reach.
 _CHANGED = (
-    # reach the shared shingle / MinHash kernels (operators/dedup.py
-    # doc_gram_hashes, minhash_mins)
-    "containment_dedup",
-    "decontaminate_minhash",
-    "dedup_allpairs_prefix",
-    "dedup_clusters",
-    "dedup_clusters_logstar",
-    "dedup_graph_pagerank",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_weighted_jaccard",
-    "incremental_dedup",
-    "leakage_safe_split",
-    "lsh_parameter_sweep",
-    "minhash_similarity_estimate",
-    "probe_minhash_candidates",
-    "shingle_novelty",
+    # reach the block operators' shared row-map kernel
+    # (operators/external.py map_rows)
+    "media_audio_chunk",
+    "media_image_resize",
+    "media_video_pipeline",
+    "media_frame_sample",
+    "media_image_stats",
+    "media_image_phash",
 )
 
 

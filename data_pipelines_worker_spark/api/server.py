@@ -451,12 +451,7 @@ class _Handler(BaseHTTPRequestHandler):
         if parts == ["health"]:
             return self._json({"status": "ok"})
         if parts == ["blocks"]:
-            ops = sorted(
-                set(compiler._OPERATORS)
-                | set(compiler._DF_OPERATORS)
-                | {compiler._MODERATION_FETCH}
-            )
-            return self._json({"blocks": ops})
+            return self._json({"blocks": sorted(compiler.BLOCK_IDS)})
         if parts == ["workers"]:
             return self._json({"workers": [{"id": "spark-driver", "available": True}]})
         if parts == ["pipelines"]:

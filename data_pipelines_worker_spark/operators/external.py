@@ -1,5 +1,7 @@
 """External-call operators (SURVEY §2.1 #2-6): ``http_request`` and the four
-OpenAI blocks as batched ``mapInPandas`` stages.
+OpenAI blocks as per-row functions run by ``map_rows``, the Arrow-batched
+row-map kernel every map-style block operator (here and in ``media.py``)
+goes through.
 
 Reference parity (cites into /root/reference/):
 
@@ -21,6 +23,9 @@ Reference parity (cites into /root/reference/):
 
 Scale notes (100 TB)
 --------------------
+- ``map_rows`` is the one Python boundary: one ``mapInPandas`` stage per
+  block at the session's Arrow batch size, the row function called once
+  per row.
 - One HTTP client per *task*, requests sequential within a partition: the
   concurrency knob is the partition count. ``parallel_available: false``
   blocks (openai_image, config.yaml:107) → ``df.repartition(n_slots)``
@@ -44,7 +49,7 @@ import urllib.parse
 import urllib.request
 import uuid
 from dataclasses import dataclass, field
-from typing import Iterable, Iterator, Mapping
+from typing import Callable, Iterable, Iterator, Mapping, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -115,6 +120,42 @@ def fetch(
         return status, payload, ctype
 
 
+def map_rows(
+    df: DataFrame,
+    fn: Callable[[dict], dict | list[dict]],
+    fields: Sequence[T.StructField],
+    drop: Sequence[str] = (),
+) -> DataFrame:
+    """The block operators' one Python boundary: an Arrow-batched
+    ``mapInPandas`` stage that calls ``fn`` on every input row (a dict of
+    all input columns) and stores the values it returns in ``fields``.
+
+    Output schema: the input columns not named in ``fields`` or ``drop``,
+    in input order, then ``fields``. ``fn`` returns one dict of new values,
+    or, for a 1→N operator, a list of them; every dict becomes one output
+    row carrying its input row's pass-through columns, and an empty list
+    emits no row."""
+    fields = list(fields)
+    new = [f.name for f in fields]
+    keep = [f for f in df.schema.fields if f.name not in new and f.name not in drop]
+    names = [f.name for f in keep]
+
+    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            take, values = [], []
+            for i, r in enumerate(pdf.to_dict("records")):
+                res = fn(r)
+                for v in [res] if isinstance(res, dict) else res:
+                    take.append(i)
+                    values.append(v)
+            out = pdf[names].iloc[take].reset_index(drop=True)
+            for name in new:
+                out[name] = [v[name] for v in values]
+            yield out
+
+    return df.mapInPandas(gen, T.StructType(keep + fields))
+
+
 def _row_mapping(value) -> dict[str, str]:
     """Per-row headers/query value → dict. Accepts a map column (dict), a
     JSON-object string column, or null (block_http.go:69-91 binds them as
@@ -150,56 +191,57 @@ def http_request(
     becomes the request body.
     """
     assert on_error in ("fail", "keep")
-    fields = list(df.schema.fields) + [
-        T.StructField("payload_bin", T.BinaryType(), True),
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-    ]
-    schema = T.StructType(fields)
-    names = [f.name for f in schema.fields]
 
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for r in pdf.to_dict("records"):
-                method = str(r[method_col]) if method_col else "GET"
-                try:
-                    url = str(r[url_col])
-                    if query_col:
-                        q = _row_mapping(r.get(query_col))
-                        if q:
-                            sep = "&" if "?" in url else "?"
-                            url = url + sep + urllib.parse.urlencode(q)
-                    req_headers = dict(headers or {})
-                    if headers_col:
-                        req_headers.update(_row_mapping(r.get(headers_col)))
-                    body = None
-                    if body_col and r.get(body_col) is not None:
-                        raw = r[body_col]
-                        body = (
-                            bytes(raw)
-                            if isinstance(raw, (bytes, bytearray))
-                            else str(raw).encode("utf-8")
-                        )
-                    status, payload, ctype = fetch(
-                        url, method, req_headers, body, timeout, policy
-                    )
-                    r.update(
-                        payload_bin=payload,
-                        status=status,
-                        mime=ctype.split(";")[0] or None,
-                        error=None,
-                    )
-                except Exception as e:  # noqa: BLE001 - recorded or re-raised
-                    if on_error == "fail":
-                        raise
-                    status = e.status if isinstance(e, HTTPStatusError) else None
-                    r.update(payload_bin=None, status=status, mime=None, error=str(e))
-                out_rows.append(r)
-            yield pd.DataFrame(out_rows, columns=names)
+    def fetch_row(r):
+        method = str(r[method_col]) if method_col else "GET"
+        try:
+            url = str(r[url_col])
+            if query_col:
+                q = _row_mapping(r.get(query_col))
+                if q:
+                    sep = "&" if "?" in url else "?"
+                    url = url + sep + urllib.parse.urlencode(q)
+            req_headers = dict(headers or {})
+            if headers_col:
+                req_headers.update(_row_mapping(r.get(headers_col)))
+            body = None
+            if body_col and r.get(body_col) is not None:
+                raw = r[body_col]
+                body = (
+                    bytes(raw)
+                    if isinstance(raw, (bytes, bytearray))
+                    else str(raw).encode("utf-8")
+                )
+            status, payload, ctype = fetch(
+                url, method, req_headers, body, timeout, policy
+            )
+            return {
+                "payload_bin": payload,
+                "status": status,
+                "mime": ctype.split(";")[0] or None,
+                "error": None,
+            }
+        except Exception as e:  # noqa: BLE001 - recorded or re-raised
+            if on_error == "fail":
+                raise
+            status = e.status if isinstance(e, HTTPStatusError) else None
+            return {
+                "payload_bin": None,
+                "status": status,
+                "mime": None,
+                "error": str(e),
+            }
 
-    return df.mapInPandas(gen, schema)
+    return map_rows(
+        df,
+        fetch_row,
+        [
+            T.StructField("payload_bin", T.BinaryType(), True),
+            T.StructField("status", T.IntegerType(), True),
+            T.StructField("mime", T.StringType(), True),
+            T.StructField("error", T.StringType(), True),
+        ],
+    )
 
 
 # --- OpenAI-compatible blocks ----------------------------------------------
@@ -259,24 +301,6 @@ class OpenAIClient:
         return resp
 
 
-def _map_rows(df: DataFrame, row_fn, out_fields: list[T.StructField]) -> DataFrame:
-    """Per-row external call; output = input columns + ``out_fields``."""
-    schema = T.StructType(list(df.schema.fields) + out_fields)
-    names = [f.name for f in schema.fields]
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                r.update(row_fn(r))
-                rows.append(r)
-            yield pd.DataFrame(rows, columns=names) if rows else pd.DataFrame(
-                columns=names
-            )
-
-    return df.mapInPandas(gen, schema)
-
-
 def openai_chat_completion(
     df: DataFrame,
     client: OpenAIClient,
@@ -298,7 +322,7 @@ def openai_chat_completion(
         body = json.loads(client.post_json("/chat/completions", payload))
         return {"completion": body["choices"][0]["message"]["content"]}
 
-    return _map_rows(df, call, [T.StructField("completion", T.StringType(), True)])
+    return map_rows(df, call, [T.StructField("completion", T.StringType(), True)])
 
 
 def openai_tts_request(
@@ -323,7 +347,7 @@ def openai_tts_request(
         )
         return {"payload_bin": audio, "mime": "audio/mpeg"}
 
-    return _map_rows(
+    return map_rows(
         df,
         call,
         [
@@ -358,7 +382,7 @@ def openai_transcription_request(
         )
         return {"transcription": body.decode("utf-8")}
 
-    return _map_rows(df, call, [T.StructField("transcription", T.StringType(), True)])
+    return map_rows(df, call, [T.StructField("transcription", T.StringType(), True)])
 
 
 def openai_image_request(
@@ -390,7 +414,7 @@ def openai_image_request(
             "mime": "image/png",
         }
 
-    return _map_rows(
+    return map_rows(
         df,
         call,
         [

@@ -1,6 +1,7 @@
-"""Media operators (SURVEY §2.1 #12-21): image/audio/video blocks as
-Arrow-batched ``mapInPandas`` / ``applyInPandas`` stages over ``BinaryType``
-payload columns.
+"""Media operators (SURVEY §2.1 #12-21): image/audio/video blocks over
+``BinaryType`` payload columns. Each map-style block is a per-row function
+run by the shared ``map_rows`` kernel (``operators/external.py``);
+``join_videos`` is an ``applyInPandas`` gather.
 
 Reference parity (all cites into /root/reference/):
 
@@ -48,7 +49,9 @@ each codec call dispatches on the payload's magic bytes:
 
 Scale notes (100 TB)
 --------------------
-- Payloads never touch the driver: every operator is a ``mapInPandas`` /
+- Payloads never touch the driver: every map-style operator is one
+  Arrow-batched ``map_rows`` stage (the kernel owns the ``mapInPandas``
+  call, the output schema and the batch loop), ``join_videos`` an
   ``applyInPandas`` stage; Arrow moves the bytes executor-side.
 - Batch size must be bounded by bytes, not rows, for large media: set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` low (e.g. 32) on media
@@ -68,7 +71,7 @@ from __future__ import annotations
 import math
 import shutil
 import struct
-from typing import Iterable, Iterator, Sequence
+from typing import Sequence
 
 try:  # real image backend, used for non-FIMG payloads when present
     from PIL import Image, ImageDraw, ImageFilter  # noqa: F401
@@ -83,6 +86,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .external import map_rows
 
 # ---------------------------------------------------------------------------
 # Fake container codecs (deterministic, pure-Python)
@@ -620,35 +625,19 @@ def _dispatch_image(data: bytes, fake_fn, *args, **kwargs) -> bytes:
 MEDIA_MIME = {"png": "image/png", "mp3": "audio/mpeg", "mp4": "video/mp4"}
 
 
-def _replace_payload(df: DataFrame, payload_col: str, mime: str):
-    """Output schema = input schema with the payload column binary + mime."""
-    fields = [
-        f
-        for f in df.schema.fields
-        if f.name not in (payload_col, "mime")
+def _payload_fields(payload_col: str) -> list[T.StructField]:
+    """A media block's new columns: the output payload, then its mime."""
+    return [
+        T.StructField(payload_col, T.BinaryType(), True),
+        T.StructField("mime", T.StringType(), True),
     ]
-    fields.append(T.StructField(payload_col, T.BinaryType(), True))
-    fields.append(T.StructField("mime", T.StringType(), True))
-    return T.StructType(fields), mime
 
 
-def _unary_media_op(
-    df: DataFrame, payload_col: str, mime: str, row_fn
-) -> DataFrame:
-    """One payload in → one payload out, all other columns pass through."""
-    schema, mime_v = _replace_payload(df, payload_col, mime)
-    names = [f.name for f in schema.fields]
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            out[payload_col] = [
-                row_fn(row) for row in pdf.to_dict("records")
-            ]
-            out["mime"] = mime_v
-            yield out[names]
-
-    return df.mapInPandas(gen, schema)
+def _indexed_payload_fields(payload_col: str) -> list[T.StructField]:
+    """A 1→N media block's new columns: the output's fan-out index first."""
+    return [T.StructField("output_index", T.LongType(), False)] + _payload_fields(
+        payload_col
+    )
 
 
 def image_resize(
@@ -658,25 +647,23 @@ def image_resize(
     keep_aspect_ratio: bool = False,
     payload_col: str = "payload_bin",
 ) -> DataFrame:
-    return _unary_media_op(
-        df,
-        payload_col,
-        MEDIA_MIME["png"],
-        lambda r: _dispatch_image(
+    def fn(r):
+        out = _dispatch_image(
             bytes(r[payload_col]), image_resize_bytes, width, height, keep_aspect_ratio
-        ),
-    )
+        )
+        return {payload_col: out, "mime": MEDIA_MIME["png"]}
+
+    return map_rows(df, fn, _payload_fields(payload_col))
 
 
 def image_blur(
     df: DataFrame, sigma: float, payload_col: str = "payload_bin"
 ) -> DataFrame:
-    return _unary_media_op(
-        df,
-        payload_col,
-        MEDIA_MIME["png"],
-        lambda r: _dispatch_image(bytes(r[payload_col]), image_blur_bytes, sigma),
-    )
+    def fn(r):
+        out = _dispatch_image(bytes(r[payload_col]), image_blur_bytes, sigma)
+        return {payload_col: out, "mime": MEDIA_MIME["png"]}
+
+    return map_rows(df, fn, _payload_fields(payload_col))
 
 
 def image_add_text(
@@ -691,11 +678,8 @@ def image_add_text(
     bg_all_width: bool = False,
     payload_col: str = "payload_bin",
 ) -> DataFrame:
-    return _unary_media_op(
-        df,
-        payload_col,
-        MEDIA_MIME["png"],
-        lambda r: _dispatch_image(
+    def fn(r):
+        out = _dispatch_image(
             bytes(r[payload_col]),
             image_add_text_bytes,
             str(r[text_col] or ""),
@@ -706,8 +690,10 @@ def image_add_text(
             bg_color=bg_color,
             bg_alpha=bg_alpha,
             bg_all_width=bg_all_width,
-        ),
-    )
+        )
+        return {payload_col: out, "mime": MEDIA_MIME["png"]}
+
+    return map_rows(df, fn, _payload_fields(payload_col))
 
 
 def video_from_image(
@@ -726,9 +712,10 @@ def video_from_image(
     def fn(r):
         s = float(r[start_col]) if start_col else start
         e = float(r[end_col]) if end_col else end
-        return video_from_image_bytes(bytes(r[payload_col]), s, e, fps)
+        out = video_from_image_bytes(bytes(r[payload_col]), s, e, fps)
+        return {payload_col: out, "mime": MEDIA_MIME["mp4"]}
 
-    return _unary_media_op(df, payload_col, MEDIA_MIME["mp4"], fn)
+    return map_rows(df, fn, _payload_fields(payload_col))
 
 
 def video_add_audio(
@@ -738,22 +725,14 @@ def video_add_audio(
     replace_original_audio: bool = False,
 ) -> DataFrame:
     """Two binary columns zipped on the row (upstream: join on input_index)."""
-    schema, mime_v = _replace_payload(df.drop(audio_col), video_col, MEDIA_MIME["mp4"])
-    names = [f.name for f in schema.fields]
 
-    def gen(batches):
-        for pdf in batches:
-            out = pdf.copy()
-            out[video_col] = [
-                video_add_audio_bytes(
-                    bytes(r[video_col]), bytes(r[audio_col]), replace_original_audio
-                )
-                for r in pdf.to_dict("records")
-            ]
-            out["mime"] = mime_v
-            yield out[names]
+    def fn(r):
+        out = video_add_audio_bytes(
+            bytes(r[video_col]), bytes(r[audio_col]), replace_original_audio
+        )
+        return {video_col: out, "mime": MEDIA_MIME["mp4"]}
 
-    return df.mapInPandas(gen, schema)
+    return map_rows(df, fn, _payload_fields(video_col), drop=[audio_col])
 
 
 def video_add_subtitles(
@@ -762,18 +741,16 @@ def video_add_subtitles(
     embedding_type: str = "burn",
     payload_col: str = "payload_bin",
 ) -> DataFrame:
-    return _unary_media_op(
-        df,
-        payload_col,
-        MEDIA_MIME["mp4"],
-        lambda r: video_add_subtitles_bytes(
-            bytes(r[payload_col]),
-            bytes(r[subtitles_col])
-            if isinstance(r[subtitles_col], (bytes, bytearray))
-            else str(r[subtitles_col] or "").encode(),
-            embedding_type,
-        ),
-    )
+    def fn(r):
+        subs = r[subtitles_col]
+        if not isinstance(subs, (bytes, bytearray)):
+            subs = str(subs or "").encode()
+        out = video_add_subtitles_bytes(
+            bytes(r[payload_col]), bytes(subs), embedding_type
+        )
+        return {payload_col: out, "mime": MEDIA_MIME["mp4"]}
+
+    return map_rows(df, fn, _payload_fields(payload_col))
 
 
 def audio_from_video(
@@ -782,12 +759,11 @@ def audio_from_video(
     end: float | None = None,
     payload_col: str = "payload_bin",
 ) -> DataFrame:
-    return _unary_media_op(
-        df,
-        payload_col,
-        MEDIA_MIME["mp3"],
-        lambda r: audio_from_video_bytes(bytes(r[payload_col]), start, end),
-    )
+    def fn(r):
+        out = audio_from_video_bytes(bytes(r[payload_col]), start, end)
+        return {payload_col: out, "mime": MEDIA_MIME["mp3"]}
+
+    return map_rows(df, fn, _payload_fields(payload_col))
 
 
 def audio_convert(
@@ -798,14 +774,23 @@ def audio_convert(
     bit_rate: int | None = None,
     payload_col: str = "payload_bin",
 ) -> DataFrame:
-    return _unary_media_op(
-        df,
-        payload_col,
-        MEDIA_MIME.get(format, "audio/" + format),
-        lambda r: audio_convert_bytes(
+    mime = MEDIA_MIME.get(format, "audio/" + format)
+
+    def fn(r):
+        out = audio_convert_bytes(
             bytes(r[payload_col]), format, mono, sample_rate, bit_rate
-        ),
-    )
+        )
+        return {payload_col: out, "mime": mime}
+
+    return map_rows(df, fn, _payload_fields(payload_col))
+
+
+def _chunk_mime(chunk: bytes) -> str:
+    if chunk[:4] == b"RIFF":
+        return "audio/wav"
+    if chunk[4:8] == b"ftyp":  # m4a segments from mp4 input
+        return "audio/mp4"
+    return MEDIA_MIME["mp3"]
 
 
 def audio_chunk(
@@ -814,41 +799,15 @@ def audio_chunk(
     """1→N: each input row yields one row per chunk with ``output_index``
     (block_audio_chunk.go — ffmpeg segment files become indexed outputs that
     downstream fan-out consumes via posexplode semantics)."""
-    base_fields = [
-        f for f in df.schema.fields if f.name not in (payload_col, "mime", "output_index")
-    ]
-    schema = T.StructType(
-        base_fields
-        + [
-            T.StructField("output_index", T.LongType(), False),
-            T.StructField(payload_col, T.BinaryType(), True),
-            T.StructField("mime", T.StringType(), True),
+
+    def fn(r):
+        chunks = audio_chunk_bytes(bytes(r[payload_col]), duration)
+        return [
+            {"output_index": i, payload_col: c, "mime": _chunk_mime(c)}
+            for i, c in enumerate(chunks)
         ]
-    )
-    names = [f.name for f in schema.fields]
-    passthrough = [f.name for f in base_fields]
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                chunks = audio_chunk_bytes(bytes(r[payload_col]), duration)
-                for i, c in enumerate(chunks):
-                    row = {k: r[k] for k in passthrough}
-                    row["output_index"] = i
-                    row[payload_col] = c
-                    if c[:4] == b"RIFF":
-                        row["mime"] = "audio/wav"
-                    elif c[4:8] == b"ftyp":  # m4a segments from mp4 input
-                        row["mime"] = "audio/mp4"
-                    else:
-                        row["mime"] = MEDIA_MIME["mp3"]
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=names) if rows else pd.DataFrame(
-                columns=names
-            )
-
-    return df.mapInPandas(gen, schema)
+    return map_rows(df, fn, _indexed_payload_fields(payload_col))
 
 
 def join_videos(
@@ -914,36 +873,15 @@ def video_frame_sample(
     ``audio_chunk``: each sampled frame becomes an indexed image row that
     downstream fan-out consumes via posexplode semantics. Executor-side
     only; at scale the per-task memory bound is one video's frames."""
-    base_fields = [
-        f for f in df.schema.fields if f.name not in (payload_col, "mime", "output_index")
-    ]
-    schema = T.StructType(
-        base_fields
-        + [
-            T.StructField("output_index", T.LongType(), False),
-            T.StructField(payload_col, T.BinaryType(), True),
-            T.StructField("mime", T.StringType(), True),
+
+    def fn(r):
+        frames = video_frame_sample_bytes(bytes(r[payload_col]), every)
+        return [
+            {"output_index": i, payload_col: img, "mime": MEDIA_MIME["png"]}
+            for i, img in enumerate(frames)
         ]
-    )
-    names = [f.name for f in schema.fields]
-    passthrough = [f.name for f in base_fields]
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.to_dict("records"):
-                frames = video_frame_sample_bytes(bytes(r[payload_col]), every)
-                for i, img in enumerate(frames):
-                    row = {k: r[k] for k in passthrough}
-                    row["output_index"] = i
-                    row[payload_col] = img
-                    row["mime"] = MEDIA_MIME["png"]
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=names) if rows else pd.DataFrame(
-                columns=names
-            )
-
-    return df.mapInPandas(gen, schema)
+    return map_rows(df, fn, _indexed_payload_fields(payload_col))
 
 
 def image_stats(df: DataFrame, payload_col: str = "payload_bin") -> DataFrame:
@@ -952,43 +890,34 @@ def image_stats(df: DataFrame, payload_col: str = "payload_bin") -> DataFrame:
     (luma = mean of RGB channels for color PNGs). The canonical multimodal
     "decode → features" stage: Arrow-batched, nothing touches the driver,
     output is plain numeric columns any relational operator can consume."""
-    fields = list(df.schema.fields) + [
-        T.StructField("img_w", T.LongType(), True),
-        T.StructField("img_h", T.LongType(), True),
-        T.StructField("px_sum", T.LongType(), True),
-        T.StructField("px_mean", T.DoubleType(), True),
-    ]
-    schema = T.StructType(fields)
-    names = [f.name for f in schema.fields]
 
-    def gen(batches):
+    def fn(r):
         from . import png_codec as P
 
-        for pdf in batches:
-            out = pdf.copy()
-            ws, hs, sums, means = [], [], [], []
-            for b in pdf[payload_col]:
-                data = bytes(b)
-                if data[:4] == FIMG_MAGIC:
-                    w, h, px = fimg_decode(data)
-                    s = sum(px)
-                elif P.is_png(data):
-                    arr = P.png_decode(data)
-                    h, w = arr.shape[:2]
-                    gray = arr[:, :, :3].mean(axis=2) if arr.ndim == 3 and arr.shape[2] >= 3 else arr[:, :, 0]
-                    s = int(round(float(gray.sum())))
-                else:
-                    _require_real_backend("image", data)
-                    raise NotImplementedError
-                ws.append(w)
-                hs.append(h)
-                sums.append(int(s))
-                means.append(s / float(w * h))
-            out["img_w"], out["img_h"] = ws, hs
-            out["px_sum"], out["px_mean"] = sums, means
-            yield out[names]
+        data = bytes(r[payload_col])
+        if data[:4] == FIMG_MAGIC:
+            w, h, px = fimg_decode(data)
+            s = sum(px)
+        elif P.is_png(data):
+            arr = P.png_decode(data)
+            h, w = arr.shape[:2]
+            gray = arr[:, :, :3].mean(axis=2) if arr.ndim == 3 and arr.shape[2] >= 3 else arr[:, :, 0]
+            s = int(round(float(gray.sum())))
+        else:
+            _require_real_backend("image", data)
+            raise NotImplementedError
+        return {"img_w": w, "img_h": h, "px_sum": int(s), "px_mean": s / float(w * h)}
 
-    return df.mapInPandas(gen, schema)
+    return map_rows(
+        df,
+        fn,
+        [
+            T.StructField("img_w", T.LongType(), True),
+            T.StructField("img_h", T.LongType(), True),
+            T.StructField("px_sum", T.LongType(), True),
+            T.StructField("px_mean", T.DoubleType(), True),
+        ],
+    )
 
 
 # --- perceptual hashing (round 7) -------------------------------------------
@@ -1067,20 +996,12 @@ def phash_bytes(data: bytes) -> int:
 def image_phash(df: DataFrame, payload_col: str = "payload_bin") -> DataFrame:
     """Adds a ``phash`` long column: the 63-bit WHT sign fingerprint of
     each image payload, decoded from real bytes executor-side (FIMG or
-    PNG — Arrow-batched ``mapInPandas``, nothing touches the driver).
+    PNG, through the ``map_rows`` kernel; nothing touches the driver).
     The multimodal analogue of the text dedup family's signature stage:
     downstream near-dup joins operate on the integer hash, never the
     pixels, so the candidate space is distinct-signature-sized."""
-    fields = list(df.schema.fields) + [
-        T.StructField("phash", T.LongType(), True)
-    ]
-    schema = T.StructType(fields)
-    names = [f.name for f in schema.fields]
-
-    def gen(batches):
-        for pdf in batches:
-            out = pdf.copy()
-            out["phash"] = [phash_bytes(bytes(b)) for b in pdf[payload_col]]
-            yield out[names]
-
-    return df.mapInPandas(gen, schema)
+    return map_rows(
+        df,
+        lambda r: {"phash": phash_bytes(bytes(r[payload_col]))},
+        [T.StructField("phash", T.LongType(), True)],
+    )

@@ -88,8 +88,7 @@ class PipelineSpec:
         from .validation import apply_input_defaults, validate_pipeline_doc
 
         if validate:
-            known = set(_OPERATORS) | set(_DF_OPERATORS) | {_MODERATION_FETCH}
-            validate_pipeline_doc(doc, known)
+            validate_pipeline_doc(doc, BLOCK_IDS)
         blocks = []
         for b in doc["blocks"]:
             cfg = b.get("input_config") or {}
@@ -597,6 +596,9 @@ def _dfop_image_request(runner, df, block):
 
 _MODERATION_FETCH = "fetch_moderation_tg"  # runner-evaluated control block
 
+#: Every block id a pipeline may name.
+BLOCK_IDS = frozenset(_OPERATORS) | frozenset(_DF_OPERATORS) | {_MODERATION_FETCH}
+
 
 @dataclass
 class Decision:
@@ -1004,6 +1006,7 @@ class PipelineRunner:
         cursors: dict[str, tuple],
         statuses: dict[str, str],
         kinds: dict[str, bool],
+        recompute: int | None,
     ):
         """fetch_moderation_tg (block_fetch_moderation_telegram.go:99-245):
         decline ⇒ stop (:237-240), regenerate ⇒ goto block+index (:241-245),
@@ -1045,7 +1048,7 @@ class PipelineRunner:
             ],
             "input_index long, output_index long, payload_str string",
         )
-        out = self._write(out, spec, processing_id, block.slug, kinds)
+        out = self._write(out, spec, processing_id, block.slug, kinds, recompute)
         if declined:
             statuses[block.slug] = "stopped"
             return "stopped", out
@@ -1116,7 +1119,8 @@ class PipelineRunner:
 
             if block.id == _MODERATION_FETCH:
                 kind, res = self._eval_moderation(
-                    block, df, spec, processing_id, decisions, cursors, statuses, kinds
+                    block, df, spec, processing_id, decisions, cursors, statuses, kinds,
+                    recompute,
                 )
                 if kind == "regenerate":
                     return res
@@ -1189,7 +1193,9 @@ class PipelineRunner:
                     flag.alias("__stop"),
                 )
                 hits = out.where(F.col("__stop")).select("input_index").take(1)
-                out = self._write(out.drop("__stop"), spec, processing_id, block.slug, kinds)
+                out = self._write(
+                    out.drop("__stop"), spec, processing_id, block.slug, kinds, recompute
+                )
                 stages[block.slug] = out
                 if hits:
                     statuses[block.slug] = "stopped"

@@ -170,30 +170,8 @@ def q_media_video_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
     src = docs.mapInPandas(gen, schema)
-    # per-row video length: fps*seconds frames (video_from_image start=0,
-    # end=seconds per row → use the generic kernel via mapInPandas)
-    vid_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-            T.StructField("audio", T.BinaryType(), True),
-        ]
-    )
-
-    def to_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload_bin": [
-                        M.video_from_image_bytes(bytes(p), 0.0, s, fps=10)
-                        for p, s in zip(pdf["payload_bin"], pdf["seconds"])
-                    ],
-                    "audio": pdf["audio"],
-                }
-            )
-
-    vid = src.mapInPandas(to_video, vid_schema)
+    # per-row video length: fps*seconds frames (start=0, end=seconds per row)
+    vid = M.video_from_image(src, 0.0, 0.0, fps=10, end_col="seconds")
     vid = M.video_add_audio(vid, "payload_bin", "audio", replace_original_audio=True)
     vid = vid.withColumn("subs", F.lit(b"Dialogue: 0,0:00:00.00,0:00:01.00,,demo"))
     vid = M.video_add_subtitles(vid, "subs", embedding_type="mux")
@@ -251,26 +229,7 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
 
     src = docs.mapInPandas(gen, schema)
-    vid_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-        ]
-    )
-
-    def to_video(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload_bin": [
-                        M.video_from_image_bytes(bytes(p), 0.0, s, fps=10)
-                        for p, s in zip(pdf["payload_bin"], pdf["seconds"])
-                    ],
-                }
-            )
-
-    vid = src.mapInPandas(to_video, vid_schema)
+    vid = M.video_from_image(src, 0.0, 0.0, fps=10, end_col="seconds")
     frames = M.video_frame_sample(vid, every=4)
     # FIMG pixel block starts at byte 13 (1-indexed); all pixels equal
     return frames.select(

@@ -151,6 +151,52 @@ def test_stop_pipeline_condition(runner):
     assert passed.output.first().payload_str == "<5>"
 
 
+def test_target_index_resume_at_stop_gate_keeps_other_indices(runner):
+    # resuming at a stop block recomputes one fan-out index; the gate stage
+    # must still hold every index, or the blocks after it lose the rest
+    from data_pipelines_worker_spark.sources import stage_store
+
+    spec = PipelineSpec(
+        slug="gated-fanout",
+        blocks=[
+            BlockSpec(id="upload_file", slug="up", fan_out=True),
+            BlockSpec(
+                id="stop_pipeline",
+                slug="gate",
+                input={"condition": ">", "value": 100},
+                bindings=[InputBinding(param="data", origin="up")],
+            ),
+            BlockSpec(
+                id="wrap_text",
+                slug="after",
+                input={"prefix": "<", "suffix": ">"},
+                bindings=[InputBinding(param="text", origin="gate")],
+            ),
+        ],
+    )
+    full = runner.run(spec, request_input={"up": {"file": ["5", "15", "7"]}})
+    res = runner.run(
+        spec, processing_id=full.processing_id, start_slug="gate", target_index=1
+    )
+    assert res.stopped_at is None
+    gate = stage_store.read_stage(
+        runner.spark,
+        runner.store_root,
+        "gated-fanout",
+        full.processing_id,
+        "gate",
+        stage_store.STAGE_SCHEMA,
+    )
+    assert sorted((r.input_index, r.payload_str) for r in gate.collect()) == [
+        (0, "5"),
+        (1, "15"),
+        (2, "7"),
+    ]
+    assert sorted(
+        (r.input_index, r.payload_str) for r in res.output.collect()
+    ) == [(0, "<5>"), (1, "<15>"), (2, "<7>")]
+
+
 def test_request_list_fanout(runner):
     spec = PipelineSpec(
         slug="multi-upload",

@@ -237,6 +237,67 @@ class TestSparkOps:
         assert rows[0].mime == "audio/mpeg"
 
 
+class TestRowMapKernel:
+    """The ``map_rows`` kernel every map-style block operator runs through."""
+
+    def test_one_to_n_row_with_no_output_emits_nothing(self, spark):
+        # one batch: a zero-sample FAUD between two real ones yields no chunk
+        df = media_df(
+            spark, [make_audio(5.0), M.faud_encode(100, b""), make_audio(1.0)]
+        ).coalesce(1)
+        rows = (
+            M.audio_chunk(df, duration=2.0)
+            .orderBy("input_index", "output_index")
+            .collect()
+        )
+        assert [(r.input_index, r.output_index) for r in rows] == [
+            (0, 0), (0, 1), (0, 2), (2, 0),
+        ]
+        assert [M.faud_duration(bytes(r.payload_bin)) for r in rows] == [
+            2.0, 2.0, 1.0, 1.0,
+        ]
+
+    def test_nullable_long_passes_through_a_unary_operator(self, spark):
+        schema = T.StructType(
+            [
+                T.StructField("input_index", T.LongType(), False),
+                T.StructField("n", T.LongType(), True),
+                T.StructField("payload_bin", T.BinaryType(), True),
+            ]
+        )
+        df = spark.createDataFrame(
+            [(i, None if i % 2 else 10 * i, make_image(8, 6, i)) for i in range(4)],
+            schema,
+        ).coalesce(1)
+        out = M.image_resize(df, 4, 0)
+        assert out.schema.simpleString() == (
+            "struct<input_index:bigint,n:bigint,payload_bin:binary,mime:string>"
+        )
+        assert out.schema["n"].nullable
+        rows = out.orderBy("input_index").collect()
+        assert [(r.input_index, r.n) for r in rows] == [
+            (0, 0), (1, None), (2, 20), (3, None),
+        ]
+        assert all(M.fimg_decode(bytes(r.payload_bin))[:2] == (4, 3) for r in rows)
+
+    def test_block_operators_cross_into_python_once(self):
+        # the media and external block operators share one mapInPandas
+        # call (the kernel, in external.py); join_videos' ordered gather is
+        # the only other Python boundary
+        import ast
+        from pathlib import Path
+
+        from data_pipelines_worker_spark.operators import external as X
+
+        calls = {}
+        for mod in (M, X):
+            tree = ast.parse(Path(mod.__file__).read_text())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Attribute) and node.attr.endswith("InPandas"):
+                    calls[node.attr] = calls.get(node.attr, 0) + 1
+        assert calls == {"mapInPandas": 1, "applyInPandas": 1}
+
+
 class TestFrameSampleAndStats:
     def test_frame_sample_bytes_every_n(self):
         img = M.fimg_encode(4, 4, bytes(range(16)))

@@ -170,3 +170,33 @@ def test_regenerate_target_must_be_upstream(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="upstream"):
         _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+
+
+def test_target_index_resume_at_gate_keeps_other_indices(spark, tmp_path):
+    # a resume at the moderation block recomputes index 1 only; the gate
+    # stage it writes must merge with the stored decisions of the others
+    from data_pipelines_worker_spark.sources import stage_store
+
+    decs = _decisions(
+        spark, [("gate", i, "approve", 100, i, None) for i in range(4)]
+    )
+    runner = _runner(spark, tmp_path)
+    full = runner.run(_spec(), REQ, decisions=decs)
+    res = runner.run(
+        _spec(),
+        processing_id=full.processing_id,
+        start_slug="gate",
+        target_index=1,
+        decisions=decs,
+    )
+    assert res.statuses["gate"] == "completed"
+    gate = stage_store.read_stage(
+        spark,
+        runner.store_root,
+        "moderated",
+        full.processing_id,
+        "gate",
+        stage_store.STAGE_SCHEMA,
+    )
+    rows = {r.input_index: json.loads(r.payload_str)["action"] for r in gate.collect()}
+    assert rows == {0: "approve", 1: "approve", 2: "approve", 3: "approve"}
