@@ -40,14 +40,9 @@ def entry(spark: SparkSession) -> DataFrame:
 # ties alphabetical. tools/check_oracle.py's triple-gate runs stay the
 # backstop for the tail the window cannot reach.
 _CHANGED = (
-    # reach the block operators' shared row-map kernel
-    # (operators/external.py map_rows)
-    "media_audio_chunk",
-    "media_image_resize",
-    "media_video_pipeline",
-    "media_frame_sample",
-    "media_image_stats",
-    "media_image_phash",
+    # the one registered query that runs the pipeline runner
+    # (plans/compiler.py PipelineRunner)
+    "pipeline_e2e",
 )
 
 

@@ -8,14 +8,18 @@ module compiles such specs into DataFrame programs:
 
 - every block's inputs are built declaratively (scan of upstream stage →
   JSONPath extraction → fan-out/zip/gather → priority coalesce);
+- every block id maps to one function in one registry, which turns the
+  block's input rows and bound parameters into its output rows;
 - every block's outputs are materialized to the stage store (checkpoint =
   resume/regenerate substrate, mirroring pipeline_block_data_registry.go);
 - control flow the reference keeps above the operator layer (stop
   conditions pipeline.go:439-513, resume :157-201, target-index :358-377)
   runs driver-side between stages.
 
-Catalyst owns everything inside a stage: chained scalar blocks collapse to
-one projection, index filters push into the stage-parquet scan.
+Catalyst owns everything inside a stage: a block's input assembly and its
+operator plan as one stage write, and index filters push into the
+stage-parquet scan. Blocks do not fuse across stages: every block writes
+its own stage.
 """
 
 from __future__ import annotations
@@ -39,6 +43,7 @@ from ..functions.strings import (
 from ..session import local_df
 from ..sources import stage_store
 from ..streaming.moderation import ACTIONS, SHORT_FORMS
+from .validation import apply_input_defaults, validate_pipeline_doc
 
 
 # --- spec model (mirrors the pipeline JSON schema) --------------------------
@@ -65,7 +70,12 @@ class BlockSpec:
     input: dict[str, Any] = field(default_factory=dict)  # static params
     bindings: list[InputBinding] = field(default_factory=list)
     fan_out: bool = False  # input_config.type == "array" (block.go:245-254)
-    parallel: bool = True  # per-index parallelism hint (free on Spark)
+
+    def __post_init__(self):
+        # schema and config defaults (separator, voice, ...) merged under
+        # the static input (MergeStructs parity, block_wrap_text.go:60-63),
+        # however the block was built
+        self.input = apply_input_defaults(self.id, self.input)
 
 
 @dataclass
@@ -81,12 +91,8 @@ class PipelineSpec:
         (pipeline_registry.go:63-84 against
         config/pipelines_validation_schema.json + per-block SchemaStrings):
         malformed documents raise :class:`~.validation.SpecValidationError`
-        here, not three blocks deep inside a Spark plan. Schema defaults
-        (separator, voice, ...) are merged under each block's static input
-        (MergeStructs parity, block_wrap_text.go:60-63).
+        here, not three blocks deep inside a Spark plan.
         """
-        from .validation import apply_input_defaults, validate_pipeline_doc
-
         if validate:
             validate_pipeline_doc(doc, BLOCK_IDS)
         blocks = []
@@ -107,34 +113,67 @@ class PipelineSpec:
                 BlockSpec(
                     id=b["id"],
                     slug=b["slug"],
-                    input=apply_input_defaults(b["id"], b.get("input") or {}),
+                    input=b.get("input") or {},
                     bindings=bindings,
                     fan_out=cfg.get("type") == "array",
-                    parallel=bool(cfg.get("parallel", True)),
                 )
             )
         return PipelineSpec(slug=doc["slug"], blocks=blocks)
 
 
-# --- operator registry ------------------------------------------------------
+# --- block registry ---------------------------------------------------------
 
-# An operator takes the bound parameter columns and returns the output value
-# column (string). 1→N operators return an array column and set EXPLODES.
-OperatorFn = Callable[[dict[str, Column]], Column]
+# A block function takes the runner, the block, its input rows and its bound
+# parameters and returns (output rows, stop). The rows carry input_index and
+# any subset of the other canonical stage columns (_canonical null-fills the
+# rest); stop is True when the block halts the run (stop_pipeline).
+BlockFn = Callable[
+    ["PipelineRunner", "BlockSpec", DataFrame, dict[str, Any]], tuple[DataFrame, bool]
+]
 
-_OPERATORS: dict[str, OperatorFn] = {}
-_EXPLODES: set[str] = set()  # operators whose output array fans out 1→N
-_STOPS: set[str] = set()  # control operators evaluated driver-side
+_BLOCKS: dict[str, BlockFn] = {}
 
 
-def operator(name: str, explodes: bool = False, stops: bool = False):
-    def deco(fn: OperatorFn) -> OperatorFn:
-        _OPERATORS[name] = fn
-        if explodes:
-            _EXPLODES.add(name)
-        if stops:
-            _STOPS.add(name)
+def _block(name: str):
+    def deco(fn: BlockFn) -> BlockFn:
+        _BLOCKS[name] = fn
         return fn
+
+    return deco
+
+
+def _text_rows(df: DataFrame, value: Column, *extra: Column) -> DataFrame:
+    """One string payload per input row, at output_index 0."""
+    return df.select(
+        "input_index",
+        F.lit(0).cast("long").alias("output_index"),
+        value.cast("string").alias("payload_str"),
+        *extra,
+    )
+
+
+def operator(name: str, explodes: bool = False):
+    """Register a Column builder ``build(params) -> value column`` as a
+    block: one string payload per input row, or with ``explodes`` one row
+    per element of the array column the builder returns (1→N)."""
+
+    def deco(build: Callable[[dict[str, Any]], Column]):
+        @_block(name)
+        def block_fn(runner, block, df, params):
+            params["__dtypes"] = dict(df.dtypes)  # array-aware rendering
+            value = build(params)
+            if not explodes:
+                return _text_rows(df, value), False
+            out = df.select(
+                "input_index", F.posexplode(value).alias("output_index", "payload_str")
+            ).select(
+                "input_index",
+                F.col("output_index").cast("long"),
+                F.col("payload_str").cast("string"),
+            )
+            return out, False
+
+        return build
 
     return deco
 
@@ -143,11 +182,21 @@ def _p(params: dict[str, Column], name: str, default: str = "") -> Column:
     return params.get(name, F.lit(default))
 
 
-@operator("upload_file")
-def _op_upload(params):
+@_block("upload_file")
+def _upload(runner, block, df, params):
     # block_upload_file.go:49-102: identity ingest; empty input is an error
     # (surfaced as NULL here; the runner's status check treats it as failed)
-    return F.when(F.length(params["file"]) > 0, params["file"])
+    value = F.when(F.length(params["file"]) > 0, params["file"])
+    if dict(df.dtypes).get("file") != "binary":
+        return _text_rows(df, value), False
+    # raw media ingest: payload stays binary, mime sniffed from magic bytes
+    # (types/helpers/storage.go:10-26)
+    out = df.select(
+        "input_index",
+        value.alias("payload_bin"),
+        stage_store.sniff_mime(value).alias("mime"),
+    )
+    return out, False
 
 
 @operator("wrap_text")
@@ -168,8 +217,7 @@ def _op_replace(params):
 
 @operator("join_strings")
 def _op_join(params):
-    sep = params.get("__separator_literal", " ")
-    return join_strings(params["strings"], sep if isinstance(sep, str) else " ")
+    return join_strings(params["strings"], params["__separator_literal"])
 
 
 @operator("format_string_from_object")
@@ -188,10 +236,21 @@ def _op_format(params):
     return format_string_from_object(template, mapping)
 
 
-@operator("stop_pipeline", stops=True)
-def _op_stop(params):
-    # value column unused for output; runner evaluates __stop over rows
-    return params["data"]
+@_block("stop_pipeline")
+def _stop_gate(runner, block, df, params):
+    # condition kernel (helpers/condition.go:18-35): numeric comparison when
+    # the comparand is numeric, else string. One take(1) decides the stop
+    # before the stage is written.
+    cond_op = str(block.input.get("condition", "=="))
+    cmp_value = block.input.get("value")
+    data = params["data"]
+    if isinstance(cmp_value, (int, float)):
+        flag = stop_condition(data.cast("double"), cond_op, float(cmp_value))
+    else:
+        flag = stop_condition(data.cast("string"), cond_op, str(cmp_value))
+    out = _text_rows(df, data, flag.alias("__stop"))
+    hits = out.where(F.col("__stop")).select("input_index").take(1)
+    return out.drop("__stop"), bool(hits)
 
 
 @operator("split_string", explodes=True)
@@ -259,29 +318,11 @@ def _op_subtitles(params):
     cfg = dict(params.get("__block_input") or {})
     style = {k: v for k, v in cfg.items() if k in ASS_STYLE_DEFAULTS}
     return subtitles_from_transcription(
-        params["transcription"], str(cfg.get("output_format", "ass")), **style
+        params["transcription"], str(cfg["output_format"]), **style
     )
 
 
 # --- DataFrame-level operators (media / external: Arrow-batched stages) -----
-
-#: Canonical stage columns (SURVEY §7 stage schema; mirrors
-#: pipeline_block_data_registry.go:296-297 payload + mime-extension layout).
-_STAGE_COLS = ("input_index", "output_index", "payload_str", "payload_bin", "mime")
-
-# fn(runner, df, block) -> DataFrame carrying input_index (+ optionally
-# output_index / payload_str / payload_bin / mime); missing canonical
-# columns are null-filled by _canonical().
-_DF_OPERATORS: dict[str, Callable[["PipelineRunner", DataFrame, "BlockSpec"], DataFrame]] = {}
-
-
-def df_operator(name: str):
-    def deco(fn):
-        _DF_OPERATORS[name] = fn
-        return fn
-
-    return deco
-
 
 #: Blocks the reference gates to sequential per-index processing
 #: (``parallel_available: false`` — config/config.yaml:107
@@ -289,7 +330,7 @@ def df_operator(name: str):
 #: video_add_subtitles, :291 audio_chunk, :302 audio_convert, :316
 #: audio_from_video; :180 fetch_moderation_tg is driver-evaluated and
 #: needs no stage gate). On Spark the analog is a bounded-width stage:
-#: the runner repartitions the block's input to its slot budget so at most
+#: the block's input is repartitioned to its slot budget so at most
 #: N concurrent tasks hit the rate-limited resource cluster-wide,
 #: whatever the upstream fan-out width.
 NON_PARALLEL_BLOCKS = frozenset(
@@ -305,29 +346,27 @@ NON_PARALLEL_BLOCKS = frozenset(
 )
 
 
-def _canonical(df: DataFrame) -> DataFrame:
-    cols = set(df.columns)
-    out = df
-    if "output_index" not in cols:
-        out = out.withColumn("output_index", F.lit(0).cast("long"))
-    if "payload_str" not in cols:
-        out = out.withColumn("payload_str", F.lit(None).cast("string"))
-    if "payload_bin" not in cols:
-        out = out.withColumn("payload_bin", F.lit(None).cast("binary"))
-    if "mime" not in cols:
-        out = out.withColumn("mime", F.lit(None).cast("string"))
-    return out.select(
-        F.col("input_index").cast("long"),
-        F.col("output_index").cast("long"),
-        F.col("payload_str").cast("string"),
-        F.col("payload_bin").cast("binary"),
-        F.col("mime").cast("string"),
-    )
+def df_operator(name: str):
+    """Register a frame adapter ``adapt(runner, df, block)`` as a block: the
+    bound parameters arrive as columns of ``df``."""
 
+    def deco(adapt: Callable[["PipelineRunner", DataFrame, "BlockSpec"], DataFrame]):
+        @_block(name)
+        def block_fn(runner, block, df, params):
+            for k, c in params.items():
+                if not k.startswith("__") and k not in df.columns:
+                    df = df.withColumn(k, c)
+            if name in NON_PARALLEL_BLOCKS:
+                # an explicit numbered repartition AQE will not re-widen: one
+                # task (the reference's sequential per-index processing,
+                # pipeline.go:607-624) unless the block's max_concurrency
+                # input allows more
+                df = df.repartition(max(1, int(block.input.get("max_concurrency", 1))))
+            return adapt(runner, df, block), False
 
-def _cfg_float(cfg: dict, key: str, default: float | None) -> float | None:
-    v = cfg.get(key, default)
-    return None if v is None else float(v)
+        return adapt
+
+    return deco
 
 
 @df_operator("image_resize")
@@ -337,9 +376,9 @@ def _dfop_image_resize(runner, df, block):
     cfg = block.input
     return media.image_resize(
         df.withColumnRenamed("image", "payload_bin"),
-        int(cfg.get("width", 100)),  # config.yaml:136-139
-        int(cfg.get("height", 100)),
-        bool(cfg.get("keep_aspect_ratio", True)),
+        int(cfg["width"]),
+        int(cfg["height"]),
+        bool(cfg["keep_aspect_ratio"]),
     )
 
 
@@ -349,7 +388,7 @@ def _dfop_image_blur(runner, df, block):
 
     return media.image_blur(
         df.withColumnRenamed("image", "payload_bin"),
-        float(block.input.get("sigma", 1.5)),  # config.yaml:149
+        float(block.input["sigma"]),
     )
 
 
@@ -361,19 +400,17 @@ def _dfop_image_add_text(runner, df, block):
     src = df.withColumnRenamed("image", "payload_bin")
     if "text" not in src.columns:
         src = src.withColumn("text", F.lit(str(cfg.get("text", ""))))
-    # fallbacks mirror config/config.yaml:119-127 (the normal path seeds
-    # them via validation.BLOCK_CONFIG_DEFAULTS before cfg is read)
     return media.image_add_text(
         src,
         "text",
-        font_size=int(cfg.get("font_size", 50)),
-        text_position=str(cfg.get("text_position", "center-center")),
+        font_size=int(cfg["font_size"]),
+        text_position=str(cfg["text_position"]),
         # full style surface (block_image_add_text.go:182-189)
-        margin=int(cfg.get("text_bg_margin", cfg.get("margin", 10))),
-        font_color=cfg.get("font_color", "#000000"),
-        bg_color=cfg.get("text_bg_color", "#000000"),
-        bg_alpha=float(cfg.get("text_bg_alpha", 0.5)),
-        bg_all_width=bool(cfg.get("text_bg_all_width", True)),
+        margin=int(cfg["text_bg_margin"]),
+        font_color=cfg["font_color"],
+        bg_color=cfg["text_bg_color"],
+        bg_alpha=float(cfg["text_bg_alpha"]),
+        bg_all_width=bool(cfg["text_bg_all_width"]),
     )
 
 
@@ -386,9 +423,9 @@ def _dfop_video_from_image(runner, df, block):
     cfg = block.input
     return media.video_from_image(
         df.withColumnRenamed("image", "payload_bin"),
-        float(cfg.get("start", 0.0)),
-        float(cfg.get("end", 1.0)),  # config.yaml:228-229
-        int(cfg.get("fps", 30)),
+        float(cfg["start"]),
+        float(cfg["end"]),
+        int(cfg["fps"]),
         start_col="start" if "start" in df.columns else None,
         end_col="end" if "end" in df.columns else None,
     )
@@ -400,7 +437,7 @@ def _dfop_join_videos(runner, df, block):
 
     return media.join_videos(
         df.withColumnRenamed("videos", "payload_bin"),
-        re_encode=bool(block.input.get("re_encode", False)),
+        re_encode=bool(block.input["re_encode"]),
     )
 
 
@@ -412,7 +449,7 @@ def _dfop_video_add_audio(runner, df, block):
         df,
         "video",
         "audio",
-        bool(block.input.get("replace_original_audio", False)),
+        bool(block.input["replace_original_audio"]),
     )
     return out.withColumnRenamed("video", "payload_bin")
 
@@ -424,7 +461,7 @@ def _dfop_video_add_subtitles(runner, df, block):
     return media.video_add_subtitles(
         df.withColumnRenamed("video", "payload_bin"),
         "subtitles",
-        str(block.input.get("embedding_type", "burn")),
+        str(block.input["embedding_type"]),
     )
 
 
@@ -432,19 +469,17 @@ def _dfop_video_add_subtitles(runner, df, block):
 def _dfop_audio_from_video(runner, df, block):
     from ..operators import media
 
-    cfg = block.input
+    # the -1 defaults mean "no trim" (block_audio_from_video.go:111-116)
     return media.audio_from_video(
         df.withColumnRenamed("video", "payload_bin"),
-        _cfg_float(cfg, "start", None),
-        _cfg_float(cfg, "end", None),
+        float(block.input["start"]),
+        float(block.input["end"]),
     )
 
 
-def _parse_go_duration(v, default: float) -> float:
+def _parse_go_duration(v) -> float:
     """Go ``time.ParseDuration`` strings ("10m", "1h30m", "90s", "250ms")
     → seconds (block_audio_chunk.go:94); bare numbers pass through."""
-    if v is None:
-        return default
     if isinstance(v, (int, float)):
         return float(v)
     import re
@@ -481,7 +516,7 @@ def _dfop_audio_chunk(runner, df, block):
 
     return media.audio_chunk(
         df.withColumnRenamed("audio", "payload_bin"),
-        _parse_go_duration(block.input.get("duration"), 600.0),
+        _parse_go_duration(block.input["duration"]),
     )
 
 
@@ -490,17 +525,15 @@ def _dfop_audio_convert(runner, df, block):
     from ..operators import media
 
     cfg = block.input
-    sr = cfg.get("sample_rate")
-    # schema field is bit_rate (block_audio_convert.go:153); the shipped
-    # podcast JSON writes "bitrate", which the reference's schema silently
-    # ignores — accept both here rather than reproduce the typo behavior
-    br = cfg.get("bit_rate", cfg.get("bitrate"))
+    sr = cfg["sample_rate"]
+    # schema field is bit_rate (block_audio_convert.go:153): the "bitrate"
+    # key of the shipped podcast JSON is ignored, as in the reference
     return media.audio_convert(
         df.withColumnRenamed("audio", "payload_bin"),
-        format=str(cfg.get("format", "mp3")),
-        mono=bool(cfg.get("mono", False)),
+        format=str(cfg["format"]),
+        mono=bool(cfg["mono"]),
         sample_rate=None if sr is None else int(sr),
-        bit_rate=_parse_bitrate(br),
+        bit_rate=_parse_bitrate(cfg["bit_rate"]),
     )
 
 
@@ -540,7 +573,7 @@ def _dfop_chat(runner, df, block):
         runner.require_openai(),
         user_prompt_col="user_prompt",
         system_prompt_col="system_prompt" if "system_prompt" in df.columns else None,
-        model=str(cfg.get("model", "gpt-4o-mini")),
+        model=str(cfg["model"]),
         response_format=str(cfg.get("response_format", "text")),
     )
     return out.withColumnRenamed("completion", "payload_str")
@@ -555,10 +588,10 @@ def _dfop_tts(runner, df, block):
         df,
         runner.require_openai(),
         text_col="text",
-        model=str(cfg.get("model", "tts-1")),
-        voice=str(cfg.get("voice", "alloy")),
-        response_format=str(cfg.get("response_format", "mp3")),
-        speed=float(cfg.get("speed", 1.0)),
+        model=str(cfg["model"]),
+        voice=str(cfg["voice"]),
+        response_format=str(cfg["response_format"]),
+        speed=float(cfg["speed"]),
     )
 
 
@@ -571,9 +604,9 @@ def _dfop_transcription(runner, df, block):
         df,
         runner.require_openai(),
         audio_col="audio",
-        model=str(cfg.get("model", "whisper-1")),
-        language=str(cfg.get("language", "en")),
-        response_format=str(cfg.get("format", "verbose_json")),
+        model=str(cfg["model"]),
+        language=str(cfg["language"]),
+        response_format=str(cfg["format"]),
     )
     return out.withColumnRenamed("transcription", "payload_str")
 
@@ -583,13 +616,13 @@ def _dfop_image_request(runner, df, block):
     from ..operators import external
 
     cfg = block.input
-    # stage width already bounded by the runner's NON_PARALLEL_BLOCKS gate
+    # stage width already bounded by df_operator's NON_PARALLEL_BLOCKS gate
     return external.openai_image_request(
         df,
         runner.require_openai(),
         prompt_col="prompt",
-        quality=str(cfg.get("quality", "standard")),
-        size=str(cfg.get("size", "1024x1024")),
+        quality=str(cfg["quality"]),
+        size=str(cfg["size"]),
         model=str(cfg.get("model", "dall-e-3")),
     )
 
@@ -597,7 +630,7 @@ def _dfop_image_request(runner, df, block):
 _MODERATION_FETCH = "fetch_moderation_tg"  # runner-evaluated control block
 
 #: Every block id a pipeline may name.
-BLOCK_IDS = frozenset(_OPERATORS) | frozenset(_DF_OPERATORS) | {_MODERATION_FETCH}
+BLOCK_IDS = frozenset(_BLOCKS) | {_MODERATION_FETCH}
 
 
 @dataclass
@@ -625,16 +658,6 @@ class _Regenerate:
     goto_index: int
 
 
-class StopPipeline(Exception):
-    """Raised (driver-side) when a stop_pipeline condition fires
-    (pipeline.go:439-513)."""
-
-    def __init__(self, block_slug: str, index: int | None = None):
-        self.block_slug = block_slug
-        self.index = index
-        super().__init__(f"pipeline stopped at {block_slug}")
-
-
 @dataclass
 class RunResult:
     processing_id: str
@@ -644,6 +667,59 @@ class RunResult:
 
 
 # --- runner -----------------------------------------------------------------
+
+#: Canonical stage columns and types (SURVEY §7 stage schema; mirrors
+#: pipeline_block_data_registry.go:296-297 payload + mime-extension layout).
+_STAGE_TYPES = {
+    "input_index": "long",
+    "output_index": "long",
+    "payload_str": "string",
+    "payload_bin": "binary",
+    "mime": "string",
+}
+
+
+def _canonical(df: DataFrame) -> DataFrame:
+    """A block's output as the canonical stage columns: a missing
+    output_index is 0, any other missing column null."""
+    fill = {"output_index": F.lit(0)}
+    return df.select(
+        *[
+            (F.col(c) if c in df.columns else fill.get(c, F.lit(None))).cast(t).alias(c)
+            for c, t in _STAGE_TYPES.items()
+        ]
+    )
+
+
+@dataclass
+class _Run:
+    """One run's state (all its passes). The runner is shared by the API's
+    concurrent processing threads, so none of this lives on the runner."""
+
+    spec: PipelineSpec
+    processing_id: str
+    request_input: dict[str, dict[str, Any]]
+    decisions: DataFrame | None
+    #: per moderation block: the last consumed decision event
+    cursors: dict[str, tuple] = field(default_factory=dict)
+    statuses: dict[str, str] = field(default_factory=dict)
+    #: payload kind per stage slug (True = binary), see stage_is_binary
+    kinds: dict[str, bool] = field(default_factory=dict)
+
+    def stage_is_binary(self, slug: str, src: DataFrame) -> bool:
+        """Whether a stage's payload is binary (file-typed in the reference).
+
+        The reference binds by the *stored output's* type — a TTS/image stage
+        hands bytes downstream without the spec saying ``format:"file"``
+        (GetInputConfigData, block.go:193-254). ``kinds`` is the run's own
+        verdict per origin slug: ``_write`` records text for stages whose
+        operator emitted no payload bytes. Where it is unknown (a rehydrated
+        stage, an operator that emits payload_bin) the kind is decided from
+        the data: one pruned ``take(1)`` on payload_bin, cached for the run.
+        """
+        if slug not in self.kinds:
+            self.kinds[slug] = bool(src.where(F.col("payload_bin").isNotNull()).take(1))
+        return self.kinds[slug]
 
 
 class PipelineRunner:
@@ -660,7 +736,6 @@ class PipelineRunner:
         store_root: str,
         openai_client=None,
         http_policy=None,
-        non_parallel_slots: int = 1,
     ):
         from ..operators.external import RetryPolicy
 
@@ -668,11 +743,6 @@ class PipelineRunner:
         self.store_root = store_root
         self.openai_client = openai_client
         self.http_policy = http_policy or RetryPolicy()
-        #: stage width for NON_PARALLEL_BLOCKS — 1 mirrors the reference's
-        #: sequential per-index processing (pipeline.go:607-624 with
-        #: parallel_available:false); raise when the gated resource allows
-        #: some concurrency. A per-block ``max_concurrency`` input overrides.
-        self.non_parallel_slots = max(1, int(non_parallel_slots))
 
     def require_openai(self):
         if self.openai_client is None:
@@ -684,26 +754,10 @@ class PipelineRunner:
 
     # -- input assembly (GetInputConfigData, block.go:193-401) --------------
 
-    @staticmethod
-    def _stage_is_binary(kinds: dict[str, bool], slug: str, src: DataFrame) -> bool:
-        """Whether a stage's payload is binary (file-typed in the reference).
-
-        The reference binds by the *stored output's* type — a TTS/image stage
-        hands bytes downstream without the spec saying ``format:"file"``
-        (GetInputConfigData, block.go:193-254). ``kinds`` is the run's own
-        verdict per origin slug: ``_write`` records text for stages whose
-        operator emitted no payload bytes. Where it is unknown (a rehydrated
-        stage, an operator that emits payload_bin) the kind is decided from
-        the data: one pruned ``take(1)`` on payload_bin, cached for the run.
-        """
-        if slug not in kinds:
-            kinds[slug] = bool(src.where(F.col("payload_bin").isNotNull()).take(1))
-        return kinds[slug]
-
     def _bind_origin(
         self,
+        run: _Run,
         stages: dict[str, DataFrame],
-        kinds: dict[str, bool],
         b: InputBinding,
         fan_out: bool,
     ) -> DataFrame:
@@ -711,7 +765,7 @@ class PipelineRunner:
         src = stages[b.origin]
         # "$" / absent path = the whole payload (oliveagle jsonpath identity)
         path = b.json_path if b.json_path not in (None, "$") else None
-        if b.binary or (path is None and self._stage_is_binary(kinds, b.origin, src)):
+        if b.binary or (path is None and run.stage_is_binary(b.origin, src)):
             # raw payload bytes: explicit format:"file" (json_schema.go:69-78)
             # or a binary-producing origin (tts/image/video stages). For
             # array_input over binary stages the rows bind as-is — the
@@ -774,12 +828,8 @@ class PipelineRunner:
         return src.select(F.col("input_index"), val.alias(b.param))
 
     def _build_inputs(
-        self,
-        block: BlockSpec,
-        stages: dict[str, DataFrame],
-        kinds: dict[str, bool],
-        request_input: dict[str, Any],
-    ) -> tuple[DataFrame, dict[str, Column]]:
+        self, run: _Run, block: BlockSpec, stages: dict[str, DataFrame]
+    ) -> tuple[DataFrame, dict[str, Any]]:
         """Assemble the block's input rows + bound parameter columns.
 
         Priority per parameter: request input > binding-derived > static
@@ -788,7 +838,7 @@ class PipelineRunner:
         df: DataFrame | None = None
         bound_params: set[str] = set()
         for b in block.bindings:
-            part = self._bind_origin(stages, kinds, b, block.fan_out)
+            part = self._bind_origin(run, stages, b, block.fan_out)
             bound_params.add(b.param)
             if df is None:
                 df = part
@@ -818,52 +868,33 @@ class PipelineRunner:
                         for c in value_cols
                     ],
                 )
-        req = request_input.get(block.slug, {})
+        req = run.request_input.get(block.slug, {})
         if df is None:
-            # no bindings: request fan-out (multipart "field[]" arrays,
-            # api/schemas/pipelines.go:117-122) or a single index-0 row
-            list_params = {
-                k: v for k, v in {**block.input, **req}.items() if isinstance(v, list)
-            }
-            if block.fan_out and list_params:
-                k0, v0 = next(iter(list_params.items()))
-                if v0 and isinstance(v0[0], (bytes, bytearray)):
-                    # multipart file[] uploads arrive as raw bytes
-                    # (api/schemas/pipelines.go:117-151)
-                    df = local_df(
-                        self.spark,
-                        [(i, bytes(x)) for i, x in enumerate(v0)],
-                        f"input_index long, {k0} binary",
-                    )
-                else:
-                    df = local_df(
-                        self.spark,
-                        [(i, str(x)) for i, x in enumerate(v0)],
-                        f"input_index long, {k0} string",
-                    )
-                bound_params = bound_params | {k0}
-                req = {k: v for k, v in req.items() if k != k0}
+            # no bindings: the seed rows are a request fan-out (multipart
+            # "field[]" arrays, api/schemas/pipelines.go:117-122), a single
+            # raw-bytes request value (one multipart file without fan-out,
+            # e.g. podcast-summary's upload) or one index-0 row. Bytes bind
+            # as a binary COLUMN so the binary-ingest path sees their type —
+            # an F.lit param would coerce to string downstream.
+            lists = [
+                (k, v) for k, v in {**block.input, **req}.items() if isinstance(v, list)
+            ]
+            raw = [(k, [v]) for k, v in req.items() if isinstance(v, (bytes, bytearray))]
+            seed = lists[0] if block.fan_out and lists else raw[0] if raw else None
+            if seed is None:
+                # one partition (local_df): a range would hand the block's
+                # Python tasks defaultParallelism - 1 empty ones
+                df = local_df(self.spark, [(0,)], "input_index long")
             else:
-                # single raw-bytes request value (one multipart file without
-                # fan-out, e.g. podcast-summary's upload): bind it as a
-                # binary COLUMN so the binary-ingest path sees its type —
-                # an F.lit param would coerce to string downstream
-                bin_params = {
-                    k: v for k, v in req.items() if isinstance(v, (bytes, bytearray))
-                }
-                if bin_params:
-                    k0, v0 = next(iter(bin_params.items()))
-                    df = local_df(
-                        self.spark,
-                        [(0, bytes(v0))],
-                        f"input_index long, {k0} binary",
-                    )
-                    bound_params = bound_params | {k0}
-                    req = {k: v for k, v in req.items() if k != k0}
-                else:
-                    # one partition (local_df): a range would hand the
-                    # block's Python tasks defaultParallelism - 1 empty ones
-                    df = local_df(self.spark, [(0,)], "input_index long")
+                k0, values = seed
+                binary = bool(values) and isinstance(values[0], (bytes, bytearray))
+                df = local_df(
+                    self.spark,
+                    [(i, bytes(x) if binary else str(x)) for i, x in enumerate(values)],
+                    f"input_index long, {k0} {'binary' if binary else 'string'}",
+                )
+                bound_params.add(k0)
+                req = {k: v for k, v in req.items() if k != k0}
 
         params: dict[str, Column] = {p: F.col(p) for p in bound_params}
         for k in set(block.input) | set(req):
@@ -910,30 +941,15 @@ class PipelineRunner:
         processing_id (pipeline.go:447-505); the decision cursor advances
         past consumed events (GetUpdates offset semantics,
         block_fetch_moderation_telegram.go:129-133,218-219)."""
-        request_input = request_input or {}
-        #: this run's payload kind per stage slug (_stage_is_binary): local
-        #: to the run, as concurrent runs share the runner
-        kinds: dict[str, bool] = {}
         resuming = processing_id is not None and start_slug is not None
-        processing_id = processing_id or uuid.uuid4().hex[:12]
-        statuses: dict[str, str] = {}
-        cursors: dict[str, tuple] = {}
+        run = _Run(
+            spec, processing_id or uuid.uuid4().hex[:12], request_input or {}, decisions
+        )
         cur_start, cur_target = start_slug, target_index
         final_stop: str | None = None
         try:
             for _ in range(max_regenerates + 1):
-                res = self._run_pass(
-                    spec,
-                    request_input,
-                    processing_id,
-                    cur_start,
-                    cur_target,
-                    resuming,
-                    decisions,
-                    cursors,
-                    statuses,
-                    kinds,
-                )
+                res = self._run_pass(run, cur_start, cur_target, resuming)
                 if isinstance(res, _Regenerate):
                     cur_start, cur_target = res.goto_slug, res.goto_index
                     resuming = True
@@ -953,8 +969,8 @@ class PipelineRunner:
                 self.spark,
                 self.store_root,
                 spec.slug,
-                processing_id,
-                statuses,
+                run.processing_id,
+                run.statuses,
                 [b.slug for b in spec.blocks],
                 stopped_at=final_stop,
             )
@@ -997,30 +1013,21 @@ class PipelineRunner:
         return out
 
     def _eval_moderation(
-        self,
-        block: BlockSpec,
-        df: DataFrame,
-        spec: PipelineSpec,
-        processing_id: str,
-        decisions: DataFrame | None,
-        cursors: dict[str, tuple],
-        statuses: dict[str, str],
-        kinds: dict[str, bool],
-        recompute: int | None,
-    ):
+        self, run: _Run, block: BlockSpec, df: DataFrame, recompute: int | None
+    ) -> "tuple[DataFrame, bool] | _Regenerate":
         """fetch_moderation_tg (block_fetch_moderation_telegram.go:99-245):
         decline ⇒ stop (:237-240), regenerate ⇒ goto block+index (:241-245),
         approve ⇒ emit {processing_id, action} JSON per index."""
         indices = sorted(
             r["input_index"] for r in df.select("input_index").distinct().collect()
         )
-        events = self._collect_decisions(decisions, block.slug, cursors.get(block.slug))
+        consumed = run.cursors.get(block.slug)
+        events = self._collect_decisions(run.decisions, block.slug, consumed)
         # Poll-loop replay: consume events in arrival order and act at the
         # first moment every index has a decision (the reference's per-index
         # pollers all return) — later events stay unconsumed for the next
         # pass. Last-decision-wins *within* the consumed window (:218-219).
         decs: dict[int, Decision] = {}
-        consumed = cursors.get(block.slug)
         covered = False
         for d in events:
             if d.action != "unknown":
@@ -1031,9 +1038,9 @@ class PipelineRunner:
                 break
         if not covered:
             missing = [i for i in indices if i not in decs]
-            statuses[block.slug] = "waiting_moderation"
+            run.statuses[block.slug] = "waiting_moderation"
             raise ModerationPending(block.slug, missing)
-        cursors[block.slug] = consumed  # offset advance: events are acked
+        run.cursors[block.slug] = consumed  # offset advance: events are acked
         declined = [i for i in indices if decs[i].action == "decline"]
         regen = [i for i in indices if decs[i].action == "regenerate"]
         out = local_df(
@@ -1042,52 +1049,43 @@ class PipelineRunner:
                 (
                     int(i),
                     0,
-                    f'{{"processing_id": "{processing_id}", "action": "{decs[i].action}"}}',
+                    f'{{"processing_id": "{run.processing_id}", "action": "{decs[i].action}"}}',
                 )
                 for i in indices
             ],
             "input_index long, output_index long, payload_str string",
         )
-        out = self._write(out, spec, processing_id, block.slug, kinds, recompute)
+        out = self._write(run, out, block.slug, recompute)
         if declined:
-            statuses[block.slug] = "stopped"
-            return "stopped", out
+            return out, True
         if regen:
             idx = regen[0]
             goto_slug = decs[idx].regenerate_block_slug or str(
                 block.input.get("regenerate_block_slug", "")
             )
-            slugs = [b.slug for b in spec.blocks]
+            slugs = [b.slug for b in run.spec.blocks]
             if goto_slug not in slugs or slugs.index(goto_slug) > slugs.index(
                 block.slug
             ):
                 raise ValueError(
                     f"regenerate target {goto_slug!r} must be an upstream block"
                 )
-            statuses[block.slug] = "regenerating"
-            return "regenerate", _Regenerate(goto_slug, int(idx))
-        statuses[block.slug] = "completed"
-        return "completed", out
+            run.statuses[block.slug] = "regenerating"
+            return _Regenerate(goto_slug, int(idx))
+        return out, False
 
     def _run_pass(
         self,
-        spec: PipelineSpec,
-        request_input: dict[str, dict[str, Any]],
-        processing_id: str,
+        run: _Run,
         start_slug: str | None,
         target_index: int | None,
         resuming: bool,
-        decisions: DataFrame | None,
-        cursors: dict[str, tuple],
-        statuses: dict[str, str],
-        kinds: dict[str, bool],
     ) -> "RunResult | _Regenerate":
+        spec = run.spec
         stages: dict[str, DataFrame] = {}
-
         start_pos = 0
         if start_slug is not None:
-            slugs = [b.slug for b in spec.blocks]
-            start_pos = slugs.index(start_slug)
+            start_pos = [b.slug for b in spec.blocks].index(start_slug)
         # resume: rehydrate prior stages lazily from the store
         # (pipeline.go:195-201 → LoadOutput)
         if resuming:
@@ -1096,18 +1094,16 @@ class PipelineRunner:
                     self.spark,
                     self.store_root,
                     spec.slug,
-                    processing_id,
+                    run.processing_id,
                     b.slug,
                     stage_store.STAGE_SCHEMA,
                 )
-                statuses[b.slug] = "loaded"
+                run.statuses[b.slug] = "loaded"
 
         stopped_at: str | None = None
         last_df: DataFrame | None = None
-        for pos, block in enumerate(spec.blocks):
-            if pos < start_pos:
-                continue
-            df, params = self._build_inputs(block, stages, kinds, request_input)
+        for pos, block in enumerate(spec.blocks[start_pos:], start_pos):
+            df, params = self._build_inputs(run, block, stages)
             # target-index recompute: only that fan-out index
             # (pipeline.go:358-377); other indices come from the stored
             # stage and are merged back when the stage is written. The one
@@ -1118,131 +1114,30 @@ class PipelineRunner:
                 df = df.where(F.col("input_index") == recompute).coalesce(1)
 
             if block.id == _MODERATION_FETCH:
-                kind, res = self._eval_moderation(
-                    block, df, spec, processing_id, decisions, cursors, statuses, kinds,
-                    recompute,
-                )
-                if kind == "regenerate":
+                res = self._eval_moderation(run, block, df, recompute)
+                if isinstance(res, _Regenerate):
                     return res
-                stages[block.slug] = res
-                last_df = res
-                if kind == "stopped":
-                    stopped_at = block.slug
-                    break
-                continue
-
-            if block.id in _DF_OPERATORS:
-                # Arrow-batched media/external stage: materialize bound
-                # params as columns, then hand the frame to the operator.
-                work = df
-                for k, c in params.items():
-                    if k.startswith("__") or k in work.columns:
-                        continue
-                    work = work.withColumn(k, c)
-                if block.id in NON_PARALLEL_BLOCKS:
-                    # parallel_available:false → bounded-width stage: an
-                    # explicit numbered repartition AQE will not re-widen,
-                    # capping cluster-wide concurrency at the slot budget.
-                    slots = int(
-                        block.input.get("max_concurrency", self.non_parallel_slots)
-                    )
-                    work = work.repartition(max(1, slots))
-                out = self._write(
-                    _DF_OPERATORS[block.id](self, work, block),
-                    spec, processing_id, block.slug, kinds, recompute,
-                )
-                stages[block.slug] = out
-                statuses[block.slug] = "completed"
-                last_df = out
-                continue
-
-            op = _OPERATORS[block.id]
-            params["__dtypes"] = dict(df.dtypes)  # array-aware rendering
-            value = op(params)
-
-            if block.id == "upload_file" and dict(df.dtypes).get("file") == "binary":
-                # raw media ingest: payload stays binary, mime sniffed from
-                # magic bytes (types/helpers/storage.go:10-26)
-                out = self._write(
-                    df.select(
-                        "input_index",
-                        value.alias("payload_bin"),
-                        stage_store.sniff_mime(value).alias("mime"),
-                    ),
-                    spec, processing_id, block.slug, kinds, recompute,
-                )
-                stages[block.slug] = out
-                statuses[block.slug] = "completed"
-                last_df = out
-                continue
-
-            if block.id in _STOPS:
-                # condition kernel (helpers/condition.go:18-35): numeric
-                # comparison when the comparand is numeric, else string.
-                cond_op = str(block.input.get("condition", "=="))
-                cmp_value = block.input.get("value")
-                data = params["data"]
-                if isinstance(cmp_value, (int, float)):
-                    flag = stop_condition(data.cast("double"), cond_op, float(cmp_value))
-                else:
-                    flag = stop_condition(data.cast("string"), cond_op, str(cmp_value))
-                out = df.select(
-                    "input_index",
-                    F.lit(0).cast("long").alias("output_index"),
-                    data.cast("string").alias("payload_str"),
-                    flag.alias("__stop"),
-                )
-                hits = out.where(F.col("__stop")).select("input_index").take(1)
-                out = self._write(
-                    out.drop("__stop"), spec, processing_id, block.slug, kinds, recompute
-                )
-                stages[block.slug] = out
-                if hits:
-                    statuses[block.slug] = "stopped"
-                    stopped_at = block.slug
-                    last_df = out
-                    break
-                statuses[block.slug] = "completed"
-                last_df = out
-                continue
-
-            if block.id in _EXPLODES:
-                out = df.select(
-                    "input_index", F.posexplode(value).alias("output_index", "payload_str")
-                ).select(
-                    "input_index",
-                    F.col("output_index").cast("long"),
-                    F.col("payload_str").cast("string"),
-                )
+                out, stop = res
             else:
-                out = df.select(
-                    "input_index",
-                    F.lit(0).cast("long").alias("output_index"),
-                    value.cast("string").alias("payload_str"),
-                )
-
-            out = self._write(out, spec, processing_id, block.slug, kinds, recompute)
-            stages[block.slug] = out
-            statuses[block.slug] = "completed"
-            last_df = out
+                out, stop = _BLOCKS[block.id](self, block, df, params)
+                out = self._write(run, out, block.slug, recompute)
+            stages[block.slug] = last_df = out
+            run.statuses[block.slug] = "stopped" if stop else "completed"
+            if stop:
+                stopped_at = block.slug
+                break
 
         for b in spec.blocks:
-            statuses.setdefault(b.slug, "skipped")
+            run.statuses.setdefault(b.slug, "skipped")
         return RunResult(
-            processing_id=processing_id,
-            statuses=statuses,
+            processing_id=run.processing_id,
+            statuses=run.statuses,
             stopped_at=stopped_at,
             output=last_df,
         )
 
     def _write(
-        self,
-        df: DataFrame,
-        spec: PipelineSpec,
-        processing_id: str,
-        slug: str,
-        kinds: dict[str, bool],
-        recompute: int | None = None,
+        self, run: _Run, df: DataFrame, slug: str, recompute: int | None = None
     ) -> DataFrame:
         """Materialize a block's output stage and return it reopened from
         the store. With ``recompute`` set, ``df`` holds only that recomputed
@@ -1250,17 +1145,17 @@ class PipelineRunner:
 
         An output without a payload_bin column is a text stage — _canonical
         null-fills the column — so its kind needs no probe job; any other
-        output's kind is left for _stage_is_binary to find out.
+        output's kind is left for stage_is_binary to find out.
         """
         if "payload_bin" in df.columns:
-            kinds.pop(slug, None)
+            run.kinds.pop(slug, None)
         else:
-            kinds[slug] = False
+            run.kinds[slug] = False
         out = _canonical(df)
         if recompute is None:
             return stage_store.write_stage(
-                out, self.store_root, spec.slug, processing_id, slug
+                out, self.store_root, run.spec.slug, run.processing_id, slug
             )
         return stage_store.merge_stage(
-            out, self.store_root, spec.slug, processing_id, slug, recompute
+            out, self.store_root, run.spec.slug, run.processing_id, slug, recompute
         )

@@ -197,6 +197,51 @@ def test_target_index_resume_at_stop_gate_keeps_other_indices(runner):
     ) == [(0, "<5>"), (1, "<15>"), (2, "<7>")]
 
 
+def test_stop_gate_job_budget(spark, tmp_path):
+    # a gate that never fires costs its stage write plus one take(1) probe
+    # for a firing row: evaluated once, before the write. Measured as the
+    # difference between the same fan-out with and without the gate.
+    from test_job_budget import _group_stages, _run_in_group
+
+    def spec(gated: bool) -> PipelineSpec:
+        blocks = [BlockSpec(id="upload_file", slug="nums", fan_out=True)]
+        if gated:
+            blocks.append(
+                BlockSpec(
+                    id="stop_pipeline",
+                    slug="gate",
+                    input={"condition": ">", "value": 100},
+                    bindings=[InputBinding(param="data", origin="nums")],
+                )
+            )
+        blocks.append(
+            BlockSpec(
+                id="wrap_text",
+                slug="wrapped",
+                input={"prefix": "<", "suffix": ">"},
+                bindings=[InputBinding(param="text", origin=blocks[-1].slug)],
+            )
+        )
+        return PipelineSpec(slug=f"gate-budget-{gated}", blocks=blocks)
+
+    runner = PipelineRunner(spark, str(tmp_path))
+    jobs = {}
+    for gated in (False, True):
+        group = f"gate-budget-{gated}"
+        res = _run_in_group(
+            spark,
+            group,
+            lambda: runner.run(spec(gated), request_input={"nums": {"file": ["5", "15", "7"]}}),
+        )
+        assert res.stopped_at is None
+        assert sorted(r.payload_str for r in res.output.collect()) == ["<15>", "<5>", "<7>"]
+        jobs[gated] = _group_stages(spark, group)[0]
+    # take(1) scans the first of the fan-out's partitions, then (no hit)
+    # the rest in one more job
+    width = min(3, spark.sparkContext.defaultParallelism)
+    assert jobs[True] - jobs[False] == 1 + min(width, 2), jobs
+
+
 def test_request_list_fanout(runner):
     spec = PipelineSpec(
         slug="multi-upload",

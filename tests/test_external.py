@@ -29,6 +29,10 @@ TRANSCRIPTION = {
 }
 
 
+#: model named by every chat completion request the mock server received
+CHAT_MODELS: list[str] = []
+
+
 class _Handler(BaseHTTPRequestHandler):
     def log_message(self, *args):  # quiet
         pass
@@ -70,6 +74,7 @@ class _Handler(BaseHTTPRequestHandler):
             self._send(200, json.dumps(resp).encode(), "application/json")
         elif self.path == "/v1/chat/completions":
             req = json.loads(body)
+            CHAT_MODELS.append(req["model"])
             user = [m for m in req["messages"] if m["role"] == "user"][-1]["content"]
             sys_n = len([m for m in req["messages"] if m["role"] == "system"])
             resp = {
@@ -216,3 +221,28 @@ class TestSparkOps:
         rows = X.openai_image_request(df.repartition(1), client).collect()
         assert M.fimg_decode(bytes(rows[0].payload_bin))[:2] == (4, 4)
         assert rows[0].mime == "image/png"
+
+
+def test_hand_built_chat_block_sends_the_default_model(spark, server, tmp_path):
+    # a block built in code gets the config defaults a pipeline document
+    # gets: the default model and the default system prompt
+    from data_pipelines_worker_spark.plans.compiler import (
+        BlockSpec,
+        PipelineRunner,
+        PipelineSpec,
+    )
+
+    spec = PipelineSpec(
+        slug="chat",
+        blocks=[
+            BlockSpec(
+                id="openai_chat_completion", slug="story", input={"user_prompt": "hi"}
+            )
+        ],
+    )
+    client = X.OpenAIClient(server + "/v1", policy=FAST)
+    runner = PipelineRunner(spark, str(tmp_path), openai_client=client)
+    CHAT_MODELS.clear()
+    res = runner.run(spec)
+    assert CHAT_MODELS == ["gpt-4o-2024-08-06"]
+    assert res.output.first().payload_str == "Re[1]: hi"

@@ -271,7 +271,7 @@ def test_non_parallel_block_stage_width_bounded(spark, tmp_path):
     # upstream fan-out. Plan audit for VERDICT item 10.
     import glob
 
-    runner = PipelineRunner(spark, str(tmp_path / "stages"), non_parallel_slots=2)
+    runner = PipelineRunner(spark, str(tmp_path / "stages"))
     spec = PipelineSpec(
         slug="gated",
         blocks=[
@@ -279,7 +279,7 @@ def test_non_parallel_block_stage_width_bounded(spark, tmp_path):
             BlockSpec(
                 id="audio_chunk",
                 slug="chunks",
-                input={"duration": 1.0},
+                input={"duration": 1.0, "max_concurrency": 2},
                 bindings=[InputBinding(param="audio", origin="up", binary=True)],
             ),
         ],

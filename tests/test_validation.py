@@ -15,8 +15,12 @@ from data_pipelines_worker_spark.functions.schema_cast import (
     cast_data_to_type,
     cast_with_fallback,
 )
-from data_pipelines_worker_spark.plans.compiler import PipelineSpec
-from data_pipelines_worker_spark.plans.validation import SpecValidationError
+from data_pipelines_worker_spark.plans.compiler import BlockSpec, PipelineSpec
+from data_pipelines_worker_spark.plans.validation import (
+    BLOCK_CONFIG_DEFAULTS,
+    BLOCK_INPUT_SCHEMAS,
+    SpecValidationError,
+)
 
 from conftest import REFERENCE_PIPELINES
 
@@ -269,3 +273,20 @@ def test_audio_convert_seeds_config_defaults():
     assert blk.input["format"] == "mp3"
     assert blk.input["mono"] is False
     assert blk.input["sample_rate"] == 44100
+
+
+def test_hand_built_block_gets_the_json_defaults():
+    # one default table: a block built in code ends up with the same
+    # effective input as the same block read from a pipeline document
+    for bid in sorted(set(BLOCK_CONFIG_DEFAULTS) | set(BLOCK_INPUT_SCHEMAS)):
+        doc = {
+            "slug": "defaults",
+            "blocks": [{"id": bid, "slug": "b", "input": {"text": "T"}}],
+        }
+        from_json = PipelineSpec.from_json(doc, validate=False).blocks[0]
+        assert BlockSpec(id=bid, slug="b", input={"text": "T"}).input == from_json.input
+    chat = BlockSpec(id="openai_chat_completion", slug="story")
+    assert chat.input["model"] == "gpt-4o-2024-08-06"
+    assert chat.input["system_prompt"] == "You are a helpful assistant."
+    assert BlockSpec(id="video_add_subtitles", slug="s").input["embedding_type"] == "mux"
+    assert BlockSpec(id="join_strings", slug="j").input["separator"] == ""
