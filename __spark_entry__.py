@@ -41,8 +41,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # backstop for the tail the window cannot reach.
 _CHANGED = (
     # the one registered query that runs the pipeline runner
-    # (plans/compiler.py PipelineRunner)
+    # (plans/compiler.py PipelineRunner, whose input assembly is built from
+    # operators/dataflow.py)
     "pipeline_e2e",
+    # the catalogue entries of the operators/dataflow.py functions the
+    # runner now calls
+    "gather_join_strings",
+    "zip_merge_positional",
+    "coalesce_priority",
+    "index_targeting",
+    "json_auto_detect",
 )
 
 

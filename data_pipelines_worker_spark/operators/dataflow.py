@@ -2,7 +2,14 @@
 
 Reference: types/dataclasses/block.go:193-401 (GetInputConfigData) and
 types/dataclasses/pipeline.go:204-635. SURVEY §2.2 maps each to a Spark
-primitive; this module is that mapping as reusable plan builders.
+primitive; this module is that mapping as reusable plan builders, and the
+only implementation of it: the production caller is
+``plans.compiler.PipelineRunner``, which builds every block's inputs from
+these functions (fan-out, the MergeMaps positional merge, the
+``array_input`` gather, input priority, the target index); the
+``dataflow_queries`` catalogue entries gate the same functions against
+DuckDB oracles, and ``stage_store.sniff_mime`` takes its JSON test from
+``json_auto_detect``.
 
 Scale notes (100 TB):
 
@@ -20,7 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
 
@@ -34,23 +41,58 @@ def fan_out(df: DataFrame, array_col: str | Column, value_name: str, index_name:
     return df.select("*", F.posexplode(col).alias(index_name, value_name))
 
 
+def fan_out_buffers(
+    df: DataFrame, arr: Column, value_name: str, index_col: str = "input_index"
+) -> DataFrame:
+    """Fan-out over the concatenation of every buffer's array:
+    DataFrame(``index_col``, ``value_name``), one row per element.
+
+    Reference: block.go:245-254,348-359 — a wildcard JSONPath over a
+    multi-buffer origin numbers its matches across all buffers, in buffer
+    order. The running index is offset(buffer) + position-within-buffer:
+    the only unpartitioned window runs over the one-row-per-buffer size
+    table (control-plane cardinality), never over the fan-out rows
+    themselves — no single-task funnel however wide the fan-out gets.
+    """
+    sizes = df.select(
+        F.col(index_col).alias("src_idx"),
+        F.greatest(F.size(arr), F.lit(0)).alias("__n"),
+    )
+    w = W.orderBy("src_idx").rowsBetween(W.unboundedPreceding, -1)
+    offsets = sizes.select(
+        "src_idx",
+        F.coalesce(F.sum("__n").over(w), F.lit(0)).alias("__off"),
+    )
+    exploded = df.select(
+        F.col(index_col).alias("src_idx"),
+        F.posexplode(arr).alias("pos", value_name),
+    )
+    return exploded.join(F.broadcast(offsets), "src_idx").select(
+        (F.col("__off") + F.col("pos")).cast("long").alias(index_col),
+        value_name,
+    )
+
+
 def gather(
     df: DataFrame,
     group_cols: Sequence[str],
-    value_col: str,
-    index_col: str = "input_index",
+    value: str | Column,
+    order: Sequence[str] = ("input_index",),
     out_name: str = "gathered",
 ) -> DataFrame:
-    """Collect all elements of a group back into an index-ordered array.
+    """Collect all elements of a group back into an array ordered by the
+    ``order`` columns.
 
     Reference: ``array_input: true`` passes *all* output buffers of the
     origin as one array value, in output order (block.go:274-276, 306-336;
     used by join_videos / join_strings). Go's ordering is implicit slice
     order; here it is made explicit: ``sort_array(collect_list(struct))`` —
     deterministic under any partitioning, no global sort, map-side partial
-    aggregation applies.
+    aggregation applies. The pipeline runner gathers a whole stage (no
+    group keys) in (input_index, output_index) order.
     """
-    pair = F.struct(F.col(index_col).alias("i"), F.col(value_col).alias("v"))
+    v = F.col(value) if isinstance(value, str) else value
+    pair = F.struct(*[F.col(c) for c in order], v.alias("v"))
     agg = F.transform(F.sort_array(F.collect_list(pair)), lambda s: s["v"]).alias(out_name)
     return df.groupBy(*group_cols).agg(agg)
 
@@ -72,12 +114,17 @@ def zip_merge(
 
     Spark: equi-join on (row keys, input_index). Both sides arrive
     hash-partitioned on the same key so this is one co-located shuffle.
+    With no row keys (the pipeline runner's merge of one block's origins)
+    the fill-forward window is unpartitioned by design: inherit-from-
+    previous-row is a sequential recurrence over the run's input indices,
+    whose cardinality is the block's fan-out width (segments of one media
+    file, buffers of one processing) — control-plane scale, not table
+    scale. Table-scale fan-out never routes through MergeMaps (it has a
+    single origin, no merge).
     """
     keys = [*on, index_col]
     if not fill_forward:
         return left.join(right, keys, "inner")
-    from pyspark.sql import Window as W
-
     joined = left.join(right, keys, "full_outer")
     value_cols = [c for c in joined.columns if c not in keys]
     w = W.partitionBy(*on).orderBy(index_col).rowsBetween(W.unboundedPreceding, 0)
@@ -85,19 +132,17 @@ def zip_merge(
     return joined.select(*keys, *filled)
 
 
-def zip_arrays(df: DataFrame, cols: Sequence[str], out_name: str = "zipped") -> DataFrame:
-    """Same-row array zip: ``arrays_zip`` of aligned array columns —
-    the no-shuffle fast path when all origins live in one document row."""
-    return df.withColumn(out_name, F.arrays_zip(*[F.col(c) for c in cols]))
-
-
-def coalesce_priority(*cols: Column | None) -> Column:
+def coalesce_priority(*cols: Column | None) -> Column | None:
     """Input priority: request input > derived input > static default.
 
     Reference: pipeline.go:281-305 (GetInputDataByPriority — first writer
-    wins per key) ⇒ ``F.coalesce`` in priority order.
+    wins per key) ⇒ ``F.coalesce`` in priority order. ``None`` stands for
+    a source that does not set the key; a lone present column is returned
+    as is, and no present column gives ``None``.
     """
     present = [c for c in cols if c is not None]
+    if len(present) <= 1:
+        return present[0] if present else None
     return F.coalesce(*present)
 
 
@@ -116,12 +161,6 @@ def json_auto_detect(col: Column) -> Column:
     with ``{``, ``[`` or ``"`` is treated as JSON, else as a plain string.
     Returns a boolean column; callers branch with ``F.when``."""
     return F.regexp_like(F.ltrim(col), F.lit(r'^[\[{"]'))
-
-
-def limit_shortcut(arr: Column, joined: Column) -> Column:
-    """1-element arrays bypass join/concat (join_strings.go:67-71,
-    join_videos.go:76-81)."""
-    return F.when(F.size(arr) == 1, F.element_at(arr, 1)).otherwise(joined)
 
 
 def salted_agg(

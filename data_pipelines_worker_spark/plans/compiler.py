@@ -7,7 +7,10 @@ algebra (types/dataclasses/block.go:193-401, pipeline.go:204-635). This
 module compiles such specs into DataFrame programs:
 
 - every block's inputs are built declaratively (scan of upstream stage →
-  JSONPath extraction → fan-out/zip/gather → priority coalesce);
+  JSONPath extraction → fan-out/zip/gather → priority coalesce) from the
+  plan builders of ``operators/dataflow.py``, the one implementation of the
+  input algebra (the catalogue's ``dataflow_queries`` gate the same
+  functions against DuckDB oracles);
 - every block id maps to one function in one registry, which turns the
   block's input rows and bound parameters into its output rows;
 - every block's outputs are materialized to the stage store (checkpoint =
@@ -28,7 +31,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.json_path import json_path_array, json_path_scalar
@@ -40,9 +43,10 @@ from ..functions.strings import (
     text_replace,
     wrap_text,
 )
+from ..operators import dataflow
 from ..session import local_df
 from ..sources import stage_store
-from ..streaming.moderation import ACTIONS, SHORT_FORMS
+from ..streaming.moderation import normalize_action
 from .validation import apply_input_defaults, validate_pipeline_doc
 
 
@@ -668,6 +672,15 @@ class RunResult:
 
 # --- runner -----------------------------------------------------------------
 
+
+def _data_lit(values: dict[str, Any], k: str) -> Column | None:
+    """``values[k]`` as a literal column; None where the key is unset or its
+    value is a dict — block *configuration* (extra_decisions, Telegram
+    keyboard config) that stays in ``__block_input`` only."""
+    v = values.get(k, {})
+    return None if isinstance(v, dict) else F.lit(v)
+
+
 #: Canonical stage columns and types (SURVEY §7 stage schema; mirrors
 #: pipeline_block_data_registry.go:296-297 payload + mime-extension layout).
 _STAGE_TYPES = {
@@ -779,47 +792,16 @@ class PipelineRunner:
             # output BEFORE the gather (podcast-summary.json gathers
             # "$.text" of every chunk transcription — block.go:306-336
             # routes each buffer through the same JSONPath lookup).
-            v = (
-                json_path_scalar(F.col("payload_str"), path)
-                if path
-                else F.col("payload_str")
-            )
-            pair = F.struct(
-                F.col("input_index").alias("i"),
-                F.col("output_index").alias("o"),
-                v.alias("v"),
-            )
-            arr = F.transform(F.sort_array(F.collect_list(pair)), lambda s: s["v"])
-            return src.agg(arr.alias(b.param)).select(
-                F.lit(0).cast("long").alias("input_index"), b.param
-            )
+            v = json_path_scalar(F.col("payload_str"), path) if path else F.col("payload_str")
+            return dataflow.gather(
+                src, [], v, order=("input_index", "output_index"), out_name=b.param
+            ).select(F.lit(0).cast("long").alias("input_index"), b.param)
         if b.json_path and "[*]" in b.json_path:
             arr = json_path_array(F.col("payload_str"), b.json_path)
             if fan_out:
                 # wildcard fan-out: indices run over the concatenation of
-                # every origin buffer's matches (block.go:245-254,348-359).
-                # The running index is offset(src buffer) + position-within-
-                # buffer: the only unpartitioned window runs over the
-                # one-row-per-buffer size table (control-plane cardinality),
-                # never over the fan-out rows themselves — no single-task
-                # funnel however wide the fan-out gets.
-                sizes = src.select(
-                    F.col("input_index").alias("src_idx"),
-                    F.greatest(F.size(arr), F.lit(0)).alias("__n"),
-                )
-                w = W.orderBy("src_idx").rowsBetween(W.unboundedPreceding, -1)
-                offsets = sizes.select(
-                    "src_idx",
-                    F.coalesce(F.sum("__n").over(w), F.lit(0)).alias("__off"),
-                )
-                exploded = src.select(
-                    F.col("input_index").alias("src_idx"),
-                    F.posexplode(arr).alias("pos", b.param),
-                )
-                return exploded.join(F.broadcast(offsets), "src_idx").select(
-                    (F.col("__off") + F.col("pos")).cast("long").alias("input_index"),
-                    b.param,
-                )
+                # every origin buffer's matches
+                return dataflow.fan_out_buffers(src, arr, b.param)
             return src.select(F.col("input_index"), arr.alias(b.param))
         if path:
             val = json_path_scalar(F.col("payload_str"), path)
@@ -833,41 +815,19 @@ class PipelineRunner:
         """Assemble the block's input rows + bound parameter columns.
 
         Priority per parameter: request input > binding-derived > static
-        block input (GetInputDataByPriority, pipeline.go:281-305).
+        block input (GetInputDataByPriority, pipeline.go:281-305). Parameters
+        follow insertion order — bindings, then the static input, then the
+        request keys — so a spec compiles to the same plan in every process.
         """
         df: DataFrame | None = None
-        bound_params: set[str] = set()
+        params: dict[str, Column] = {}
         for b in block.bindings:
             part = self._bind_origin(run, stages, b, block.fan_out)
-            bound_params.add(b.param)
-            if df is None:
-                df = part
-            else:
-                # positional merge of origins (MergeMaps, block.go:404-500):
-                # full-outer on index, missing values inherited from the
-                # previous row (scalar-vs-array broadcast fill). The
-                # fill-forward window is unpartitioned by design: inherit-
-                # from-previous-row is a sequential recurrence over the
-                # run's input indices, whose cardinality is the block's
-                # fan-out width (segments of one media file, buffers of one
-                # processing) — control-plane scale, bounded in practice by
-                # the reference's own per-processing buffer counts, not by
-                # table scale. Table-scale fan-out never routes through
-                # MergeMaps (it has a single origin, no merge).
-                keys = ["input_index"]
-                joined = df.join(part, keys, "full_outer")
-                value_cols = [c for c in joined.columns if c not in keys]
-                w = (
-                    W.orderBy("input_index")
-                    .rowsBetween(W.unboundedPreceding, 0)
-                )
-                df = joined.select(
-                    *keys,
-                    *[
-                        F.last(F.col(c), ignorenulls=True).over(w).alias(c)
-                        for c in value_cols
-                    ],
-                )
+            params[b.param] = F.col(b.param)
+            # positional merge of origins (MergeMaps, block.go:404-500):
+            # missing values inherited from the previous row (scalar-vs-array
+            # broadcast fill)
+            df = part if df is None else dataflow.zip_merge(df, part, [], fill_forward=True)
         req = run.request_input.get(block.slug, {})
         if df is None:
             # no bindings: the seed rows are a request fan-out (multipart
@@ -893,29 +853,20 @@ class PipelineRunner:
                     [(i, bytes(x) if binary else str(x)) for i, x in enumerate(values)],
                     f"input_index long, {k0} {'binary' if binary else 'string'}",
                 )
-                bound_params.add(k0)
+                params[k0] = F.col(k0)
                 req = {k: v for k, v in req.items() if k != k0}
 
-        params: dict[str, Column] = {p: F.col(p) for p in bound_params}
-        for k in set(block.input) | set(req):
+        for k in dict.fromkeys([*block.input, *req]):
             if k in ("template", "separator", "condition", "value"):
                 # plan-time literals consumed by the operator builder /
                 # stop-condition kernel, not data columns
                 continue
-            # priority coalesce: request > binding-derived > static default.
-            # Dict-valued statics (e.g. extra_decisions, Telegram keyboard
-            # config) are block *configuration*, not column data — they stay
-            # in __block_input only.
-            parts: list[Column] = []
-            if k in req and not isinstance(req[k], dict):
-                parts.append(F.lit(req[k]))
-            if k in params:
-                parts.append(params[k])
-            if k in block.input and not isinstance(block.input[k], dict):
-                parts.append(F.lit(block.input[k]))
-            if not parts:
-                continue
-            params[k] = parts[0] if len(parts) == 1 else F.coalesce(*parts)
+            # priority coalesce: request > binding-derived > static default
+            value = dataflow.coalesce_priority(
+                _data_lit(req, k), params.get(k), _data_lit(block.input, k)
+            )
+            if value is not None:
+                params[k] = value
         merged_static = {**block.input, **req}
         if "template" in merged_static:
             params["__template_literal"] = merged_static["template"]
@@ -986,20 +937,20 @@ class PipelineRunner:
         if decisions is None:
             return []
         cols = decisions.columns
-        rows = decisions.where(F.col("block_slug") == block_slug).collect()
+        rows = (
+            decisions.where(F.col("block_slug") == block_slug)
+            .withColumn("action", normalize_action(F.col("action")))
+            .collect()
+        )
         out: list[Decision] = []
         for r in rows:
             key = (r["event_time"], r["event_id"])
             if cursor is not None and key <= cursor:
                 continue  # consumed by a previous poll (offset advanced)
-            action = str(r["action"]).lower()
-            action = SHORT_FORMS.get(action, action)
-            if action not in ACTIONS:
-                action = "unknown"
             out.append(
                 Decision(
                     input_index=int(r["input_index"]),
-                    action=action,
+                    action=r["action"],
                     event_time=r["event_time"],
                     event_id=int(r["event_id"]),
                     regenerate_block_slug=(
@@ -1111,7 +1062,7 @@ class PipelineRunner:
             # stage it would leave every other file's task empty.
             recompute = target_index if pos == start_pos and start_slug is not None else None
             if recompute is not None:
-                df = df.where(F.col("input_index") == recompute).coalesce(1)
+                df = dataflow.target_index(df, recompute).coalesce(1)
 
             if block.id == _MODERATION_FETCH:
                 res = self._eval_moderation(run, block, df, recompute)

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dataflow import json_auto_detect
+
 #: Canonical stage schema (SURVEY §7): one row per (input_index, output_index).
 STAGE_SCHEMA = T.StructType(
     [
@@ -216,10 +218,7 @@ def sniff_mime(payload: Column) -> Column:
         "video/mp4",
     )
     # JSON-ish text (HandleResultValue semantics, block.go:502-519)
-    as_text = payload.cast("string")
-    expr = expr.when(
-        F.regexp_like(F.ltrim(as_text), F.lit(r'^[\[{"]')), "application/json"
-    )
+    expr = expr.when(json_auto_detect(payload.cast("string")), "application/json")
     return expr.otherwise(F.lit("text/plain"))
 
 

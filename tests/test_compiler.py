@@ -442,3 +442,164 @@ def test_concurrent_runs_keep_their_own_payload_kinds(spark, tmp_path, monkeypat
     text.join(180)
     raw.join(180)
     assert results == {"kinds-text": "[hello]", "kinds-bytes": "[hello]"}
+
+
+def _stage_rows(runner, spec: PipelineSpec, res, slug: str) -> list[tuple]:
+    from data_pipelines_worker_spark.sources import stage_store
+
+    stage = stage_store.read_stage(
+        runner.spark,
+        runner.store_root,
+        spec.slug,
+        res.processing_id,
+        slug,
+        stage_store.STAGE_SCHEMA,
+    )
+    return sorted(
+        (r.input_index, r.output_index, r.payload_str) for r in stage.collect()
+    )
+
+
+def test_merge_broadcasts_scalar_origin_to_every_fanout_index(runner):
+    # MergeMaps: a 1-row origin ($.language) merged with a 3-index fan-out
+    # origin — every index inherits the scalar
+    spec = PipelineSpec(
+        slug="scalar-broadcast",
+        blocks=[
+            BlockSpec(id="upload_file", slug="transcription"),
+            BlockSpec(
+                id="wrap_text",
+                slug="wrap",
+                input={"suffix": "!"},
+                bindings=[
+                    InputBinding(param="prefix", origin="transcription", json_path="$.language"),
+                    InputBinding(
+                        param="text", origin="transcription", json_path="$.segments[*].text"
+                    ),
+                ],
+                fan_out=True,
+            ),
+        ],
+    )
+    res = runner.run(spec, request_input={"transcription": {"file": TRANSCRIPTION}})
+    assert _stage_rows(runner, spec, res, "wrap") == [
+        (0, 0, "englishall the lonely people!"),
+        (1, 0, "englishwhere do they all come from!"),
+        (2, 0, "englishah look at all the lonely people!"),
+    ]
+
+
+def test_wildcard_fanout_numbers_matches_across_buffers(runner):
+    # a wildcard path over a 2-buffer origin (2 and 3 segments): indices
+    # 0..4 run over the concatenated matches in buffer order
+    docs = [
+        json.dumps({"segments": [{"text": f"doc{d} seg{s}"} for s in range(n)]})
+        for d, n in enumerate((2, 3))
+    ]
+    spec = PipelineSpec(
+        slug="wildcard-buffers",
+        blocks=[
+            BlockSpec(id="upload_file", slug="docs", fan_out=True),
+            BlockSpec(
+                id="wrap_text",
+                slug="seg",
+                bindings=[
+                    InputBinding(param="text", origin="docs", json_path="$.segments[*].text")
+                ],
+                fan_out=True,
+            ),
+        ],
+    )
+    res = runner.run(spec, request_input={"docs": {"file": docs}})
+    assert _stage_rows(runner, spec, res, "seg") == [
+        (0, 0, "doc0 seg0"),
+        (1, 0, "doc0 seg1"),
+        (2, 0, "doc1 seg0"),
+        (3, 0, "doc1 seg1"),
+        (4, 0, "doc1 seg2"),
+    ]
+
+
+def test_gather_orders_by_input_then_output_index(runner):
+    # array_input with a scalar json_path over a 1→N stage fed by a 2-item
+    # fan-out: the path applies per output, the gather orders by
+    # (input_index, output_index) — not by value
+    spec = PipelineSpec(
+        slug="gather-order",
+        blocks=[
+            BlockSpec(id="upload_file", slug="src", fan_out=True),
+            BlockSpec(
+                id="split_string",
+                slug="split",
+                input={"separator": " "},
+                bindings=[InputBinding(param="text", origin="src")],
+            ),
+            BlockSpec(
+                id="join_strings",
+                slug="join",
+                input={"separator": " "},
+                bindings=[
+                    InputBinding(
+                        param="strings", origin="split", json_path="$.w", array_input=True
+                    )
+                ],
+            ),
+        ],
+    )
+    items = ['{"w":"z"} {"w":"y"}', '{"w":"x"} {"w":"w"} {"w":"v"}']
+    res = runner.run(spec, request_input={"src": {"file": items}})
+    assert [r[1] for r in _stage_rows(runner, spec, res, "split")] == [0, 1, 0, 1, 2]
+    assert res.output.first().payload_str == "z y x w v"
+
+
+def test_params_follow_insertion_order(spark, tmp_path, monkeypatch):
+    # bindings, then the static input, then the request keys — in the
+    # order each lists them, whatever the process's string hash seed
+    from pyspark.sql import functions as F
+
+    from data_pipelines_worker_spark.plans import compiler
+
+    monkeypatch.setattr(compiler, "_BLOCKS", dict(compiler._BLOCKS))
+    seen: dict[str, list[str]] = {}
+
+    @compiler._block("capture_params")
+    def _capture_params(runner, block, df, params):
+        seen["params"] = [k for k in params if not k.startswith("__")]
+        return df.select("input_index", F.lit("ok").alias("payload_str")), False
+
+    @compiler.df_operator("capture_columns")
+    def _capture_columns(runner, df, block):
+        seen["columns"] = df.columns
+        return df.select("input_index", F.lit("ok").alias("payload_str"))
+
+    def capture(block_id: str) -> BlockSpec:
+        return BlockSpec(
+            id=block_id,
+            slug=block_id,
+            input={"mid": "m", "beta": "b"},
+            bindings=[
+                InputBinding(param="zeta", origin="src"),
+                InputBinding(param="alpha", origin="src"),
+            ],
+        )
+
+    spec = PipelineSpec(
+        slug="param-order",
+        blocks=[
+            BlockSpec(id="upload_file", slug="src"),
+            capture("capture_params"),
+            capture("capture_columns"),
+        ],
+    )
+    request = {"omega": "o", "aardvark": "a"}
+    PipelineRunner(spark, str(tmp_path)).run(
+        spec,
+        request_input={
+            "src": {"file": "hello"},
+            "capture_params": request,
+            "capture_columns": request,
+        },
+    )
+    order = ["zeta", "alpha", "mid", "beta", "omega", "aardvark"]
+    assert seen["params"] == order
+    assert seen["columns"] == ["input_index", *order]

@@ -52,6 +52,27 @@ def test_coalesce_priority_order(spark):
     assert out.v == "derived"
 
 
+def test_coalesce_priority_skips_unset_sources():
+    # None marks a source that does not set the key; one present column
+    # comes back as is, none gives None
+    col = F.col("b")
+    assert dataflow.coalesce_priority(None, col, None) is col
+    assert dataflow.coalesce_priority(None, None) is None
+
+
+def test_gather_orders_by_every_order_column(spark):
+    # the runner's whole-stage gather: no group keys, a value Column,
+    # ordered by (input_index, output_index)
+    rows = [(i, o, f"{i}.{o}") for i in (1, 0) for o in (2, 0, 1)]
+    df = spark.createDataFrame(
+        rows, "input_index long, output_index long, s string"
+    ).repartition(3)
+    out = dataflow.gather(
+        df, [], F.upper("s"), order=("input_index", "output_index"), out_name="arr"
+    ).first().arr
+    assert out == ["0.0", "0.1", "0.2", "1.0", "1.1", "1.2"]
+
+
 def test_target_index_filters(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], "input_index int")
     assert dataflow.target_index(df, 7).count() == 1
@@ -72,14 +93,6 @@ def test_json_path_scalar_and_array(spark):
     assert df.select(json_path_scalar("j", "$.a").alias("v")).first().v == "5"
     arr = df.select(json_path_array("j", "$.segments[*].text").alias("v")).first().v
     assert arr == ["x", "y"]
-
-
-def test_limit_shortcut(spark):
-    df = spark.createDataFrame([(["a"],), (["a", "b"],)], "arr array<string>")
-    out = df.select(
-        dataflow.limit_shortcut(F.col("arr"), F.array_join("arr", "+")).alias("v")
-    ).collect()
-    assert [r.v for r in out] == ["a", "a+b"]
 
 
 def test_zone_map_null_only_zone_is_scanned(spark):

@@ -7,14 +7,41 @@ Usage::
 Writes ``<out_dir>/<query>_<suffix>.txt`` for each query — the
 before/after plan evidence trail for optimization rounds
 (``plans/r12/...``). Plan-only: nothing is executed.
+
+Plans are written normalised (:func:`normalize_plan`): the ids Spark hands
+out per session are replaced by fixed tokens, so two checkouts' dumps of the
+same plan are byte-identical and a refactor's proof is
+``diff -r before/ after/``.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+#: per-session ids in a formatted plan: expression ids (``input_index#123L``,
+#: a Python UDF's result ``gen(...)#45``), exchange/subquery plan ids and
+#: Python function object addresses (``<function f at 0x7f...>``)
+_SESSION_IDS = (
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"0x[0-9a-fA-F]+"), "0xN"),
+)
+#: a higher-order function's lambda variable (``lambda x_7``): pyspark
+#: numbers them from a per-process counter
+_LAMBDA_VAR = re.compile(r"\blambda (\w+)_\d+\b")
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with every per-session id replaced by a fixed token."""
+    for pattern, token in _SESSION_IDS:
+        plan = pattern.sub(token, plan)
+    for var in set(_LAMBDA_VAR.findall(plan)):
+        plan = re.sub(rf"\b{re.escape(var)}_\d+#", f"{var}_N#", plan)
+    return plan
 
 
 def main() -> int:
@@ -36,8 +63,8 @@ def main() -> int:
             continue
         fn, _ = registry[name]
         df = fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
+        plan = normalize_plan(
+            df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
