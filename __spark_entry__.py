@@ -40,17 +40,17 @@ def entry(spark: SparkSession) -> DataFrame:
 # ties alphabetical. tools/check_oracle.py's triple-gate runs stay the
 # backstop for the tail the window cannot reach.
 _CHANGED = (
-    # the one registered query that runs the pipeline runner
-    # (plans/compiler.py PipelineRunner, whose input assembly is built from
-    # operators/dataflow.py)
+    # the media queries whose source payloads are now column expressions
+    # (queries/media_queries.py): the codec stages read the same bytes
+    "media_audio_chunk",
+    "media_frame_sample",
+    "media_image_phash",
+    "media_image_resize",
+    "media_image_stats",
+    "media_video_pipeline",
+    # the one registered query that runs the pipeline runner; it now
+    # returns its output row without the temporary stage lake
     "pipeline_e2e",
-    # the catalogue entries of the operators/dataflow.py functions the
-    # runner now calls
-    "gather_join_strings",
-    "zip_merge_positional",
-    "coalesce_priority",
-    "index_targeting",
-    "json_auto_detect",
 )
 
 

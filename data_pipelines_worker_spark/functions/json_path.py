@@ -17,7 +17,7 @@ Spark mapping (SURVEY §2.2):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -51,13 +51,3 @@ def json_path_array(json_col: Column | str, path: str, element_type: str = "stri
     schema = f"array<{element_type}>"
     return F.from_json(arr_json, schema)
 
-
-def fan_out(df: DataFrame, array_col: Column, out_name: str, index_name: str = "input_index") -> DataFrame:
-    """Fan an array column out to one row per element with a semantic index.
-
-    Reference: input_config.type == "array" ⇒ indices 0..N-1 become
-    per-element processings (block.go:245-254, pipeline.go:358-377). The
-    index column is load-bearing — ordering, zip and target_index all key on
-    it — so posexplode, never explode.
-    """
-    return df.select("*", F.posexplode(array_col).alias(index_name, out_name))

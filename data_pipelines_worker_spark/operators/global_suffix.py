@@ -77,6 +77,9 @@ Design choices, each measured:
   agg against two window sorts; here it is one narrow agg against THREE
   exchanges — the probe's case is strictly stronger, and the stopping
   rule above is the one to use.
+  Re-ranking only the unresolved classes in late rounds (Larsson &
+  Sadakane) was probed and rejected: duplicate-dense corpora keep ~all
+  suffixes tied (SCALING.md, "r12 addendum: Larsson-Sadakane").
 
 - AQE is toggled OFF for the eager build and restored after: per-stage
   adaptive re-planning adds a driver barrier per exchange, and the
@@ -423,11 +426,12 @@ _BOUNDARY_BCAST_MAX_NODES = 1_000_000
 
 #: largest ANSV candidate set (entries across both stack arrays) that
 #: ships to the resolver inside the UDF CLOSURE instead of a
-#: sparkContext broadcast. The r12 A/B (tools/ab_census_broadcast.py,
-#: SCALING.md r12) measured the broadcast's per-invocation setup at
-#: ~0.5 s while the candidate arrays at organic corpora are a few KB
-#: (<= 2 x npart x distinct-LCP entries; sf0.1: <= 6,400) — the
-#: broadcast only pays above ~half a MB of per-task re-serialization.
+#: sparkContext broadcast. The r12 interleaved A/B (SCALING.md, "r12
+#: probe ledger refresh", census drift) measured the broadcast's
+#: per-invocation setup at ~0.5 s while the candidate arrays at organic
+#: corpora are a few KB (<= 2 x npart x distinct-LCP entries; sf0.1:
+#: <= 6,400) — the broadcast only pays above ~half a MB of per-task
+#: re-serialization.
 #: 32,768 entries ~ 512 KB pickled per task; above it the arrays ship
 #: once per executor via broadcast exactly as r10's ADVICE required
 #: (a staircase corpus reaches 2 x npart x maxlen and must never ride

@@ -245,8 +245,9 @@ def _stop_gate(runner, block, df, params):
     # condition kernel (helpers/condition.go:18-35): numeric comparison when
     # the comparand is numeric, else string. One take(1) decides the stop
     # before the stage is written.
-    cond_op = str(block.input.get("condition", "=="))
-    cmp_value = block.input.get("value")
+    cfg = params["__block_input"]
+    cond_op = str(cfg.get("condition", "=="))
+    cmp_value = cfg.get("value")
     data = params["data"]
     if isinstance(cmp_value, (int, float)):
         flag = stop_condition(data.cast("double"), cond_op, float(cmp_value))
@@ -319,7 +320,7 @@ def _op_subtitles(params):
     # params are block *config* → compile-time literals, not data columns
     from ..functions.subtitles import ASS_STYLE_DEFAULTS, subtitles_from_transcription
 
-    cfg = dict(params.get("__block_input") or {})
+    cfg = params["__block_input"]
     style = {k: v for k, v in cfg.items() if k in ASS_STYLE_DEFAULTS}
     return subtitles_from_transcription(
         params["transcription"], str(cfg["output_format"]), **style
@@ -351,12 +352,14 @@ NON_PARALLEL_BLOCKS = frozenset(
 
 
 def df_operator(name: str):
-    """Register a frame adapter ``adapt(runner, df, block)`` as a block: the
-    bound parameters arrive as columns of ``df``."""
+    """Register a frame adapter ``adapt(runner, df, cfg)`` as a block: the
+    bound parameters arrive as columns of ``df``, the block's config as
+    ``cfg``, its static input with the request's keys merged over it."""
 
-    def deco(adapt: Callable[["PipelineRunner", DataFrame, "BlockSpec"], DataFrame]):
+    def deco(adapt: Callable[["PipelineRunner", DataFrame, dict[str, Any]], DataFrame]):
         @_block(name)
         def block_fn(runner, block, df, params):
+            cfg = params["__block_input"]
             for k, c in params.items():
                 if not k.startswith("__") and k not in df.columns:
                     df = df.withColumn(k, c)
@@ -365,8 +368,8 @@ def df_operator(name: str):
                 # task (the reference's sequential per-index processing,
                 # pipeline.go:607-624) unless the block's max_concurrency
                 # input allows more
-                df = df.repartition(max(1, int(block.input.get("max_concurrency", 1))))
-            return adapt(runner, df, block), False
+                df = df.repartition(max(1, int(cfg.get("max_concurrency", 1))))
+            return adapt(runner, df, cfg), False
 
         return adapt
 
@@ -374,10 +377,9 @@ def df_operator(name: str):
 
 
 @df_operator("image_resize")
-def _dfop_image_resize(runner, df, block):
+def _dfop_image_resize(runner, df, cfg):
     from ..operators import media
 
-    cfg = block.input
     return media.image_resize(
         df.withColumnRenamed("image", "payload_bin"),
         int(cfg["width"]),
@@ -387,20 +389,19 @@ def _dfop_image_resize(runner, df, block):
 
 
 @df_operator("image_blur")
-def _dfop_image_blur(runner, df, block):
+def _dfop_image_blur(runner, df, cfg):
     from ..operators import media
 
     return media.image_blur(
         df.withColumnRenamed("image", "payload_bin"),
-        float(block.input["sigma"]),
+        float(cfg["sigma"]),
     )
 
 
 @df_operator("image_add_text")
-def _dfop_image_add_text(runner, df, block):
+def _dfop_image_add_text(runner, df, cfg):
     from ..operators import media
 
-    cfg = block.input
     src = df.withColumnRenamed("image", "payload_bin")
     if "text" not in src.columns:
         src = src.withColumn("text", F.lit(str(cfg.get("text", ""))))
@@ -419,12 +420,11 @@ def _dfop_image_add_text(runner, df, block):
 
 
 @df_operator("video_from_image")
-def _dfop_video_from_image(runner, df, block):
+def _dfop_video_from_image(runner, df, cfg):
     from ..operators import media
 
     # start/end come per-row when bound (flagship spec binds them from
-    # $.segments[*].start/end), else from static block input.
-    cfg = block.input
+    # $.segments[*].start/end), else from the block config.
     return media.video_from_image(
         df.withColumnRenamed("image", "payload_bin"),
         float(cfg["start"]),
@@ -436,48 +436,48 @@ def _dfop_video_from_image(runner, df, block):
 
 
 @df_operator("join_videos")
-def _dfop_join_videos(runner, df, block):
+def _dfop_join_videos(runner, df, cfg):
     from ..operators import media
 
     return media.join_videos(
         df.withColumnRenamed("videos", "payload_bin"),
-        re_encode=bool(block.input["re_encode"]),
+        re_encode=bool(cfg["re_encode"]),
     )
 
 
 @df_operator("video_add_audio")
-def _dfop_video_add_audio(runner, df, block):
+def _dfop_video_add_audio(runner, df, cfg):
     from ..operators import media
 
     out = media.video_add_audio(
         df,
         "video",
         "audio",
-        bool(block.input["replace_original_audio"]),
+        bool(cfg["replace_original_audio"]),
     )
     return out.withColumnRenamed("video", "payload_bin")
 
 
 @df_operator("video_add_subtitles")
-def _dfop_video_add_subtitles(runner, df, block):
+def _dfop_video_add_subtitles(runner, df, cfg):
     from ..operators import media
 
     return media.video_add_subtitles(
         df.withColumnRenamed("video", "payload_bin"),
         "subtitles",
-        str(block.input["embedding_type"]),
+        str(cfg["embedding_type"]),
     )
 
 
 @df_operator("audio_from_video")
-def _dfop_audio_from_video(runner, df, block):
+def _dfop_audio_from_video(runner, df, cfg):
     from ..operators import media
 
     # the -1 defaults mean "no trim" (block_audio_from_video.go:111-116)
     return media.audio_from_video(
         df.withColumnRenamed("video", "payload_bin"),
-        float(block.input["start"]),
-        float(block.input["end"]),
+        float(cfg["start"]),
+        float(cfg["end"]),
     )
 
 
@@ -515,20 +515,19 @@ def _parse_bitrate(v) -> int | None:
 
 
 @df_operator("audio_chunk")
-def _dfop_audio_chunk(runner, df, block):
+def _dfop_audio_chunk(runner, df, cfg):
     from ..operators import media
 
     return media.audio_chunk(
         df.withColumnRenamed("audio", "payload_bin"),
-        _parse_go_duration(block.input["duration"]),
+        _parse_go_duration(cfg["duration"]),
     )
 
 
 @df_operator("audio_convert")
-def _dfop_audio_convert(runner, df, block):
+def _dfop_audio_convert(runner, df, cfg):
     from ..operators import media
 
-    cfg = block.input
     sr = cfg["sample_rate"]
     # schema field is bit_rate (block_audio_convert.go:153): the "bitrate"
     # key of the shipped podcast JSON is ignored, as in the reference
@@ -542,22 +541,22 @@ def _dfop_audio_convert(runner, df, block):
 
 
 @df_operator("http_request")
-def _dfop_http_request(runner, df, block):
+def _dfop_http_request(runner, df, cfg):
     from ..operators import external
 
     # per-row request shaping (block_http.go:69-91): method/headers/query/
-    # body bind from upstream columns when present, static values from the
-    # block input otherwise
+    # body bind from upstream columns when present, values from the block
+    # config otherwise
     out = external.http_request(
         df,
         url_col="url",
         method_col="method" if "method" in df.columns else None,
-        headers=block.input.get("headers"),
+        headers=cfg.get("headers"),
         headers_col="headers" if "headers" in df.columns else None,
         query_col="query" if "query" in df.columns else None,
         body_col="body" if "body" in df.columns else None,
         policy=runner.http_policy,
-        on_error=str(block.input.get("on_error", "fail")),
+        on_error=str(cfg.get("on_error", "fail")),
     )
     # textual bodies surface as payload_str too, so downstream json_path /
     # string bindings work (HandleResultValue semantics, block.go:502-519)
@@ -568,10 +567,9 @@ def _dfop_http_request(runner, df, block):
 
 
 @df_operator("openai_chat_completion")
-def _dfop_chat(runner, df, block):
+def _dfop_chat(runner, df, cfg):
     from ..operators import external
 
-    cfg = block.input
     out = external.openai_chat_completion(
         df,
         runner.require_openai(),
@@ -584,10 +582,9 @@ def _dfop_chat(runner, df, block):
 
 
 @df_operator("openai_tts_request")
-def _dfop_tts(runner, df, block):
+def _dfop_tts(runner, df, cfg):
     from ..operators import external
 
-    cfg = block.input
     return external.openai_tts_request(
         df,
         runner.require_openai(),
@@ -600,10 +597,9 @@ def _dfop_tts(runner, df, block):
 
 
 @df_operator("openai_transcription_request")
-def _dfop_transcription(runner, df, block):
+def _dfop_transcription(runner, df, cfg):
     from ..operators import external
 
-    cfg = block.input
     out = external.openai_transcription_request(
         df,
         runner.require_openai(),
@@ -616,10 +612,9 @@ def _dfop_transcription(runner, df, block):
 
 
 @df_operator("openai_image_request")
-def _dfop_image_request(runner, df, block):
+def _dfop_image_request(runner, df, cfg):
     from ..operators import external
 
-    cfg = block.input
     # stage width already bounded by df_operator's NON_PARALLEL_BLOCKS gate
     return external.openai_image_request(
         df,

@@ -8,9 +8,13 @@ exactly. This makes the 1→N chunk path, the resize math, and the whole
 image→video→mux→extract chain value-checked by the oracle, not just
 rows-counted.
 
-Header decoding happens JVM-side (``substring``+``hex``+``conv`` on the
-binary column) — no Python round-trip to *read* results, only the codec
-stages themselves are Arrow-batched ``mapInPandas``.
+The source media are projections: each fake-container payload is one
+column expression (magic bytes, big-endian ``u32`` header fields via
+``hex``/``lpad``/``unhex``, pixel or sample bytes), and header decoding
+happens JVM-side too (``substring``+``hex``+``conv``). Only the codec
+stages themselves are Arrow-batched ``mapInPandas``; ``M.fimg_encode`` /
+``M.faud_encode`` stay the reference encoders the column builders are
+tested against.
 """
 
 from __future__ import annotations
@@ -35,28 +39,70 @@ def _be_u32(payload: Column, pos: int) -> Column:
     return F.conv(F.hex(F.substring(payload, pos, 4)), 16, 10).cast("long")
 
 
-def _docs_with_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → FAUD payload with ``length(text)`` samples at 100 Hz."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-        ]
+def _u32_be(n: Column) -> Column:
+    """``struct.pack(">I", n)`` as a binary column: the encoder of
+    ``_be_u32``."""
+    return F.unhex(F.lpad(F.hex(n.cast("long")), 8, "0"))
+
+
+def _media_blob(magic: bytes, a: Column, b: Column, body: Column) -> Column:
+    """``magic | >II (a, b) | body``: a FIMG payload (w, h, pixels) or a
+    FAUD one (sample rate, sample count, samples), as ``M.fimg_encode`` /
+    ``M.faud_encode`` write it."""
+    return F.concat(F.lit(magic), _u32_be(a), _u32_be(b), body)
+
+
+def _zeros(n: Column) -> Column:
+    """``bytes(n)``: ``n`` zero bytes."""
+    return F.unhex(F.repeat(F.lit("00"), n))
+
+
+def _byte_array(values: Column) -> Column:
+    """``bytes(values)`` for an array of ints in 0..255."""
+    return F.unhex(
+        F.array_join(F.transform(values, lambda x: F.lpad(F.hex(x), 2, "0")), "")
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload_bin": [
-                        M.faud_encode(_RATE, bytes(len(t))) for t in pdf["text"]
-                    ],
-                }
-            )
 
-    return docs.mapInPandas(gen, schema)
+def _faud_zeros(n: Column) -> Column:
+    """FAUD payload of ``n`` zero samples at ``_RATE``."""
+    return _media_blob(M.FAUD_MAGIC, F.lit(_RATE), n, _zeros(n))
+
+
+def _image_dims(n: Column) -> tuple[Column, Column]:
+    """Source image (w, h) of a document with ``n = length(text)``."""
+    return 8 + n % 24, 8 + F.floor(n / 7) % 24
+
+
+def _blank_image(n: Column) -> Column:
+    """FIMG of ``_image_dims(n)``, every pixel 0."""
+    w, h = _image_dims(n)
+    return _media_blob(M.FIMG_MAGIC, w, h, _zeros(w * h))
+
+
+def _ramp_image(n: Column, doc_id: Column) -> Column:
+    """FIMG of ``_image_dims(n)`` whose pixel i is ``(doc_id + i) % 256``
+    (pmod: Python's ``%`` is floor-mod)."""
+    w, h = _image_dims(n)
+    px = F.transform(
+        F.sequence(F.lit(0), w * h - 1), lambda i: F.pmod(doc_id + i, F.lit(256))
+    )
+    return _media_blob(M.FIMG_MAGIC, w, h, _byte_array(px))
+
+
+#: the 8x8 source image of the video queries (pixels 0..63)
+_VIDEO_IMAGE = M.fimg_encode(8, 8, bytes(range(64)))
+
+
+def _video_seconds(n: Column) -> Column:
+    """Per-doc video length in seconds: ``length(text) % 5 + 1``."""
+    return (n % 5 + 1).cast("double")
+
+
+def _docs_with_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → FAUD payload with ``length(text)`` samples at 100 Hz."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.select("doc_id", _faud_zeros(F.length("text")).alias("payload_bin"))
 
 
 @register(
@@ -102,24 +148,9 @@ def q_media_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """image_resize keep-aspect math (imaging.Resize 0-dim rule,
     block_image_resize.go:80): source dims derive from the text length,
     output dims decoded from the FIMG header."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-        ]
+    src = load_table(spark, sf_dir, "documents").select(
+        "doc_id", _blank_image(F.length("text")).alias("payload_bin")
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for t in pdf["text"]:
-                w = 8 + len(t) % 24
-                h = 8 + (len(t) // 7) % 24
-                payloads.append(M.fimg_encode(w, h, bytes(w * h)))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload_bin": payloads})
-
-    src = docs.mapInPandas(gen, schema)
     resized = M.image_resize(src, width=16, height=0, keep_aspect_ratio=True)
     return resized.select(
         "doc_id",
@@ -143,33 +174,13 @@ def q_media_video_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     video_add_subtitles(mux) → audio_from_video. Frame count and extracted
     audio duration are closed-form in the per-doc video length
     (seconds = length(text) % 5 + 1)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("seconds", T.DoubleType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-            T.StructField("audio", T.BinaryType(), True),
-        ]
+    seconds = _video_seconds(F.length("text"))
+    src = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        seconds.alias("seconds"),
+        F.lit(_VIDEO_IMAGE).alias("payload_bin"),
+        _faud_zeros((seconds * _RATE).cast("long")).alias("audio"),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                secs = float(len(t) % 5 + 1)
-                img = M.fimg_encode(8, 8, bytes(range(64)))
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "seconds": secs,
-                        "payload_bin": img,
-                        "audio": M.faud_encode(_RATE, bytes(int(secs * _RATE))),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    src = docs.mapInPandas(gen, schema)
     # per-row video length: fps*seconds frames (start=0, end=seconds per row)
     vid = M.video_from_image(src, 0.0, 0.0, fps=10, end_col="seconds")
     vid = M.video_add_audio(vid, "payload_bin", "audio", replace_original_audio=True)
@@ -206,29 +217,11 @@ def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     source image (video_from_image_bytes), base = sum(range(64)) % 256 =
     224 — so sampled frame k carries (224 + 4k) % 256, closed-form per
     doc. Frame byte decoded JVM-side from the FIMG pixel block."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("seconds", T.DoubleType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-        ]
+    src = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        _video_seconds(F.length("text")).alias("seconds"),
+        F.lit(_VIDEO_IMAGE).alias("payload_bin"),
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "seconds": float(len(t) % 5 + 1),
-                        "payload_bin": M.fimg_encode(8, 8, bytes(range(64))),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-
-    src = docs.mapInPandas(gen, schema)
     vid = M.video_from_image(src, 0.0, 0.0, fps=10, end_col="seconds")
     frames = M.video_frame_sample(vid, every=4)
     # FIMG pixel block starts at byte 13 (1-indexed); all pixels equal
@@ -267,25 +260,9 @@ def q_media_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel i of doc d is (d + i) % 256 — decode → reduce per payload,
     closed-form for the oracle. The px_mean double is left out of the gate
     (px_sum/(w*h) is the same information, integer-exact)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-        ]
+    src = load_table(spark, sf_dir, "documents").select(
+        "doc_id", _ramp_image(F.length("text"), F.col("doc_id")).alias("payload_bin")
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                w = 8 + len(t) % 24
-                h = 8 + (len(t) // 7) % 24
-                px = bytes((int(doc_id) + i) % 256 for i in range(w * h))
-                payloads.append(M.fimg_encode(w, h, px))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload_bin": payloads})
-
-    src = docs.mapInPandas(gen, schema)
     return M.image_stats(src).select("doc_id", "img_w", "img_h", "px_sum")
 
 
@@ -530,18 +507,23 @@ JOIN near ON dh.phash = near.phash
 """
 
 
-def _phash_pixels(c: int, v: int) -> bytes:
-    """Deterministic 8x8 grayscale content for class ``c`` variant ``v``:
-    avalanche-hashed base pixels shared by the whole class, one pixel
-    perturbed by v*40 — so same-class docs are exact or near duplicates
-    by construction and the oracle predicts every pixel closed-form."""
-    px = bytearray(64)
-    for k in range(64):
-        p = ((((c * 64 + k + 1) * _PH_KNUTH) % 2**32) // 8192) % 251
-        if k == (v * 17) % 64:
-            p = (p + v * 40) % 251
-        px[k] = p
-    return bytes(px)
+def _phash_image(text: Column, doc_id: Column) -> Column:
+    """Deterministic 8x8 grayscale FIMG for a document: its content class
+    ``c`` (md5 of the text, folded to ``_PH_CLASSES``) picks
+    avalanche-hashed base pixels shared by the whole class, and its
+    variant ``v = doc_id mod _PH_VARIANTS`` perturbs one pixel by v*40 —
+    so same-class docs are exact or near duplicates by construction and
+    the oracle predicts every pixel closed-form."""
+    md5_prefix = F.substring(F.md5(F.coalesce(text, F.lit(""))), 1, 15)
+    c = F.pmod(F.conv(md5_prefix, 16, 10).cast("long"), F.lit(_PH_CLASSES))
+    v = F.pmod(doc_id, F.lit(_PH_VARIANTS))
+
+    def pixel(k: Column) -> Column:
+        p = F.floor((((c * 64 + k + 1) * _PH_KNUTH) % 2**32) / 8192) % 251
+        return F.when(k == (v * 17) % 64, (p + v * 40) % 251).otherwise(p)
+
+    px = F.transform(F.sequence(F.lit(0), F.lit(63)), pixel)
+    return _media_blob(M.FIMG_MAGIC, F.lit(8), F.lit(8), _byte_array(px))
 
 
 @register("media_image_phash", _PHASH_ORACLE)
@@ -549,8 +531,8 @@ def q_media_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash image near-duplicate detection — the multimodal
     member of the dedup family (text: minhash/simhash/allpairs;
     embeddings: SRP-LSH; images: THIS). Real bytes end-to-end: each doc's
-    8x8 grayscale FIMG payload is encoded executor-side, decoded back by
-    ``image_phash`` (Arrow-batched), and fingerprinted with the 63-bit
+    8x8 grayscale FIMG payload is built as a column (``_phash_image``),
+    decoded back by ``image_phash`` (Arrow-batched), and fingerprinted with the 63-bit
     Walsh–Hadamard sign hash (integer-exact DCT stand-in — classic pHash
     with a portable basis). Dedup then runs entirely in signature space:
 
@@ -570,41 +552,13 @@ def q_media_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature-stats frame. Reference scope: the engine's image blocks
     (`block_image_resize.go`) have no near-dup operator — this is part
     of the beyond-reference LLM-data surface."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload_bin", T.BinaryType(), True),
-        ]
+    src = load_table(spark, sf_dir, "documents").select(
+        "doc_id", _phash_image(F.col("text"), F.col("doc_id")).alias("payload_bin")
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                c = (
-                    int(
-                        hashlib.md5((t or "").encode("utf-8")).hexdigest()[:15],
-                        16,
-                    )
-                    % _PH_CLASSES
-                )
-                v = int(doc_id) % _PH_VARIANTS
-                payloads.append(M.fimg_encode(8, 8, _phash_pixels(c, v)))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload_bin": payloads}
-            )
-
     # persist: the Arrow-batched codec+WHT stage is the expensive part
     # and feeds three lineage branches (stats, bands, final join) —
     # without this the Python stage runs once per branch (review fix)
-    hashed = (
-        M.image_phash(docs.mapInPandas(gen, schema))
-        .select("doc_id", "phash")
-        .persist()
-    )
+    hashed = M.image_phash(src).select("doc_id", "phash").persist()
     hg = hashed.groupBy("phash").agg(F.count("*").cast("long").alias("cnt"))
     bands = hg.select(
         "phash",

@@ -10,13 +10,14 @@ every word with ``- …!`` and joining with spaces equals
 
 from __future__ import annotations
 
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.compiler import BlockSpec, InputBinding, PipelineRunner, PipelineSpec
-from ..session import load_table
+from ..session import load_table, local_df
 from . import register
 
 
@@ -68,11 +69,18 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("j")
     ).first()[0]
-    runner = PipelineRunner(spark, tempfile.mkdtemp(prefix="dpws_stages_"))
-    res = runner.run(
-        _spine_spec(), request_input={"transcription": {"file": transcription_json}}
+    root = tempfile.mkdtemp(prefix="dpws_stages_")
+    try:
+        res = PipelineRunner(spark, root).run(
+            _spine_spec(), request_input={"transcription": {"file": transcription_json}}
+        )
+        # the one output row leaves the stage lake before the lake is removed
+        rows = res.output.select("input_index", "output_index", "payload_str").collect()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return local_df(
+        spark, rows, "input_index long, output_index long, payload_str string"
     )
-    return res.output.select("input_index", "output_index", "payload_str")
 
 
 def _subtitles_oracle() -> str:

@@ -151,6 +151,33 @@ def test_stop_pipeline_condition(runner):
     assert passed.output.first().payload_str == "<5>"
 
 
+def test_stop_gate_request_value_overrides_static_value(runner):
+    # input priority request > static (pipeline.go:281-305) holds for the
+    # gate's comparand too: 15 > 10 stops, 15 > 20 does not
+    spec = PipelineSpec(
+        slug="stoppable-override",
+        blocks=[
+            BlockSpec(id="upload_file", slug="up", input={"file": "15"}),
+            BlockSpec(
+                id="stop_pipeline",
+                slug="gate",
+                input={"condition": ">", "value": 10},
+                bindings=[InputBinding(param="data", origin="up")],
+            ),
+            BlockSpec(
+                id="wrap_text",
+                slug="after",
+                input={"prefix": "<", "suffix": ">"},
+                bindings=[InputBinding(param="text", origin="up")],
+            ),
+        ],
+    )
+    assert runner.run(spec).stopped_at == "gate"
+    res = runner.run(spec, request_input={"gate": {"value": 20}})
+    assert res.stopped_at is None
+    assert res.output.first().payload_str == "<15>"
+
+
 def test_target_index_resume_at_stop_gate_keeps_other_indices(runner):
     # resuming at a stop block recomputes one fan-out index; the gate stage
     # must still hold every index, or the blocks after it lose the rest
@@ -603,3 +630,26 @@ def test_params_follow_insertion_order(spark, tmp_path, monkeypatch):
     order = ["zeta", "alpha", "mid", "beta", "omega", "aardvark"]
     assert seen["params"] == order
     assert seen["columns"] == ["input_index", *order]
+
+
+def test_pipeline_e2e_query_leaves_no_stage_lake(spark, sf_dir):
+    # the registered query runs its pipeline in a temporary stage lake and
+    # returns the output row without it: building and collecting the query
+    # leaves no dpws_stages_* directory behind
+    import glob
+    import os
+    import tempfile
+
+    from data_pipelines_worker_spark.queries import load_all
+
+    pattern = os.path.join(tempfile.gettempdir(), "dpws_stages_*")
+    before = set(glob.glob(pattern))
+    fn, _oracle = load_all()["pipeline_e2e"]
+    out = fn(spark, sf_dir)
+    assert out.dtypes == [
+        ("input_index", "bigint"),
+        ("output_index", "bigint"),
+        ("payload_str", "string"),
+    ]
+    assert len(out.collect()) == 1
+    assert set(glob.glob(pattern)) <= before

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -45,7 +46,7 @@ def edge_dir(tmp_path_factory):
     subprocess.run(
         [sys.executable, "tools/make_edge_data.py", out],
         check=True,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parents[1],
     )
     return out
 

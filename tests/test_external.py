@@ -246,3 +246,30 @@ def test_hand_built_chat_block_sends_the_default_model(spark, server, tmp_path):
     res = runner.run(spec)
     assert CHAT_MODELS == ["gpt-4o-2024-08-06"]
     assert res.output.first().payload_str == "Re[1]: hi"
+
+
+def test_request_model_overrides_static_model(spark, server, tmp_path):
+    # input priority request > static (pipeline.go:281-305): the frame
+    # adapter sends the request's model, not the block's
+    from data_pipelines_worker_spark.plans.compiler import (
+        BlockSpec,
+        PipelineRunner,
+        PipelineSpec,
+    )
+
+    spec = PipelineSpec(
+        slug="chat-override",
+        blocks=[
+            BlockSpec(
+                id="openai_chat_completion",
+                slug="story",
+                input={"user_prompt": "hi", "model": "gpt-4o-mini"},
+            )
+        ],
+    )
+    client = X.OpenAIClient(server + "/v1", policy=FAST)
+    runner = PipelineRunner(spark, str(tmp_path), openai_client=client)
+    CHAT_MODELS.clear()
+    res = runner.run(spec, request_input={"story": {"model": "gpt-4.1"}})
+    assert CHAT_MODELS == ["gpt-4.1"]
+    assert res.output.first().payload_str == "Re[1]: hi"

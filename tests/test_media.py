@@ -466,3 +466,98 @@ class TestAudioEnergySegmentation:
         assert W.is_wav(payload)
         rate, frames = W.wav_decode(payload)
         assert rate == _VAD_RATE and len(frames) == len(samples)
+
+
+class TestSourceColumns:
+    """The media queries' source payloads are column expressions; the
+    Python encoders are their reference, byte for byte."""
+
+    #: empty, ASCII, non-ASCII, non-BMP and a 5000-token text; ids
+    #: include negatives (pixel ramps and phash variants are floor-mod)
+    DOCS = [
+        (0, ""),
+        (1, "hello world"),
+        (257, "naïve café — déjà vu"),
+        (-1, "emoji \U0001F600 and \U0001D518 outside the BMP"),
+        (-300, " ".join(f"tok{i}" for i in range(5000))),
+    ]
+
+    @staticmethod
+    def _dims(t: str) -> tuple[int, int]:
+        return 8 + len(t) % 24, 8 + (len(t) // 7) % 24
+
+    @staticmethod
+    def _phash_reference(doc_id: int, t: str) -> bytes:
+        import hashlib
+
+        from data_pipelines_worker_spark.queries import media_queries as Q
+
+        c = int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16) % Q._PH_CLASSES
+        v = doc_id % Q._PH_VARIANTS
+        px = bytearray(64)
+        for k in range(64):
+            p = ((((c * 64 + k + 1) * Q._PH_KNUTH) % 2**32) // 8192) % 251
+            if k == (v * 17) % 64:
+                p = (p + v * 40) % 251
+            px[k] = p
+        return M.fimg_encode(8, 8, bytes(px))
+
+    def test_columns_equal_python_encoders(self, spark):
+        from data_pipelines_worker_spark.queries import media_queries as Q
+
+        df = spark.createDataFrame(self.DOCS, "doc_id long, text string")
+        n = F.length("text")
+        rows = df.select(
+            "doc_id",
+            "text",
+            Q._faud_zeros(n).alias("faud"),
+            Q._blank_image(n).alias("blank"),
+            Q._ramp_image(n, F.col("doc_id")).alias("ramp"),
+            Q._phash_image(F.col("text"), F.col("doc_id")).alias("phash"),
+            Q._u32_be(F.lit(2**32 - 1)).alias("u32_max"),
+        ).collect()
+        assert len(rows) == len(self.DOCS)
+        for r in rows:
+            d, t = r.doc_id, r.text
+            w, h = self._dims(t)
+            assert bytes(r.faud) == M.faud_encode(Q._RATE, bytes(len(t)))
+            assert bytes(r.blank) == M.fimg_encode(w, h, bytes(w * h))
+            ramp = bytes((d + i) % 256 for i in range(w * h))
+            assert bytes(r.ramp) == M.fimg_encode(w, h, ramp)
+            assert bytes(r.phash) == self._phash_reference(d, t)
+            assert bytes(r.u32_max) == b"\xff\xff\xff\xff"
+
+    def test_phash_image_of_null_text_is_the_empty_text_image(self, spark):
+        from data_pipelines_worker_spark.queries import media_queries as Q
+
+        df = spark.createDataFrame([(5, None)], "doc_id long, text string")
+        row = df.select(Q._phash_image(F.col("text"), F.col("doc_id"))).first()
+        assert bytes(row[0]) == self._phash_reference(5, "")
+
+
+#: Python stages (distinct MapInPandas nodes) per media query plan: the
+#: codec stages only, the source is a projection
+_MEDIA_PYTHON_STAGES = {
+    "media_audio_chunk": 1,  # audio_chunk
+    "media_image_resize": 1,  # image_resize
+    "media_video_pipeline": 4,  # from_image, add_audio, add_subtitles, from_video
+    "media_frame_sample": 2,  # video_from_image, frame_sample
+    "media_image_stats": 1,  # image_stats
+    "media_image_phash": 1,  # image_phash
+}
+
+
+@pytest.mark.parametrize("name", sorted(_MEDIA_PYTHON_STAGES))
+def test_media_query_sources_are_projections(spark, sf_dir, name):
+    import re
+
+    from data_pipelines_worker_spark.queries import load_all
+
+    fn, _oracle = load_all()[name]
+    df = fn(spark, sf_dir)
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+    spark.catalog.clearCache()
+    nodes = set(re.findall(r"^\((\d+)\) MapInPandas", plan, re.M))
+    assert len(nodes) == _MEDIA_PYTHON_STAGES[name]

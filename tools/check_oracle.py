@@ -10,6 +10,7 @@ order-insensitive value hash. Usage::
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -42,13 +43,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
     from data_pipelines_worker_spark.session import get_spark, TABLES
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
-    import os
 
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

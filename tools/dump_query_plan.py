@@ -23,12 +23,14 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: per-session ids in a formatted plan: expression ids (``input_index#123L``,
-#: a Python UDF's result ``gen(...)#45``), exchange/subquery plan ids and
-#: Python function object addresses (``<function f at 0x7f...>``)
+#: a Python UDF's result ``gen(...)#45``), exchange/subquery plan ids,
+#: Python function object addresses (``<function f at 0x7f...>``) and JVM
+#: identity hashes of folded constants (``UnsafeArrayData@3f24243f``)
 _SESSION_IDS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"0x[0-9a-fA-F]+"), "0xN"),
+    (re.compile(r"(?<=Data)@[0-9a-f]+\b"), "@N"),
 )
 #: a higher-order function's lambda variable (``lambda x_7``): pyspark
 #: numbers them from a per-process counter

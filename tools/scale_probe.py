@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 import sys
 import time
-from statistics import median as _median  # shared by tools/ab_census_broadcast.py
+from statistics import median as _median
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
