@@ -40,16 +40,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # ties alphabetical. tools/check_oracle.py's triple-gate runs stay the
 # backstop for the tail the window cannot reach.
 _CHANGED = (
-    # the media queries whose source payloads are now column expressions
-    # (queries/media_queries.py): the codec stages read the same bytes
-    "media_audio_chunk",
-    "media_frame_sample",
-    "media_image_phash",
-    "media_image_resize",
-    "media_image_stats",
-    "media_video_pipeline",
-    # the one registered query that runs the pipeline runner; it now
-    # returns its output row without the temporary stage lake
+    # the one registered query that runs the pipeline runner, whose frame
+    # operators now resolve a bound parameter by input priority
     "pipeline_e2e",
 )
 

@@ -15,7 +15,6 @@ nothing collected to the driver).
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import re
@@ -59,7 +58,7 @@ def local_record_path(here: str, env_round: str | None) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from data_pipelines_worker_spark.queries import load_all
-    from data_pipelines_worker_spark.session import get_spark
+    from data_pipelines_worker_spark.session import get_spark, release_cached
 
     spark = get_spark("bench")
     registry = load_all()
@@ -114,12 +113,9 @@ def main() -> None:
             # runs also makes the warm number measure warm *code*
             # (codegen JIT), not a warm cache of the query's own
             # intermediate frames — the steady-state-engine number the
-            # round-over-round comparison wants. clearCache sits outside
+            # round-over-round comparison wants. The release sits outside
             # both timing windows, matching tools/check_oracle.py.
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-            gc.collect()
+            release_cached(spark)
             t1 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -129,19 +125,7 @@ def main() -> None:
             timings[name] = -1.0
             cold.setdefault(name, -1.0)
         finally:
-            spark.catalog.clearCache()
-            # clearCache only drops SQL-cached plans; localCheckpoint
-            # blocks from iterative queries (CC loops, pagerank, k-means)
-            # stay pinned in the block manager until Python's GC releases
-            # the py4j handles and the ContextCleaner runs — across ~310
-            # executions the leaked blocks build eviction pressure that
-            # lands on whichever iterative query runs next (observed:
-            # one ~5 s CC query ballooning to 21-34 s per run, a
-            # different victim each time). Unpersist completed queries'
-            # RDD blocks deterministically, outside the timing windows.
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-            gc.collect()
+            release_cached(spark)
 
     # --- diagnostic side-channels (ALL outside the timing windows) --------
     # r06 left two queries running 7-11x slower in the driver environment

@@ -361,7 +361,10 @@ def df_operator(name: str):
         def block_fn(runner, block, df, params):
             cfg = params["__block_input"]
             for k, c in params.items():
-                if not k.startswith("__") and k not in df.columns:
+                # a bound key is already a column of df; it is rewritten
+                # only when a request or static value joins its priority
+                # coalesce
+                if not k.startswith("__") and (k not in df.columns or k in cfg):
                     df = df.withColumn(k, c)
             if name in NON_PARALLEL_BLOCKS:
                 # an explicit numbered repartition AQE will not re-widen: one

@@ -7,6 +7,7 @@ deploy on a 1000-executor cluster — only master/memory change.
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,6 +95,24 @@ def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     # types that contain commas (decimal(10,2), map<string,int>, struct<>)
     names = [f.name for f in _parse_datatype_string(schema).fields]
     return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
+
+
+def release_cached(spark: SparkSession) -> None:
+    """Drop everything finished queries left cached; call it between
+    queries, outside timing windows.
+
+    ``clearCache`` only drops SQL-cached plans. RDD blocks from
+    ``localCheckpoint`` (CC loops, pagerank, k-means) outlive it: they stay
+    pinned in the block manager until Python's GC releases the py4j handles
+    and the ContextCleaner runs. Across hundreds of executions the leaked
+    blocks build eviction pressure that lands on whichever iterative query
+    runs next (one ~5 s CC query was seen at 21-34 s, a different victim
+    each run), so they are unpersisted here deterministically.
+    """
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+    gc.collect()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

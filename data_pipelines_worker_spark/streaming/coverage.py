@@ -31,10 +31,10 @@ So each micro-batch:
    the prefix. Any recompute runs over the FULL standing gram store, so
    the gate never causes a stale exclusion (it only decides WHERE to
    restart, never WHO is a candidate);
-4. publishes picks + covered sets crash-safely: fresh ``v<batch_id>``
-   directory, atomic pointer swap, replay guard, one-version grace
-   window for concurrent readers (the ``streaming/snapshot.py``
-   discipline).
+4. publishes picks + covered sets crash-safely through
+   ``streaming/versions.py``: fresh ``v<batch_id>`` directory, atomic
+   pointer swap, replay guard, one-version grace window for concurrent
+   readers.
 
 Re-emitted doc_ids (re-crawl that CHANGES a doc's units) invalidate the
 gate's history, so they force a full recompute — detected with one
@@ -53,7 +53,6 @@ the test corpora.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,7 +60,7 @@ from pyspark.sql import functions as F
 from ..operators.curation import explode_ngrams
 from ..operators.selection import greedy_cover_rounds
 from ..session import local_df
-from .snapshot import _publish, _read_pointer
+from . import versions
 
 _GRAMS = "grams"
 _MANIFEST = "manifest"
@@ -103,10 +102,9 @@ def merge_batch(
     coverage manifest (module-level so the at-least-once replay path is
     unit-testable)."""
     manifest_dir = os.path.join(store_dir, _MANIFEST)
-    version = f"v{batch_id}"
-    standing_path = _read_pointer(manifest_dir)
-    if standing_path is not None and os.path.basename(standing_path) == version:
-        return  # replayed, fully-applied batch
+    if versions.applied(manifest_dir, batch_id):
+        return
+    standing_path = versions.current(manifest_dir)
     spark = batch_df.sparkSession
 
     grams = doc_grams(batch_df).localCheckpoint()
@@ -173,7 +171,7 @@ def merge_batch(
     )
 
     # assemble the new version: carried prefix + recomputed suffix
-    vdir = os.path.join(manifest_dir, version)
+    vdir = versions.version_dir(manifest_dir, batch_id)
     picks = None
     if first_round > 1:
         picks = local_df(
@@ -210,20 +208,7 @@ def merge_batch(
         cum = newly if cum is None else cum.unionByName(newly).distinct()
         cum = cum.localCheckpoint()
         cum.write.mode("overwrite").parquet(os.path.join(vdir, f"covered_r{r}"))
-    _publish(manifest_dir, version)
-
-    # grace-window prune (streaming/selection.py discipline): keep the
-    # current and one prior version for concurrent lazy readers
-    versions = sorted(
-        (
-            int(name[1:])
-            for name in os.listdir(manifest_dir)
-            if name.startswith("v") and name[1:].isdigit()
-        ),
-        reverse=True,
-    )
-    for old in versions[2:]:
-        shutil.rmtree(os.path.join(manifest_dir, f"v{old}"), ignore_errors=True)
+    versions.publish(manifest_dir, batch_id)
 
 
 def coverage_sink(
@@ -247,8 +232,4 @@ def coverage_sink(
 
 
 def read_manifest(spark: SparkSession, store_dir: str) -> DataFrame:
-    manifest_dir = os.path.join(store_dir, _MANIFEST)
-    path = _read_pointer(manifest_dir)
-    if path is None:
-        raise FileNotFoundError(f"no published manifest under {store_dir}")
-    return spark.read.parquet(os.path.join(path, "picks"))
+    return versions.read(spark, os.path.join(store_dir, _MANIFEST), "picks")

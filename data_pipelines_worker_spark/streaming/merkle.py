@@ -17,7 +17,7 @@ tree.)
 
 Store layout per version directory ``v<batch_id>``: ``docs/`` the
 upsert-keyed fingerprint table (doc_id, node, fp) and ``tree/`` the
-digest rows (lvl, node, d). Publish discipline is the house pattern:
+digest rows (lvl, node, d). Publish goes through ``streaming/versions.py``:
 fresh version directory, atomic pointer swap, replay guard (a batch whose
 version the pointer already names is fully applied — skipped outright),
 and a one-version grace window on pruning so a reader holding a lazy scan
@@ -39,48 +39,23 @@ format.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import merkle as mk
 from ..functions.intmath import exact_floordiv
-
-_POINTER = "CURRENT"
-
-
-def _read_pointer(tree_dir: str) -> str | None:
-    p = os.path.join(tree_dir, _POINTER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        name = fh.read().strip()
-    path = os.path.join(tree_dir, name)
-    return path if name and os.path.exists(path) else None
-
-
-def _publish(tree_dir: str, version_name: str) -> None:
-    tmp = os.path.join(tree_dir, _POINTER + ".tmp")
-    with open(tmp, "w") as fh:
-        fh.write(version_name)
-    os.replace(tmp, os.path.join(tree_dir, _POINTER))
+from . import versions
 
 
 def read_tree(spark: SparkSession, tree_dir: str) -> DataFrame:
     """The published digest tree: (lvl, node, d) rows, all levels."""
-    path = _read_pointer(tree_dir)
-    if path is None:
-        raise FileNotFoundError(f"no published tree under {tree_dir}")
-    return spark.read.parquet(os.path.join(path, "tree"))
+    return versions.read(spark, tree_dir, "tree")
 
 
 def read_docs(spark: SparkSession, tree_dir: str) -> DataFrame:
     """The standing fingerprint table: (doc_id, node, fp)."""
-    path = _read_pointer(tree_dir)
-    if path is None:
-        raise FileNotFoundError(f"no published tree under {tree_dir}")
-    return spark.read.parquet(os.path.join(path, "docs"))
+    return versions.read(spark, tree_dir, "docs")
 
 
 def merge_batch(
@@ -97,10 +72,9 @@ def merge_batch(
     level-(k-1) digests of their children (broadcast semi-join on the
     batch-bounded affected set), and carries every other row via
     anti-join — the untouched-subtree digests are never re-derived."""
-    version = f"v{batch_id}"
-    standing_path = _read_pointer(tree_dir)
-    if standing_path is not None and os.path.basename(standing_path) == version:
-        return None  # replayed, fully-applied batch: idempotent no-op
+    if versions.applied(tree_dir, batch_id):
+        return None
+    standing_path = versions.current(tree_dir)
     spark = batch_df.sparkSession
 
     # deterministic within-batch upsert collapse: max text per doc_id
@@ -163,21 +137,10 @@ def merge_batch(
     for lv_df in levels[1:]:
         tree = tree.unionByName(lv_df)
 
-    out = os.path.join(tree_dir, version)
+    out = versions.version_dir(tree_dir, batch_id)
     docs.write.mode("overwrite").parquet(os.path.join(out, "docs"))
     tree.write.mode("overwrite").parquet(os.path.join(out, "tree"))
-    _publish(tree_dir, version)
-    # one-version grace window (house pattern, streaming/selection.py)
-    versions = sorted(
-        (
-            int(name[1:])
-            for name in os.listdir(tree_dir)
-            if name.startswith("v") and name[1:].isdigit()
-        ),
-        reverse=True,
-    )
-    for old in versions[2:]:
-        shutil.rmtree(os.path.join(tree_dir, f"v{old}"), ignore_errors=True)
+    versions.publish(tree_dir, batch_id)
     for frame in pinned:
         frame.unpersist()
     return counts

@@ -51,8 +51,9 @@ metadata-not-bodies discipline):
 Crash/replay discipline: every per-batch write is an idempotent
 ``batch=<id>`` partition overwrite, every standing read EXCLUDES the
 current batch's own partition (so a replay after a partial crash sees
-exactly what the first run saw), and the df snapshot is
-pointer-published with a version guard (the ``snapshot.py`` pattern).
+exactly what the first run saw), and the df snapshot is published through
+``streaming/versions.py`` (pointer swap, version guard, one-version grace
+window).
 Re-emitted doc_ids are first-seen-wins, matching ``streaming/dedup.py``.
 
 At 100 TB: the index partitions compact into an s-bucketed table so the
@@ -65,13 +66,12 @@ the pairs store is already an append-only log (readers distinct).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _doc_shingles, allpairs_prefix_join, prefix_limit
-from .snapshot import _publish, _read_pointer
+from . import versions
 
 _INDEX = "index"
 _SIGS = "sigs"
@@ -126,10 +126,9 @@ def _merged_df(
     but the state of record stays exact)."""
     df_dir = os.path.join(store_dir, _DF)
     os.makedirs(df_dir, exist_ok=True)
-    version = f"v{batch_id}"
-    standing_path = _read_pointer(df_dir)
-    if standing_path is not None and os.path.basename(standing_path) == version:
-        return spark.read.parquet(standing_path)
+    if versions.applied(df_dir, batch_id):
+        return versions.read(spark, df_dir)
+    standing_path = versions.current(df_dir)
     if standing_path is not None:
         standing = spark.read.parquet(standing_path)
         merged = (
@@ -139,12 +138,9 @@ def _merged_df(
         )
     else:
         merged = batch_counts
-    merged.write.mode("overwrite").parquet(os.path.join(df_dir, version))
-    _publish(df_dir, version)
-    for name in os.listdir(df_dir):
-        if name.startswith("v") and name != version:
-            shutil.rmtree(os.path.join(df_dir, name), ignore_errors=True)
-    return spark.read.parquet(os.path.join(df_dir, version))
+    merged.write.mode("overwrite").parquet(versions.version_dir(df_dir, batch_id))
+    versions.publish(df_dir, batch_id)
+    return versions.read(spark, df_dir)
 
 
 def merge_batch(

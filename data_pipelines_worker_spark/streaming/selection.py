@@ -18,11 +18,12 @@ document ever seen — the score table a curation pipeline keeps anyway,
    (a micro-batch touches few sources; untouched sources' manifest rows
    are carried over verbatim — recompute cost scales with the affected
    slice, not the corpus);
-3. publishes the merged manifest crash-safely: fresh ``v<batch_id>``
-   directory, atomic pointer swap, replay guard — the
-   ``streaming/snapshot.py`` discipline (a replayed batch whose version
-   the pointer already names is fully applied and skipped; the standing
-   manifest directory is never overwritten while being read).
+3. publishes the merged manifest crash-safely through
+   ``streaming/versions.py``: fresh ``v<batch_id>`` directory, atomic
+   pointer swap, replay guard (a replayed batch whose version the pointer
+   already names is fully applied and skipped; the standing manifest
+   directory is never overwritten while being read), one-version grace
+   window on pruning.
 
 At 100 TB the score store is a lakehouse table and step 2's
 ``source IN (batch sources)`` filter partition-prunes it; the manifest
@@ -37,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.selection import SCORE_COLS, score_docs, top_p_select
-from .snapshot import _publish, _read_pointer
+from . import versions
 
 _SCORES = "scores"
 _MANIFEST = "manifest"
@@ -47,10 +48,8 @@ def merge_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
     """Apply one micro-batch of documents to the published manifest
     (module-level so the at-least-once replay path is unit-testable)."""
     manifest_dir = os.path.join(store_dir, _MANIFEST)
-    version = f"v{batch_id}"
-    standing_path = _read_pointer(manifest_dir)
-    if standing_path is not None and os.path.basename(standing_path) == version:
-        return  # replayed, fully-applied batch
+    if versions.applied(manifest_dir, batch_id):
+        return
     spark = batch_df.sparkSession
     scored = score_docs(batch_df).select(*SCORE_COLS)
     batch_dir = os.path.join(store_dir, _SCORES, f"batch={batch_id}")
@@ -90,6 +89,7 @@ def merge_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
         .select(*SCORE_COLS)
     )
     recomputed = top_p_select(standing.where(F.col("source").isin(affected)))
+    standing_path = versions.current(manifest_dir)
     if standing_path is not None:
         prior = spark.read.parquet(standing_path)
         merged = prior.where(~F.col("source").isin(affected)).unionByName(
@@ -97,26 +97,10 @@ def merge_batch(batch_df: DataFrame, batch_id: int, store_dir: str) -> None:
         )
     else:
         merged = recomputed
-    merged.write.mode("overwrite").parquet(os.path.join(manifest_dir, version))
-    _publish(manifest_dir, version)
-    import shutil
-
-    # Prune superseded versions with a one-version grace window: a reader
-    # that resolved the pointer just before the swap holds a lazy scan of
-    # the PREVIOUS version, so only versions older than that are deleted
-    # (the grace a lakehouse commit gives concurrent readers).
-    versions = sorted(
-        (
-            int(name[1:])
-            for name in os.listdir(manifest_dir)
-            if name.startswith("v") and name[1:].isdigit()
-        ),
-        reverse=True,
+    merged.write.mode("overwrite").parquet(
+        versions.version_dir(manifest_dir, batch_id)
     )
-    for old in versions[2:]:
-        shutil.rmtree(
-            os.path.join(manifest_dir, f"v{old}"), ignore_errors=True
-        )
+    versions.publish(manifest_dir, batch_id)
 
 
 def selection_sink(
@@ -141,8 +125,4 @@ def selection_sink(
 
 
 def read_manifest(spark: SparkSession, store_dir: str) -> DataFrame:
-    manifest_dir = os.path.join(store_dir, _MANIFEST)
-    path = _read_pointer(manifest_dir)
-    if path is None:
-        raise FileNotFoundError(f"no published manifest under {store_dir}")
-    return spark.read.parquet(path)
+    return versions.read(spark, os.path.join(store_dir, _MANIFEST))

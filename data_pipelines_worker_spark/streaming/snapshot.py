@@ -6,14 +6,14 @@ quantization and tie-break can never fork.
 
 Merge discipline per micro-batch: reduce the batch to its own latest row
 per key (cheap — batch-sized), union with the standing snapshot, keep
-rank-1 per key by (ts, event_id), and publish crash-safely: the merged
-frame lands in a fresh ``v<batch_id>`` directory and a pointer file is
-atomically replaced (``os.replace``) to name it — the standing snapshot
-directory is never deleted before the new one is fully published, so a
-crash at ANY point leaves the pointer naming a complete directory (the
-earlier rm-then-rename draft had a window that lost all prior state on
-replay). Stale version directories are pruned only after the pointer
-moves; a crash during pruning leaves garbage, never corruption.
+rank-1 per key by (ts, event_id), and publish crash-safely through
+``streaming/versions.py``: the merged frame lands in a fresh
+``v<batch_id>`` directory and the ``CURRENT`` pointer is atomically
+swapped to name it, so a crash at ANY point leaves the pointer naming a
+complete directory (the earlier rm-then-rename draft had a window that
+lost all prior state on replay). After the swap every version but the new
+one and the one it replaced is pruned: a frame from ``read_snapshot``
+taken before the swap keeps its files while the next batch merges.
 
 Replayed batches are idempotent by construction: merging the same rows
 twice cannot change a latest-wins result (the merge is a join-semilattice
@@ -33,61 +33,29 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.cdc import SNAP_COLS, latest_per_key, project_events
-
-_POINTER = "CURRENT"
-
-
-def _read_pointer(snapshot_dir: str) -> str | None:
-    p = os.path.join(snapshot_dir, _POINTER)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        name = fh.read().strip()
-    path = os.path.join(snapshot_dir, name)
-    return path if name and os.path.exists(path) else None
-
-
-def _publish(snapshot_dir: str, version_name: str) -> None:
-    tmp = os.path.join(snapshot_dir, _POINTER + ".tmp")
-    with open(tmp, "w") as fh:
-        fh.write(version_name)
-    os.replace(tmp, os.path.join(snapshot_dir, _POINTER))
+from . import versions
 
 
 def merge_batch(batch_df: DataFrame, batch_id: int, snapshot_dir: str) -> None:
     """Apply one micro-batch to the published snapshot (module-level so
     the at-least-once replay path is unit-testable).
 
-    Replay guard: foreachBatch re-delivers a batch whose _publish ran but
-    whose streaming checkpoint commit didn't (crash in the window between
-    them). Without the guard the rerun resolves the standing pointer to
-    ``v{batch_id}`` itself and lazily re-reads the very directory its
-    ``mode("overwrite")`` write is deleting — Spark refuses ("Cannot
-    overwrite a path that is also being read from"), turning every
-    recovery attempt into the same failure: a permanent crash loop. Since
-    the merge is a latest-wins semilattice fold, a batch whose version the
-    pointer already names is fully applied — re-applying it cannot change
-    the result — so the guard skips it outright, which is both the safe
-    and the semantically exact recovery."""
-    version = f"v{batch_id}"
-    standing_path = _read_pointer(snapshot_dir)
-    if standing_path is not None and os.path.basename(standing_path) == version:
-        return  # replayed, fully-applied batch: idempotent no-op
+    A replayed batch whose version is already published is skipped
+    (``versions.applied``); re-applying it could not change the result."""
+    if versions.applied(snapshot_dir, batch_id):
+        return
     spark = batch_df.sparkSession
     incoming = latest_per_key(project_events(batch_df))
+    standing_path = versions.current(snapshot_dir)
     if standing_path is not None:
         standing = spark.read.parquet(standing_path)
         merged = latest_per_key(standing.unionByName(incoming))
     else:
         merged = incoming
-    merged.write.mode("overwrite").parquet(os.path.join(snapshot_dir, version))
-    _publish(snapshot_dir, version)
-    # prune superseded versions (best-effort; crash here is harmless)
-    import shutil
-
-    for name in os.listdir(snapshot_dir):
-        if name.startswith("v") and name != version:
-            shutil.rmtree(os.path.join(snapshot_dir, name), ignore_errors=True)
+    merged.write.mode("overwrite").parquet(
+        versions.version_dir(snapshot_dir, batch_id)
+    )
+    versions.publish(snapshot_dir, batch_id)
 
 
 def snapshot_sink(
@@ -113,7 +81,4 @@ def snapshot_sink(
 
 
 def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    path = _read_pointer(snapshot_dir)
-    if path is None:
-        raise FileNotFoundError(f"no published snapshot under {snapshot_dir}")
-    return spark.read.parquet(path).select(*SNAP_COLS)
+    return versions.read(spark, snapshot_dir).select(*SNAP_COLS)

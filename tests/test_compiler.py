@@ -632,6 +632,48 @@ def test_params_follow_insertion_order(spark, tmp_path, monkeypatch):
     assert seen["columns"] == ["input_index", *order]
 
 
+def test_frame_operator_bound_param_follows_input_priority(spark, tmp_path, monkeypatch):
+    # request > binding > static holds for a bound parameter of a frame
+    # adapter too: a request value overrides the binding column, and a
+    # null binding value falls back to the static input
+    from pyspark.sql import functions as F
+
+    from data_pipelines_worker_spark.plans import compiler
+
+    monkeypatch.setattr(compiler, "_BLOCKS", dict(compiler._BLOCKS))
+
+    @compiler.df_operator("echo_text")
+    def _echo_text(runner, df, cfg):
+        return df.select("input_index", F.col("text").alias("payload_str"))
+
+    def spec(json_path: str | None) -> PipelineSpec:
+        return PipelineSpec(
+            slug="bound-priority",
+            blocks=[
+                BlockSpec(id="upload_file", slug="src"),
+                BlockSpec(
+                    id="echo_text",
+                    slug="echo",
+                    input={"text": "from-static"},
+                    bindings=[
+                        InputBinding(param="text", origin="src", json_path=json_path)
+                    ],
+                ),
+            ],
+        )
+
+    runner = PipelineRunner(spark, str(tmp_path))
+    src = {"src": {"file": '{"t": "from-binding"}'}}
+
+    def echoed(json_path, request):
+        res = runner.run(spec(json_path), request_input={**src, **request})
+        return res.output.first().payload_str
+
+    assert echoed("$.t", {}) == "from-binding"
+    assert echoed("$.t", {"echo": {"text": "from-request"}}) == "from-request"
+    assert echoed("$.missing", {}) == "from-static"
+
+
 def test_pipeline_e2e_query_leaves_no_stage_lake(spark, sf_dir):
     # the registered query runs its pipeline in a temporary stage lake and
     # returns the output row without it: building and collecting the query

@@ -713,6 +713,36 @@ def test_cdc_snapshot_replayed_batch_is_noop(spark, tmp_path, sf_dir):
     assert after == before
 
 
+def test_cdc_snapshot_frame_survives_next_merge(spark, tmp_path, sf_dir):
+    # a reader holds a lazy scan of the version it resolved; the next
+    # batch's publish must keep that version's files (one-version grace),
+    # and after three batches exactly the current and one prior version
+    # remain on disk
+    import os
+
+    from data_pipelines_worker_spark.session import load_table
+    from data_pipelines_worker_spark.streaming.snapshot import (
+        merge_batch,
+        read_snapshot,
+    )
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value"
+    )
+    snap_dir = str(tmp_path / "snapshot_grace")
+    os.makedirs(snap_dir)
+    merge_batch(ev.where(F.col("event_id") % 3 == 0), 0, snap_dir)
+    held = read_snapshot(spark, snap_dir)
+    n_held = held.count()
+    merge_batch(ev.where(F.col("event_id") % 3 == 1), 1, snap_dir)
+    assert len(held.collect()) == n_held > 0
+    merge_batch(ev.where(F.col("event_id") % 3 == 2), 2, snap_dir)
+    assert sorted(n for n in os.listdir(snap_dir) if n.startswith("v")) == [
+        "v1",
+        "v2",
+    ]
+
+
 def test_mg_heavy_hitters_containment_guarantee(spark, tmp_path, sf_dir):
     # Misra–Gries contract on the streamed summary: every key with true
     # count > N/k must be in the final candidate set, and every stored
@@ -1481,12 +1511,12 @@ def test_greedy_coverage_versioned_covered_sets(spark, tmp_path, sf_dir):
         merge_batch,
         read_manifest,
     )
-    from data_pipelines_worker_spark.streaming.snapshot import _read_pointer
+    from data_pipelines_worker_spark.streaming import versions
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     store = str(tmp_path / "store")
     merge_batch(docs, 0, store)
-    vdir = _read_pointer(os.path.join(store, "manifest"))
+    vdir = versions.current(os.path.join(store, "manifest"))
     for r in read_manifest(spark, store).collect():
         covered = spark.read.parquet(os.path.join(vdir, f"covered_r{r.round}"))
         assert covered.count() == r.covered_after

@@ -17,7 +17,8 @@ from statistics import median
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.scale_probe import _hygiene, time_warm  # noqa: E402
+from data_pipelines_worker_spark.session import release_cached  # noqa: E402
+from tools.scale_probe import time_warm  # noqa: E402
 
 
 def main() -> int:
@@ -42,7 +43,7 @@ def main() -> int:
             continue
         fn, _ = registry[name]
         cold, warms = time_warm(spark, fn, sf_dir)
-        _hygiene(spark)
+        release_cached(spark)
         runs = "/".join(f"{w:.2f}" for w in warms)
         print(
             f"{name:32s} med {median(warms):6.2f}  cold {cold:6.2f}"

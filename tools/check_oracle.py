@@ -45,7 +45,7 @@ def main() -> int:
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as e
-    from data_pipelines_worker_spark.session import get_spark, TABLES
+    from data_pipelines_worker_spark.session import TABLES, get_spark, release_cached
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
@@ -73,12 +73,8 @@ def main() -> int:
         finally:
             # some queries persist() shared frames for intra-plan reuse;
             # drop them between queries so a full-registry session doesn't
-            # accumulate pinned blocks. clearCache drops SQL-cached plans;
-            # localCheckpoint blocks are RDD-level and need the explicit
-            # unpersist walk (same discipline as bench.py).
-            spark.catalog.clearCache()
-            for _rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                _rdd.unpersist()
+            # accumulate pinned blocks
+            release_cached(spark)
         t1 = time.time()
         if name not in oracles:
             print(f"ok?   {name}: rows={len(srows)} (no oracle, rows-only) [{t1-t0:.1f}s]")

@@ -55,7 +55,7 @@ def main() -> int:
     os.makedirs(out_dir, exist_ok=True)
 
     from data_pipelines_worker_spark.queries import load_all
-    from data_pipelines_worker_spark.session import get_spark
+    from data_pipelines_worker_spark.session import get_spark, release_cached
 
     spark = get_spark("plan-dump")
     registry = load_all()
@@ -74,9 +74,7 @@ def main() -> int:
         print(f"wrote {path} ({len(plan)} bytes)")
         # drop any persists the query body registered so the next
         # query's plan is built from a clean slate
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
     return 0
 
 

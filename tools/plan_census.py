@@ -61,7 +61,7 @@ def main() -> int:
     out_tsv = args[1] if len(args) > 1 else "/tmp/plan_census.tsv"
 
     from data_pipelines_worker_spark.queries import load_all
-    from data_pipelines_worker_spark.session import get_spark
+    from data_pipelines_worker_spark.session import get_spark, release_cached
 
     spark = get_spark("plan-census")
     registry = load_all()
@@ -76,9 +76,7 @@ def main() -> int:
         except Exception as ex:  # noqa: BLE001 — screening must not die on one query
             print(f"{name}: FAILED {ex}", file=sys.stderr)
         finally:
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+            release_cached(spark)
 
     # duplicate-scan score: extra scans beyond one per distinct table
     rows.sort(key=lambda r: -(r[1]["scan_total"] - r[1]["n_tables"]))

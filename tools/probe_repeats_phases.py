@@ -60,17 +60,16 @@ def run(spark, sf_dir: str, min_len: int = 8, top_n: int = 20) -> dict:
 
 
 def main() -> int:
-    from data_pipelines_worker_spark.session import get_spark
-    from tools.scale_probe import _hygiene
+    from data_pipelines_worker_spark.session import get_spark, release_cached
 
     spark = get_spark("repeats-phase-probe")
     dirs = sys.argv[1:] or ["/root/testdata/sf0.1", "/tmp/sf_probe_10x"]
     for d in dirs:
         print(f"--- {d} load={loadavg()}", flush=True)
         run(spark, d)  # warm-up (parity with scale_probe's warm timing)
-        _hygiene(spark)
+        release_cached(spark)
         res = run(spark, d)
-        _hygiene(spark)
+        release_cached(spark)
         print({k: (round(v, 2) if isinstance(v, float) else v) for k, v in res.items()}, flush=True)
     print(f"load_end={loadavg()}", flush=True)
     return 0

@@ -24,6 +24,8 @@ from statistics import median as _median
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from data_pipelines_worker_spark.session import release_cached  # noqa: E402
+
 STRIDE = 10_000_000
 
 #: integer key columns shifted per replica so joins stay replica-local
@@ -61,19 +63,6 @@ def build_replica(spark, src_dir: str, out_dir: str, n_copies: int) -> None:
         out.write.mode("overwrite").parquet(os.path.join(out_dir, f"{table}.parquet"))
 
 
-def _hygiene(spark) -> None:
-    """Same inter-query hygiene as bench.py: SQL cache + leaked
-    localCheckpoint RDD blocks + py4j handle GC, outside timing windows —
-    600+ timed executions otherwise build eviction pressure that lands on
-    whichever iterative query runs next and corrupts its ratio."""
-    import gc
-
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-    gc.collect()
-
-
 def time_warm(spark, fn, sf_dir: str, n_warm: int = 3) -> tuple[float, list[float]]:
     """(cold, warm_runs) seconds via noop write — bench.py's protocol,
     INCLUDING the inter-run hygiene bench.py has always done between
@@ -101,7 +90,7 @@ def time_warm(spark, fn, sf_dir: str, n_warm: int = 3) -> tuple[float, list[floa
     cold = time.perf_counter() - t0
     warms = []
     for _ in range(n_warm):
-        _hygiene(spark)
+        release_cached(spark)
         t1 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         warms.append(time.perf_counter() - t1)
@@ -140,9 +129,9 @@ def main() -> int:
         fn, _ = registry[name]
         try:
             _, w1s = time_warm(spark, fn, src)
-            _hygiene(spark)
+            release_cached(spark)
             _, wNs = time_warm(spark, fn, out)
-            _hygiene(spark)
+            release_cached(spark)
             w1, wN = _median(w1s), _median(wNs)
             runs1 = "/".join(f"{w:.2f}" for w in w1s)
             runsN = "/".join(f"{w:.2f}" for w in wNs)
