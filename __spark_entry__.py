@@ -41,7 +41,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # backstop for the tail the window cannot reach.
 _CHANGED = (
     # the one registered query that runs the pipeline runner, whose frame
-    # operators now resolve a bound parameter by input priority
+    # operators now materialise only the parameters they read as columns
     "pipeline_e2e",
 )
 

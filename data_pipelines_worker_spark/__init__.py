@@ -23,5 +23,3 @@ reference repo only.
 """
 
 __version__ = "0.1.0"
-
-from .session import get_spark, load_tables  # noqa: F401

@@ -351,10 +351,13 @@ NON_PARALLEL_BLOCKS = frozenset(
 )
 
 
-def df_operator(name: str):
+def df_operator(name: str, columns: tuple[str, ...]):
     """Register a frame adapter ``adapt(runner, df, cfg)`` as a block: the
-    bound parameters arrive as columns of ``df``, the block's config as
-    ``cfg``, its static input with the request's keys merged over it."""
+    parameters it reads as ``columns`` arrive as columns of ``df``, the
+    block's config as ``cfg``, its static input with the request's keys
+    merged over it. Every other key stays in ``cfg`` only: a literal column
+    would cross the Arrow boundary into the block's Python stage on every
+    row."""
 
     def deco(adapt: Callable[["PipelineRunner", DataFrame, dict[str, Any]], DataFrame]):
         @_block(name)
@@ -364,7 +367,7 @@ def df_operator(name: str):
                 # a bound key is already a column of df; it is rewritten
                 # only when a request or static value joins its priority
                 # coalesce
-                if not k.startswith("__") and (k not in df.columns or k in cfg):
+                if k in columns and (k not in df.columns or k in cfg):
                     df = df.withColumn(k, c)
             if name in NON_PARALLEL_BLOCKS:
                 # an explicit numbered repartition AQE will not re-widen: one
@@ -379,7 +382,7 @@ def df_operator(name: str):
     return deco
 
 
-@df_operator("image_resize")
+@df_operator("image_resize", ("image",))
 def _dfop_image_resize(runner, df, cfg):
     from ..operators import media
 
@@ -391,7 +394,7 @@ def _dfop_image_resize(runner, df, cfg):
     )
 
 
-@df_operator("image_blur")
+@df_operator("image_blur", ("image",))
 def _dfop_image_blur(runner, df, cfg):
     from ..operators import media
 
@@ -401,7 +404,7 @@ def _dfop_image_blur(runner, df, cfg):
     )
 
 
-@df_operator("image_add_text")
+@df_operator("image_add_text", ("image", "text"))
 def _dfop_image_add_text(runner, df, cfg):
     from ..operators import media
 
@@ -422,7 +425,7 @@ def _dfop_image_add_text(runner, df, cfg):
     )
 
 
-@df_operator("video_from_image")
+@df_operator("video_from_image", ("image", "start", "end"))
 def _dfop_video_from_image(runner, df, cfg):
     from ..operators import media
 
@@ -438,7 +441,7 @@ def _dfop_video_from_image(runner, df, cfg):
     )
 
 
-@df_operator("join_videos")
+@df_operator("join_videos", ("videos",))
 def _dfop_join_videos(runner, df, cfg):
     from ..operators import media
 
@@ -448,7 +451,7 @@ def _dfop_join_videos(runner, df, cfg):
     )
 
 
-@df_operator("video_add_audio")
+@df_operator("video_add_audio", ("video", "audio"))
 def _dfop_video_add_audio(runner, df, cfg):
     from ..operators import media
 
@@ -461,7 +464,7 @@ def _dfop_video_add_audio(runner, df, cfg):
     return out.withColumnRenamed("video", "payload_bin")
 
 
-@df_operator("video_add_subtitles")
+@df_operator("video_add_subtitles", ("video", "subtitles"))
 def _dfop_video_add_subtitles(runner, df, cfg):
     from ..operators import media
 
@@ -472,7 +475,7 @@ def _dfop_video_add_subtitles(runner, df, cfg):
     )
 
 
-@df_operator("audio_from_video")
+@df_operator("audio_from_video", ("video",))
 def _dfop_audio_from_video(runner, df, cfg):
     from ..operators import media
 
@@ -517,7 +520,7 @@ def _parse_bitrate(v) -> int | None:
     return int(float(s) * mult)
 
 
-@df_operator("audio_chunk")
+@df_operator("audio_chunk", ("audio",))
 def _dfop_audio_chunk(runner, df, cfg):
     from ..operators import media
 
@@ -527,7 +530,7 @@ def _dfop_audio_chunk(runner, df, cfg):
     )
 
 
-@df_operator("audio_convert")
+@df_operator("audio_convert", ("audio",))
 def _dfop_audio_convert(runner, df, cfg):
     from ..operators import media
 
@@ -543,7 +546,7 @@ def _dfop_audio_convert(runner, df, cfg):
     )
 
 
-@df_operator("http_request")
+@df_operator("http_request", ("url", "method", "headers", "query", "body"))
 def _dfop_http_request(runner, df, cfg):
     from ..operators import external
 
@@ -569,7 +572,7 @@ def _dfop_http_request(runner, df, cfg):
     )
 
 
-@df_operator("openai_chat_completion")
+@df_operator("openai_chat_completion", ("user_prompt", "system_prompt"))
 def _dfop_chat(runner, df, cfg):
     from ..operators import external
 
@@ -584,7 +587,7 @@ def _dfop_chat(runner, df, cfg):
     return out.withColumnRenamed("completion", "payload_str")
 
 
-@df_operator("openai_tts_request")
+@df_operator("openai_tts_request", ("text",))
 def _dfop_tts(runner, df, cfg):
     from ..operators import external
 
@@ -599,7 +602,7 @@ def _dfop_tts(runner, df, cfg):
     )
 
 
-@df_operator("openai_transcription_request")
+@df_operator("openai_transcription_request", ("audio",))
 def _dfop_transcription(runner, df, cfg):
     from ..operators import external
 
@@ -614,7 +617,7 @@ def _dfop_transcription(runner, df, cfg):
     return out.withColumnRenamed("transcription", "payload_str")
 
 
-@df_operator("openai_image_request")
+@df_operator("openai_image_request", ("prompt",))
 def _dfop_image_request(runner, df, cfg):
     from ..operators import external
 

@@ -594,7 +594,9 @@ def test_params_follow_insertion_order(spark, tmp_path, monkeypatch):
         seen["params"] = [k for k in params if not k.startswith("__")]
         return df.select("input_index", F.lit("ok").alias("payload_str")), False
 
-    @compiler.df_operator("capture_columns")
+    @compiler.df_operator(
+        "capture_columns", ("zeta", "alpha", "mid", "beta", "omega", "aardvark")
+    )
     def _capture_columns(runner, df, block):
         seen["columns"] = df.columns
         return df.select("input_index", F.lit("ok").alias("payload_str"))
@@ -632,6 +634,43 @@ def test_params_follow_insertion_order(spark, tmp_path, monkeypatch):
     assert seen["columns"] == ["input_index", *order]
 
 
+def test_frame_operator_materialises_only_its_columns(spark, tmp_path, monkeypatch):
+    # a static or request key the adapter reads from cfg stays out of the
+    # frame that crosses into its Python stage; a key it reads as a column
+    # is materialised even when its value is static
+    from pyspark.sql import functions as F
+
+    from data_pipelines_worker_spark.plans import compiler
+
+    monkeypatch.setattr(compiler, "_BLOCKS", dict(compiler._BLOCKS))
+    seen: dict[str, list[str]] = {}
+
+    @compiler.df_operator("say", ("text", "voice"))
+    def _say(runner, df, cfg):
+        seen["columns"] = df.columns
+        seen["speed"] = cfg["speed"]
+        return df.select("input_index", F.col("text").alias("payload_str"))
+
+    spec = PipelineSpec(
+        slug="cfg-keys",
+        blocks=[
+            BlockSpec(id="upload_file", slug="src"),
+            BlockSpec(
+                id="say",
+                slug="say",
+                input={"speed": 1.5, "voice": "alloy", "model": "m"},
+                bindings=[InputBinding(param="text", origin="src")],
+            ),
+        ],
+    )
+    res = PipelineRunner(spark, str(tmp_path)).run(
+        spec, request_input={"src": {"file": "hello"}, "say": {"format": "mp3"}}
+    )
+    assert seen["columns"] == ["input_index", "text", "voice"]
+    assert seen["speed"] == 1.5
+    assert res.output.first().payload_str == "hello"
+
+
 def test_frame_operator_bound_param_follows_input_priority(spark, tmp_path, monkeypatch):
     # request > binding > static holds for a bound parameter of a frame
     # adapter too: a request value overrides the binding column, and a
@@ -642,7 +681,7 @@ def test_frame_operator_bound_param_follows_input_priority(spark, tmp_path, monk
 
     monkeypatch.setattr(compiler, "_BLOCKS", dict(compiler._BLOCKS))
 
-    @compiler.df_operator("echo_text")
+    @compiler.df_operator("echo_text", ("text",))
     def _echo_text(runner, df, cfg):
         return df.select("input_index", F.col("text").alias("payload_str"))
 

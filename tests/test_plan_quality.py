@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_worker_spark.queries import load_all
-from data_pipelines_worker_spark.session import load_table
+from data_pipelines_worker_spark.session import load_table, release_cached
 
 SF = "/root/testdata/sf0.001"
 
@@ -992,9 +992,7 @@ class TestCorpusRepeatedSpans:
         assert "MapInPandas" not in plan
         assert "FileScan parquet" not in plan
         assert "Scan ExistingRDD" in plan
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_lcp_walk_is_equi_joins_and_broadcast_residual(self, spark):
         # the walk frame itself (eager inside the query, so audited
@@ -1026,9 +1024,7 @@ class TestCorpusRepeatedSpans:
         assert "BatchEvalPython" not in plan
         assert "MapInPandas" not in plan
         assert "BroadcastHashJoin" in plan
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_build_plans_one_exchange_per_rank(self, spark):
         # the non-unique global rank is ONE range exchange: the key
@@ -1086,9 +1082,7 @@ class TestCorpusMaximalRepeats:
         assert 1 <= plan.count("BroadcastHashJoin") <= 6
         assert "TakeOrdered" in plan
         assert "Scan ExistingRDD" in plan
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_driver_collects_stay_control_plane(self, spark, monkeypatch):
         # plateau corpus (300 identical 12-token docs, 3599 edges):
@@ -1132,9 +1126,7 @@ class TestCorpusMaximalRepeats:
         assert got == {
             (" ".join(toks[12 - l:]), l, 300, 300) for l in range(8, 13)
         }
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
 
 class TestLcpIntervalCensus:
@@ -1153,9 +1145,7 @@ class TestLcpIntervalCensus:
         assert "Scan ExistingRDD" in plan
         assert "Join" not in plan
         assert plan.count("MapInPandas") == 1
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_driver_never_materializes_pending_edges(self, spark, monkeypatch):
         # plateau corpus: 300 identical 12-token docs — every equal-LCP
@@ -1201,9 +1191,7 @@ class TestLcpIntervalCensus:
         # same next token), one node per length 8..12, 300 occurrences
         got = {(r.len_tokens, r.n_nodes, r.total_occ) for r in result}
         assert got == {(l, 1, 300) for l in range(8, 13)}
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_ansv_stage_is_one_arrow_pass_over_range_sort(self, spark):
         # the ANSV kernel itself: ONE MapInPandas over one range

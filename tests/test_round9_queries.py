@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import pytest
 
+from data_pipelines_worker_spark.session import release_cached
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -68,9 +70,7 @@ def _span_stats(spark, pairs, threshold=8):
     df = spark.createDataFrame(pairs, "doc_id long, text string")
     out = corpus_repeated_span_stats(df, "doc_id", "text", threshold)
     rows = {r.doc_id: (r.dup_pos_cnt, r.dup_token_cov, r.max_rep_tokens) for r in out.collect()}
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    release_cached(spark)
     return rows
 
 
@@ -215,9 +215,7 @@ def _repeats(spark, pairs, min_len=8, top_n=20):
     df = spark.createDataFrame(pairs, "doc_id long, text string")
     out = corpus_maximal_repeats(df, "doc_id", "text", min_len, top_n)
     rows = {(r.span, r.len_tokens, r.n_occ, r.n_docs) for r in out.collect()}
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    release_cached(spark)
     return rows
 
 
@@ -366,9 +364,7 @@ class TestMaximalRepeatsUnit:
         assert len(destroyed) == n_d and len(ship_destroyed) == n_s, (
             "census must not destroy eagerly"
         )
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_string_doc_ids_supported(self, spark):
         # r11 review regression guard: document ids never enter the
@@ -389,9 +385,7 @@ class TestMaximalRepeatsUnit:
             for r in corpus_maximal_repeats(df, "doc_id", "text", 8, 20).collect()
         }
         assert got == _repeats_model(pairs, 8, 20)
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        release_cached(spark)
 
     def test_matches_model_on_random_corpus(self, spark):
         import random
@@ -417,9 +411,7 @@ def _census(spark, pairs, min_len=8):
     df = spark.createDataFrame(pairs, "doc_id long, text string")
     out = lcp_interval_census(df, "doc_id", "text", min_len)
     rows = {(r.len_tokens, r.n_nodes, r.total_occ) for r in out.collect()}
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
+    release_cached(spark)
     return rows
 
 
@@ -589,9 +581,7 @@ class TestAnsvSweepUnit:
                 rights = [j + 1 for j in range(x + 1, n) if ll[j] < ll[x]]
                 exp = (lefts[-1] if lefts else 0, rights[0] if rights else n + 1)
                 assert got[x + 1] == exp, (trial, x)
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+            release_cached(spark)
 
     def test_sweep_is_not_quadratic_memory(self):
         # staircase regression: |cand| is maxlen-sized there, so the
@@ -657,9 +647,7 @@ class TestDocsBroadcastSwap:
                     docs, "doc_id", "text", 8
                 ).collect()
             }
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
+            release_cached(spark)
             return reps, spans, census
 
         bcast = snapshot()
