@@ -20,6 +20,19 @@ Not reimplemented: ``GET /workers`` — worker discovery/handoff belongs to
 the cluster manager on Spark (SURVEY §1.1); the endpoint returns the
 driver as the single logical worker for API-shape compatibility.
 
+Moderation: a run whose ``fetch_moderation_tg`` gate lacks a decision
+raises ``ModerationPending`` and parks at that gate — its record keeps
+the request input, the gate slug and the gate's decision cursors, and
+nothing else of the run. Decisions are keyed by processing (like the
+reference's callback filter, block_fetch_moderation_telegram.go:180-197):
+a decision batch resumes only the parked processings it names, and the
+gate counts only its own processing's decisions. A resume starts at the
+gate through the runner's resume path (``start_slug`` = the gate, no
+target index) with the saved cursors, so decisions already consumed stay
+consumed and the stages a human reviewed are rehydrated from the lake,
+never recomputed; as on every resume, the blocks before the gate then
+report ``loaded``.
+
 The server is driver-side control plane only; all data work stays in
 Spark jobs. JSON in/out, no framework dependencies.
 """
@@ -28,9 +41,8 @@ from __future__ import annotations
 
 import json
 import threading
-import time
 import uuid
-from dataclasses import asdict
+from dataclasses import asdict, dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
@@ -41,23 +53,53 @@ from ..sources import run_log
 
 #: decision-event schema shared by the static DataFrame path and the
 #: streaming JSON source (same columns the compiler's poll-loop replay
-#: consumes, block_fetch_moderation_telegram.go:99-245)
+#: consumes, block_fetch_moderation_telegram.go:99-245). A decision names
+#: its processing, gate and index, like the reference's callback filter
+#: (:180-197).
 DECISION_SCHEMA = (
-    "block_slug string, input_index long, action string, event_time long, "
-    "event_id long, regenerate_block_slug string"
+    "processing_id string, block_slug string, input_index long, action string, "
+    "event_time long, event_id long, regenerate_block_slug string"
 )
+
+
+@dataclass
+class _Processing:
+    """The service's state for one processing id."""
+
+    slug: str
+    thread: threading.Thread
+    #: None, a ModerationPending message, or a run or restart error
+    error: str | None = None
+    #: the last failed transport delivery; None once one succeeds
+    delivery_error: str | None = None
+    restart_failures: int = 0
+    delivery_failures: int = 0
+    #: while parked at a moderation gate: what resuming there needs
+    request_input: dict | None = None
+    gate: str | None = None
+    cursors: dict[str, tuple] | None = None
 
 
 class PipelineService:
     """Registry + async execution state (PipelineRegistry /
-    ProcessingRegistry equivalents, types/registries/).
+    ProcessingRegistry equivalents, types/registries/): one
+    ``_Processing`` record per processing id.
 
     ``decisions_dir`` (optional) activates the live moderation path: a
     Structured Streaming JSON source tails the directory — the Spark
     analogue of the reference's Telegram GetUpdates long-poll — and each
-    micro-batch folds into the decision log and re-drives any processing
-    parked in ``waiting_moderation``.
+    micro-batch goes through ``add_decisions``.
     """
+
+    #: retry policy for restarting a parked run and for transport
+    #: delivery (ADVICE r3): the n-th consecutive failure retries on its
+    #: own timer after BACKOFF_BASE_S * 2**(n-1) seconds, so a run whose
+    #: resolving decision was the last event, or whose review message is
+    #: the only path to a decision, is not stranded; at the cap the error
+    #: is terminal
+    MAX_RESTART_FAILURES = 3
+    MAX_DELIVER_FAILURES = 5
+    BACKOFF_BASE_S = 2.0
 
     def __init__(
         self,
@@ -74,19 +116,10 @@ class PipelineService:
         #: reference's client.Send calls, moved behind the sink substrate
         self.transport = transport
         self.decisions = None  # optional moderation decision DataFrame
-        self._threads: dict[str, threading.Thread] = {}
-        self._errors: dict[str, str] = {}
         self._lock = threading.Lock()
+        self._records: dict[str, _Processing] = {}
         self._decision_rows: list[tuple] = []
         self._decision_version = 0
-        #: parked moderation-pending runs: pid -> full restart context
-        self._pending: dict[str, tuple[str, dict | None, str | None, int | None]] = {}
-        #: consecutive failed restarts per parked run (ADVICE r3: a
-        #: permanently-failing restart must reach a terminal error state
-        #: instead of retrying on every decision batch forever)
-        self._restart_failures: dict[str, int] = {}
-        self._deliver_failures: dict[str, int] = {}
-        self._delivery_errors: dict[str, str] = {}
         self._decision_stream = None
         if decisions_dir:
             self.start_decision_stream(decisions_dir)
@@ -94,106 +127,81 @@ class PipelineService:
     # -- live moderation decisions (VERDICT r2 #8) ---------------------------
 
     def start_decision_stream(self, path: str, trigger_seconds: float = 1.0):
-        """Tail ``path`` as a streaming JSON source of decision events.
-
-        foreachBatch folds each micro-batch into the accumulated decision
-        log (control-plane scale — the same human-sized table the
-        reference polls out of Telegram) and resumes every parked
-        processing; a processing that pends *while* a batch lands retries
-        itself via the version counter in ``start()``."""
-        from ..session import local_df
-
-        spark = self.runner.spark
-
-        def on_batch(batch_df, _batch_id):
-            rows = [tuple(r) for r in batch_df.collect()]
-            if not rows:
-                return
-            with self._lock:
-                self._decision_rows.extend(rows)
-                self.decisions = local_df(
-                    spark, list(self._decision_rows), DECISION_SCHEMA
-                )
-                self._decision_version += 1
-                # claim every parked run by popping it under the lock: the
-                # parking thread inserted it under this same lock right
-                # before returning, so no aliveness check is needed (an
-                # is_alive() filter raced the short window between insert
-                # and thread exit, leaving runs parked forever)
-                parked = [
-                    (pid, slug, req, start_slug, target_index)
-                    for pid, (slug, req, start_slug, target_index) in self._pending.items()
-                ]
-                self._pending.clear()
-            for parked_run in parked:
-                self._try_restart(parked_run)
-
+        """Tail ``path`` as a streaming JSON source of decision events,
+        each micro-batch folded in by ``add_decisions``."""
         self._decision_stream = (
-            spark.readStream.schema(DECISION_SCHEMA)
+            self.runner.spark.readStream.schema(DECISION_SCHEMA)
             .json(path)
-            .writeStream.foreachBatch(on_batch)
+            .writeStream.foreachBatch(
+                lambda batch_df, _id: self.add_decisions(
+                    [tuple(r) for r in batch_df.collect()]
+                )
+            )
             .trigger(processingTime=f"{trigger_seconds} seconds")
             .queryName("moderation-decisions")
             .start()
         )
         return self._decision_stream
 
-    #: restart-failure policy (ADVICE r3): after MAX_RESTART_FAILURES
-    #: consecutive failures the run reaches a terminal error state; before
-    #: that, every failure also schedules its own deferred retry with
-    #: exponential backoff, so a run whose resolving decision was the
-    #: *last* event isn't stranded waiting for another decision batch.
-    MAX_RESTART_FAILURES = 3
-    RESTART_BACKOFF_BASE_S = 2.0
+    def stop_decision_stream(self):
+        if self._decision_stream is not None:
+            self._decision_stream.stop()
+            self._decision_stream = None
 
-    def _try_restart(self, parked_run: tuple) -> None:
-        pid, slug, req, start_slug, target_index = parked_run
-        try:
-            self.start(
-                slug,
-                request_input=req,
-                processing_id=pid,
-                start_slug=start_slug,
-                target_index=target_index,
+    def add_decisions(self, rows: list[tuple]) -> None:
+        """Fold decision events (``DECISION_SCHEMA`` tuples) into the
+        decision log (control-plane scale — the same human-sized table
+        the reference polls out of Telegram) and resume, at its gate,
+        every parked processing they name. A processing that pends while
+        a batch lands resumes itself (the version check in ``_work``)."""
+        from ..session import local_df
+
+        if not rows:
+            return
+        with self._lock:
+            self._decision_rows.extend(rows)
+            self.decisions = local_df(
+                self.runner.spark, list(self._decision_rows), DECISION_SCHEMA
             )
-            self._restart_failures.pop(pid, None)
+            self._decision_version += 1
+        for pid in dict.fromkeys(r[0] for r in rows):
+            self._resume(pid)
+
+    def _resume(self, pid: str) -> None:
+        """Restart a parked processing at its gate. Claiming the parked
+        state under the lock lets a decision batch and a backoff timer
+        race for it harmlessly."""
+        with self._lock:
+            rec = self._records.get(pid)
+            if rec is None or rec.gate is None:
+                return
+            req, gate = rec.request_input, rec.gate
+            rec.request_input = rec.gate = None
+        try:
+            self.start(rec.slug, request_input=req, processing_id=pid, start_slug=gate)
+            rec.restart_failures = 0
         except Exception as e:  # noqa: BLE001
             # a failed restart (slug dropped, thread pressure) must not
             # lose the run or kill the decision stream
-            n = self._restart_failures.get(pid, 0) + 1
-            self._restart_failures[pid] = n
+            rec.restart_failures = n = rec.restart_failures + 1
             if n >= self.MAX_RESTART_FAILURES:
-                # terminal: stop re-parking; the error string is the
-                # processing's final status
-                self._errors[pid] = (
+                rec.cursors = None
+                rec.error = (
                     f"restart failed permanently after {n} attempts: "
                     f"{type(e).__name__}: {e}"
                 )
                 return
             with self._lock:
-                self._pending[pid] = (slug, req, start_slug, target_index)
-            self._errors[pid] = f"restart failed (attempt {n}): {type(e).__name__}: {e}"
-            timer = threading.Timer(
-                self.RESTART_BACKOFF_BASE_S * (2 ** (n - 1)),
-                self._retry_parked,
-                args=(pid,),
-            )
-            timer.daemon = True
-            timer.start()
+                rec.request_input, rec.gate = req, gate
+            rec.error = f"restart failed (attempt {n}): {type(e).__name__}: {e}"
+            self._retry_later(n, self._resume, pid)
 
-    def _retry_parked(self, pid: str) -> None:
-        """Deferred-retry path: re-attempt one parked run independently of
-        future decision batches (it may have been claimed by a batch in
-        the meantime — popping under the lock makes that race benign)."""
-        with self._lock:
-            ctx = self._pending.pop(pid, None)
-        if ctx is not None:
-            self._try_restart((pid, *ctx))
-
-    def stop_decision_stream(self):
-        if self._decision_stream is not None:
-            self._decision_stream.stop()
-            self._decision_stream = None
+    def _retry_later(self, attempt: int, fn, *args) -> None:
+        """Call ``fn(*args)`` on a daemon timer, after the exponential
+        backoff of the ``attempt``-th consecutive failure."""
+        timer = threading.Timer(self.BACKOFF_BASE_S * 2 ** (attempt - 1), fn, args)
+        timer.daemon = True
+        timer.start()
 
     # -- async execution (pipeline.go:204 goroutine → daemon thread) --------
 
@@ -205,114 +213,93 @@ class PipelineService:
         start_slug: str | None = None,
         target_index: int | None = None,
     ) -> str:
+        """Run a processing on a daemon thread; returns its id at once.
+        A start supersedes the processing's parked state, keeping its
+        decision cursors."""
         spec = self.pipelines[slug]
-        processing_id = processing_id or uuid.uuid4().hex[:12]
+        pid = processing_id or uuid.uuid4().hex[:12]
+        with self._lock:
+            rec = self._records.get(pid)
+            cursors = rec.cursors if rec is not None else None
+            t = threading.Thread(
+                target=self._work,
+                args=(spec, pid, request_input, start_slug, target_index, cursors),
+                daemon=True,
+            )
+            # the thread reads its record under this lock, so registering
+            # it after start() still precedes every use
+            t.start()
+            if rec is None:
+                rec = self._records[pid] = _Processing(slug, t)
+            rec.slug, rec.thread = slug, t
+            rec.request_input = rec.gate = rec.cursors = None
+        return pid
 
-        def work():
-            while True:
+    def _work(self, spec, pid, request_input, start_slug, target_index, cursors):
+        while True:
+            with self._lock:
+                rec = self._records[pid]
+                version, decisions = self._decision_version, self.decisions
+            try:
+                self.runner.run(
+                    spec,
+                    request_input=request_input,
+                    processing_id=pid,
+                    start_slug=start_slug,
+                    target_index=target_index,
+                    decisions=decisions,
+                    cursors=cursors,
+                )
+            except ModerationPending as e:  # recorded status: waiting
+                rec.error = str(e)
+                # the review block completed before the gate pended — its
+                # sink records must reach the chat now, or the human never
+                # sees the buttons that unpark the run
+                self._deliver(spec, pid)
+                start_slug, target_index, cursors = e.block_slug, None, e.cursors
                 with self._lock:
-                    version = self._decision_version
-                    decisions = self.decisions
-                try:
-                    self.runner.run(
-                        spec,
-                        request_input=request_input,
-                        processing_id=processing_id,
-                        start_slug=start_slug,
-                        target_index=target_index,
-                        decisions=decisions,
-                    )
-                    with self._lock:
-                        self._pending.pop(processing_id, None)
-                    self._errors.pop(processing_id, None)
-                    self._deliver_sinks(spec, processing_id)
-                    return
-                except ModerationPending as e:  # recorded status: waiting
-                    self._errors[processing_id] = str(e)
-                    # the review block completed before the gate pended —
-                    # its sink records must reach the chat now, or the
-                    # human never sees the buttons that unpark the run
-                    self._deliver_sinks(spec, processing_id)
-                    with self._lock:
-                        # decisions advanced mid-run → replay immediately;
-                        # else park for the stream's on_batch to resume
-                        if self._decision_version == version:
-                            # park with the FULL restart context: dropping
-                            # start_slug/target_index here made a resumed
-                            # pipeline replay from block 0 on decision
-                            self._pending[processing_id] = (
-                                slug, request_input, start_slug, target_index
-                            )
-                            return
-                except Exception as e:  # noqa: BLE001 - surfaced via API
-                    self._errors[processing_id] = f"{type(e).__name__}: {e}"
-                    return
+                    # park at the gate for add_decisions to resume, unless
+                    # decisions advanced mid-run: then resume there now
+                    if self._decision_version == version:
+                        rec.request_input, rec.gate = request_input, start_slug
+                        rec.cursors = cursors
+                        return
+                continue
+            except Exception as e:  # noqa: BLE001 - surfaced via API
+                rec.error = f"{type(e).__name__}: {e}"
+                return
+            rec.error = None
+            self._deliver(spec, pid)
+            return
 
-        t = threading.Thread(target=work, daemon=True)
-        self._threads[processing_id] = t
-        t.start()
-        return processing_id
-
-    #: delivery-failure policy (mirrors the restart policy): a pending
-    #: run's review message IS the only path to a decision, so a failed
-    #: delivery schedules its own backoff retries instead of waiting for
-    #: a decision batch that can never arrive
-    MAX_DELIVER_FAILURES = 5
-    DELIVER_BACKOFF_BASE_S = 2.0
-
-    def _deliver_sinks(self, spec: PipelineSpec, processing_id: str) -> None:
+    def _deliver(self, spec: PipelineSpec, pid: str) -> None:
         """Push this run's Telegram sink records through the transport
-        (no-op without one). Delivery failures surface via the status API
-        and schedule their own deferred retries with exponential backoff —
-        the sink stage is durable and the transport is idempotent per
-        (processing, block, index), so retrying is always safe. Without a
-        retry path, one transient transport failure on a ModerationPending
-        run would strand it forever (the approve/decline buttons never
-        reach the chat, so the decision that re-drives delivery never
-        comes)."""
+        (no-op without one). The sink stage is durable and the transport
+        sends each record once, so a failed delivery retries on its own
+        backoff: a pending run's review message is the only path to the
+        decision that would re-drive it."""
         if self.transport is None:
             return
+        rec = self._records[pid]
         try:
-            self.transport.deliver_processing(self.runner, spec, processing_id)
-            self._deliver_failures.pop(processing_id, None)
-            self._delivery_errors.pop(processing_id, None)
+            self.transport.deliver_processing(self.runner, spec, pid)
+            rec.delivery_failures, rec.delivery_error = 0, None
         except Exception as e:  # noqa: BLE001
-            n = self._deliver_failures.get(processing_id, 0) + 1
-            self._deliver_failures[processing_id] = n
-            msg = f"transport delivery failed (attempt {n}): {type(e).__name__}: {e}"
-            # delivery failures live ONLY in _delivery_errors (surfaced as
-            # the status API's delivery_error field): _errors carries the
-            # run's own state (ModerationPending marker / pipeline error),
-            # and a delivery message written there would both outlive a
-            # successful retry (the success path pops only the delivery
-            # maps) and make later failures look error-routed
-            self._delivery_errors[processing_id] = msg
+            rec.delivery_failures = n = rec.delivery_failures + 1
+            # kept apart from the run's own error (pending marker or
+            # pipeline error), which a delivery retry must not clear
+            rec.delivery_error = (
+                f"transport delivery failed (attempt {n}): {type(e).__name__}: {e}"
+            )
             if n < self.MAX_DELIVER_FAILURES:
-                timer = threading.Timer(
-                    self.DELIVER_BACKOFF_BASE_S * (2 ** (n - 1)),
-                    self._deliver_sinks,
-                    args=(spec, processing_id),
-                )
-                timer.daemon = True
-                timer.start()
+                self._retry_later(n, self._deliver, spec, pid)
 
     def wait(self, processing_id: str, timeout: float | None = None) -> bool:
-        t = self._threads.get(processing_id)
-        if t is None:
+        rec = self._records.get(processing_id)
+        if rec is None:
             return True
-        # start() registers the thread in _threads BEFORE t.start() (so a
-        # wait issued right after start() returns never misses the run);
-        # the cost is a window where join() would raise "cannot join
-        # thread before it is started" — spin past it instead of racing
-        deadline = None if timeout is None else time.monotonic() + timeout
-        while t.ident is None:
-            if deadline is not None and time.monotonic() >= deadline:
-                return False
-            time.sleep(0.005)
-        t.join(
-            None if deadline is None else max(0.0, deadline - time.monotonic())
-        )
-        return not t.is_alive()
+        rec.thread.join(timeout)
+        return not rec.thread.is_alive()
 
     def processings(self, slug: str, processing_id: str | None = None) -> list[dict]:
         root = self.runner.store_root
@@ -338,13 +325,14 @@ class PipelineService:
                 ),
                 key=lambda b: b["position"],
             )
+            rec = self._records.get(pid)
             out.append(
                 {
                     "processing_id": pid,
                     "running": not self.wait(pid, timeout=0.0),
                     "stopped_at": rows[0]["stopped_at"] if rows else None,
-                    "error": self._errors.get(pid),
-                    "delivery_error": self._delivery_errors.get(pid),
+                    "error": rec.error if rec else None,
+                    "delivery_error": rec.delivery_error if rec else None,
                     "blocks": blocks,
                 }
             )

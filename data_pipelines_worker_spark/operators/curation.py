@@ -199,15 +199,6 @@ def repetition_stats(docs, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-# --- benchmark decontamination ---------------------------------------------
-
-
-def doc_ngram_set(text: Column, n: int = 5) -> Column:
-    """Distinct word n-grams of a document (the unit of contamination
-    evidence: one shared n-gram = one hit)."""
-    return F.array_distinct(ngrams(F.split(text, " ", -1), n))
-
-
 # --- sequence packing -------------------------------------------------------
 
 #: token budget per packed training sequence

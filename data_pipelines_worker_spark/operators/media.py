@@ -361,14 +361,6 @@ def _validate_audio_payload(audio: bytes) -> None:
     faud_decode(audio)
 
 
-def _audio_stream_duration(audio: bytes) -> float:
-    from . import wav_codec as WAV
-
-    if WAV.is_wav(audio):
-        return WAV.wav_duration(audio)
-    return faud_duration(audio)
-
-
 def video_add_audio_bytes(
     video: bytes, audio: bytes, replace_original_audio: bool = False
 ) -> bytes:

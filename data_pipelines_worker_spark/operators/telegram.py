@@ -37,6 +37,7 @@ a human will read and moderate. Delivery collects only sink-record rows
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 import threading
@@ -323,15 +324,16 @@ class TelegramTransport:
     been written, resolves bound media bytes from the *origin* stage (the
     sink record flags the media kind; the bytes travel by stage
     reference), and sends each not-yet-delivered (processing, block,
-    input_index) exactly once per process lifetime. Idempotent across
-    repeated calls — a parked run re-driven by several decision batches
-    does not re-send its review messages.
+    input_index, payload digest) exactly once per process lifetime.
+    Idempotent across repeated calls — a parked run re-driven by several
+    decision batches does not re-send its review messages, while a review
+    a regeneration rewrote is new and goes out again.
     """
 
     def __init__(self, client: TelegramClient, group_id: int | str = 0):
         self.client = client
         self.group_id = group_id
-        self._delivered: set[tuple[str, str, int]] = set()
+        self._delivered: set[tuple[str, str, int, str]] = set()
         self._lock = threading.Lock()
         self.sent: list[dict] = []  # delivery log (message ids, for status)
 
@@ -377,14 +379,15 @@ class TelegramTransport:
             # claim undelivered keys first: a parked run is re-driven on
             # every decision batch, and re-reading media stages for an
             # already-delivered block is pure waste
-            undelivered = []
+            claims = {}
             with self._lock:
                 for r in rows:
-                    key = (processing_id, block.slug, r.input_index)
+                    digest = hashlib.sha1((r.payload_str or "").encode()).hexdigest()
+                    key = (processing_id, block.slug, r.input_index, digest)
                     if key not in self._delivered:
                         self._delivered.add(key)
-                        undelivered.append(r.input_index)
-            if not undelivered:
+                        claims[r.input_index] = key
+            if not claims:
                 continue
             gate = next(
                 (b for b in spec.blocks[pos + 1:] if b.id == "fetch_moderation_tg"),
@@ -396,7 +399,7 @@ class TelegramTransport:
             )
             plan = (
                 df.select("input_index", "payload_str")
-                .where(F.col("input_index").isin(undelivered))
+                .where(F.col("input_index").isin(list(claims)))
                 .withColumn("__img", F.lit(None).cast("binary"))
                 .withColumn("__vid", F.lit(None).cast("binary"))
             )
@@ -422,8 +425,7 @@ class TelegramTransport:
                 # every claim of this batch so the backoff retry re-drives
                 # all of it
                 with self._lock:
-                    for idx in undelivered:
-                        self._delivered.discard((processing_id, slug, idx))
+                    self._delivered.difference_update(claims.values())
                 raise
             failed = []
             for res in results:
@@ -438,9 +440,7 @@ class TelegramTransport:
             if failed:
                 with self._lock:
                     for res in failed:
-                        self._delivered.discard(
-                            (processing_id, slug, res["input_index"])
-                        )
+                        self._delivered.discard(claims[res["input_index"]])
                 raise RuntimeError(
                     f"{len(failed)} of {len(results)} sends failed for block "
                     f"{slug}: " + "; ".join(
@@ -553,6 +553,7 @@ class ModerationPoller:
                 self._seq += 1
                 events.append(
                     {
+                        "processing_id": review["processing_id"],
                         "block_slug": review["block_slug"],
                         "input_index": idx,
                         "action": action,

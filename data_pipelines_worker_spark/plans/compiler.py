@@ -649,11 +649,14 @@ class Decision:
 
 class ModerationPending(Exception):
     """No (post-cursor) decision for an index — the reference's 50×10 s
-    retry-if-unknown budget exhausting (config.yaml:184-186)."""
+    retry-if-unknown budget exhausting (config.yaml:184-186). ``cursors``
+    are the run's decision cursors at that moment: a run resumed at the
+    gate with them does not consume the same decisions twice."""
 
-    def __init__(self, block_slug: str, indices: list[int]):
+    def __init__(self, block_slug: str, indices: list[int], cursors: dict[str, tuple]):
         self.block_slug = block_slug
         self.indices = indices
+        self.cursors = cursors
         super().__init__(f"moderation pending at {block_slug} for indices {indices}")
 
 
@@ -887,15 +890,22 @@ class PipelineRunner:
         target_index: int | None = None,
         decisions: DataFrame | None = None,
         max_regenerates: int = 50,
+        cursors: dict[str, tuple] | None = None,
     ) -> RunResult:
         """Execute with the reference's outer control loop: a regenerate
         decision re-enters Process at (goto_slug, goto_index) with the same
         processing_id (pipeline.go:447-505); the decision cursor advances
         past consumed events (GetUpdates offset semantics,
-        block_fetch_moderation_telegram.go:129-133,218-219)."""
+        block_fetch_moderation_telegram.go:129-133,218-219). ``cursors``
+        starts the cursors where a parked run's ModerationPending left
+        them."""
         resuming = processing_id is not None and start_slug is not None
         run = _Run(
-            spec, processing_id or uuid.uuid4().hex[:12], request_input or {}, decisions
+            spec,
+            processing_id or uuid.uuid4().hex[:12],
+            request_input or {},
+            decisions,
+            dict(cursors or {}),
         )
         cur_start, cur_target = start_slug, target_index
         final_stop: str | None = None
@@ -927,19 +937,21 @@ class PipelineRunner:
                 stopped_at=final_stop,
             )
 
-    def _collect_decisions(
-        self,
-        decisions: DataFrame | None,
-        block_slug: str,
-        cursor: tuple | None,
-    ) -> list[Decision]:
-        """Post-cursor decision events in arrival order (driver-side: the
-        decision table is human-scale control data, not payload data)."""
-        if decisions is None:
+    def _collect_decisions(self, run: _Run, block_slug: str) -> list[Decision]:
+        """This processing's post-cursor decision events at one gate, in
+        arrival order (driver-side: the decision table is human-scale
+        control data, not payload data). Like the reference's callback
+        filter (block_fetch_moderation_telegram.go:180-197), a decision
+        counts only for the processing, gate and index it names."""
+        if run.decisions is None:
             return []
-        cols = decisions.columns
+        cursor = run.cursors.get(block_slug)
+        cols = run.decisions.columns
         rows = (
-            decisions.where(F.col("block_slug") == block_slug)
+            run.decisions.where(
+                (F.col("processing_id") == run.processing_id)
+                & (F.col("block_slug") == block_slug)
+            )
             .withColumn("action", normalize_action(F.col("action")))
             .collect()
         )
@@ -974,7 +986,7 @@ class PipelineRunner:
             r["input_index"] for r in df.select("input_index").distinct().collect()
         )
         consumed = run.cursors.get(block.slug)
-        events = self._collect_decisions(run.decisions, block.slug, consumed)
+        events = self._collect_decisions(run, block.slug)
         # Poll-loop replay: consume events in arrival order and act at the
         # first moment every index has a decision (the reference's per-index
         # pollers all return) — later events stay unconsumed for the next
@@ -991,7 +1003,7 @@ class PipelineRunner:
         if not covered:
             missing = [i for i in indices if i not in decs]
             run.statuses[block.slug] = "waiting_moderation"
-            raise ModerationPending(block.slug, missing)
+            raise ModerationPending(block.slug, missing, run.cursors)
         run.cursors[block.slug] = consumed  # offset advance: events are acked
         declined = [i for i in indices if decs[i].action == "decline"]
         regen = [i for i in indices if decs[i].action == "regenerate"]

@@ -1420,7 +1420,6 @@ q_mixture_waterfill.__doc__ = q_mixture_waterfill.__doc__.format(
 _MK_MASK = mk.MASK  # digest domain: sums of <=16 masked terms stay < 2^54
 _MK_LEAF = mk.LEAF  # docs per leaf bucket
 _MK_FAN = mk.FAN  # tree fan-out above the leaves
-_MK_LEVELS = mk.LEVELS  # levels above the leaf layer
 
 _MK_ORACLE = f"""
 WITH v1 AS (

@@ -250,9 +250,10 @@ def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     join key at write time, so the join plans with ZERO exchanges — the
     100 TB answer to repeated big-big joins on a stable key (pay one
     bucketed write, then every subsequent join is shuffle-free). The
-    bucketed copies are written once per (session, sf) into a session-local
-    warehouse; ``tests/test_plan_quality.py`` asserts the no-Exchange
-    property machine-checked.
+    bucketed copies are written once per (session, sf) under the driver's
+    ``SparkFiles`` root, which Spark deletes when the context stops;
+    ``tests/test_plan_quality.py`` asserts the no-Exchange property
+    machine-checked.
 
     Scale contract: ``n_buckets`` is a write-time layout constant, so at
     a fixed layout the per-task input grows linearly with the corpus
@@ -263,7 +264,8 @@ def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange-free at any bucket count as long as both sides share it.
     """
     import os
-    import tempfile
+
+    from pyspark import SparkFiles
 
     n_buckets = 8
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -272,7 +274,7 @@ def q_bucketed_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark._dpws_bucket_roots = {}
     root = spark._dpws_bucket_roots.get(tag)
     if root is None:
-        root = tempfile.mkdtemp(prefix=f"dpws_buckets_{tag}_")
+        root = os.path.join(SparkFiles.getRootDirectory(), f"dpws_buckets_{tag}")
         for name, key, cols in (
             ("orders", "o_orderkey", ["o_orderkey", "o_orderpriority"]),
             ("lineitem", "l_orderkey", ["l_orderkey", "l_extendedprice"]),

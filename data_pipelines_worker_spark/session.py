@@ -26,10 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any scale factor (TPC-H
-#: region/nation/supplier scale sub-linearly; at SF100k they are still MBs).
-BROADCASTABLE = frozenset({"region", "nation", "supplier"})
-
 
 def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
     """Build (or reuse) the SparkSession.
@@ -154,15 +150,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all tables and register them as temp views (for spark.sql)."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = table_path(sf_dir, name)
-        if os.path.exists(path):
-            df = load_table(spark, sf_dir, name)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out

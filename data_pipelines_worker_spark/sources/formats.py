@@ -30,8 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-#: formats whose writers keep every Spark type intact
-LOSSLESS = ("parquet", "orc")
 FORMATS = ("parquet", "orc", "json", "csv", "avro")
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"

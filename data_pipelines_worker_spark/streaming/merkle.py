@@ -53,11 +53,6 @@ def read_tree(spark: SparkSession, tree_dir: str) -> DataFrame:
     return versions.read(spark, tree_dir, "tree")
 
 
-def read_docs(spark: SparkSession, tree_dir: str) -> DataFrame:
-    """The standing fingerprint table: (doc_id, node, fp)."""
-    return versions.read(spark, tree_dir, "docs")
-
-
 def merge_batch(
     batch_df: DataFrame, batch_id: int, tree_dir: str
 ) -> dict[int, int] | None:

@@ -28,8 +28,10 @@ REFERENCE_PIPELINES = (
 # Run the FULL suite with `pytest -m ""`; just these with `-m slowsuite`.
 # Keep this list in sync with measured durations, not with guesses.
 _SLOWSUITE = {
+    "test_api_server.py::test_concurrent_decisions_resume_each_parked_run_once",
     "test_api_server.py::test_decision_stream_unblocks_waiting_moderation",
-    "test_api_server.py::test_parked_resume_preserves_start_slug",
+    "test_api_server.py::test_parked_run_resumes_at_its_gate",
+    "test_api_server.py::test_regenerate_then_approve_ships_the_reviewed_content",
     "test_api_server.py::test_resume_with_target_index",
     "test_api_server.py::test_start_async_and_poll",
     "test_dedup_similarity.py::TestLogStarCC::test_logstar_equals_propagation_on_lsh_pairs",
@@ -76,6 +78,7 @@ _SLOWSUITE = {
     "test_streaming.py::test_prefix_index_stream_matches_batch",
     "test_streaming.py::test_prefix_index_weighted_stream_matches_batch",
     "test_streaming.py::test_windowed_hll_stream_matches_batch",
+    "test_telegram.py::test_regenerated_review_is_delivered_again",
 }
 
 

@@ -235,7 +235,7 @@ def test_multipart_file_upload_runs_pipeline(png_api):
     assert status == 202
     pid = resp["processing_id"]
     assert service.wait(pid, 120.0)
-    assert service._errors.get(pid) is None
+    assert service.processings("png-upload", pid)[0]["error"] is None
 
     from data_pipelines_worker_spark.sources import stage_store
 
@@ -262,7 +262,7 @@ def test_multipart_array_fields_fan_out(api):
     assert status == 202
     pid = resp["processing_id"]
     assert service.wait(pid, 120.0)
-    assert service._errors.get(pid) is None
+    assert service.processings("wrap-join", pid)[0]["error"] is None
 
     from data_pipelines_worker_spark.sources import stage_store
 
@@ -292,7 +292,56 @@ def test_multipart_over_10mib_rejected(api):
     assert e.value.code == 400
 
 
-# --- live moderation decision stream (VERDICT r2 #8) -----------------------
+# --- moderation: parked runs and the decision stream (VERDICT r2 #8) -------
+
+
+def _status(service, pid, slug="moderated") -> dict:
+    return service.processings(slug, pid)[0]
+
+
+def _approvals(pid, indices, t=100, first_id=0) -> list[tuple]:
+    """DECISION_SCHEMA rows approving ``indices`` of ``pid``'s gate."""
+    return [(pid, "gate", i, "approve", t, first_id + i, None) for i in indices]
+
+
+def _await_settled(service, pid, pred, slug="moderated", timeout=120.0) -> dict:
+    """Status of ``pid`` once it is not running and ``pred`` holds; a
+    decision may restart it at any moment, so poll rather than wait once."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        if service.wait(pid, 1.0):
+            # empty while a restarted run rewrites its status snapshot
+            st = service.processings(slug, pid)
+            if st and not st[0]["running"] and pred(st[0]):
+                return st[0]
+        time.sleep(0.2)
+    raise TimeoutError(service.processings(slug, pid))
+
+
+def _pending(st) -> bool:
+    return "pending" in (st["error"] or "")
+
+
+def _gated_spec() -> PipelineSpec:
+    """The smallest moderated pipeline: a fan-out and its gate."""
+    return PipelineSpec(
+        slug="gated",
+        blocks=[
+            BlockSpec(id="upload_file", slug="src", fan_out=True),
+            BlockSpec(
+                id="fetch_moderation_tg",
+                slug="gate",
+                bindings=[InputBinding(param="data", origin="src")],
+            ),
+        ],
+    )
+
+
+def _moderated_service(spark, tmp_path, **kwargs):
+    from tests.test_moderation_flow import _spec as moderated_spec
+
+    runner = PipelineRunner(spark, str(tmp_path / "stages"))
+    return PipelineService(runner, {"moderated": moderated_spec()}, **kwargs)
 
 
 def test_decision_stream_unblocks_waiting_moderation(spark, tmp_path):
@@ -301,113 +350,111 @@ def test_decision_stream_unblocks_waiting_moderation(spark, tmp_path):
     # auto-resume (the reference's GetUpdates poll loop, as a stream)
     import os
 
-    from tests.test_moderation_flow import _spec as moderated_spec
-
     decisions_dir = tmp_path / "decisions"
     decisions_dir.mkdir()
-    runner = PipelineRunner(spark, str(tmp_path / "stages"))
-    service = PipelineService(
-        runner, {"moderated": moderated_spec()}, decisions_dir=str(decisions_dir)
-    )
+    service = _moderated_service(spark, tmp_path, decisions_dir=str(decisions_dir))
     try:
         req = {"src": {"file": ["a", "b"]}}
         pid = service.start("moderated", request_input=req)
         assert service.wait(pid, 120.0)
-        assert "pending" in (service._errors.get(pid) or "")
+        assert _pending(_status(service, pid))
 
         events = [
-            {"block_slug": "gate", "input_index": i, "action": "approve",
-             "event_time": 100 + i, "event_id": i, "regenerate_block_slug": None}
+            {"processing_id": pid, "block_slug": "gate", "input_index": i,
+             "action": "approve", "event_time": 100 + i, "event_id": i,
+             "regenerate_block_slug": None}
             for i in range(2)
         ]
         tmp = decisions_dir / ".approve.json.tmp"
         tmp.write_text("\n".join(json.dumps(e) for e in events))
         os.rename(tmp, decisions_dir / "approve.json")  # atomic appearance
 
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if service.wait(pid, 1.0) and pid not in service._pending:
-                if service._errors.get(pid) is None:
-                    break
-            time.sleep(0.5)
-        assert service._errors.get(pid) is None
-        assert pid not in service._pending
+        _await_settled(service, pid, lambda st: st["error"] is None)
 
         from data_pipelines_worker_spark.sources import stage_store
 
         out = stage_store.read_stage(
-            spark, runner.store_root, "moderated", pid, "join"
+            spark, service.runner.store_root, "moderated", pid, "join"
         )
         assert out.first().payload_str == "<a> <b>"
     finally:
         service.stop_decision_stream()
 
 
-def test_parked_resume_preserves_start_slug(spark, tmp_path):
-    # a processing parked while RESUMING mid-pipeline must restart from
-    # its start_slug when a decision lands — not replay from block 0
-    # (regression: the parked context used to drop start_slug/target_index)
+def test_parked_run_resumes_at_its_gate(spark, tmp_path):
+    # an approval resumes a parked run at its gate: every earlier stage is
+    # rehydrated from the lake, never recomputed — also when the run had
+    # been resumed mid-pipeline by hand before it parked
     import os
 
-    from tests.test_moderation_flow import _spec as moderated_spec
+    from data_pipelines_worker_spark.sources import stage_store
 
-    decisions_dir = tmp_path / "decisions"
-    decisions_dir.mkdir()
-    runner = PipelineRunner(spark, str(tmp_path / "stages"))
-    service = PipelineService(
-        runner, {"moderated": moderated_spec()}, decisions_dir=str(decisions_dir)
+    service = _moderated_service(spark, tmp_path)
+    req = {"src": {"file": ["a", "b"]}}
+    pid = service.start("moderated", request_input=req)
+    assert service.wait(pid, 120.0)
+    assert _pending(_status(service, pid))
+    assert service.start(
+        "moderated", request_input=req, processing_id=pid, start_slug="review"
+    ) == pid
+    assert service.wait(pid, 120.0)
+    assert _pending(_status(service, pid))
+
+    def mtimes(slug):
+        d = stage_store.stage_path(service.runner.store_root, "moderated", pid, slug)
+        return sorted(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d))
+
+    before = {slug: mtimes(slug) for slug in ("src", "wrap", "review")}
+    service.add_decisions(_approvals(pid, range(2)))
+    st = _await_settled(service, pid, lambda st: st["error"] is None)
+    assert [b["status"] for b in st["blocks"]] == ["loaded"] * 3 + ["completed"] * 2
+    assert {slug: mtimes(slug) for slug in before} == before
+    out = stage_store.read_stage(
+        spark, service.runner.store_root, "moderated", pid, "join"
     )
-    try:
-        req = {"src": {"file": ["a", "b"]}}
-        pid = service.start("moderated", request_input=req)
-        assert service.wait(pid, 120.0)
-        assert "pending" in (service._errors.get(pid) or "")
+    assert out.first().payload_str == "<a> <b>"
 
-        # mid-pipeline resume of the parked processing: earlier stages are
-        # rehydrated from the store; it parks again at the gate, now with
-        # start_slug recorded
-        pid2 = service.start(
-            "moderated", request_input=req, processing_id=pid, start_slug="review"
-        )
-        assert pid2 == pid
-        assert service.wait(pid, 120.0)
-        assert service._pending[pid][2] == "review"
 
-        from data_pipelines_worker_spark.sources import stage_store
+def test_decisions_resume_only_their_processing(spark, tmp_path):
+    # A's approvals complete A and leave B, of the same pipeline, parked
+    service = _moderated_service(spark, tmp_path)
+    req = {"src": {"file": ["a", "b"]}}
+    a = service.start("moderated", request_input=req)
+    b = service.start("moderated", request_input=req)
+    assert service.wait(a, 120.0) and service.wait(b, 120.0)
+    service.add_decisions(_approvals(a, range(2)))
+    _await_settled(service, a, lambda st: st["error"] is None)
+    assert service.wait(b, 120.0) and _pending(_status(service, b))
 
-        src_dir = stage_store.stage_path(runner.store_root, "moderated", pid, "src")
-        before = max(
-            os.path.getmtime(os.path.join(src_dir, f)) for f in os.listdir(src_dir)
-        )
 
-        events = [
-            {"block_slug": "gate", "input_index": i, "action": "approve",
-             "event_time": 100 + i, "event_id": i, "regenerate_block_slug": None}
-            for i in range(2)
-        ]
-        tmp = decisions_dir / ".approve.json.tmp"
-        tmp.write_text("\n".join(json.dumps(e) for e in events))
-        os.rename(tmp, decisions_dir / "approve.json")
+def test_regenerate_then_approve_ships_the_reviewed_content(spark, tmp_path, monkeypatch):
+    # regenerate → approve computes wrap twice (the first run, then the
+    # regeneration), and what ships is what the regenerated review showed
+    from data_pipelines_worker_spark.sources import stage_store
+    from tests.test_moderation_flow import REQ, tag_wrap_writes
 
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if service.wait(pid, 1.0) and pid not in service._pending:
-                if service._errors.get(pid) is None:
-                    break
-            time.sleep(0.5)
-        assert service._errors.get(pid) is None
-
-        out = stage_store.read_stage(
-            spark, runner.store_root, "moderated", pid, "join"
-        )
-        assert out.first().payload_str == "<a> <b>"
-        # the pre-start_slug stage was rehydrated, never rewritten
-        after = max(
-            os.path.getmtime(os.path.join(src_dir, f)) for f in os.listdir(src_dir)
-        )
-        assert after == before, "restart replayed blocks before start_slug"
-    finally:
-        service.stop_decision_stream()
+    writes = tag_wrap_writes(monkeypatch)
+    service = _moderated_service(spark, tmp_path)
+    pid = service.start("moderated", request_input=REQ)
+    assert service.wait(pid, 120.0)
+    service.add_decisions(
+        _approvals(pid, (0, 1, 3)) + [(pid, "gate", 2, "regenerate", 100, 2, "wrap")]
+    )
+    _await_settled(service, pid, lambda st: len(writes) == 2 and _pending(st))
+    shown = [
+        json.loads(r.payload_str)["data"]
+        for r in stage_store.read_stage(
+            spark, service.runner.store_root, "moderated", pid, "review"
+        ).orderBy("input_index").collect()
+    ]
+    assert shown == ["<a>#1", "<b>#1", "<c>#2", "<d>#1"]
+    service.add_decisions(_approvals(pid, range(4), t=200, first_id=10))
+    _await_settled(service, pid, lambda st: st["error"] is None)
+    assert len(writes) == 2
+    out = stage_store.read_stage(
+        spark, service.runner.store_root, "moderated", pid, "join"
+    )
+    assert out.first().payload_str == " ".join(shown)
 
 
 def test_restart_failure_cap_and_deferred_retry(spark, tmp_path):
@@ -415,59 +462,70 @@ def test_restart_failure_cap_and_deferred_retry(spark, tmp_path):
     # after MAX_RESTART_FAILURES instead of re-parking forever, and a
     # transiently-failing one must retry on its own timer rather than
     # waiting for another decision batch.
-    runner = PipelineRunner(spark, str(tmp_path / "stages"))
-    service = PipelineService(runner, {})  # no pipelines: start() KeyErrors
-    service.RESTART_BACKOFF_BASE_S = 0.05
+    spec = _gated_spec()
+    service = PipelineService(PipelineRunner(spark, str(tmp_path / "stages")), {})
+    service.BACKOFF_BASE_S = 0.05
+    req = {"src": {"file": ["x"]}}
+    service.pipelines["gated"] = spec
+    pid = service.start("gated", request_input=req)
+    assert service.wait(pid, 120.0)
+    del service.pipelines["gated"]  # every restart now KeyErrors
+    service.add_decisions(_approvals(pid, [0]))  # attempt 1 fails at once
+    # attempts 2 and 3 fire from timers; attempt 3 hits the cap. The
+    # deadline is generous: the timers share the GIL with Spark's threads
+    st = _await_settled(service, pid, lambda st: "permanently" in st["error"], "gated")
+    assert f"after {service.MAX_RESTART_FAILURES} attempts" in st["error"]
 
-    parked = ("pid1", "ghost-slug", None, None, None)
-    service._try_restart(parked)  # attempt 1: re-parked + timer scheduled
-    assert "pid1" in service._pending
-    assert "attempt 1" in service._errors["pid1"]
-
-    # let the deferred retries run: attempts 2 and 3 fire from timers;
-    # attempt 3 hits the cap and goes terminal. Deadlines are generous
-    # (r12: 10 s starved once under full-suite CPU contention — the
-    # timers share the GIL with 32 Spark worker threads; the test's
-    # correctness signal is the terminal state, not the latency)
-    deadline = time.time() + 60
-    while time.time() < deadline and "pid1" in service._pending:
-        time.sleep(0.05)
-    # drain: the final timer may still be about to run _try_restart
-    deadline = time.time() + 60
-    while time.time() < deadline and "permanently" not in service._errors["pid1"]:
-        time.sleep(0.05)
-    assert "pid1" not in service._pending
-    assert "permanently" in service._errors["pid1"]
-    assert service._restart_failures["pid1"] == service.MAX_RESTART_FAILURES
-
-    # transient failure: register the pipeline after the first failure —
-    # the deferred timer retry must restart the run with no decision batch
-    service2 = PipelineService(runner, {})
-    service2.RESTART_BACKOFF_BASE_S = 0.2
-    service2._try_restart(("pid2", "wrap-join", {"src": {"file": ["x"]}}, None, None))
-    assert "pid2" in service2._pending
-    service2.pipelines["wrap-join"] = _spec()
-    deadline = time.time() + 60
-    while time.time() < deadline and "pid2" in service2._pending:
-        time.sleep(0.05)
-    assert "pid2" not in service2._pending
-    assert service2.wait("pid2", 60.0)
-    assert service2._restart_failures.get("pid2") is None
+    # transient failure: the pipeline is back before the first timer
+    # fires, so the deferred retry restarts the run with no new decision
+    service.pipelines["gated"] = spec
+    service.BACKOFF_BASE_S = 1.0
+    pid2 = service.start("gated", request_input=req)
+    assert service.wait(pid2, 120.0)
+    del service.pipelines["gated"]
+    service.add_decisions(_approvals(pid2, [0]))  # attempt 1 fails at once
+    service.pipelines["gated"] = spec
+    _await_settled(service, pid2, lambda st: st["error"] is None, "gated")
 
 
-def test_wait_tolerates_registered_but_unstarted_thread(spark, tmp_path):
-    # start() registers the worker thread in _threads BEFORE t.start() so
-    # wait() never misses a just-launched run; wait() must survive hitting
-    # that window (join() on an unstarted thread raises RuntimeError —
-    # observed once under full-suite CPU contention, r12).
+def test_concurrent_decisions_resume_each_parked_run_once(spark, tmp_path):
+    # decision batches racing each other for the same parked runs: each
+    # run is claimed and resumed exactly once (a lost claim would resume
+    # a run twice or strand it)
+    import sys
     import threading
 
     runner = PipelineRunner(spark, str(tmp_path / "stages"))
-    service = PipelineService(runner, {})
-    unstarted = threading.Thread(target=lambda: None, daemon=True)
-    service._threads["pidX"] = unstarted
-    # bounded wait inside the window: times out cleanly, no exception
-    assert service.wait("pidX", 0.05) is False
-    # once the thread starts and finishes, wait() reports completion
-    unstarted.start()
-    assert service.wait("pidX", 5.0) is True
+    calls: dict[str, int] = {}
+    run = runner.run
+
+    def counted(spec, *args, processing_id=None, **kwargs):
+        calls[processing_id] = calls.get(processing_id, 0) + 1
+        return run(spec, *args, processing_id=processing_id, **kwargs)
+
+    runner.run = counted
+    service = PipelineService(runner, {"gated": _gated_spec()})
+    pids = [service.start("gated", request_input={"src": {"file": ["x"]}}) for _ in range(6)]
+    assert all(service.wait(pid, 120.0) for pid in pids)
+    start = service.start
+
+    def slow_start(*args, **kwargs):
+        time.sleep(0.05)  # widen the window between a claim and its start
+        return start(*args, **kwargs)
+
+    service.start = slow_start
+    batches = [_approvals(pid, [0]) for pid in pids] * 2
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=service.add_decisions, args=(b,)) for b in batches]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60.0)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    for pid in pids:
+        assert _await_settled(service, pid, lambda st: st["error"] is None, "gated")
+    assert calls == {pid: 2 for pid in pids}

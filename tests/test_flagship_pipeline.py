@@ -54,9 +54,17 @@ TEXT_GATE = "fetch-event-text-moderation-from-telegram"
 IMG_GATE = "fetch-event-images-moderation-from-telegram"
 
 DEC_SCHEMA = (
-    "block_slug string, input_index long, action string, event_time long, "
-    "event_id long, regenerate_block_slug string"
+    "processing_id string, block_slug string, input_index long, action string, "
+    "event_time long, event_id long, regenerate_block_slug string"
 )
+
+#: the processing id the flagship runs use; their decisions name it
+PID = "flagship"
+
+
+def _decisions(spark, rows):
+    """Decision events for processing ``PID``; ``rows`` omit the id."""
+    return spark.createDataFrame([(PID, *r) for r in rows], DEC_SCHEMA)
 
 
 class _Handler(BaseHTTPRequestHandler):
@@ -136,7 +144,7 @@ def _approve_all(spark):
     rows = [(TEXT_GATE, 0, "approve", 100, 1, None)] + [
         (IMG_GATE, i, "approve", 101, 10 + i, None) for i in range(3)
     ]
-    return spark.createDataFrame(rows, DEC_SCHEMA)
+    return _decisions(spark, rows)
 
 
 def _stage(spark, runner, res, slug):
@@ -159,7 +167,7 @@ def test_flagship_spec_shape(spec):
 
 def test_flagship_approve_all(spark, tmp_path, server, client, spec):
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
-    res = runner.run(spec, decisions=_approve_all(spark))
+    res = runner.run(spec, processing_id=PID, decisions=_approve_all(spark))
     assert res.stopped_at is None
     assert all(s == "completed" for s in res.statuses.values()), res.statuses
 
@@ -246,7 +254,7 @@ def test_flagship_decline_third_stops(spark, tmp_path, server, client, spec):
         for i in range(3)
     ]
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
-    res = runner.run(spec, decisions=spark.createDataFrame(rows, DEC_SCHEMA))
+    res = runner.run(spec, processing_id=PID, decisions=_decisions(spark, rows))
     assert res.stopped_at == IMG_GATE
     assert res.statuses[IMG_GATE] == "stopped"
     assert res.statuses["send-event-video-to-telegram"] == "skipped"
@@ -272,7 +280,7 @@ def test_flagship_regenerate_third_image(spark, tmp_path, server, client, spec):
     ]
     second = [(IMG_GATE, i, "approve", 200, 20 + i, None) for i in range(3)]
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
-    res = runner.run(spec, decisions=spark.createDataFrame(first + second, DEC_SCHEMA))
+    res = runner.run(spec, processing_id=PID, decisions=_decisions(spark, first + second))
     assert res.stopped_at is None
     assert res.statuses[IMG_GATE] == "completed"
     assert res.statuses["send-event-video-to-telegram"] == "completed"

@@ -18,9 +18,12 @@ from data_pipelines_worker_spark.plans.compiler import (
 )
 
 DEC_SCHEMA = (
-    "block_slug string, input_index long, action string, event_time long, "
-    "event_id long, regenerate_block_slug string"
+    "processing_id string, block_slug string, input_index long, action string, "
+    "event_time long, event_id long, regenerate_block_slug string"
 )
+
+#: the processing id the runner tests run under; their decisions name it
+PID = "p1"
 
 
 def _spec() -> PipelineSpec:
@@ -58,8 +61,36 @@ def _spec() -> PipelineSpec:
 REQ = {"src": {"file": ["a", "b", "c", "d"]}}
 
 
-def _decisions(spark, rows):
-    return spark.createDataFrame(rows, DEC_SCHEMA)
+def _decisions(spark, rows, pid=PID):
+    """Decision events for processing ``pid``; ``rows`` omit the id."""
+    return spark.createDataFrame([(pid, *r) for r in rows], DEC_SCHEMA)
+
+
+def tag_wrap_writes(monkeypatch) -> list[int]:
+    """Make the spec's ``wrap`` block generative: every write of its stage
+    appends ``#<n>`` to the rows it writes, n counting the writes, so two
+    computations of the same index differ. Returns the (growing) list of
+    write numbers."""
+    from pyspark.sql import functions as F
+
+    from data_pipelines_worker_spark.sources import stage_store
+
+    writes: list[int] = []
+
+    def tagged(write):
+        def wrapper(df, root, pipeline_slug, processing_id, slug, *rest):
+            if slug == "wrap":
+                writes.append(len(writes) + 1)
+                df = df.withColumn(
+                    "payload_str", F.concat("payload_str", F.lit(f"#{len(writes)}"))
+                )
+            return write(df, root, pipeline_slug, processing_id, slug, *rest)
+
+        return wrapper
+
+    monkeypatch.setattr(stage_store, "write_stage", tagged(stage_store.write_stage))
+    monkeypatch.setattr(stage_store, "merge_stage", tagged(stage_store.merge_stage))
+    return writes
 
 
 def _runner(spark, tmp_path) -> PipelineRunner:
@@ -70,7 +101,7 @@ def test_approve_all(spark, tmp_path):
     decs = _decisions(
         spark, [("gate", i, "approve", 100, i, None) for i in range(4)]
     )
-    res = _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+    res = _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
     assert res.stopped_at is None
     assert res.statuses == {
         "src": "completed",
@@ -87,7 +118,7 @@ def test_send_moderation_payload(spark, tmp_path):
         spark, [("gate", i, "approve", 100, i, None) for i in range(4)]
     )
     runner = _runner(spark, tmp_path)
-    res = runner.run(_spec(), REQ, decisions=decs)
+    res = runner.run(_spec(), REQ, processing_id=PID, decisions=decs)
     from data_pipelines_worker_spark.sources import stage_store
 
     review = stage_store.read_stage(
@@ -103,7 +134,7 @@ def test_decline_third_stops(spark, tmp_path):
         spark,
         [("gate", i, "a" if i != 2 else "d", 100, i, None) for i in range(4)],
     )
-    res = _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+    res = _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
     assert res.stopped_at == "gate"
     assert res.statuses["gate"] == "stopped"
     assert res.statuses["join"] == "skipped"
@@ -120,7 +151,7 @@ def test_regenerate_third_goto_loop(spark, tmp_path):
     ]
     second = [("gate", i, "approve", 200, 10 + i, None) for i in range(4)]
     decs = _decisions(spark, first + second)
-    res = _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+    res = _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
     assert res.stopped_at is None
     # pass 2 rehydrated src, recomputed wrap@2, re-ran review/gate/join
     assert res.statuses["src"] == "loaded"
@@ -141,14 +172,14 @@ def test_regenerate_without_fresh_decisions_pends(spark, tmp_path):
         ],
     )
     with pytest.raises(ModerationPending) as e:
-        _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+        _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
     assert e.value.indices == [0, 1, 2, 3]
 
 
 def test_missing_decisions_pend(spark, tmp_path):
     decs = _decisions(spark, [("gate", 0, "approve", 100, 0, None)])
     with pytest.raises(ModerationPending) as e:
-        _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+        _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
     assert e.value.indices == [1, 2, 3]
 
 
@@ -159,7 +190,7 @@ def test_last_decision_wins(spark, tmp_path):
         [("gate", i, "approve", 100, i, None) for i in range(4)]
         + [("gate", 1, "decline", 50, 99, None)],  # earlier ts loses
     )
-    res = _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+    res = _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
     assert res.stopped_at is None
 
 
@@ -169,7 +200,7 @@ def test_regenerate_target_must_be_upstream(spark, tmp_path):
         [("gate", i, "approve" if i else "regenerate", 100, i, "join") for i in range(4)],
     )
     with pytest.raises(ValueError, match="upstream"):
-        _runner(spark, tmp_path).run(_spec(), REQ, decisions=decs)
+        _runner(spark, tmp_path).run(_spec(), REQ, processing_id=PID, decisions=decs)
 
 
 def test_target_index_resume_at_gate_keeps_other_indices(spark, tmp_path):
@@ -181,7 +212,7 @@ def test_target_index_resume_at_gate_keeps_other_indices(spark, tmp_path):
         spark, [("gate", i, "approve", 100, i, None) for i in range(4)]
     )
     runner = _runner(spark, tmp_path)
-    full = runner.run(_spec(), REQ, decisions=decs)
+    full = runner.run(_spec(), REQ, processing_id=PID, decisions=decs)
     res = runner.run(
         _spec(),
         processing_id=full.processing_id,
@@ -200,3 +231,39 @@ def test_target_index_resume_at_gate_keeps_other_indices(spark, tmp_path):
     )
     rows = {r.input_index: json.loads(r.payload_str)["action"] for r in gate.collect()}
     assert rows == {0: "approve", 1: "approve", 2: "approve", 3: "approve"}
+
+
+def test_decisions_count_only_for_their_processing(spark, tmp_path):
+    # a decision names its processing: B of the same pipeline cannot pass
+    # its gate on A's approvals (block_fetch_moderation_telegram.go:180-197)
+    decs = _decisions(
+        spark, [("gate", i, "approve", 100, i, None) for i in range(4)], pid="A"
+    )
+    runner = _runner(spark, tmp_path)
+    assert runner.run(_spec(), REQ, processing_id="A", decisions=decs).stopped_at is None
+    with pytest.raises(ModerationPending) as e:
+        runner.run(_spec(), REQ, processing_id="B", decisions=decs)
+    assert e.value.indices == [0, 1, 2, 3]
+
+
+def test_resume_at_gate_with_cursors_consumes_only_new_decisions(spark, tmp_path):
+    # a regenerate pends with its cursor past round 1; resuming at the gate
+    # with those cursors consumes round 2 only and recomputes nothing
+    first = [
+        ("gate", i, "regenerate" if i == 2 else "approve", 100, i, "wrap" if i == 2 else None)
+        for i in range(4)
+    ]
+    runner = _runner(spark, tmp_path)
+    with pytest.raises(ModerationPending) as e:
+        runner.run(_spec(), REQ, processing_id=PID, decisions=_decisions(spark, first))
+    second = [("gate", i, "approve", 200, 10 + i, None) for i in range(4)]
+    res = runner.run(
+        _spec(),
+        processing_id=PID,
+        start_slug=e.value.block_slug,
+        decisions=_decisions(spark, first + second),
+        cursors=e.value.cursors,
+    )
+    assert res.stopped_at is None
+    assert [res.statuses[s] for s in ("src", "wrap", "review")] == ["loaded"] * 3
+    assert res.output.first().payload_str == "<a> <b> <c> <d>"

@@ -14,6 +14,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from tests.test_api_server import _await_settled, _pending, _status
 from data_pipelines_worker_spark.operators.telegram import (
     ModerationPoller,
     TelegramClient,
@@ -201,6 +202,7 @@ def test_poller_writes_decision_and_acks(mock_tg, tmp_path):
     files = [p for p in tmp_path.iterdir() if p.suffix == ".json"]
     assert len(files) == 1
     event = json.loads(files[0].read_text())
+    assert event["processing_id"] == "pidX"
     assert event["block_slug"] == "gate"
     assert event["input_index"] == 0
     assert event["action"] == "regenerate"
@@ -226,41 +228,53 @@ def test_poller_ignores_malformed_callbacks(mock_tg, tmp_path):
     assert not list(tmp_path.glob("*.json"))
 
 
+def _moderated_over_transport(spark, tmp_path, mock_tg):
+    """The moderated pipeline behind a service whose decision stream tails
+    the directory a started ModerationPoller writes to."""
+    from data_pipelines_worker_spark.api.server import PipelineService
+    from data_pipelines_worker_spark.plans.compiler import PipelineRunner
+    from tests.test_moderation_flow import _spec as moderated_spec
+
+    decisions_dir = tmp_path / "decisions"
+    decisions_dir.mkdir()
+    client = _client(mock_tg)
+    service = PipelineService(
+        PipelineRunner(spark, str(tmp_path / "stages")),
+        {"moderated": moderated_spec()},
+        decisions_dir=str(decisions_dir),
+        transport=TelegramTransport(client, group_id=42),
+    )
+    poller = ModerationPoller(client, str(decisions_dir), idle_sleep=0.1).start()
+    return service, poller
+
+
+def _keyboards(mock_tg, n: int, timeout: float = 30.0) -> list[dict]:
+    """The chat's messages with a keyboard, once there are ``n`` of them."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        reviews = [m for m in mock_tg.messages if m.get("reply_markup")]
+        if len(reviews) >= n:
+            return reviews
+        time.sleep(0.2)
+    return reviews
+
+
 def test_moderation_e2e_through_transport(spark, tmp_path, mock_tg):
     # The full loop with NO static decision injection: run parks →
     # transport delivers the review messages (HTTP, mock Bot API) → a
     # "human" presses Approve on each delivered message → the poller
     # turns the callbacks into decision events → the service's decision
     # stream resumes the run → pipeline completes.
-    from data_pipelines_worker_spark.api.server import PipelineService
-    from data_pipelines_worker_spark.plans.compiler import PipelineRunner
     from data_pipelines_worker_spark.sources import stage_store
-    from tests.test_moderation_flow import _spec as moderated_spec
 
-    decisions_dir = tmp_path / "decisions"
-    decisions_dir.mkdir()
-    client = _client(mock_tg)
-    transport = TelegramTransport(client, group_id=42)
-    runner = PipelineRunner(spark, str(tmp_path / "stages"))
-    service = PipelineService(
-        runner,
-        {"moderated": moderated_spec()},
-        decisions_dir=str(decisions_dir),
-        transport=transport,
-    )
-    poller = ModerationPoller(client, str(decisions_dir), idle_sleep=0.1).start()
+    service, poller = _moderated_over_transport(spark, tmp_path, mock_tg)
     try:
         pid = service.start("moderated", request_input={"src": {"file": ["a", "b"]}})
         assert service.wait(pid, 120.0)
-        assert "pending" in (service._errors.get(pid) or "")
+        assert _pending(_status(service, pid))
 
         # the review messages reached the chat over HTTP, with keyboards
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            reviews = [m for m in mock_tg.messages if m.get("reply_markup")]
-            if len(reviews) == 2:
-                break
-            time.sleep(0.2)
+        reviews = _keyboards(mock_tg, 2)
         assert len(reviews) == 2
         for m in reviews:
             parsed = parse_review_message(m["text"])
@@ -275,16 +289,11 @@ def test_moderation_e2e_through_transport(spark, tmp_path, mock_tg):
         for m in reviews:
             mock_tg.press_button(m, "a", parse_review_message(m["text"])["index"])
 
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            if service.wait(pid, 1.0) and pid not in service._pending:
-                if service._errors.get(pid) is None:
-                    break
-            time.sleep(0.5)
-        assert service._errors.get(pid) is None
-        assert pid not in service._pending
+        _await_settled(service, pid, lambda st: st["error"] is None)
 
-        out = stage_store.read_stage(spark, runner.store_root, "moderated", pid, "join")
+        out = stage_store.read_stage(
+            spark, service.runner.store_root, "moderated", pid, "join"
+        )
         assert out.first().payload_str == "<a> <b>"
         # review messages were delivered exactly once despite the re-drive
         assert len([m for m in mock_tg.messages if m.get("reply_markup")]) == 2
@@ -353,26 +362,19 @@ def test_delivery_failure_schedules_backoff_retry(mock_tg, tmp_path, spark):
                 raise ConnectionError("bot api down")
             return super().deliver_processing(runner, spec, processing_id)
 
-    (tmp_path / "decisions").mkdir()
-    client = _client(mock_tg)
-    transport = FlakyTransport(client, fails=1)
     runner = PipelineRunner(spark, str(tmp_path / "stages"))
     service = PipelineService(
         runner, {"moderated": moderated_spec()},
-        decisions_dir=str(tmp_path / "decisions"), transport=transport,
+        transport=FlakyTransport(_client(mock_tg), fails=1),
     )
-    service.DELIVER_BACKOFF_BASE_S = 0.2
+    service.BACKOFF_BASE_S = 1.0
     pid = service.start("moderated", request_input={"src": {"file": ["a", "b"]}})
     assert service.wait(pid, 120.0)
     # pending status survives the delivery failure (it routes decisions)
-    assert "pending" in (service._errors.get(pid) or "")
-    assert pid in service._delivery_errors
-    deadline = time.time() + 30
-    while time.time() < deadline:
-        if len([m for m in mock_tg.messages if m.get("reply_markup")]) == 2:
-            break
-        time.sleep(0.2)
-    assert len([m for m in mock_tg.messages if m.get("reply_markup")]) == 2
+    st = _status(service, pid)
+    assert _pending(st)
+    assert "attempt 1" in st["delivery_error"]
+    assert len(_keyboards(mock_tg, 2)) == 2
 
 
 def test_partial_send_failure_strands_nothing(spark, tmp_path, mock_tg):
@@ -439,13 +441,15 @@ def test_partial_send_failure_strands_nothing(spark, tmp_path, mock_tg):
 
 
 def test_delivery_error_never_pollutes_run_errors(spark, tmp_path, mock_tg):
-    # ADVICE r4 #2: delivery failures are reported ONLY via
-    # _delivery_errors / the status delivery_error field; a run with no
-    # pipeline error must not inherit a stale transport message after a
-    # successful retry.
+    # ADVICE r4 #2: delivery failures are reported ONLY via the status
+    # delivery_error field; a run with no pipeline error must not inherit
+    # a stale transport message after a successful retry.
     from data_pipelines_worker_spark.api.server import PipelineService
-    from data_pipelines_worker_spark.plans.compiler import PipelineRunner
-    from data_pipelines_worker_spark.plans.compiler import PipelineSpec
+    from data_pipelines_worker_spark.plans.compiler import (
+        BlockSpec,
+        PipelineRunner,
+        PipelineSpec,
+    )
 
     class FlakyOnce(TelegramTransport):
         def __init__(self, client):
@@ -458,29 +462,51 @@ def test_delivery_error_never_pollutes_run_errors(spark, tmp_path, mock_tg):
                 raise ConnectionError("bot api down")
             return 0
 
-    (tmp_path / "decisions").mkdir()
     runner = PipelineRunner(spark, str(tmp_path / "stages"))
-    spec = PipelineSpec(slug="clean", blocks=[])
-    # earlier tests may leave their decision stream running; the query
-    # name is fixed per session
-    for q in spark.streams.active:
-        if q.name == "moderation-decisions":
-            q.stop()
+    spec = PipelineSpec(slug="clean", blocks=[BlockSpec(id="upload_file", slug="src")])
     service = PipelineService(
-        runner, {"clean": spec},
-        decisions_dir=str(tmp_path / "decisions"),
-        transport=FlakyOnce(_client(mock_tg)),
+        runner, {"clean": spec}, transport=FlakyOnce(_client(mock_tg))
     )
+    service.BACKOFF_BASE_S = 1.0
+    pid = service.start("clean", request_input={"src": {"file": "x"}})
+    assert service.wait(pid, 120.0)
+    st = _status(service, pid, "clean")
+    assert "attempt 1" in st["delivery_error"]
+    assert st["error"] is None  # run state stays clean
+    # successful backoff retry clears the delivery error everywhere
+    st = _await_settled(service, pid, lambda st: st["delivery_error"] is None, "clean")
+    assert st["error"] is None
+
+
+def test_regenerated_review_is_delivered_again(spark, tmp_path, mock_tg, monkeypatch):
+    # a regenerate rewrites one review; the transport sends that review
+    # again (the poller stripped the old keyboard) and nothing else, and
+    # approving the delivered reviews ships exactly what they showed
+    from data_pipelines_worker_spark.sources import stage_store
+    from tests.test_moderation_flow import tag_wrap_writes
+
+    writes = tag_wrap_writes(monkeypatch)
+    service, poller = _moderated_over_transport(spark, tmp_path, mock_tg)
     try:
-        service.DELIVER_BACKOFF_BASE_S = 0.1
-        service._deliver_sinks(spec, "pid1")
-        assert "pid1" in service._delivery_errors
-        assert "pid1" not in service._errors  # run state stays clean
-        deadline = time.time() + 10
-        while time.time() < deadline and "pid1" in service._delivery_errors:
-            time.sleep(0.05)
-        # successful backoff retry clears the delivery error everywhere
-        assert "pid1" not in service._delivery_errors
-        assert "pid1" not in service._errors
+        pid = service.start("moderated", request_input={"src": {"file": ["a", "b"]}})
+        assert service.wait(pid, 120.0)
+        first = _keyboards(mock_tg, 2)
+        mock_tg.press_button(first[0], "a", 0)
+        mock_tg.press_button(first[1], "r", 1)
+        _await_settled(service, pid, lambda st: len(writes) == 2 and _pending(st))
+        new = _keyboards(mock_tg, 3)[2:]
+        assert [parse_review_message(m["text"])["index"] for m in new] == [1]
+        assert parse_review_message(new[0]["text"])["text"] == "<b>#2"
+        time.sleep(1.0)  # no late duplicate of either review
+        assert len(_keyboards(mock_tg, 3)) == 3
+
+        mock_tg.press_button(first[0], "a", 0)
+        mock_tg.press_button(new[0], "a", 1)
+        _await_settled(service, pid, lambda st: st["error"] is None)
+        out = stage_store.read_stage(
+            spark, service.runner.store_root, "moderated", pid, "join"
+        )
+        assert out.first().payload_str == "<a>#1 <b>#2"
     finally:
+        poller.stop()
         service.stop_decision_stream()
