@@ -40,9 +40,19 @@ def entry(spark: SparkSession) -> DataFrame:
 # ties alphabetical. tools/check_oracle.py's triple-gate runs stay the
 # backstop for the tail the window cannot reach.
 _CHANGED = (
-    # the one registered query that runs the pipeline runner, whose frame
-    # operators now materialise only the parameters they read as columns
-    "pipeline_e2e",
+    # the queries that reach the near-dup pair kernels (candidate
+    # self-join, exact-Jaccard verify, df-cap, exact collapse) of
+    # operators/dedup.py
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_graph_pagerank",
+    "containment_dedup",
+    "dedup_allpairs_prefix",
+    "dedup_weighted_jaccard",
+    "dedup_clusters",
+    "dedup_clusters_logstar",
+    "leakage_safe_split",
+    "audio_fingerprint_dedup",
 )
 
 

@@ -62,6 +62,10 @@ DECISION_SCHEMA = (
 )
 
 
+class ProcessingRunning(RuntimeError):
+    """A start of a processing whose run thread is still alive."""
+
+
 @dataclass
 class _Processing:
     """The service's state for one processing id."""
@@ -177,9 +181,15 @@ class PipelineService:
                 return
             req, gate = rec.request_input, rec.gate
             rec.request_input = rec.gate = None
+        # the parked run's thread may still be returning from its park
+        rec.thread.join()
         try:
             self.start(rec.slug, request_input=req, processing_id=pid, start_slug=gate)
             rec.restart_failures = 0
+        except ProcessingRunning:
+            # a start that landed since the claim superseded the park; its
+            # run sees these decisions (the version check in ``_work``)
+            return
         except Exception as e:  # noqa: BLE001
             # a failed restart (slug dropped, thread pressure) must not
             # lose the run or kill the decision stream
@@ -215,11 +225,14 @@ class PipelineService:
     ) -> str:
         """Run a processing on a daemon thread; returns its id at once.
         A start supersedes the processing's parked state, keeping its
-        decision cursors."""
+        decision cursors; a start of a running processing raises
+        ``ProcessingRunning`` (two runs would write the same stages)."""
         spec = self.pipelines[slug]
         pid = processing_id or uuid.uuid4().hex[:12]
         with self._lock:
             rec = self._records.get(pid)
+            if rec is not None and rec.thread.is_alive():
+                raise ProcessingRunning(f"processing {pid} is running")
             cursors = rec.cursors if rec is not None else None
             t = threading.Thread(
                 target=self._work,
@@ -312,7 +325,7 @@ class PipelineService:
         for pid in ids:
             try:
                 rows = run_log.read_statuses(self.runner.spark, root, slug, pid).collect()
-            except Exception:  # noqa: BLE001 - not yet written
+            except run_log.NoStatus:
                 continue
             blocks = sorted(
                 (
@@ -418,6 +431,16 @@ def _bind_multipart_start(form: dict, files: dict) -> dict:
     }
 
 
+def _index(value) -> int:
+    """A JSON ``block.target_index``: a non-negative integer, or a string
+    of one."""
+    if isinstance(value, bool) or not isinstance(value, (int, str)):
+        raise ValueError(f"{value!r} is not an integer")
+    if (index := int(value)) < 0:
+        raise ValueError(f"{index} is negative")
+    return index
+
+
 class _Handler(BaseHTTPRequestHandler):
     service: PipelineService  # injected by serve()
 
@@ -493,14 +516,26 @@ class _Handler(BaseHTTPRequestHandler):
                 return self._json(
                     {"error": "resume needs pipeline.processing_id and block.slug"}, 400
                 )
-            target = block.get("target_index")
-            pid = svc.start(
-                slug,
-                request_input=body.get("input") or {},
-                processing_id=pipeline.get("processing_id"),
-                start_slug=block.get("slug"),
-                target_index=None if target is None else int(target),
-            )
+            start_slug, target = block.get("slug"), block.get("target_index")
+            if start_slug is not None and start_slug not in [
+                b.slug for b in svc.pipelines[slug].blocks
+            ]:
+                return self._json({"error": f"unknown block.slug {start_slug!r}"}, 400)
+            if target is not None:
+                try:
+                    target = _index(target)
+                except ValueError as e:
+                    return self._json({"error": f"invalid block.target_index: {e}"}, 400)
+            try:
+                pid = svc.start(
+                    slug,
+                    request_input=body.get("input") or {},
+                    processing_id=pipeline.get("processing_id"),
+                    start_slug=start_slug,
+                    target_index=target,
+                )
+            except ProcessingRunning as e:
+                return self._json({"error": str(e)}, 409)
             # async contract (pipeline.go:640): id now, status via GET
             return self._json({"processing_id": pid}, 202)
         return self._json({"error": "not found"}, 404)

@@ -18,6 +18,9 @@ All built from pyspark.sql.functions only — no Python UDFs.
 
 from __future__ import annotations
 
+import functools
+import math
+import operator
 from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, Window
@@ -175,9 +178,8 @@ def jaccard_pairs(
        within-group member pairs emit J = 1.0 exactly. Output-linear:
        each emitted row is one output pair.
     """
-    d_all = _doc_shingles(df, id_col, text_col, k)
     if df_cap is None:
-        d = d_all.persist()
+        d = _doc_shingles(df, id_col, text_col, k).persist()
         inv = d.select("doc", F.explode("sh").alias("s"))
         sizes = d.select("doc", F.size("sh").alias("n"))
         a, b = inv.alias("a"), inv.alias("b")
@@ -195,48 +197,82 @@ def jaccard_pairs(
             .where(F.col("jaccard") >= threshold)
             .select("d1", "d2", F.round("jaccard", 6).alias("jaccard"))
         )
-    # -- 1. exact-collapse to unique-text representatives ------------------
-    # persist: members feeds the rep filter here AND all three legs of
-    # _expand_member_pairs — without the cut the md5-group shuffle (a
-    # full corpus scan + digest-keyed exchange) re-runs once per
-    # consumer (r12 recompute audit; guide §5)
-    members = _text_group_members(df, id_col, text_col).persist()
-    d = (
-        d_all.join(
-            members.select(F.col("rep").alias("doc")).distinct(), "doc"
-        )
-        .persist()
-    )
-    if df_cap == "auto":
-        import math
+    members, d = _representatives(df, id_col, text_col, k, _doc_shingles)
+    cand = _candidate_pairs(_capped_postings(d, df_cap), "s")
+    return _expand_member_pairs(verify_jaccard(cand, d, d, threshold), members, d)
 
+
+def _representatives(df: DataFrame, id_col: str, text_col: str, k: int, shingles):
+    """The exact-collapse layer of the near-dup pair operators:
+    ``(members, d)`` — ``members`` (doc, rep) from
+    :func:`_text_group_members` and ``d`` the ``shingles`` sets
+    (:func:`_doc_shingles` or :func:`_doc_weighted_shingles`) of the
+    representatives only, byte-identical texts never reaching candidate
+    generation.
+
+    Both are persisted: ``members`` feeds the rep filter here AND all
+    three legs of :func:`_expand_member_pairs`, ``d`` the candidate
+    postings and both sides of the verify — without the cuts the
+    md5-group shuffle and the shingling re-run once per consumer (r12
+    recompute audit). Persist contract: both stay cached after the
+    caller's action (the returned frames are lazy, so they cannot be
+    unpersisted here without forcing an extra job); a long-lived caller
+    drops them between queries with ``session.release_cached``.
+    """
+    members = _text_group_members(df, id_col, text_col).persist()
+    reps = members.select(F.col("rep").alias("doc")).distinct()
+    d = shingles(df, id_col, text_col, k).join(reps, "doc").persist()
+    return members, d
+
+
+def _capped_postings(d: DataFrame, df_cap: int | str) -> DataFrame:
+    """(s, doc) postings of ``d`` minus the hot shingles: those in more
+    than ``df_cap`` documents (``"auto"`` = ``max(JACCARD_DF_FLOOR,
+    ceil(JACCARD_DF_FRAC · |d|))``). The df per shingle is one
+    map-side-combined groupBy; the few hot shingles broadcast back as an
+    anti-join."""
+    if df_cap == "auto":
         # control-plane scalar (documented collect): unique-text count
         # after the ≥k-words filter, matching the oracle's count over d.
         cap = max(JACCARD_DF_FLOOR, math.ceil(JACCARD_DF_FRAC * d.count()))
     else:
         cap = int(df_cap)
-    # -- 2. df-cap: hot shingles (few by construction) broadcast anti-join -
     inv = d.select("doc", F.explode("sh").alias("s"))
     hot = inv.groupBy("s").agg(F.count("*").alias("df")).where(F.col("df") > cap)
-    invc = inv.join(F.broadcast(hot.select("s")), "s", "left_anti")
-    a, b = invc.alias("a"), invc.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
+    return inv.join(F.broadcast(hot.select("s")), "s", "left_anti")
+
+
+def _candidate_pairs(postings: DataFrame, *keys: str) -> DataFrame:
+    """Distinct candidate pairs (d1, d2), d1 < d2: the documents of
+    ``postings`` that agree on every one of ``keys`` (a shingle, or an
+    LSH band and its bucket)."""
+    l, r = postings.alias("l"), postings.alias("r")
+    on = [F.col(f"l.{key}") == F.col(f"r.{key}") for key in keys]
+    on.append(F.col("l.doc") < F.col("r.doc"))
+    return (
+        l.join(r, functools.reduce(operator.and_, on))
+        .select(F.col("l.doc").alias("d1"), F.col("r.doc").alias("d2"))
         .distinct()
     )
-    # -- 3. exact verify on full shingle sets (representatives only) -------
-    sa = d.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
-    sb = d.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
-    common = F.size(F.array_intersect("sh1", "sh2"))
-    rp = (
+
+
+def verify_jaccard(
+    cand: DataFrame, left: DataFrame, right: DataFrame, threshold: float
+) -> DataFrame:
+    """(r1, r2, jaccard) — the candidate pairs ``cand`` (d1, d2) whose
+    exact Jaccard over the FULL shingle sets, d1's from ``left`` and d2's
+    from ``right`` (both ``(doc, sh)``), is ≥ ``threshold``. The filter
+    reads the unrounded J; rounding to 6 places is for output only, the
+    order the oracles use (filtering post-round would admit pairs in
+    [t − 5e-7, t))."""
+    sa = left.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
+    sb = right.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
+    common = F.col("common")
+    return (
         cand.join(sa, "d1")
         .join(sb, "d2")
-        .withColumn("common", common)
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.size("sh1") + F.size("sh2") - F.col("common")),
-        )
+        .withColumn("common", F.size(F.array_intersect("sh1", "sh2")))
+        .withColumn("jaccard", common / (F.size("sh1") + F.size("sh2") - common))
         .where(F.col("jaccard") >= threshold)
         .select(
             F.col("d1").alias("r1"),
@@ -244,8 +280,6 @@ def jaccard_pairs(
             F.round("jaccard", 6).alias("jaccard"),
         )
     )
-    # -- 4. expand rep pairs to member pairs (output-linear) ---------------
-    return _expand_member_pairs(rp, members, d)
 
 
 def _text_group_members(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -358,8 +392,6 @@ def containment_pairs(
        or (equal size, smaller rep id) — a strict order, so no mutual
        removal and no cycles.
     """
-    import math
-
     # NOT persisted (r12 A/B, alternating fresh-process median-of-3:
     # persist 7.73/11.60 s vs un-persisted 5.85/6.12 s on
     # containment_dedup): the md5-group subtree is exchange-bounded, so
@@ -368,19 +400,7 @@ def containment_pairs(
     members = _text_group_members(df, id_col, text_col)
     reps = members.select(F.col("rep").alias(id_col)).distinct()
     d = _doc_shingles(df.join(reps, id_col), id_col, text_col, k).persist()
-    if df_cap == "auto":
-        cap = max(JACCARD_DF_FLOOR, math.ceil(JACCARD_DF_FRAC * d.count()))
-    else:
-        cap = int(df_cap)
-    inv = d.select("doc", F.explode("sh").alias("s"))
-    hot = inv.groupBy("s").agg(F.count("*").alias("df")).where(F.col("df") > cap)
-    invc = inv.join(F.broadcast(hot.select("s")), "s", "left_anti")
-    a, b = invc.alias("a"), invc.alias("b")
-    cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc") < F.col("b.doc")))
-        .select(F.col("a.doc").alias("d1"), F.col("b.doc").alias("d2"))
-        .distinct()
-    )
+    cand = _candidate_pairs(_capped_postings(d, df_cap), "s")
     sa = d.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
     sb = d.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
     v = (
@@ -498,9 +518,7 @@ def minhash_lsh_pairs(
     texts collide in all bands (within-group, J = 1.0) and every member
     pair shares its representatives' signatures (cross-group).
     """
-    members = _text_group_members(df, id_col, text_col).persist()
-    reps = members.select(F.col("rep").alias("doc")).distinct()
-    d = _doc_shingles(df, id_col, text_col, k).join(reps, "doc").persist()
+    members, d = _representatives(df, id_col, text_col, k, _doc_shingles)
     # Signature via explode + 64 min-aggregates: each shingle is hashed
     # ONCE, and the mins partial-aggregate map-side, so the shuffle
     # carries only 64 longs/doc. sh entries are already xxhash64(gram),
@@ -524,35 +542,8 @@ def minhash_lsh_pairs(
     # InMemoryRelation barrier serializes the pipeline where exchange
     # reuse already shares the groupBy output. Removed in r13.
     bands = sig.select("doc", F.posexplode(band_arr).alias("band", "bkey"))
-    l, r = bands.alias("l"), bands.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("d1"), F.col("r.doc").alias("d2"))
-        .distinct()
-    )
-    sa = d.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
-    sb = d.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
-    verified = (
-        cand.join(sa, "d1")
-        .join(sb, "d2")
-        .withColumn("common", F.size(F.array_intersect("sh1", "sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.size("sh1") + F.size("sh2") - F.col("common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    rp = verified.select(
-        F.col("d1").alias("r1"),
-        F.col("d2").alias("r2"),
-        F.round("jaccard", 6).alias("jaccard"),
-    )
-    return _expand_member_pairs(rp, members, d)
+    cand = _candidate_pairs(bands, "band", "bkey")
+    return _expand_member_pairs(verify_jaccard(cand, d, d, threshold), members, d)
 
 
 # --- SimHash ---------------------------------------------------------------
@@ -893,19 +884,10 @@ def allpairs_prefix_pairs(
     aggregate (df) + one doc-keyed window vs the df-cap path; wins
     whenever exactness matters (contracts, decontamination audits).
 
-    Persist contract: ``members`` and ``d`` stay cached after the
-    caller's action (the returned frame is lazy, so they cannot be
-    unpersisted here without forcing an extra job). Long-lived callers
-    must clear persisted RDDs between queries the way ``bench.py`` and
-    ``tools/check_oracle.py`` do (``spark.catalog.clearCache()`` +
-    ``getPersistentRDDs().unpersist()``); the same contract applies to
-    ``q_media_image_phash`` and ``q_leakage_safe_split``.
+    Persist contract: :func:`_representatives`'s.
     """
-    members = _text_group_members(df, id_col, text_col).persist()
-    reps = members.select(F.col("rep").alias("doc")).distinct()
-    d = _doc_shingles(df, id_col, text_col, k).join(reps, "doc").persist()
-    rp = allpairs_prefix_join(d, threshold)
-    return _expand_member_pairs(rp, members, d)
+    members, d = _representatives(df, id_col, text_col, k, _doc_shingles)
+    return _expand_member_pairs(allpairs_prefix_join(d, threshold), members, d)
 
 
 def weighted_jaccard_pairs(
@@ -932,7 +914,7 @@ def weighted_jaccard_pairs(
     one (doc, gram) count — the expansion is output-sized: total
     elements = total grams, not distinct-grams x max-count), prefix
     join, exact verify on full expanded sets, member fan-out (persist
-    contract identical — callers clear persisted RDDs between queries).
+    contract identical: :func:`_representatives`'s).
 
     Scale: expanded-element df is SPLIT by occurrence index — (gram, 1),
     (gram, 2), .. have strictly decreasing df — so rarest-first prefixes
@@ -940,11 +922,8 @@ def weighted_jaccard_pairs(
     elements that discriminate repetitive near-dups. Reference scope
     analogue: none (storages.go dedups byte digests only).
     """
-    members = _text_group_members(df, id_col, text_col).persist()
-    reps = members.select(F.col("rep").alias("doc")).distinct()
-    d = _doc_weighted_shingles(df, id_col, text_col, k).join(reps, "doc").persist()
-    rp = allpairs_prefix_join(d, threshold)
-    return _expand_member_pairs(rp, members, d)
+    members, d = _representatives(df, id_col, text_col, k, _doc_weighted_shingles)
+    return _expand_member_pairs(allpairs_prefix_join(d, threshold), members, d)
 
 
 def _doc_weighted_shingles(
@@ -1024,29 +1003,4 @@ def allpairs_prefix_join(d: DataFrame, threshold: float) -> DataFrame:
         # exploded signature size)
         .persist()
     )
-    l, r = prefix.alias("l"), prefix.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.s") == F.col("r.s")) & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(F.col("l.doc").alias("d1"), F.col("r.doc").alias("d2"))
-        .distinct()
-    )
-    sa = d.select(F.col("doc").alias("d1"), F.col("sh").alias("sh1"))
-    sb = d.select(F.col("doc").alias("d2"), F.col("sh").alias("sh2"))
-    verified = (
-        cand.join(sa, "d1")
-        .join(sb, "d2")
-        .withColumn("common", F.size(F.array_intersect("sh1", "sh2")))
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.size("sh1") + F.size("sh2") - F.col("common")),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified.select(
-        F.col("d1").alias("r1"),
-        F.col("d2").alias("r2"),
-        F.round("jaccard", 6).alias("jaccard"),
-    )
+    return verify_jaccard(_candidate_pairs(prefix, "s"), d, d, threshold)

@@ -6,12 +6,14 @@ Reference: each pipeline execution defers ``SavePipelineLog``, writing
 The read-only API endpoints later *scan storage* to answer
 ``GET /pipelines/:slug/processings`` (pipeline.go:643-802).
 
-Here: one Parquet dataset per (pipeline, processing) under
-``<root>/_meta/status/…`` with a row per block — append-only metadata
-beside the stage lake, so the listing endpoints are a partition-pruned
-scan, not a storage walk. At 100 TB the metadata stays tiny (rows =
-processings × blocks) and supports the same queries the reference answers
-by listing files.
+Here: one Parquet snapshot per status write under
+``<root>/_meta/status/<pipeline>/<processing>/snap-<ns>/``, a row per
+block — append-only metadata beside the stage lake, so the listing
+endpoints are a pruned scan, not a storage walk. A read serves the newest
+committed snapshot; none is ever deleted or overwritten, so a read racing
+a restarted run's write still finds the previous one. At 100 TB the
+metadata stays tiny (rows = status writes × blocks) and supports the same
+queries the reference answers by listing files.
 """
 
 from __future__ import annotations
@@ -34,6 +36,29 @@ def _status_path(root: str, pipeline_slug: str, processing_id: str | None = None
     return os.path.join(p, processing_id) if processing_id else p
 
 
+class NoStatus(LookupError):
+    """No committed status snapshot exists (yet) for the processing."""
+
+
+def _newest_snapshot(spark: SparkSession, path: str) -> str | None:
+    """The newest committed (``_SUCCESS``-marked) snapshot under a
+    processing's status directory ``path``, or None."""
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    names = sorted(
+        (st.getPath().getName() for st in fs.listStatus(hpath) if st.isDirectory()),
+        reverse=True,
+    )
+    for name in names:
+        snap = os.path.join(path, name)
+        if name.startswith("snap-") and fs.exists(
+            spark._jvm.org.apache.hadoop.fs.Path(snap, "_SUCCESS")
+        ):
+            return snap
+    return None
+
+
 def write_status(
     spark: SparkSession,
     root: str,
@@ -44,8 +69,9 @@ def write_status(
     stopped_at: str | None = None,
 ) -> str:
     """Persist the per-block status snapshot of one processing
-    (SavePipelineLog equivalent; overwrite = latest snapshot wins, like the
-    reference rewriting status_%d on each save)."""
+    (SavePipelineLog equivalent) as a new snapshot directory; the newest
+    wins, like the reference rewriting status_%d on each save. Returns the
+    snapshot's path."""
     now = time.time()
     rows = [
         (
@@ -61,32 +87,42 @@ def write_status(
     ]
     from ..session import local_df
 
-    path = _status_path(root, pipeline_slug, processing_id)
+    path = os.path.join(
+        _status_path(root, pipeline_slug, processing_id), f"snap-{time.time_ns():020d}"
+    )
     # LocalRelation (Arrow) rather than a parallelized list: a Python-RDD
     # frame runs one Python task per partition under the coalesce(1)
     # (defaultParallelism tasks of ~0.02 s worker CPU each); the local frame
     # writes with no Python worker at all.
-    local_df(spark, rows, STATUS_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
+    local_df(spark, rows, STATUS_SCHEMA).coalesce(1).write.parquet(path)
     return path
 
 
 def read_statuses(
     spark: SparkSession, root: str, pipeline_slug: str, processing_id: str | None = None
 ) -> DataFrame:
-    """All block statuses for one pipeline (or one processing).
+    """The block statuses of one processing's newest snapshot, or of every
+    processing's newest snapshot of one pipeline; raises ``NoStatus`` when
+    there is none.
 
-    The pipeline-level listing spans the per-processing subdirectories
-    (``<pipeline>/<processing_id>/part-*.parquet``), so it needs a
-    recursive lookup — the `GET /pipelines/:slug/processings` analog of the
-    reference's storage walk (pipeline.go:643-700), served by a pruned
-    parquet scan instead. Every snapshot is written with ``STATUS_SCHEMA``,
-    so the read takes it as given: no schema-inference job."""
-    reader = spark.read.schema(STATUS_SCHEMA)
-    if processing_id is None:
-        reader = reader.option("recursiveFileLookup", "true")
-    return reader.parquet(_status_path(root, pipeline_slug, processing_id))
+    The `GET /pipelines/:slug/processings` analog of the reference's
+    storage walk (pipeline.go:643-700): the snapshots are picked by a
+    driver-side listing and served by a parquet scan. Every snapshot is
+    written with ``STATUS_SCHEMA``, so the read takes it as given: no
+    schema-inference job."""
+    pids = (
+        [processing_id]
+        if processing_id
+        else list_processings(spark, root, pipeline_slug)
+    )
+    snaps = [
+        snap
+        for pid in pids
+        if (snap := _newest_snapshot(spark, _status_path(root, pipeline_slug, pid)))
+    ]
+    if not snaps:
+        raise NoStatus(f"no status snapshot for {pipeline_slug}/{processing_id or '*'}")
+    return spark.read.schema(STATUS_SCHEMA).parquet(*snaps)
 
 
 def list_processings(spark: SparkSession, root: str, pipeline_slug: str) -> list[str]:

@@ -70,7 +70,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import _doc_shingles, allpairs_prefix_join, prefix_limit
+from ..operators.dedup import (
+    _doc_shingles,
+    allpairs_prefix_join,
+    prefix_limit,
+    verify_jaccard,
+)
 from . import versions
 
 _INDEX = "index"
@@ -157,10 +162,10 @@ def merge_batch(
     batch's sigs + full inverted-index rows (idempotent partition
     overwrites); (3) merge the df snapshot; (4) PROBE — the batch docs'
     rarest-first prefixes under the merged df equi-join the standing
-    full index, candidates verify by exact Jaccard against the standing
-    signature store; (5) within-batch pairs via the batch kernel
-    ``allpairs_prefix_join`` itself; (6) write the batch's pair
-    partition. Every emitted pair involves a batch doc, so partitions
+    full index, candidates verify by exact Jaccard (``verify_jaccard``)
+    against the standing signature store; (5) within-batch pairs via the
+    batch kernel ``allpairs_prefix_join`` itself; (6) write the batch's
+    pair partition. Every emitted pair involves a batch doc, so partitions
     never overlap and the cumulative distinct union equals the batch
     kernel over the full corpus (the parity test's claim)."""
     spark = batch_sigs.sparkSession
@@ -196,34 +201,18 @@ def merge_batch(
             ex.join(vocab_df, "s")
             .withColumn("rk", F.row_number().over(w))
             .where(F.col("rk") <= prefix_limit(threshold, "n"))
-            .select(F.col("doc").alias("d_new"), "s")
+            .select(F.col("doc").alias("d1"), "s")
         )
+        # d1 a batch doc, d2 a standing one
         cand = (
-            probe.join(
-                standing_index.select(F.col("doc").alias("d_old"), "s"), "s"
-            )
-            .select("d_new", "d_old")
+            probe.join(standing_index.select(F.col("doc").alias("d2"), "s"), "s")
+            .select("d1", "d2")
             .distinct()
         )
-        sa = new.select(F.col("doc").alias("d_new"), F.col("sh").alias("sh1"))
-        sb = standing_sigs.select(
-            F.col("doc").alias("d_old"), F.col("sh").alias("sh2")
-        )
-        cross = (
-            cand.join(sa, "d_new")
-            .join(sb, "d_old")
-            .withColumn("common", F.size(F.array_intersect("sh1", "sh2")))
-            .withColumn(
-                "jaccard",
-                F.col("common")
-                / (F.size("sh1") + F.size("sh2") - F.col("common")),
-            )
-            .where(F.col("jaccard") >= threshold)
-            .select(
-                F.least("d_new", "d_old").alias("d1"),
-                F.greatest("d_new", "d_old").alias("d2"),
-                F.round("jaccard", 6).alias("jaccard"),
-            )
+        cross = verify_jaccard(cand, new, standing_sigs, threshold).select(
+            F.least("r1", "r2").alias("d1"),
+            F.greatest("r1", "r2").alias("d2"),
+            "jaccard",
         )
         pairs = pairs.unionByName(cross)
 

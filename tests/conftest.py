@@ -32,6 +32,7 @@ _SLOWSUITE = {
     "test_api_server.py::test_decision_stream_unblocks_waiting_moderation",
     "test_api_server.py::test_parked_run_resumes_at_its_gate",
     "test_api_server.py::test_regenerate_then_approve_ships_the_reviewed_content",
+    "test_api_server.py::test_resume_of_a_running_processing_is_409",
     "test_api_server.py::test_resume_with_target_index",
     "test_api_server.py::test_start_async_and_poll",
     "test_dedup_similarity.py::TestLogStarCC::test_logstar_equals_propagation_on_lsh_pairs",

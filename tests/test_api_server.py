@@ -151,6 +151,69 @@ def test_resume_requires_processing_and_block(api):
     assert e.value.code == 400
 
 
+@pytest.mark.parametrize(
+    "block",
+    [{"slug": "wrap", "target_index": "one"}, {"slug": "nope"}],
+    ids=["non_integer_target_index", "unknown_block_slug"],
+)
+def test_resume_rejects_malformed_block(api, block):
+    # answered at the boundary, before any run starts: no dropped
+    # connection, no 202 for a run that can only fail on its thread
+    base, service = api
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _post(
+            base,
+            "/pipelines/wrap-join/resume",
+            {"pipeline": {"processing_id": "p1"}, "block": block, "input": {}},
+        )
+    assert e.value.code == 400
+    assert service.processings("wrap-join", "p1") == []
+
+
+def test_resume_of_a_running_processing_is_409(api, monkeypatch):
+    # a second run of one processing would write the same stages: the
+    # resume is refused while the first run is alive, and that run
+    # completes writing each stage once
+    import threading
+
+    from data_pipelines_worker_spark.sources import stage_store
+
+    base, service = api
+    writes: list[str] = []
+    write = stage_store.write_stage
+
+    def counted(df, root, pipeline_slug, processing_id, slug, *rest):
+        writes.append(slug)
+        return write(df, root, pipeline_slug, processing_id, slug, *rest)
+
+    monkeypatch.setattr(stage_store, "write_stage", counted)
+    release = threading.Event()
+    run = service.runner.run
+
+    def held(*args, **kwargs):
+        assert release.wait(60.0)
+        return run(*args, **kwargs)
+
+    service.runner.run = held
+    _, resp = _post(
+        base, "/pipelines/wrap-join/start", {"input": {"src": {"file": ["x", "y"]}}}
+    )
+    pid = resp["processing_id"]
+    try:
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(
+                base,
+                "/pipelines/wrap-join/resume",
+                {"pipeline": {"processing_id": pid}, "block": {"slug": "wrap"}, "input": {}},
+            )
+        assert e.value.code == 409
+    finally:
+        release.set()
+    proc = _await_done(base, service, pid)
+    assert proc["error"] is None
+    assert sorted(writes) == ["join", "src", "wrap"]
+
+
 def test_unknown_pipeline_404(api):
     base, _ = api
     with pytest.raises(urllib.error.HTTPError) as e:
@@ -310,7 +373,6 @@ def _await_settled(service, pid, pred, slug="moderated", timeout=120.0) -> dict:
     deadline = time.time() + timeout
     while time.time() < deadline:
         if service.wait(pid, 1.0):
-            # empty while a restarted run rewrites its status snapshot
             st = service.processings(slug, pid)
             if st and not st[0]["running"] and pred(st[0]):
                 return st[0]
@@ -529,3 +591,113 @@ def test_concurrent_decisions_resume_each_parked_run_once(spark, tmp_path):
     for pid in pids:
         assert _await_settled(service, pid, lambda st: st["error"] is None, "gated")
     assert calls == {pid: 2 for pid in pids}
+
+
+def test_concurrent_starts_of_one_processing_run_it_once(spark, tmp_path):
+    # racing starts of one processing id: exactly one is accepted while
+    # its run is alive, the others are refused, and the runner runs once
+    import sys
+    import threading
+
+    from data_pipelines_worker_spark.api.server import ProcessingRunning
+
+    runner = PipelineRunner(spark, str(tmp_path / "stages"))
+    calls, release, run = [], threading.Event(), runner.run
+
+    def held(*args, **kwargs):
+        calls.append(kwargs["processing_id"])
+        assert release.wait(60.0)
+        return run(*args, **kwargs)
+
+    runner.run = held
+    service = PipelineService(runner, {"gated": _gated_spec()})
+    outcomes: list[str] = []
+
+    def start():
+        try:
+            service.start("gated", request_input={"src": {"file": ["x"]}}, processing_id="p1")
+            outcomes.append("started")
+        except ProcessingRunning:
+            outcomes.append("refused")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=start) for _ in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60.0)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+        release.set()
+    assert sorted(outcomes) == ["refused"] * 11 + ["started"]
+    assert service.wait("p1", 120.0)
+    assert calls == ["p1"] and _pending(_status(service, "p1", "gated"))
+
+
+def test_decision_resumes_a_run_whose_parked_thread_is_returning(spark, tmp_path):
+    # a decision batch landing between a run's park and its thread's end
+    # waits for the thread instead of being refused as a second run
+    import threading
+
+    service = PipelineService(
+        PipelineRunner(spark, str(tmp_path / "stages")), {"gated": _gated_spec()}
+    )
+    work, parked = service._work, threading.Event()
+
+    def slow_return(*args):
+        work(*args)
+        parked.set()
+        time.sleep(0.5)
+
+    service._work = slow_return
+    pid = service.start("gated", request_input={"src": {"file": ["x"]}})
+    assert parked.wait(120.0)
+    service.add_decisions(_approvals(pid, [0]))
+    _await_settled(service, pid, lambda st: st["error"] is None, "gated")
+
+
+def test_status_reads_never_drop_a_restarting_processing(spark, tmp_path, monkeypatch):
+    # polls of the processing listing throughout decision-driven restarts
+    # all see the processing, although each restart writes its status
+    # anew; the status write is slowed so polls land inside it
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from data_pipelines_worker_spark import session
+    from data_pipelines_worker_spark.sources import run_log
+
+    local_df = session.local_df
+    slow = F.udf(lambda: time.sleep(0.2) or True, "boolean")
+
+    def slow_status(spark_, rows, schema):
+        frame = local_df(spark_, rows, schema)
+        return frame.where(slow()) if schema == run_log.STATUS_SCHEMA else frame
+
+    monkeypatch.setattr(session, "local_df", slow_status)
+    service = PipelineService(
+        PipelineRunner(spark, str(tmp_path / "stages")), {"gated": _gated_spec()}
+    )
+    pid = service.start("gated", request_input={"src": {"file": ["x", "y"]}})
+    assert service.wait(pid, 120.0)
+    polls: list[list[str]] = []
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            polls.append([p["processing_id"] for p in service.processings("gated")])
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        service.add_decisions(_approvals(pid, [0]))
+        _await_settled(service, pid, lambda st: "[1]" in (st["error"] or ""), "gated")
+        service.add_decisions(_approvals(pid, [1], t=200, first_id=1))
+        _await_settled(service, pid, lambda st: st["error"] is None, "gated")
+    finally:
+        done.set()
+        poller.join(60.0)
+    assert len(polls) > 2 and all(p == [pid] for p in polls)

@@ -25,6 +25,17 @@ def test_jaccard_pairs_planted_dup(spark):
     assert [(p.d1, p.d2) for p in pairs] == [(1, 2)]
 
 
+def test_verify_jaccard_filters_unrounded(spark):
+    # {1,2,3} vs {1,2}: J = 2/3, which rounds to 0.666667 for output. The
+    # threshold compares the unrounded J, so 0.6666667 drops the pair.
+    sets = spark.createDataFrame([(1, [1, 2, 3]), (2, [1, 2])], "doc long, sh array<bigint>")
+    cand = spark.createDataFrame([(1, 2)], "d1 long, d2 long")
+    assert dedup.verify_jaccard(cand, sets, sets, 0.6666667).collect() == []
+    rows = dedup.verify_jaccard(cand, sets, sets, 2 / 3).collect()
+    assert [tuple(r) for r in rows] == [(1, 2, 0.666667)]
+    assert rows[0].asDict().keys() == {"r1", "r2", "jaccard"}
+
+
 def test_minhash_matches_exact_jaccard_on_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {

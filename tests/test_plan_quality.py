@@ -1229,17 +1229,42 @@ class TestR13PersistHygiene:
         assert "InMemoryRelation" not in plan
         assert "InMemoryTableScan" not in plan
 
-    def test_minhash_bands_fence_stays_out(self, spark, registry):
-        # minhash_lsh_pairs keeps exactly its two pre-r12 persists
-        # (members, d) — the r12 bands fence regressed
-        # leakage_safe_split in every full-session run (VERDICT r12 #2).
-        from data_pipelines_worker_spark.operators.dedup import (
-            minhash_lsh_pairs,
-        )
+    @pytest.mark.parametrize(
+        "op, kwargs, cached",
+        [
+            ("jaccard_pairs", {"df_cap": "auto"}, 2),
+            ("jaccard_pairs", {}, 1),
+            ("containment_pairs", {}, 1),
+            ("minhash_lsh_pairs", {}, 2),
+            ("allpairs_prefix_pairs", {}, 3),
+            ("weighted_jaccard_pairs", {}, 3),
+        ],
+        ids=[
+            "jaccard_pairs_auto",
+            "jaccard_pairs",
+            "containment_pairs",
+            "minhash_lsh_pairs",
+            "allpairs_prefix_pairs",
+            "weighted_jaccard_pairs",
+        ],
+    )
+    def test_minhash_bands_fence_stays_out(self, spark, registry, op, kwargs, cached):
+        # Each pair operator keeps exactly the persists it has: the
+        # exact collapse's members and shingle sets (containment and
+        # uncapped jaccard persist only the shingle sets), plus the
+        # AllPairs prefix. minhash_lsh_pairs carries no bands fence: the
+        # r12 one regressed leakage_safe_split in every full-session run
+        # (VERDICT r12 #2). A cache left by another case would be reused
+        # inside this one's plan, so each case starts and ends clean.
+        from data_pipelines_worker_spark.operators import dedup
 
-        docs = load_table(spark, SF, "documents")
-        df = minhash_lsh_pairs(docs, "doc_id", "text", 0.6, 3)
-        assert _cached_relation_count(spark, df) == 2
+        release_cached(spark)
+        try:
+            docs = load_table(spark, SF, "documents")
+            df = getattr(dedup, op)(docs, "doc_id", "text", **kwargs)
+            assert _cached_relation_count(spark, df) == cached
+        finally:
+            release_cached(spark)
 
     @pytest.mark.parametrize(
         "name",
