@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.intmath import exact_floordiv
+from ..session import shuffle_partitions
 from .text_analysis import MOD, word_codes
 
 # LSH defaults: 64 permutations = 32 bands x 2 rows. For threshold t=0.6 a
@@ -94,7 +95,7 @@ def doc_gram_hashes(
     """
     from .curation import _gram_from_zip, _ngram_zip
 
-    npart = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    npart = shuffle_partitions(df.sparkSession)
     return (
         df.repartition(npart, F.col(id_col))
         .select(

@@ -104,6 +104,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import shuffle_partitions
+
 #: token width of the base rank (and of the walk's broadcast residual)
 BASE = 8
 
@@ -969,8 +971,7 @@ def _ansv_exchange(edges: DataFrame) -> DataFrame:
     a contiguous, ordered slice of the global edge array). Split out so
     the phase probe (tools/probe_repeats_phases.py) times EXACTLY the
     operator's own code, never a re-implementation."""
-    spark = edges.sparkSession
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    npart = shuffle_partitions(edges.sparkSession)
     return (
         edges.repartitionByRange(npart, F.col("i"))
         .sortWithinPartitions("i")

@@ -14,15 +14,22 @@ module compiles such specs into DataFrame programs:
 - every block id maps to one function in one registry, which turns the
   block's input rows and bound parameters into its output rows;
 - every block's outputs are materialized to the stage store (checkpoint =
-  resume/regenerate substrate, mirroring pipeline_block_data_registry.go);
+  resume/regenerate substrate, mirroring pipeline_block_data_registry.go):
+  one collect job brings the rows to the driver as Arrow, the driver
+  publishes them as the stage's one Parquet file
+  (``stage_store.publish``), and the next block reads them from memory, a
+  ``LocalTableScan`` in min(rows, defaultParallelism) partitions — one
+  Python task per fan-out item, whatever the width of the block that
+  wrote them;
 - control flow the reference keeps above the operator layer (stop
   conditions pipeline.go:439-513, resume :157-201, target-index :358-377)
   runs driver-side between stages.
 
 Catalyst owns everything inside a stage: a block's input assembly and its
-operator plan as one stage write, and index filters push into the
-stage-parquet scan. Blocks do not fuse across stages: every block writes
-its own stage.
+operator plan run as one collect job. Blocks do not fuse across stages:
+every block writes its own stage. A resume rehydrates the stages before
+its start block with Spark's Parquet reader, where index filters push into
+the scan.
 """
 
 from __future__ import annotations
@@ -1071,8 +1078,8 @@ class PipelineRunner:
             # target-index recompute: only that fan-out index
             # (pipeline.go:358-377); other indices come from the stored
             # stage and are merged back when the stage is written. The one
-            # index goes in one partition: filtered out of a multi-file
-            # stage it would leave every other file's task empty.
+            # index goes in one partition: filtered out of a multi-partition
+            # stage it would leave every other partition's task empty.
             recompute = target_index if pos == start_pos and start_slug is not None else None
             if recompute is not None:
                 df = dataflow.target_index(df, recompute).coalesce(1)
@@ -1103,8 +1110,8 @@ class PipelineRunner:
     def _write(
         self, run: _Run, df: DataFrame, slug: str, recompute: int | None = None
     ) -> DataFrame:
-        """Materialize a block's output stage and return it reopened from
-        the store. With ``recompute`` set, ``df`` holds only that recomputed
+        """Materialize a block's output stage and return it as an in-memory
+        frame. With ``recompute`` set, ``df`` holds only that recomputed
         fan-out index and is merged with the stage's stored other indices.
 
         An output without a payload_bin column is a text stage — _canonical

@@ -71,6 +71,16 @@ def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
     return spark
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as an explicit partition count; the
+    cluster's ``defaultParallelism`` where the value is not a number (a
+    caller-owned session may say ``auto``)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

@@ -18,17 +18,26 @@ queries the reference answers by listing files.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
-from .stage_store import hadoop_fs
+from .stage_store import hadoop_fs, hadoop_path, publish
 
 STATUS_SCHEMA = (
     "pipeline_slug string, processing_id string, block_slug string, "
     "position int, status string, stopped_at string, updated_at double"
 )
+
+
+@functools.cache
+def _status_arrow_schema() -> pa.Schema:
+    return to_arrow_schema(_parse_datatype_string(STATUS_SCHEMA))
 
 
 def _status_path(root: str, pipeline_slug: str, processing_id: str | None = None) -> str:
@@ -52,9 +61,7 @@ def _newest_snapshot(spark: SparkSession, path: str) -> str | None:
     )
     for name in names:
         snap = os.path.join(path, name)
-        if name.startswith("snap-") and fs.exists(
-            spark._jvm.org.apache.hadoop.fs.Path(snap, "_SUCCESS")
-        ):
+        if name.startswith("snap-") and fs.exists(hadoop_path(spark, f"{snap}/_SUCCESS")):
             return snap
     return None
 
@@ -70,8 +77,9 @@ def write_status(
 ) -> str:
     """Persist the per-block status snapshot of one processing
     (SavePipelineLog equivalent) as a new snapshot directory; the newest
-    wins, like the reference rewriting status_%d on each save. Returns the
-    snapshot's path."""
+    wins, like the reference rewriting status_%d on each save. The snapshot
+    is published from the driver (``stage_store.publish``), with no Spark
+    job. Returns the snapshot's path."""
     now = time.time()
     rows = [
         (
@@ -85,16 +93,12 @@ def write_status(
         )
         for slug, status in statuses.items()
     ]
-    from ..session import local_df
-
     path = os.path.join(
         _status_path(root, pipeline_slug, processing_id), f"snap-{time.time_ns():020d}"
     )
-    # LocalRelation (Arrow) rather than a parallelized list: a Python-RDD
-    # frame runs one Python task per partition under the coalesce(1)
-    # (defaultParallelism tasks of ~0.02 s worker CPU each); the local frame
-    # writes with no Python worker at all.
-    local_df(spark, rows, STATUS_SCHEMA).coalesce(1).write.parquet(path)
+    schema = _status_arrow_schema()
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
+    publish(spark, table, path)
     return path
 
 

@@ -4,19 +4,32 @@ Reference: every block's outputs are persisted to local + object storage at
 ``<pipeline-slug>/<processing-id>/<block-slug>/output_{i}.<mime>``
 (types/registries/pipeline_block_data_registry.go:291-334,296-297) and lazily
 rehydrated on resume (:186-219). Here a stage is one Parquet dataset at
-``<root>/<pipeline>/<processing>/<block>/`` with the canonical stage schema;
-resume = ``spark.read.parquet`` of that path (column-pruned, predicate-pushed).
+``<root>/<pipeline>/<processing>/<block>/`` with the canonical stage schema.
+A runner stage (``write_stage``, ``merge_stage``) is one driver-written file,
+``part-00000.parquet``, plus ``_SUCCESS``: the rows come to the driver as
+Arrow in one collect job, pyarrow writes them and ``publish`` moves the
+directory in through the Hadoop FileSystem API — no Spark write job, and
+the next block reads the stage from memory. Resume = ``spark.read.parquet``
+of that path (column-pruned, predicate-pushed).
 
 At 100 TB the stage store is an append-only Parquet lake partitioned by
 (pipeline, processing, block); ``input_index`` filtering for target-index
-recompute prunes row groups via min/max stats.
+recompute prunes row groups via min/max stats. Runner stages are
+control-sized data (prompts, fan-out items, media payloads of one
+processing) that fit the driver; large stages arrive through the streaming
+sink (streaming/sink.py), written by Spark's writer from the executors,
+and are right-sized by ``compact_stage``.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+import tempfile
 import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -43,21 +56,23 @@ def write_stage(
     df: DataFrame, root: str, pipeline_slug: str, processing_id: str, block_slug: str
 ) -> DataFrame:
     """Materialize one block's outputs (checkpoint for resume/regenerate)
-    and return the stage reopened from the store.
+    and return the stage as an in-memory frame.
 
-    Deliberately not fused across block boundaries (SURVEY §4): the write is
-    the durability point the reference's resume/goto semantics rely on.
-    The reopened stage is read with the schema it was just written with, so
-    it costs no footer-reading schema-inference job.
+    Deliberately not fused across block boundaries (SURVEY §4): the stage
+    is durable in the store before the next block runs, which is what the
+    reference's resume/goto semantics rely on. The rows reach the driver
+    in one collect job and are published by :func:`publish`; the next
+    block reads them from the returned frame, a ``LocalTableScan``, not
+    from the store.
 
     ``root`` is any Hadoop-filesystem URI — a local path in tests, an
     ``s3a://bucket/prefix`` on a real cluster (the MinIO role of the
     reference's storage layer, pipeline_block_data_registry.go:291-334,
     maps to object storage with no code change here).
     """
-    path = stage_path(root, pipeline_slug, processing_id, block_slug)
-    df.write.mode("overwrite").parquet(path)
-    return _open(df.sparkSession, path, df.schema)
+    table = df.toArrow()
+    publish(df.sparkSession, table, stage_path(root, pipeline_slug, processing_id, block_slug))
+    return _in_memory(df.sparkSession, table, df.schema)
 
 
 def merge_stage(
@@ -69,42 +84,73 @@ def merge_stage(
     index: int,
 ) -> DataFrame:
     """Replace one fan-out index of a stored stage with ``df`` (that index
-    recomputed) and return the stage reopened from the store.
+    recomputed) and return the merged stage as an in-memory frame.
 
-    Target-index recompute (pipeline.go:358-377). The merge reads the very
-    files it replaces, so it is written beside the stage and swapped in by
-    rename rather than overwriting in place.
-
-    A one-file stage stays one file. In a larger stage the recomputed index
-    becomes a file of its own and a stored file left without rows is not
-    written, so a fan-out of one index per file keeps its file count. The
-    files are not coalesced: that would pack fan-out items into one task
-    of every block downstream, and the partition coalescer may give a task
-    only the emptied file, leaving the stage one file short.
+    Target-index recompute (pipeline.go:358-377). The recomputed index and
+    the stored rows of the other indices are collected in one task, put in
+    ``(input_index, output_index)`` order and published as the stage's one
+    file (:func:`publish`), replacing the files it read.
     """
     spark = df.sparkSession
     path = stage_path(root, pipeline_slug, processing_id, block_slug)
-    fs, hpath = hadoop_fs(spark, path)
-    files = sum(
-        1 for st in fs.listStatus(hpath) if st.getPath().getName().startswith("part-")
-    )
     prior = _open(spark, path, df.schema).where(F.col("input_index") != index)
-    tmp = f"{path}.merge-{uuid.uuid4().hex[:8]}"
-    # the recomputed index as the first partition: Spark writes a file for
-    # the first partition even when it is empty, for no other empty one
-    merged = df.coalesce(1).unionByName(prior)
-    if files <= 1:
-        merged = merged.coalesce(1)
-    merged.write.parquet(tmp)
-    _swap_in(spark, tmp, path)
-    return _open(spark, path, df.schema)
+    table = (
+        df.unionByName(prior)
+        .coalesce(1)
+        .toArrow()
+        .sort_by([("input_index", "ascending"), ("output_index", "ascending")])
+    )
+    publish(spark, table, path)
+    return _in_memory(spark, table, df.schema)
+
+
+def publish(spark: SparkSession, table: pa.Table, path: str) -> None:
+    """Make ``table`` the dataset at ``path``: one Parquet file and a
+    ``_SUCCESS`` marker, with no Spark job.
+
+    pyarrow writes the file in a driver temp directory, which is copied
+    beside ``path`` through the Hadoop FileSystem API (so every
+    stage-store URI works) and renamed in, or swapped in when ``path``
+    exists (:func:`_swap_in`). A reader never sees a partial dataset.
+    """
+    fs, hpath = hadoop_fs(spark, path)
+    tmp = f"{path}.publish-{uuid.uuid4().hex[:8]}"
+    with tempfile.TemporaryDirectory(prefix="dpws_stage_") as local:
+        pq.write_table(table, os.path.join(local, "part-00000.parquet"))
+        open(os.path.join(local, "_SUCCESS"), "wb").close()
+        fs.copyFromLocalFile(False, False, hadoop_path(spark, local), hadoop_path(spark, tmp))
+    if fs.exists(hpath):
+        _swap_in(spark, tmp, path)
+    elif not fs.rename(hadoop_path(spark, tmp), hpath):
+        raise IOError(f"stage publish: rename {tmp} -> {path} failed")
+
+
+def _in_memory(spark: SparkSession, table: pa.Table, schema: T.StructType) -> DataFrame:
+    """``table`` as a frame typed as ``schema`` read back from the store: a
+    Parquet read makes every column nullable. Below Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` the frame is a
+    ``LocalTableScan`` in min(rows, defaultParallelism) partitions."""
+    nullable = T.StructType([T.StructField(f.name, f.dataType, True) for f in schema])
+    return spark.createDataFrame(table, nullable)
 
 
 def hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` of ``path`` through the Hadoop FileSystem API,
     which serves every stage-store URI (local, HDFS, viewfs, s3a)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = hadoop_path(spark, path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def hadoop_path(spark: SparkSession, path: str):
+    """A Hadoop ``Path``. Its class is looked up once per JVM: py4j resolves
+    ``jvm.org.apache.hadoop.fs.Path`` by walking the package names through
+    failed class lookups, about 1 ms each time."""
+    return _path_class(spark._jvm)(path)
+
+
+@functools.cache
+def _path_class(jvm):
+    return jvm.org.apache.hadoop.fs.Path
 
 
 def _has_batch_partition_dirs(spark: SparkSession, path: str) -> bool:
@@ -126,11 +172,10 @@ def _swap_in(spark: SparkSession, tmp: str, path: str) -> None:
     racing the swap can see a brief stage-missing window, never partial
     data."""
     fs, hpath = hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
-    old = Path(f"{path}.old-{uuid.uuid4().hex[:8]}")
+    old = hadoop_path(spark, f"{path}.old-{uuid.uuid4().hex[:8]}")
     if not fs.rename(hpath, old):
         raise IOError(f"stage swap: rename {path} -> {old} failed")
-    if not fs.rename(Path(tmp), hpath):
+    if not fs.rename(hadoop_path(spark, tmp), hpath):
         fs.rename(old, hpath)  # roll back
         raise IOError(f"stage swap: rename {tmp} -> {path} failed")
     fs.delete(old, True)

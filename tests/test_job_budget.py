@@ -50,7 +50,8 @@ def _run_in_group(spark, group: str, fn):
 
 def _group_stages(spark, group: str) -> tuple[int, list[dict]]:
     """(job count, per executed stage: tasks, runs Python, launched by a
-    ``DataFrameReader.parquet`` call — i.e. schema inference)."""
+    ``DataFrameReader.parquet`` call — i.e. schema inference — or by a
+    ``DataFrameWriter.parquet`` call)."""
     jsc = spark.sparkContext._jsc.sc()
     jsc.listenerBus().waitUntilEmpty(30_000)  # the status store lags the jobs
     tracker, store = jsc.statusTracker(), jsc.statusStore()
@@ -69,6 +70,7 @@ def _group_stages(spark, group: str) -> tuple[int, list[dict]]:
                 "tasks": st.numCompleteTasks(),
                 "python": _runs_python(store, sid),
                 "infer": "DataFrameReader.parquet" in st.details(),
+                "write": "DataFrameWriter.parquet" in st.details(),
             }
         )
     return len(job_ids), stages
@@ -101,6 +103,32 @@ def test_wrap_join_job_budget(spark, tmp_path):
     # src, wrap and join writes, the gather's exchange, the status write
     assert jobs <= 5, (jobs, stages)
     assert res.output.first().payload_str == "+".join(f"[{t}]" for t in texts)
+
+
+def test_no_stage_goes_through_dataframe_writer(spark, tmp_path):
+    # every stage write, the target-index merge and the status snapshots
+    # are published from the driver: no job of the run is a Spark write
+    spec = PipelineSpec.from_json(json.loads((SPECS / "wrap-join.json").read_text()))
+    runner = PipelineRunner(spark, str(tmp_path))
+    request = {"src": {"file": ["a", "b", "c"]}}
+    full = _run_in_group(
+        spark, "no-writer-start", lambda: runner.run(spec, request_input=request)
+    )
+    res = _run_in_group(
+        spark,
+        "no-writer-resume",
+        lambda: runner.run(
+            spec,
+            processing_id=full.processing_id,
+            start_slug="wrap",
+            target_index=1,
+            request_input=request,
+        ),
+    )
+    for group in ("no-writer-start", "no-writer-resume"):
+        jobs, stages = _group_stages(spark, group)
+        assert jobs and not [s for s in stages if s["write"]], (group, stages)
+    assert res.output.first().payload_str == "[a]+[b]+[c]"
 
 
 def _python_tasks(stages: list[dict]) -> list[int]:
@@ -210,8 +238,57 @@ def test_target_index_resume_python_tasks(spark, tmp_path):
     _, stages = _group_stages(spark, "budget-resume")
     python = _python_tasks(stages)
     assert len(python) == 2, stages
-    # one task per Python stage: no Python task without rows
-    assert python == [1, 1], stages
+    # the recomputed index in one task; the merged stage reaches the next
+    # block in memory, one partition per item up to defaultParallelism
+    assert python == [1, min(3, spark.sparkContext.defaultParallelism)], stages
     assert not [s for s in stages if s["infer"]], "schema-inference job on a runner stage"
     after = {r.input_index: bytes(r.payload_bin) for r in res.output.collect()}
     assert after == before
+
+
+def test_fanout_behind_non_parallel_block_runs_a_task_per_item(spark, tmp_path):
+    # yt-short's image -> resized: a non-parallel block runs its slot
+    # budget of tasks (max_concurrency), and the block after it gets one
+    # task per item again, since the stage it reads is in memory in
+    # min(rows, defaultParallelism) partitions, not one file per writer task
+    from perfbench.pipeline import MockOpenAI
+
+    from data_pipelines_worker_spark.operators.external import OpenAIClient, RetryPolicy
+
+    def spec(slots: int) -> PipelineSpec:
+        return PipelineSpec(
+            slug=f"budget-non-parallel-{slots}",
+            blocks=[
+                BlockSpec(id="upload_file", slug="prompts", fan_out=True),
+                BlockSpec(
+                    id="openai_image_request",
+                    slug="image",
+                    input={"max_concurrency": slots},
+                    bindings=[InputBinding(param="prompt", origin="prompts")],
+                ),
+                BlockSpec(
+                    id="image_resize",
+                    slug="resized",
+                    input={"width": 8, "height": 0, "keep_aspect_ratio": True},
+                    bindings=[InputBinding(param="image", origin="image", binary=True)],
+                ),
+            ],
+        )
+
+    mock = MockOpenAI(delay_s=0.0)
+    try:
+        client = OpenAIClient(mock.base_url, policy=RetryPolicy(max_retries=2, retry_delay=0.01))
+        runner = PipelineRunner(spark, str(tmp_path), openai_client=client)
+        width = min(3, spark.sparkContext.defaultParallelism)
+        for slots in (1, 2):
+            group = f"budget-non-parallel-{slots}"
+            res = _run_in_group(
+                spark,
+                group,
+                lambda: runner.run(spec(slots), request_input={"prompts": {"file": ["a", "b", "c"]}}),
+            )
+            _, stages = _group_stages(spark, group)
+            assert _python_tasks(stages) == [slots, width], stages
+            assert sorted(r.input_index for r in res.output.collect()) == [0, 1, 2]
+    finally:
+        mock.close()

@@ -79,8 +79,10 @@ def test_compact_stage_reduces_files_and_preserves_rows(spark, tmp_path):
         "CAST(0 AS LONG) AS output_index",
         "CAST(id AS STRING) AS payload_str",
     )
-    stage_store.write_stage(df, str(tmp_path), "p", "x", "b")
+    # a stage of many small files, as a wide Spark write leaves one
+    # (write_stage publishes one file)
     path = stage_store.stage_path(str(tmp_path), "p", "x", "b")
+    df.write.parquet(path)
     before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
     assert before > 1  # 32 partitions → many small files
 
@@ -173,28 +175,29 @@ def test_written_stage_reopens_with_its_schema(spark, tmp_path):
     assert sorted(back.collect()) == sorted(inferred.collect()) == sorted(df.collect())
 
 
-def test_merge_stage_keeps_file_count(spark, tmp_path):
+def test_merge_gives_one_file_and_leaves_no_staging(spark, tmp_path):
     # target-index merge: the stored rows of the other indices plus the
-    # recomputed one, swapped in by rename. A one-file stage stays one
-    # file; a stage of one index per file (a request fan-out) keeps its
-    # file count.
+    # recomputed one, published as one file in place of the files it read,
+    # for a published stage and a 3-file Spark-written one
     import os
 
-    for files in (1, 3):
-        block = f"b{files}"
+    rows = [(i, 0, f"old{i}", None, None) for i in range(3)]
+    df = spark.createDataFrame(rows, stage_store.STAGE_SCHEMA)
+    stage_store.write_stage(df, str(tmp_path), "p", "x", "published")
+    written = stage_store.stage_path(str(tmp_path), "p", "x", "spark3")
+    df.repartitionByRange(3, "input_index").write.parquet(written)
+    assert len([f for f in os.listdir(written) if f.startswith("part-")]) == 3
+    for block in ("published", "spark3"):
         path = stage_store.stage_path(str(tmp_path), "p", "x", block)
-        rows = [(i, 0, f"old{i}", None, None) for i in range(3)]
-        df = spark.createDataFrame(rows, stage_store.STAGE_SCHEMA)
-        df = df.repartitionByRange(files, "input_index")
-        stage_store.write_stage(df, str(tmp_path), "p", "x", block)
-        assert len([f for f in os.listdir(path) if f.startswith("part-")]) == files
         new = spark.createDataFrame([(1, 0, "new1", None, None)], stage_store.STAGE_SCHEMA)
         merged = stage_store.merge_stage(new, str(tmp_path), "p", "x", block, 1)
-        assert sorted((r.input_index, r.payload_str) for r in merged.collect()) == [
-            (0, "old0"), (1, "new1"), (2, "old2")
-        ]
-        assert len([f for f in os.listdir(path) if f.startswith("part-")]) == files
-    assert sorted(os.listdir(tmp_path / "p" / "x")) == ["b1", "b3"]  # no staging left
+        want = [(0, "old0"), (1, "new1"), (2, "old2")]
+        assert [(r.input_index, r.payload_str) for r in merged.collect()] == want
+        stored = stage_store.read_stage(spark, str(tmp_path), "p", "x", block)
+        assert sorted((r.input_index, r.payload_str) for r in stored.collect()) == want
+        assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 1
+        assert "_SUCCESS" in os.listdir(path)
+    assert sorted(os.listdir(tmp_path / "p" / "x")) == ["published", "spark3"]
 
 
 def test_list_processings_non_file_uri(spark, tmp_path):
@@ -213,3 +216,46 @@ def test_list_processings_non_file_uri(spark, tmp_path):
     assert sorted((r.processing_id, r.status) for r in rows) == [
         ("proc-a", "completed"), ("proc-b", "completed")
     ]
+
+
+def test_written_stage_is_in_memory(spark, tmp_path):
+    # the next block reads the stage it is handed from memory: no Parquet
+    # scan, in min(rows, defaultParallelism) partitions (the rule request
+    # fan-outs from session.local_df follow)
+    dp = spark.sparkContext.defaultParallelism
+    for n in (1, 3, dp + 5):
+        df = spark.range(n).selectExpr(
+            "id AS input_index", "CAST(0 AS LONG) AS output_index", "'x' AS payload_str"
+        )
+        back = stage_store.write_stage(df, str(tmp_path), "p", "x", f"b{n}")
+        plan = back._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "FileScan" not in plan, plan
+        assert back.rdd.getNumPartitions() == min(n, dp)
+        assert back.count() == n
+
+
+def test_large_binary_payload_roundtrip_non_file_uri(spark, tmp_path):
+    # an 8 MB payload through write_stage, merge_stage and read_stage on a
+    # viewfs root, byte for byte
+    import random
+
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    hconf.set("fs.viewfs.mounttable.bigtest.link./stages", tmp_path.as_uri())
+    root = "viewfs://bigtest/stages"
+    rnd = random.Random(7)
+    big = [rnd.randbytes(8 << 20) for _ in range(2)]
+    df = spark.createDataFrame(
+        [(0, 0, None, big[0], "application/octet-stream"), (1, 0, "small", None, None)],
+        stage_store.STAGE_SCHEMA,
+    )
+    back = stage_store.write_stage(df, root, "p", "big", "b")
+    assert bytes(back.where("input_index = 0").first().payload_bin) == big[0]
+    new = spark.createDataFrame(
+        [(1, 0, None, big[1], "application/octet-stream")], stage_store.STAGE_SCHEMA
+    )
+    merged = stage_store.merge_stage(new, root, "p", "big", "b", 1)
+    stored = stage_store.read_stage(spark, root, "p", "big", "b", stage_store.STAGE_SCHEMA)
+    for frame in (merged, stored):
+        rows = sorted(frame.collect())
+        assert [bytes(r.payload_bin) for r in rows] == big
+    assert (tmp_path / "p" / "big" / "b" / "_SUCCESS").exists()

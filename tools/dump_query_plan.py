@@ -24,14 +24,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 #: per-session ids in a formatted plan: expression ids (``input_index#123L``,
 #: a Python UDF's result ``gen(...)#45``), exchange/subquery plan ids,
-#: Python function object addresses (``<function f at 0x7f...>``) and JVM
-#: identity hashes of folded constants (``UnsafeArrayData@3f24243f``)
+#: Python function object addresses (``<function f at 0x7f...>``), JVM
+#: identity hashes of folded constants (``UnsafeArrayData@3f24243f``), RDD
+#: ids (``MapPartitionsRDD[57]`` of a checkpointed scan) and whole-stage
+#: codegen ids (``[codegen id : 3]``, numbered in the order sibling stages
+#: happen to be planned)
 _SESSION_IDS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"0x[0-9a-fA-F]+"), "0xN"),
     (re.compile(r"(?<=Data)@[0-9a-f]+\b"), "@N"),
+    (re.compile(r"(?<=RDD)\[\d+\]"), "[N]"),
+    (re.compile(r"codegen id : \d+"), "codegen id : N"),
 )
+#: an adaptive query stage's node details: its one argument is the stage
+#: id, handed out as the stages materialise (``Arguments: 2``)
+_QUERY_STAGE_ID = re.compile(r"(^\(\d+\) \w*QueryStage\n(?:.+\n)*?)Arguments: \d+$", re.M)
 #: a higher-order function's lambda variable (``lambda x_7``): pyspark
 #: numbers them from a per-process counter
 _LAMBDA_VAR = re.compile(r"\blambda (\w+)_\d+\b")
@@ -41,6 +49,7 @@ def normalize_plan(plan: str) -> str:
     """``plan`` with every per-session id replaced by a fixed token."""
     for pattern, token in _SESSION_IDS:
         plan = pattern.sub(token, plan)
+    plan = _QUERY_STAGE_ID.sub(r"\1Arguments: N", plan)
     for var in set(_LAMBDA_VAR.findall(plan)):
         plan = re.sub(rf"\b{re.escape(var)}_\d+#", f"{var}_N#", plan)
     return plan
