@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import gc
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,8 +37,13 @@ def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
     - Arrow on: all pandas-UDF operators (media, LLM, ANN) batch via Arrow.
     - Session timezone pinned UTC so timestamp semantics match the DuckDB
       oracle used by correctness gates.
+    - ``spark.driver.maxResultSize`` is a quarter of the driver memory: a
+      pipeline stage is collected to the driver (``stage_store.write_stage``)
+      and held there while the run lasts, so this is the largest stage a
+      run can publish.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -47,7 +53,8 @@ def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.maxResultSize", result_budget(driver_mem))
         # A long-lived engine JVM compiles one generated class per codegen
         # stage; ~370 query executions put the default 240 MB code cache at
         # 68% (BENCH_LOCAL_r07 env side-channel: 162.8 MB used, profiled
@@ -69,6 +76,16 @@ def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def result_budget(driver_mem: str) -> str:
+    """A quarter of ``driver_mem``, a JVM size string (MiB when it has no
+    unit), in MiB; Spark's default ``1g`` for a string it cannot read."""
+    m = re.fullmatch(r"(\d+)([kmgt]?)b?", driver_mem.strip().lower())
+    if m is None:
+        return "1g"
+    mib = int(m[1]) * {"k": 1 / 1024, "": 1, "m": 1, "g": 1024, "t": 1024**2}[m[2]]
+    return f"{max(1, int(mib // 4))}m"
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

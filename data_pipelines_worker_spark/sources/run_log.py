@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import functools
 import os
+import re
 import time
 
 import pyarrow as pa
@@ -45,13 +46,18 @@ def _status_path(root: str, pipeline_slug: str, processing_id: str | None = None
     return os.path.join(p, processing_id) if processing_id else p
 
 
+#: A snapshot directory's name: ``snap-`` and ``time.time_ns()`` in 20 digits.
+_SNAPSHOT = re.compile(r"snap-\d{20}")
+
+
 class NoStatus(LookupError):
     """No committed status snapshot exists (yet) for the processing."""
 
 
 def _newest_snapshot(spark: SparkSession, path: str) -> str | None:
     """The newest committed (``_SUCCESS``-marked) snapshot under a
-    processing's status directory ``path``, or None."""
+    processing's status directory ``path``, or None. Only ``snap-<ns>``
+    directories count, never a staging directory beside them."""
     fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
@@ -61,7 +67,7 @@ def _newest_snapshot(spark: SparkSession, path: str) -> str | None:
     )
     for name in names:
         snap = os.path.join(path, name)
-        if name.startswith("snap-") and fs.exists(hadoop_path(spark, f"{snap}/_SUCCESS")):
+        if _SNAPSHOT.fullmatch(name) and fs.exists(hadoop_path(spark, f"{snap}/_SUCCESS")):
             return snap
     return None
 

@@ -16,14 +16,14 @@ At 100 TB the stage store is an append-only Parquet lake partitioned by
 (pipeline, processing, block); ``input_index`` filtering for target-index
 recompute prunes row groups via min/max stats. Runner stages are
 control-sized data (prompts, fan-out items, media payloads of one
-processing) that fit the driver; large stages arrive through the streaming
-sink (streaming/sink.py), written by Spark's writer from the executors,
-and are right-sized by ``compact_stage``.
+processing) that fit the driver: a stage above ``spark.driver.maxResultSize``
+fails with :class:`StageTooLarge`. Large stages arrive through the
+streaming sink (streaming/sink.py), written by Spark's writer from the
+executors, and are right-sized by ``compact_stage``.
 """
 
 from __future__ import annotations
 
-import functools
 import os
 import tempfile
 import uuid
@@ -70,8 +70,9 @@ def write_stage(
     reference's storage layer, pipeline_block_data_registry.go:291-334,
     maps to object storage with no code change here).
     """
-    table = df.toArrow()
-    publish(df.sparkSession, table, stage_path(root, pipeline_slug, processing_id, block_slug))
+    path = stage_path(root, pipeline_slug, processing_id, block_slug)
+    table = _collect(df, path)
+    publish(df.sparkSession, table, path)
     return _in_memory(df.sparkSession, table, df.schema)
 
 
@@ -94,11 +95,8 @@ def merge_stage(
     spark = df.sparkSession
     path = stage_path(root, pipeline_slug, processing_id, block_slug)
     prior = _open(spark, path, df.schema).where(F.col("input_index") != index)
-    table = (
-        df.unionByName(prior)
-        .coalesce(1)
-        .toArrow()
-        .sort_by([("input_index", "ascending"), ("output_index", "ascending")])
+    table = _collect(df.unionByName(prior).coalesce(1), path).sort_by(
+        [("input_index", "ascending"), ("output_index", "ascending")]
     )
     publish(spark, table, path)
     return _in_memory(spark, table, df.schema)
@@ -109,12 +107,15 @@ def publish(spark: SparkSession, table: pa.Table, path: str) -> None:
     ``_SUCCESS`` marker, with no Spark job.
 
     pyarrow writes the file in a driver temp directory, which is copied
-    beside ``path`` through the Hadoop FileSystem API (so every
-    stage-store URI works) and renamed in, or swapped in when ``path``
-    exists (:func:`_swap_in`). A reader never sees a partial dataset.
+    through the Hadoop FileSystem API (so every stage-store URI works) to a
+    staging directory beside ``path`` and renamed in, or swapped in when
+    ``path`` exists (:func:`_swap_in`). The staging name starts with ``_``,
+    which Hadoop and Spark listings treat as hidden, so no reader takes it
+    for a dataset; a reader never sees a partial one.
     """
     fs, hpath = hadoop_fs(spark, path)
-    tmp = f"{path}.publish-{uuid.uuid4().hex[:8]}"
+    parent, name = os.path.split(path.rstrip("/"))
+    tmp = os.path.join(parent, f"_publish-{uuid.uuid4().hex[:8]}-{name}")
     with tempfile.TemporaryDirectory(prefix="dpws_stage_") as local:
         pq.write_table(table, os.path.join(local, "part-00000.parquet"))
         open(os.path.join(local, "_SUCCESS"), "wb").close()
@@ -123,6 +124,28 @@ def publish(spark: SparkSession, table: pa.Table, path: str) -> None:
         _swap_in(spark, tmp, path)
     elif not fs.rename(hadoop_path(spark, tmp), hpath):
         raise IOError(f"stage publish: rename {tmp} -> {path} failed")
+
+
+class StageTooLarge(RuntimeError):
+    """A runner stage does not fit the driver's result budget,
+    ``spark.driver.maxResultSize``."""
+
+
+def _collect(df: DataFrame, path: str) -> pa.Table:
+    """``df`` on the driver as Arrow (one job). A stage above
+    ``spark.driver.maxResultSize`` fails that job; it is reported as
+    :class:`StageTooLarge`, naming the stage and the limit."""
+    try:
+        return df.toArrow()
+    except Exception as e:  # noqa: BLE001 - re-raised unless it is the size limit
+        if "spark.driver.maxResultSize" not in str(e):
+            raise
+        limit = df.sparkSession.sparkContext.getConf().get("spark.driver.maxResultSize", "1g")
+        raise StageTooLarge(
+            f"stage {path} exceeds spark.driver.maxResultSize ({limit}): a runner "
+            "stage is collected to the driver; stream large data through "
+            "streaming/sink.py"
+        ) from e
 
 
 def _in_memory(spark: SparkSession, table: pa.Table, schema: T.StructType) -> DataFrame:
@@ -142,15 +165,8 @@ def hadoop_fs(spark: SparkSession, path: str):
 
 
 def hadoop_path(spark: SparkSession, path: str):
-    """A Hadoop ``Path``. Its class is looked up once per JVM: py4j resolves
-    ``jvm.org.apache.hadoop.fs.Path`` by walking the package names through
-    failed class lookups, about 1 ms each time."""
-    return _path_class(spark._jvm)(path)
-
-
-@functools.cache
-def _path_class(jvm):
-    return jvm.org.apache.hadoop.fs.Path
+    """A Hadoop ``Path``."""
+    return spark._jvm.org.apache.hadoop.fs.Path(path)
 
 
 def _has_batch_partition_dirs(spark: SparkSession, path: str) -> bool:

@@ -661,23 +661,33 @@ def test_decision_resumes_a_run_whose_parked_thread_is_returning(spark, tmp_path
 
 def test_status_reads_never_drop_a_restarting_processing(spark, tmp_path, monkeypatch):
     # polls of the processing listing throughout decision-driven restarts
-    # all see the processing, although each restart writes its status
-    # anew; the status write is slowed so polls land inside it
+    # all see the processing, and every read succeeds, although each
+    # restart writes its status anew; each status publish holds its staged
+    # snapshot (data and _SUCCESS) beside the real ones for 0.2 s before
+    # the rename moves it in, so polls land inside that window
     import threading
 
-    from pyspark.sql import functions as F
+    from data_pipelines_worker_spark.sources import stage_store
 
-    from data_pipelines_worker_spark import session
-    from data_pipelines_worker_spark.sources import run_log
+    hadoop_fs = stage_store.hadoop_fs
 
-    local_df = session.local_df
-    slow = F.udf(lambda: time.sleep(0.2) or True, "boolean")
+    class SlowRename:
+        def __init__(self, fs):
+            self._fs = fs
 
-    def slow_status(spark_, rows, schema):
-        frame = local_df(spark_, rows, schema)
-        return frame.where(slow()) if schema == run_log.STATUS_SCHEMA else frame
+        def rename(self, src, dst):
+            if "/_meta/status/" in dst.toString():
+                time.sleep(0.2)
+            return self._fs.rename(src, dst)
 
-    monkeypatch.setattr(session, "local_df", slow_status)
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def slow_fs(spark_, path):
+        fs, hpath = hadoop_fs(spark_, path)
+        return SlowRename(fs), hpath
+
+    monkeypatch.setattr(stage_store, "hadoop_fs", slow_fs)
     service = PipelineService(
         PipelineRunner(spark, str(tmp_path / "stages")), {"gated": _gated_spec()}
     )
@@ -688,7 +698,10 @@ def test_status_reads_never_drop_a_restarting_processing(spark, tmp_path, monkey
 
     def poll():
         while not done.is_set():
-            polls.append([p["processing_id"] for p in service.processings("gated")])
+            try:
+                polls.append([p["processing_id"] for p in service.processings("gated")])
+            except Exception as e:  # noqa: BLE001 - a failed read fails the test
+                polls.append([repr(e)[:300]])
 
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()

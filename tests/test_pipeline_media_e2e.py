@@ -266,10 +266,10 @@ def test_real_png_through_compiled_pipeline(spark, tmp_path):
 
 def test_non_parallel_block_stage_width_bounded(spark, tmp_path):
     # parallel_available:false blocks (config.yaml:238 etc.) compile to a
-    # bounded-width stage: the stage's task count — visible as part files in
-    # the stage store — never exceeds the slot budget, however wide the
+    # bounded-width stage: the block's Python task count, read from the
+    # run's job group, never exceeds the slot budget, however wide the
     # upstream fan-out. Plan audit for VERDICT item 10.
-    import glob
+    from test_job_budget import _group_stages, _python_tasks, _run_in_group
 
     runner = PipelineRunner(spark, str(tmp_path / "stages"))
     spec = PipelineSpec(
@@ -285,11 +285,11 @@ def test_non_parallel_block_stage_width_bounded(spark, tmp_path):
         ],
     )
     audio = [M.faud_encode(100, bytes(110 + i)) for i in range(8)]  # 8-wide fan-out
-    res = runner.run(spec, request_input={"up": {"file": audio}})
-    parts = glob.glob(
-        str(tmp_path / "stages" / "gated" / res.processing_id / "chunks" / "part-*")
+    res = _run_in_group(
+        spark, "width-bounded", lambda: runner.run(spec, request_input={"up": {"file": audio}})
     )
-    assert 0 < len(parts) <= 2, f"gated stage ran {len(parts)} tasks, budget 2"
+    _, stages = _group_stages(spark, "width-bounded")
+    assert _python_tasks(stages) == [2], f"gated block ran {stages}, budget 2"
     assert res.output.count() == 16  # 1.1s → 2 chunks each, semantics intact
 
 

@@ -1,4 +1,5 @@
-"""``session.shuffle_partitions`` on a stub session: no Spark needed."""
+"""``session.shuffle_partitions`` on a stub session and ``session.result_budget``:
+no Spark needed."""
 
 from __future__ import annotations
 
@@ -6,7 +7,7 @@ from types import SimpleNamespace
 
 import pytest
 
-from data_pipelines_worker_spark.session import shuffle_partitions
+from data_pipelines_worker_spark.session import result_budget, shuffle_partitions
 
 
 def _stub(value: str):
@@ -19,3 +20,12 @@ def _stub(value: str):
 @pytest.mark.parametrize("value, want", [("12", 12), ("auto", 5), ("", 5)])
 def test_shuffle_partitions(value, want):
     assert shuffle_partitions(_stub(value)) == want
+
+
+@pytest.mark.parametrize(
+    "driver_mem, want",
+    [("24g", "6144m"), ("4g", "1024m"), ("512m", "128m"), ("2048", "512m"), ("1t", "262144m"),
+     ("2k", "1m"), ("lots", "1g")],
+)
+def test_result_budget(driver_mem, want):
+    assert result_budget(driver_mem) == want

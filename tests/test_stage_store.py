@@ -259,3 +259,27 @@ def test_large_binary_payload_roundtrip_non_file_uri(spark, tmp_path):
         rows = sorted(frame.collect())
         assert [bytes(r.payload_bin) for r in rows] == big
     assert (tmp_path / "p" / "big" / "b" / "_SUCCESS").exists()
+
+
+def test_stage_above_result_budget_is_refused(spark, tmp_path):
+    # a runner stage is collected to the driver: one above
+    # spark.driver.maxResultSize fails with StageTooLarge and publishes
+    # nothing. The limit is read per job from the live SparkConf, so it is
+    # lowered to 1 MiB for this stage only.
+    import pytest
+
+    payload = bytes(700 << 10)
+    df = spark.createDataFrame(
+        [(i, 0, None, payload, None) for i in range(4)], stage_store.STAGE_SCHEMA
+    ).repartition(4)
+    conf = spark.sparkContext._jsc.sc().conf()
+    before = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", "1m")
+    try:
+        with pytest.raises(stage_store.StageTooLarge, match="maxResultSize"):
+            stage_store.write_stage(df, str(tmp_path), "p", "big", "b")
+    finally:
+        conf.set("spark.driver.maxResultSize", before)
+    assert not (tmp_path / "p").exists()
+    back = stage_store.write_stage(df, str(tmp_path), "p", "big", "b")
+    assert back.count() == 4
