@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
-from .stage_store import hadoop_fs, hadoop_path, publish
+from .stage_store import hadoop_fs, publish
 
 STATUS_SCHEMA = (
     "pipeline_slug string, processing_id string, block_slug string, "
@@ -67,7 +67,9 @@ def _newest_snapshot(spark: SparkSession, path: str) -> str | None:
     )
     for name in names:
         snap = os.path.join(path, name)
-        if _SNAPSHOT.fullmatch(name) and fs.exists(hadoop_path(spark, f"{snap}/_SUCCESS")):
+        if _SNAPSHOT.fullmatch(name) and fs.exists(
+            spark._jvm.org.apache.hadoop.fs.Path(snap, "_SUCCESS")
+        ):
             return snap
     return None
 

@@ -116,13 +116,14 @@ def publish(spark: SparkSession, table: pa.Table, path: str) -> None:
     fs, hpath = hadoop_fs(spark, path)
     parent, name = os.path.split(path.rstrip("/"))
     tmp = os.path.join(parent, f"_publish-{uuid.uuid4().hex[:8]}-{name}")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     with tempfile.TemporaryDirectory(prefix="dpws_stage_") as local:
         pq.write_table(table, os.path.join(local, "part-00000.parquet"))
         open(os.path.join(local, "_SUCCESS"), "wb").close()
-        fs.copyFromLocalFile(False, False, hadoop_path(spark, local), hadoop_path(spark, tmp))
+        fs.copyFromLocalFile(False, False, Path(local), Path(tmp))
     if fs.exists(hpath):
         _swap_in(spark, tmp, path)
-    elif not fs.rename(hadoop_path(spark, tmp), hpath):
+    elif not fs.rename(Path(tmp), hpath):
         raise IOError(f"stage publish: rename {tmp} -> {path} failed")
 
 
@@ -160,13 +161,8 @@ def _in_memory(spark: SparkSession, table: pa.Table, schema: T.StructType) -> Da
 def hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` of ``path`` through the Hadoop FileSystem API,
     which serves every stage-store URI (local, HDFS, viewfs, s3a)."""
-    hpath = hadoop_path(spark, path)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
-def hadoop_path(spark: SparkSession, path: str):
-    """A Hadoop ``Path``."""
-    return spark._jvm.org.apache.hadoop.fs.Path(path)
 
 
 def _has_batch_partition_dirs(spark: SparkSession, path: str) -> bool:
@@ -188,10 +184,11 @@ def _swap_in(spark: SparkSession, tmp: str, path: str) -> None:
     racing the swap can see a brief stage-missing window, never partial
     data."""
     fs, hpath = hadoop_fs(spark, path)
-    old = hadoop_path(spark, f"{path}.old-{uuid.uuid4().hex[:8]}")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    old = Path(f"{path}.old-{uuid.uuid4().hex[:8]}")
     if not fs.rename(hpath, old):
         raise IOError(f"stage swap: rename {path} -> {old} failed")
-    if not fs.rename(hadoop_path(spark, tmp), hpath):
+    if not fs.rename(Path(tmp), hpath):
         fs.rename(old, hpath)  # roll back
         raise IOError(f"stage swap: rename {tmp} -> {path} failed")
     fs.delete(old, True)
