@@ -27,7 +27,7 @@ _PKG_HINT = (
 def protobuf_available(spark: SparkSession) -> bool:
     """True iff the spark-protobuf connector classes are loadable."""
     try:
-        spark.sparkContext._jvm.java.lang.Class.forName(_PROTO_CLASS)
+        getattr(spark._jvm, "java.lang.Class").forName(_PROTO_CLASS)
         return True
     except Exception:  # noqa: BLE001 — Py4J wraps ClassNotFoundException
         return False

@@ -1073,31 +1073,43 @@ class PipelineRunner:
 
         stopped_at: str | None = None
         last_df: DataFrame | None = None
-        for pos, block in enumerate(spec.blocks[start_pos:], start_pos):
-            df, params = self._build_inputs(run, block, stages)
-            # target-index recompute: only that fan-out index
-            # (pipeline.go:358-377); other indices come from the stored
-            # stage and are merged back when the stage is written. The one
-            # index goes in one partition: filtered out of a multi-partition
-            # stage it would leave every other partition's task empty.
-            recompute = target_index if pos == start_pos and start_slug is not None else None
-            if recompute is not None:
-                df = dataflow.target_index(df, recompute).coalesce(1)
+        try:
+            for pos, block in enumerate(spec.blocks[start_pos:], start_pos):
+                df, params = self._build_inputs(run, block, stages)
+                # target-index recompute: only that fan-out index
+                # (pipeline.go:358-377); other indices come from the stored
+                # stage and are merged back when the stage is written. The
+                # one index goes in one partition: filtered out of a
+                # multi-partition stage it would leave every other
+                # partition's task empty.
+                recompute = (
+                    target_index if pos == start_pos and start_slug is not None else None
+                )
+                if recompute is not None:
+                    df = dataflow.target_index(df, recompute).coalesce(1)
 
-            if block.id == _MODERATION_FETCH:
-                res = self._eval_moderation(run, block, df, recompute)
-                if isinstance(res, _Regenerate):
-                    return res
-                out, stop = res
-            else:
-                out, stop = _BLOCKS[block.id](self, block, df, params)
-                out = self._write(run, out, block.slug, recompute)
-            stages[block.slug] = last_df = out
-            run.statuses[block.slug] = "stopped" if stop else "completed"
-            if stop:
-                stopped_at = block.slug
-                break
-
+                if block.id == _MODERATION_FETCH:
+                    res = self._eval_moderation(run, block, df, recompute)
+                    if isinstance(res, _Regenerate):
+                        return res
+                    out, stop = res
+                else:
+                    out, stop = _BLOCKS[block.id](self, block, df, params)
+                    out = self._write(run, out, block.slug, recompute)
+                stages[block.slug] = last_df = out
+                run.statuses[block.slug] = "stopped" if stop else "completed"
+                if stop:
+                    stopped_at = block.slug
+                    break
+        except ModerationPending:
+            raise
+        except Exception:
+            # the deferred snapshot names the block whose operator or stage
+            # write raised; the blocks after it never ran
+            run.statuses[block.slug] = "failed"
+            for b in spec.blocks:
+                run.statuses.setdefault(b.slug, "skipped")
+            raise
         for b in spec.blocks:
             run.statuses.setdefault(b.slug, "skipped")
         return RunResult(

@@ -431,7 +431,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .collect()[0]
     )
-    cms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(
+    cms = getattr(spark._jvm, "org.apache.spark.util.sketch.CountMinSketch").readFrom(
         bytes(sk_row)
     )
     top = (

@@ -41,6 +41,16 @@ def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
       pipeline stage is collected to the driver (``stage_store.write_stage``)
       and held there while the run lasts, so this is the largest stage a
       run can publish.
+    - ``spark.python.sql.dataFrameDebugging.enabled`` off: PySpark 4 wraps
+      every ``Column`` method and ``functions`` builtin to record the
+      Python call site with the JVM (per call a session lookup, a conf
+      read and a stack walk, then a ``set`` and a ``clear`` over py4j);
+      off, they pass straight through, which halves the driver's py4j
+      round trips per pipeline block. A DataFrame runtime error keeps its
+      error class, message and SQLSTATE; its query context names the JVM
+      function (``divide``, not ``__truediv__``) and a Java frame instead
+      of the Python ``file:line``. The runner's status snapshot names the
+      block that failed.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
@@ -72,6 +82,7 @@ def get_spark(app_name: str = "data_pipelines_worker_spark") -> SparkSession:
         # see worker_daemon (saves ~0.25 s of worker CPU per Python task)
         .config("spark.python.daemon.module", "data_pipelines_worker_spark.worker_daemon")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

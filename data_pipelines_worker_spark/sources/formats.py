@@ -53,8 +53,7 @@ def avro_available(spark: SparkSession) -> bool:
     and side-effect-free.
     """
     try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName(_AVRO_PROVIDER)
+        getattr(spark._jvm, "java.lang.Class").forName(_AVRO_PROVIDER)
         return True
     except Exception:  # noqa: BLE001 — Py4J raises wrapped ClassNotFound
         return False

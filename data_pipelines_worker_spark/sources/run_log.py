@@ -68,7 +68,7 @@ def _newest_snapshot(spark: SparkSession, path: str) -> str | None:
     for name in names:
         snap = os.path.join(path, name)
         if _SNAPSHOT.fullmatch(name) and fs.exists(
-            spark._jvm.org.apache.hadoop.fs.Path(snap, "_SUCCESS")
+            getattr(spark._jvm, "org.apache.hadoop.fs.Path")(snap, "_SUCCESS")
         ):
             return snap
     return None

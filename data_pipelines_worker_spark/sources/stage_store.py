@@ -116,7 +116,7 @@ def publish(spark: SparkSession, table: pa.Table, path: str) -> None:
     fs, hpath = hadoop_fs(spark, path)
     parent, name = os.path.split(path.rstrip("/"))
     tmp = os.path.join(parent, f"_publish-{uuid.uuid4().hex[:8]}-{name}")
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     with tempfile.TemporaryDirectory(prefix="dpws_stage_") as local:
         pq.write_table(table, os.path.join(local, "part-00000.parquet"))
         open(os.path.join(local, "_SUCCESS"), "wb").close()
@@ -161,7 +161,7 @@ def _in_memory(spark: SparkSession, table: pa.Table, schema: T.StructType) -> Da
 def hadoop_fs(spark: SparkSession, path: str):
     """``(FileSystem, Path)`` of ``path`` through the Hadoop FileSystem API,
     which serves every stage-store URI (local, HDFS, viewfs, s3a)."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
@@ -184,7 +184,7 @@ def _swap_in(spark: SparkSession, tmp: str, path: str) -> None:
     racing the swap can see a brief stage-missing window, never partial
     data."""
     fs, hpath = hadoop_fs(spark, path)
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
     old = Path(f"{path}.old-{uuid.uuid4().hex[:8]}")
     if not fs.rename(hpath, old):
         raise IOError(f"stage swap: rename {path} -> {old} failed")

@@ -214,6 +214,32 @@ def test_resume_of_a_running_processing_is_409(api, monkeypatch):
     assert sorted(writes) == ["join", "src", "wrap"]
 
 
+def test_failed_block_and_its_error_are_listed(api, monkeypatch):
+    # a block whose stage write raises is listed as failed, the blocks
+    # after it as skipped, and the processing carries the error
+    from data_pipelines_worker_spark.sources import stage_store
+
+    base, service = api
+    write = stage_store.write_stage
+
+    def failing(df, root, pipeline_slug, processing_id, slug, *rest):
+        if slug == "wrap":
+            raise IOError("stage store unavailable")
+        return write(df, root, pipeline_slug, processing_id, slug, *rest)
+
+    monkeypatch.setattr(stage_store, "write_stage", failing)
+    _, resp = _post(
+        base, "/pipelines/wrap-join/start", {"input": {"src": {"file": ["x", "y"]}}}
+    )
+    proc = _await_done(base, service, resp["processing_id"])
+    assert proc["error"] == "OSError: stage store unavailable"
+    assert [(b["block_slug"], b["status"]) for b in proc["blocks"]] == [
+        ("src", "completed"),
+        ("wrap", "failed"),
+        ("join", "skipped"),
+    ]
+
+
 def test_unknown_pipeline_404(api):
     base, _ = api
     with pytest.raises(urllib.error.HTTPError) as e:

@@ -394,8 +394,7 @@ def test_failing_index_aborts_run_and_persists_status(spark, tmp_path):
             spec,
             request_input={"up": {"file": [good, b"\xff\xd8corrupt", good]}},
         )
-    # upload completed and is resumable; the failing block never reported
-    # completed
+    # upload completed and is resumable
     procs = run_log.list_processings(spark, str(tmp_path), "failing")
     assert len(procs) == 1
     statuses = {
@@ -403,7 +402,7 @@ def test_failing_index_aborts_run_and_persists_status(spark, tmp_path):
         for r in run_log.read_statuses(spark, str(tmp_path), "failing").collect()
     }
     assert statuses.get("up") == "completed"
-    assert statuses.get("small") != "completed"
+    assert statuses.get("small") == "failed"
 
 
 def test_concurrent_runs_keep_their_own_payload_kinds(spark, tmp_path, monkeypatch):

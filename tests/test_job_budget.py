@@ -5,7 +5,9 @@ footer-reading schema-inference job on the stages the runner wrote, no
 kind-probe job on stages it knows are text, no Python task without rows,
 and no cached RDD left behind. Counts come from the same status-tracker
 calls the benchmark's trace uses (``statusTracker().getJobIdsForGroup``,
-``statusStore().lastStageAttempt``, ``operationGraphForStage``).
+``statusStore().lastStageAttempt``, ``operationGraphForStage``). The
+driver's py4j round trips per run are counted by wrapping the gateway
+client (``tools.jfr_profile.Py4jTally``).
 """
 
 from __future__ import annotations
@@ -103,6 +105,28 @@ def test_wrap_join_job_budget(spark, tmp_path):
     # src, wrap and join writes, the gather's exchange, the status write
     assert jobs <= 5, (jobs, stages)
     assert res.output.first().payload_str == "+".join(f"[{t}]" for t in texts)
+
+
+def test_wrap_join_py4j_round_trip_budget(spark, tmp_path):
+    # the driver's py4j chatter of one warm wrap-join run: no call-site
+    # capture per Column method or functions builtin (PySparkCurrentOrigin
+    # set and clear), no JVM class reached through its package prefixes,
+    # and calls plus reflection lookups under budget. Memory commands are
+    # left out: they follow Python's GC, not the run.
+    from tools.jfr_profile import Py4jTally
+
+    spec = PipelineSpec.from_json(json.loads((SPECS / "wrap-join.json").read_text()))
+    runner = PipelineRunner(spark, str(tmp_path))
+    request = {"src": {"file": [f"text {i}" for i in range(8)]}}
+    runner.run(spec, request_input=request)
+    with Py4jTally(spark) as py4j:
+        res = runner.run(spec, request_input=request)
+    assert res.statuses["join"] == "completed"
+    origin = [t for t in py4j.reflections if "PySparkCurrentOrigin" in t]
+    assert not origin, origin
+    assert not py4j.packages, py4j.packages
+    round_trips = py4j.kinds["call"] + py4j.kinds["reflection"]
+    assert round_trips < 700, py4j.kinds
 
 
 def test_no_stage_goes_through_dataframe_writer(spark, tmp_path):

@@ -17,7 +17,10 @@ with a frame anywhere in the sample's stack, else ``other``. The order
 puts the fixed-cost machinery before what calls it: a Hadoop
 ``Configuration`` copy inside a write task counts as Hadoop conf, not as
 Parquet write or executor task. A second table groups the samples by
-thread name with the numbers masked.
+thread name with the numbers masked. A third counts the py4j commands the
+Python driver sends to the JVM during the recorded runs (:class:`Py4jTally`),
+per run by kind and the most frequent reflection targets by name: each
+command is one round trip.
 """
 
 from __future__ import annotations
@@ -29,8 +32,11 @@ import re
 import subprocess
 import sys
 import tempfile
+import threading
 import time
 import uuid
+
+from py4j import protocol
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -96,13 +102,88 @@ def read_samples(jfr_file: str, stack_depth: int = 128):
         raise RuntimeError(f"jfr print {jfr_file} failed ({proc.returncode})")
 
 
-def table(counts: collections.Counter, title: str, top: int | None = None) -> str:
+def table(
+    counts: collections.Counter,
+    title: str,
+    top: int | None = None,
+    unit: str = "samples",
+    runs: int = 1,
+) -> str:
+    """``counts`` largest first, each divided by ``runs``, with its share."""
     total = sum(counts.values())
-    rows = [f"{title:<40} {'samples':>8} {'share':>7}"]
+    width = max([40, len(title)] + [len(k) for k, _ in counts.most_common(top)])
+    digits = 0 if runs == 1 else 1
+    rows = [f"{title:<{width}} {unit:>8} {'share':>7}"]
     for name, n in counts.most_common(top):
-        rows.append(f"{name:<40} {n:>8} {100.0 * n / max(1, total):>6.1f}%")
-    rows.append(f"{'total':<40} {total:>8}")
+        rows.append(
+            f"{name:<{width}} {n / runs:>8.{digits}f} {100.0 * n / max(1, total):>6.1f}%"
+        )
+    rows.append(f"{'total':<{width}} {total / runs:>8.{digits}f}")
     return "\n".join(rows)
+
+
+#: py4j command kinds by the first line of the protocol's command
+PY4J_KINDS = {
+    "c": "call",
+    "r": "reflection",
+    "m": "memory",
+    "f": "field",
+    "i": "constructor",
+    "a": "array",
+    "l": "list",
+    "d": "dir",
+    "j": "jvm view",
+    "h": "help",
+    "p": "exception",
+    "S": "stream",
+}
+
+
+class Py4jTally:
+    """Counts the py4j commands the driver's gateway client sends while the
+    ``with`` block runs, from every thread.
+
+    ``kinds`` counts commands by :data:`PY4J_KINDS` (a memory command
+    releases a JVM object once Python's GC drops its handle). ``reflections``
+    counts reflection lookups by target: a name the JVM resolves
+    (``org.apache.hadoop.fs.Path``) or a class member
+    (``org.apache.spark.sql.functions.col``). ``packages`` counts the
+    targets the JVM answered as a package: an ``_jvm.org.apache...`` chain
+    asks for each prefix in turn, and the JVM tries each as a class against
+    every import and jar before calling it a package.
+    """
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.kinds: collections.Counter = collections.Counter()
+        self.reflections: collections.Counter = collections.Counter()
+        self.packages: collections.Counter = collections.Counter()
+        self._lock = threading.Lock()
+
+    def __enter__(self) -> "Py4jTally":
+        send = self._send = self.client.send_command
+
+        def counted(command, *args, **kwargs):
+            answer = send(command, *args, **kwargs)
+            self._count(command, answer)
+            return answer
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.client.send_command = self._send
+
+    def _count(self, command: str, answer) -> None:
+        parts = command.split("\n")
+        with self._lock:
+            self.kinds[PY4J_KINDS.get(parts[0], parts[0])] += 1
+            if parts[0] != "r":
+                return
+            target = ".".join(parts[2:4]) if parts[1] == "m" else parts[2]
+            self.reflections[target] += 1
+            if answer == protocol.SUCCESS_PACKAGE:
+                self.packages[target] += 1
 
 
 def profile(jfr_file: str) -> tuple[collections.Counter, collections.Counter]:
@@ -126,7 +207,7 @@ def main() -> int:
     from tools.dump_stages import REQUESTS, make_runner
 
     spark = get_spark("jfr-profile")
-    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    pid = getattr(spark._jvm, "java.lang.ProcessHandle").current().pid()
     mock = MockOpenAI(delay_s=0.0)
     with tempfile.TemporaryDirectory(prefix="jfr_profile_") as tmp:
         jfr_file = args.jfr or os.path.join(tmp, "profile.jfr")
@@ -147,7 +228,8 @@ def main() -> int:
                  f"filename={jfr_file}"],
                 check=True, stdout=subprocess.DEVNULL,
             )
-            wall = run_all(args.runs)
+            with Py4jTally(spark) as py4j:
+                wall = run_all(args.runs)
             subprocess.run(
                 ["jcmd", str(pid), "JFR.stop", f"name={name}"],
                 check=True, stdout=subprocess.DEVNULL,
@@ -160,6 +242,12 @@ def main() -> int:
     print(table(buckets, "bucket (exclusive)"))
     print()
     print(table(threads, "thread group", top=12))
+    print()
+    print(table(py4j.kinds, "py4j command kind (per run)", unit="commands", runs=args.runs))
+    print()
+    print(table(py4j.reflections, "py4j reflection target (per run)", top=15,
+                unit="lookups", runs=args.runs))
+    print(f"package lookups per run: {sum(py4j.packages.values()) / args.runs:.1f}")
     return 0
 
 
