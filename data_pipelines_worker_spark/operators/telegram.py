@@ -32,7 +32,12 @@ the actual message text, as they do against the real Bot API.
 
 Scale note: Telegram traffic is control-plane by construction — messages
 a human will read and moderate. Delivery collects only sink-record rows
-(one per fan-out index of a moderated block), never data-plane tables.
+(one per fan-out index of a moderated block) and the media bytes of the
+indices it sends, never data-plane tables, and sends from the driver.
+Every runner stage, media included, is already collected to the driver
+when it is written and bounded by ``spark.driver.maxResultSize``
+(sources/stage_store.py), so an executor send task would keep no bytes
+off the driver; it would only add a Python stage and Spark jobs.
 """
 
 from __future__ import annotations
@@ -45,6 +50,9 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+from pyspark.sql import functions as F
+
+from ..sources import stage_store
 from .external import DEFAULT_TIMEOUT, RetryPolicy, fetch
 
 #: callback-data action codes (block_fetch_moderation_telegram.go:57-66)
@@ -229,9 +237,11 @@ def _send_record(client: TelegramClient, group_id, block_id: str,
                  regen: str | None, index: int, record: dict,
                  media: dict) -> dict:
     """One sink record → one Bot-API send, with the reference's
-    media-first fallbacks. Module-level and closed over primitives only,
-    so it runs inside an executor task (the payload bytes never transit
-    the driver)."""
+    media-first fallbacks. Runs on the driver thread that delivers the
+    processing, one record at a time in ``input_index`` order, like the
+    reference's sequential send loop (block_send_message_telegram.go:80):
+    ``media`` holds bytes the driver collected from the bound stages,
+    which the runner already held on the driver when it wrote them."""
     chat = _resolve_chat(group_id, record)
     if block_id == "send_message_tg":
         # photo → video → text (block_send_message_telegram.go:92-128)
@@ -273,47 +283,16 @@ def _send_record(client: TelegramClient, group_id, block_id: str,
     return client.send_message(chat, caption, reply_markup=keyboard)
 
 
-def _send_partition(rows, client: TelegramClient, group_id, block_id: str,
-                    processing_id: str, block_slug: str, gate_slug: str,
-                    regen: str | None):
-    """Executor-side send loop: every row is *attempted* (per-row
-    try/except), and each yields a result record — so the driver can roll
-    back exactly the failed claims instead of stranding everything after
-    a failure point (ADVICE r4 #1).
-
-    Delivery semantics are at-least-once under *task* loss: sends are an
-    external effect Spark cannot roll back, so a silently retried task
-    would re-send every row delivered before the crash. The attempt
-    guard below turns that silent re-run into a loud job failure — the
-    driver then releases the batch's claims and the service's backoff
-    retry re-drives it, the same crash-replay window the reference's
-    sequential send loop has (rows sent by the first attempt before the
-    crash may repeat; nothing repeats systematically)."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    if ctx is not None and ctx.attemptNumber() > 0:
-        raise RuntimeError(
-            "telegram send task retried — refusing to re-send blind; the "
-            "service's delivery retry re-drives with claim bookkeeping"
-        )
-    for row in rows:
-        idx = int(row["input_index"])
-        try:
-            record = json.loads(row["payload_str"]) if row["payload_str"] else {}
-            media = {
-                "image": bytes(row["__img"]) if row["__img"] is not None else None,
-                "video": bytes(row["__vid"]) if row["__vid"] is not None else None,
-            }
-            sent = _send_record(
-                client, group_id, block_id, processing_id, block_slug,
-                gate_slug, regen, idx, record, media,
-            )
-            yield {"input_index": idx, "ok": True,
-                   "message_id": (sent or {}).get("message_id"), "error": None}
-        except Exception as ex:  # noqa: BLE001 — reported per-row
-            yield {"input_index": idx, "ok": False, "message_id": None,
-                   "error": f"{type(ex).__name__}: {ex}"}
+def _stage(runner, *key: str):
+    """The stage ``(pipeline_slug, processing_id, block_slug)`` the runner
+    wrote, read with its known schema, or None when it does not exist.
+    Any other read error propagates: a stage that cannot be read is not
+    taken for one that was never written."""
+    path = stage_store.stage_path(runner.store_root, *key)
+    fs, hpath = stage_store.hadoop_fs(runner.spark, path)
+    if not fs.exists(hpath):
+        return None
+    return stage_store.read_stage(runner.spark, runner.store_root, *key, stage_store.STAGE_SCHEMA)
 
 
 class TelegramTransport:
@@ -337,39 +316,22 @@ class TelegramTransport:
         self._lock = threading.Lock()
         self.sent: list[dict] = []  # delivery log (message ids, for status)
 
-    def _chat_for(self, record: dict):
-        return _resolve_chat(self.group_id, record)
-
-    # -- stage scanning ----------------------------------------------------
-
     def deliver_processing(self, runner, spec, processing_id: str) -> int:
         """Deliver all undelivered Telegram sink rows for one processing.
         Returns the number of messages sent.
 
-        Executor-side transport (VERDICT r4 #6): the driver collects only
-        the small sink-record rows for claim bookkeeping; the payload
-        bytes (bound image/video stages) join the send plan executor-side
-        and the Bot-API calls run inside a single ordered task
-        (``mapPartitions`` over one sorted partition — the reference's
-        sequential in-order delivery, block_send_message_telegram.go:80,
-        without hauling media through the driver). Each row is attempted
-        and reports success/failure individually, so a failure rolls back
-        exactly the failed claims (ADVICE r4 #1) and raises to trigger
-        the service's backoff retry."""
-        from pyspark.sql import functions as F
-
-        from ..sources.stage_store import read_stage
-
+        Each sink stage and the media bytes of the indices it claims are
+        collected to the driver (one job per stage), and the claimed rows
+        are sent from this thread in ``input_index`` order. A row is
+        claimed before it is sent and attempted once; a failed send
+        releases only that row's claim (ADVICE r4 #1), and the call then
+        raises to trigger the service's backoff retry."""
         n_sent = 0
         for pos, block in enumerate(spec.blocks):
             if block.id not in ("send_message_tg", "send_moderation_tg"):
                 continue
-            try:
-                df = read_stage(
-                    runner.spark, runner.store_root, spec.slug,
-                    processing_id, block.slug,
-                )
-            except Exception:  # noqa: BLE001 — stage not yet written
+            df = _stage(runner, spec.slug, processing_id, block.slug)
+            if df is None:
                 continue
             # control-plane collect: (index, payload_str) sink records only
             rows = sorted(
@@ -379,14 +341,14 @@ class TelegramTransport:
             # claim undelivered keys first: a parked run is re-driven on
             # every decision batch, and re-reading media stages for an
             # already-delivered block is pure waste
-            claims = {}
+            claims = []
             with self._lock:
                 for r in rows:
                     digest = hashlib.sha1((r.payload_str or "").encode()).hexdigest()
                     key = (processing_id, block.slug, r.input_index, digest)
                     if key not in self._delivered:
                         self._delivered.add(key)
-                        claims[r.input_index] = key
+                        claims.append((r, key))
             if not claims:
                 continue
             gate = next(
@@ -397,94 +359,61 @@ class TelegramTransport:
             regen = (
                 gate.input.get("regenerate_block_slug") if gate is not None else None
             )
-            plan = (
-                df.select("input_index", "payload_str")
-                .where(F.col("input_index").isin(list(claims)))
-                .withColumn("__img", F.lit(None).cast("binary"))
-                .withColumn("__vid", F.lit(None).cast("binary"))
-            )
-            plan = self._join_media(runner, spec, processing_id, block, plan)
-            client, group_id, block_id, slug = (
-                self.client, self.group_id, block.id, block.slug,
-            )
+            indices = sorted({r.input_index for r, _ in claims})
             try:
-                results = sorted(
-                    plan.repartition(1)
-                    .sortWithinPartitions("input_index")
-                    .rdd.mapPartitions(
-                        lambda it: _send_partition(
-                            it, client, group_id, block_id, processing_id,
-                            slug, gate_slug, regen,
-                        )
-                    )
-                    .collect(),
-                    key=lambda r: r["input_index"],
-                )
+                media = self._media(runner, spec.slug, processing_id, block, indices)
             except Exception:
-                # job-level failure: nothing is confirmed sent — release
-                # every claim of this batch so the backoff retry re-drives
-                # all of it
+                # nothing was sent: release every claim of this batch so
+                # the backoff retry re-drives all of it
                 with self._lock:
-                    self._delivered.difference_update(claims.values())
+                    self._delivered.difference_update(k for _, k in claims)
                 raise
             failed = []
-            for res in results:
-                if res["ok"]:
-                    self.sent.append(
-                        {"block_slug": slug, "input_index": res["input_index"],
-                         "message_id": res["message_id"]}
+            for r, key in claims:
+                idx = r.input_index
+                try:
+                    record = json.loads(r.payload_str) if r.payload_str else {}
+                    sent = _send_record(
+                        self.client, self.group_id, block.id, processing_id,
+                        block.slug, gate_slug, regen, idx, record,
+                        {param: by_index.get(idx) for param, by_index in media.items()},
                     )
-                    n_sent += 1
-                else:
-                    failed.append(res)
+                except Exception as ex:  # noqa: BLE001 — reported per row
+                    failed.append((key, f"[{idx}] {type(ex).__name__}: {ex}"))
+                    continue
+                self.sent.append({"block_slug": block.slug, "input_index": idx,
+                                  "message_id": (sent or {}).get("message_id")})
+                n_sent += 1
             if failed:
                 with self._lock:
-                    for res in failed:
-                        self._delivered.discard(claims[res["input_index"]])
+                    self._delivered.difference_update(k for k, _ in failed)
                 raise RuntimeError(
-                    f"{len(failed)} of {len(results)} sends failed for block "
-                    f"{slug}: " + "; ".join(
-                        f"[{r['input_index']}] {r['error']}" for r in failed[:3]
-                    )
+                    f"{len(failed)} of {len(claims)} sends failed for block "
+                    f"{block.slug}: " + "; ".join(e for _, e in failed[:3])
                 )
         return n_sent
 
-    def _join_media(self, runner, spec, processing_id: str, block, plan):
-        """Left-join bound image/video payload bytes onto the send plan —
-        executor-side; the driver never materializes payload_bin. Matches
-        the old collect-based resolution: per param, the last binding with
-        non-null bytes for an index wins."""
-        from pyspark.sql import functions as F
-
-        from ..sources.stage_store import read_stage
-
-        col_for = {"image": "__img", "video": "__vid"}
+    @staticmethod
+    def _media(runner, pipeline_slug: str, processing_id: str, block,
+               indices: list[int]) -> dict[str, dict[int, bytes]]:
+        """``{param: {input_index: bytes}}`` of the block's image and video
+        bindings for ``indices``: per param and index the last binding
+        with bytes wins, and within a stage the highest ``output_index``."""
+        media = {"image": {}, "video": {}}
         for b in block.bindings:
-            if b.param not in col_for:
+            if b.param not in media:
                 continue
-            try:
-                mdf = read_stage(
-                    runner.spark, runner.store_root, spec.slug,
-                    processing_id, b.origin,
-                )
-            except Exception:  # noqa: BLE001
+            df = _stage(runner, pipeline_slug, processing_id, b.origin)
+            if df is None:
                 continue
-            c = col_for[b.param]
-            # exactly one row per input_index (highest output_index wins,
-            # deterministically): a stage with duplicate indexes must not
-            # fan the send plan out into duplicate messages
-            mdf = (
-                mdf.select("input_index", "output_index", "payload_bin")
-                .where(F.col("payload_bin").isNotNull())
-                .groupBy("input_index")
-                .agg(F.max_by("payload_bin", "output_index").alias(f"{c}_new"))
+            rows = (
+                df.where(F.col("input_index").isin(indices) & F.col("payload_bin").isNotNull())
+                .select("input_index", "output_index", "payload_bin")
+                .collect()
             )
-            plan = (
-                plan.join(mdf, "input_index", "left")
-                .withColumn(c, F.coalesce(F.col(f"{c}_new"), F.col(c)))
-                .drop(f"{c}_new")
-            )
-        return plan
+            for r in sorted(rows, key=lambda r: r.output_index):
+                media[b.param][r.input_index] = bytes(r.payload_bin)
+        return media
 
 
 class ModerationPoller:

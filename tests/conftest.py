@@ -17,94 +17,6 @@ REFERENCE_PIPELINES = (
     Path(__file__).resolve().parents[2] / "reference" / "config" / "pipelines"
 )
 
-# Long-haul tests excluded from the DEFAULT run (pytest.ini deselects the
-# `slowsuite` marker) so the suite fits the external driver's verification
-# window (VERDICT r12 #5: VERIFY capture expired mid-suite with 0 failures).
-# Selection rule: every test whose measured call time was >= 5 s on a quiet
-# 32-core host (2026-08-18 full run: 568 passed in 1274 s; these 48 sum to
-# ~745 s). They are model-equivalence sweeps and e2e pipelines whose
-# subject matter the driver re-covers independently (bench.py executes
-# every registered query twice, check_oracle.py hash-gates all results).
-# Run the FULL suite with `pytest -m ""`; just these with `-m slowsuite`.
-# Keep this list in sync with measured durations, not with guesses.
-_SLOWSUITE = {
-    "test_api_server.py::test_concurrent_decisions_resume_each_parked_run_once",
-    "test_api_server.py::test_decision_stream_unblocks_waiting_moderation",
-    "test_api_server.py::test_parked_run_resumes_at_its_gate",
-    "test_api_server.py::test_regenerate_then_approve_ships_the_reviewed_content",
-    "test_api_server.py::test_resume_of_a_running_processing_is_409",
-    "test_api_server.py::test_resume_with_target_index",
-    "test_api_server.py::test_start_async_and_poll",
-    "test_dedup_similarity.py::TestLogStarCC::test_logstar_equals_propagation_on_lsh_pairs",
-    "test_dedup_similarity.py::TestLogStarCC::test_logstar_matches_union_find_on_random_graphs",
-    "test_dedup_similarity.py::test_ann_ivf_recall_and_structure",
-    "test_dedup_similarity.py::test_ann_ivfpq_recall_and_rank_structure",
-    "test_dedup_similarity.py::test_minhash_matches_exact_jaccard_on_corpus",
-    "test_dedup_similarity.py::test_near_dup_blocked_subset_of_exact",
-    "test_entry_contract.py::test_every_registered_query_analyzes",
-    "test_flagship_pipeline.py::test_flagship_approve_all",
-    "test_flagship_pipeline.py::test_flagship_decline_third_stops",
-    "test_flagship_pipeline.py::test_flagship_regenerate_third_image",
-    "test_oracle_type_parity.py::test_spark_duckdb_type_classes_match",
-    "test_pipeline_media_e2e.py::test_yt_short_end_to_end",
-    "test_pipeline_media_e2e.py::test_yt_short_real_media_end_to_end",
-    "test_plan_quality.py::TestCodegenHygiene::test_no_python_eval_in_hot_paths",
-    "test_plan_quality.py::TestEntryContract::test_every_query_compiles_at_tiny_sf",
-    "test_properties.py::TestRound6KernelProperties::test_containment_matches_python_model",
-    "test_round6_queries.py::TestDecontaminateMinhash::test_match_perms_bounded_and_self_excluded",
-    "test_round6_queries.py::TestDecontaminateMinhash::test_plan_benchmark_side_is_broadcast",
-    "test_round6_queries.py::TestKmvSetIntersection::test_sketch_estimates_track_exact",
-    "test_round6_queries.py::TestLshParameterSweep::test_s_curve_monotonicity",
-    "test_round9_queries.py::TestDocsBroadcastSwap::test_shuffle_path_parity_with_broadcast_path",
-    "test_round9_queries.py::TestGlobalSuffixUnit::test_equal_single_token_docs_hit_eq_branch",
-    "test_round9_queries.py::TestGlobalSuffixUnit::test_long_shared_run_crosses_walk_levels",
-    "test_round9_queries.py::TestGlobalSuffixUnit::test_matches_python_all_pairs_model",
-    "test_round9_queries.py::TestGlobalSuffixUnit::test_prefix_suffix_truncation_rule",
-    "test_round9_queries.py::TestLcpIntervalCensusUnit::test_boilerplate_plateau_pair",
-    "test_round9_queries.py::TestLcpIntervalCensusUnit::test_census_consistent_with_maximal_repeats",
-    "test_round9_queries.py::TestLcpIntervalCensusUnit::test_cross_partition_boundary_resolution",
-    "test_round9_queries.py::TestMaximalRepeatsUnit::test_candidate_handle_destroyed_before_return",
-    "test_round9_queries.py::TestMaximalRepeatsUnit::test_min_len_below_base_now_supported",
-    "test_round9_queries.py::TestMaximalRepeatsUnit::test_self_overlapping_repetition_and_params",
-    "test_round9_queries.py::TestWeightedJaccardUnit::test_multiset_semantics_diverge_from_set_jaccard",
-    "test_shipped_pipelines.py::test_motivational_quote_pipeline",
-    "test_shipped_pipelines.py::test_podcast_summary_pipeline",
-    "test_streaming.py::test_bootstrap_stream_matches_batch_fold",
-    "test_streaming.py::test_greedy_coverage_fast_path_carries_over",
-    "test_streaming.py::test_greedy_coverage_replay_is_idempotent",
-    "test_streaming.py::test_greedy_coverage_stream_matches_batch",
-    "test_streaming.py::test_merkle_sink_end_to_end",
-    "test_streaming.py::test_merkle_tree_stream_matches_batch",
-    "test_streaming.py::test_prefix_index_replay_is_idempotent",
-    "test_streaming.py::test_prefix_index_stream_matches_batch",
-    "test_streaming.py::test_prefix_index_weighted_stream_matches_batch",
-    "test_streaming.py::test_windowed_hll_stream_matches_batch",
-    "test_telegram.py::test_regenerated_review_is_delivered_again",
-}
-
-
-@pytest.hookimpl(tryfirst=True)  # see every item, before -k/-m deselect
-def pytest_collection_modifyitems(config, items):
-    matched, files = set(), set()
-    for item in items:
-        nid = item.nodeid.split("tests/")[-1]
-        files.add(nid.split("::")[0])
-        if nid in _SLOWSUITE:
-            matched.add(nid)
-            item.add_marker(pytest.mark.slowsuite)
-    # Fail closed: an entry whose file was collected whole but that matched
-    # no item is stale (renamed, moved or parametrized test) and would let
-    # a long-haul test back into the default run. Files collected only in
-    # part (a node id on the command line) or not at all are not judged.
-    partial = {os.path.basename(a.split("::")[0]) for a in config.args if "::" in a}
-    stale = sorted(
-        e for e in _SLOWSUITE - matched if e.split("::")[0] in files - partial
-    )
-    if stale:
-        raise pytest.UsageError(
-            "_SLOWSUITE entries match no collected test: " + ", ".join(stale)
-        )
-
 
 @pytest.fixture(scope="session")
 def spark():

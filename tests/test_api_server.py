@@ -93,6 +93,7 @@ def test_read_endpoints(api):
     assert _get(base, "/workers")["workers"][0]["id"] == "spark-driver"
 
 
+@pytest.mark.slowsuite
 def test_start_async_and_poll(api):
     base, service = api
     status, resp = _post(
@@ -107,6 +108,7 @@ def test_start_async_and_poll(api):
     assert [b["block_slug"] for b in proc["blocks"]] == ["src", "wrap", "join"]
 
 
+@pytest.mark.slowsuite
 def test_resume_with_target_index(api):
     base, service = api
     _, resp = _post(
@@ -170,6 +172,7 @@ def test_resume_rejects_malformed_block(api, block):
     assert service.processings("wrap-join", "p1") == []
 
 
+@pytest.mark.slowsuite
 def test_resume_of_a_running_processing_is_409(api, monkeypatch):
     # a second run of one processing would write the same stages: the
     # resume is refused while the first run is alive, and that run
@@ -432,6 +435,7 @@ def _moderated_service(spark, tmp_path, **kwargs):
     return PipelineService(runner, {"moderated": moderated_spec()}, **kwargs)
 
 
+@pytest.mark.slowsuite
 def test_decision_stream_unblocks_waiting_moderation(spark, tmp_path):
     # a decision file appended mid-run unblocks a processing parked in
     # waiting_moderation: streaming JSON source → foreachBatch fold →
@@ -469,6 +473,7 @@ def test_decision_stream_unblocks_waiting_moderation(spark, tmp_path):
         service.stop_decision_stream()
 
 
+@pytest.mark.slowsuite
 def test_parked_run_resumes_at_its_gate(spark, tmp_path):
     # an approval resumes a parked run at its gate: every earlier stage is
     # rehydrated from the lake, never recomputed — also when the run had
@@ -515,6 +520,7 @@ def test_decisions_resume_only_their_processing(spark, tmp_path):
     assert service.wait(b, 120.0) and _pending(_status(service, b))
 
 
+@pytest.mark.slowsuite
 def test_regenerate_then_approve_ships_the_reviewed_content(spark, tmp_path, monkeypatch):
     # regenerate → approve computes wrap twice (the first run, then the
     # regeneration), and what ships is what the regenerated review showed
@@ -576,6 +582,7 @@ def test_restart_failure_cap_and_deferred_retry(spark, tmp_path):
     _await_settled(service, pid2, lambda st: st["error"] is None, "gated")
 
 
+@pytest.mark.slowsuite
 def test_concurrent_decisions_resume_each_parked_run_once(spark, tmp_path):
     # decision batches racing each other for the same parked runs: each
     # run is claimed and resumed exactly once (a lost claim would resume

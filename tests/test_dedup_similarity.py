@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipelines_worker_spark.operators import dedup, similarity
@@ -36,6 +37,7 @@ def test_verify_jaccard_filters_unrounded(spark):
     assert rows[0].asDict().keys() == {"r1", "r2", "jaccard"}
 
 
+@pytest.mark.slowsuite
 def test_minhash_matches_exact_jaccard_on_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     exact = {
@@ -132,6 +134,7 @@ def test_ann_lsh_recall_floor(spark, sf_dir):
         assert ranks == list(range(1, len(rows) + 1))
 
 
+@pytest.mark.slowsuite
 def test_ann_ivf_recall_and_structure(spark, sf_dir):
     """IVF probes n_probe/n_cells of the corpus; with the planted near-dup
     structure the true nearest neighbor lands in a probed cell often enough
@@ -167,6 +170,7 @@ def test_embedding_near_dup_symmetric_free(spark):
     assert [(r.id1, r.id2) for r in out] == [(0, 1)]
 
 
+@pytest.mark.slowsuite
 def test_near_dup_blocked_subset_of_exact(spark, sf_dir):
     """Blocked LSH near-dup emits a subset of the exact all-pairs set,
     with sims identical on shared pairs (same strict-fold arithmetic)."""
@@ -212,6 +216,7 @@ def test_near_dup_blocked_exact_collapse_guarantee(spark):
     assert not any(30 in p for p in out)
 
 
+@pytest.mark.slowsuite
 def test_ann_ivfpq_recall_and_rank_structure(spark, sf_dir):
     """IVF-PQ adds lossy ADC shortlisting on top of IVF probing; the exact
     re-rank stage restores true cosines for whatever survives the
@@ -411,6 +416,7 @@ class TestLogStarCC:
                     changed = True
         return comp
 
+    @pytest.mark.slowsuite
     def test_logstar_matches_union_find_on_random_graphs(self, spark):
         import random
 
@@ -449,6 +455,7 @@ class TestLogStarCC:
         got = {r.node: r.component for r in connected_components_logstar(df).collect()}
         assert got == {i: 0 for i in range(61)}
 
+    @pytest.mark.slowsuite
     def test_logstar_equals_propagation_on_lsh_pairs(self, spark, sf_dir):
         from data_pipelines_worker_spark.operators import dedup
         from data_pipelines_worker_spark.operators.graph import (

@@ -65,6 +65,7 @@ def test_rotation_changed_head_then_stalest_first():
     assert tail == sorted(tail, key=lambda n: (last.get(n, 0), n))
 
 
+@pytest.mark.slowsuite
 def test_every_registered_query_analyzes(spark, sf_dir):
     """Catalyst analysis (schema resolution) must succeed for every
     registered query — catches unresolved columns/ambiguous joins at

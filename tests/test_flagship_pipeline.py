@@ -165,6 +165,7 @@ def test_flagship_spec_shape(spec):
     assert "get-event-images" in fan_outs and "add-text-to-event-images" in fan_outs
 
 
+@pytest.mark.slowsuite
 def test_flagship_approve_all(spark, tmp_path, server, client, spec):
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
     res = runner.run(spec, processing_id=PID, decisions=_approve_all(spark))
@@ -248,6 +249,7 @@ def test_flagship_approve_all(spark, tmp_path, server, client, spec):
     assert send["text"] == EXPECTED_CAPTION
 
 
+@pytest.mark.slowsuite
 def test_flagship_decline_third_stops(spark, tmp_path, server, client, spec):
     rows = [(TEXT_GATE, 0, "approve", 100, 1, None)] + [
         (IMG_GATE, i, "approve" if i != 2 else "decline", 101, 10 + i, None)
@@ -266,6 +268,7 @@ def test_flagship_decline_third_stops(spark, tmp_path, server, client, spec):
     assert acts == {0: "approve", 1: "approve", 2: "decline"}
 
 
+@pytest.mark.slowsuite
 def test_flagship_regenerate_third_image(spark, tmp_path, server, client, spec):
     first = [(TEXT_GATE, 0, "approve", 100, 1, None)] + [
         (

@@ -155,6 +155,50 @@ def test_no_stage_goes_through_dataframe_writer(spark, tmp_path):
     assert res.output.first().payload_str == "[a]+[b]+[c]"
 
 
+def test_telegram_delivery_job_budget(spark, tmp_path):
+    # one delivery of four review rows with a bound image stage: the sink
+    # stage and the image bytes of the claimed indices are each collected
+    # in one job and the sends run on the driver, so no Python stage
+    from data_pipelines_worker_spark.operators.telegram import TelegramTransport
+    from data_pipelines_worker_spark.sources.stage_store import STAGE_SCHEMA, write_stage
+    from tests.test_telegram import MockTelegram, _client
+
+    spec = PipelineSpec(
+        slug="budget-telegram",
+        blocks=[
+            BlockSpec(
+                id="send_moderation_tg",
+                slug="review",
+                bindings=[InputBinding(param="image", origin="img")],
+            ),
+        ],
+    )
+    runner = PipelineRunner(spark, str(tmp_path))
+    reviews = [(i, i, json.dumps({"data": f"x{i}", "media": "image"}), None, None)
+               for i in range(4)]
+    images = [(i, 0, None, b"\x89PNGfake" + bytes([i]), "image/png") for i in range(4)]
+    for slug, rows in (("review", reviews), ("img", images)):
+        write_stage(
+            spark.createDataFrame(rows, STAGE_SCHEMA),
+            runner.store_root, "budget-telegram", "p1", slug,
+        )
+    mock = MockTelegram()
+    try:
+        transport = TelegramTransport(_client(mock), group_id=42)
+        sent = _run_in_group(
+            spark,
+            "budget-telegram",
+            lambda: transport.deliver_processing(runner, spec, "p1"),
+        )
+        jobs, stages = _group_stages(spark, "budget-telegram")
+        assert jobs <= 2, (jobs, stages)
+        assert not [s for s in stages if s["python"]], stages
+        assert sent == 4
+        assert [m["method"] for m in mock.messages] == ["sendPhoto"] * 4
+    finally:
+        mock.close()
+
+
 def _python_tasks(stages: list[dict]) -> list[int]:
     return [s["tasks"] for s in stages if s["python"]]
 

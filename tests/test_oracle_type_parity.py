@@ -125,6 +125,7 @@ def test_no_banned_duckdb_output_types(duck, registry):
     )
 
 
+@pytest.mark.slowsuite
 def test_spark_duckdb_type_classes_match(spark, duck, registry):
     """Per column, Spark and DuckDB output types must stringify alike."""
     qs, oracles = registry

@@ -161,6 +161,7 @@ def yt_short_spec() -> PipelineSpec:
     )
 
 
+@pytest.mark.slowsuite
 def test_yt_short_end_to_end(spark, tmp_path, client):
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)
     res = runner.run(yt_short_spec())
@@ -374,6 +375,7 @@ def real_client():
     srv.shutdown()
 
 
+@pytest.mark.slowsuite
 def test_yt_short_real_media_end_to_end(spark, tmp_path, real_client):
     # the same flagship spec over genuine codec bytes: PNG through the
     # zlib+numpy image kernels, PCM WAV through the wave codec; only the

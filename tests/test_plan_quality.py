@@ -222,6 +222,7 @@ class TestCodegenHygiene:
         "c4_line_filters",
     ]
 
+    @pytest.mark.slowsuite
     def test_no_python_eval_in_hot_paths(self, spark, registry):
         offenders = []
         for name in self.UDF_FREE:
@@ -268,6 +269,7 @@ class TestCodegenHygiene:
 
 
 class TestEntryContract:
+    @pytest.mark.slowsuite
     def test_every_query_compiles_at_tiny_sf(self, spark, registry):
         # every registered query must at least produce an analyzable plan
         for name, (fn, _o) in registry.items():

@@ -411,6 +411,7 @@ class TestRound6KernelProperties:
 
     @SPARK_FAST
     @given(texts=TEXTS)
+    @pytest.mark.slowsuite
     def test_containment_matches_python_model(self, spark, texts):
         from data_pipelines_worker_spark.operators import dedup
         from data_pipelines_worker_spark.session import local_df

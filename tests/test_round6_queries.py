@@ -52,6 +52,7 @@ class TestEntityResolution:
 
 
 class TestDecontaminateMinhash:
+    @pytest.mark.slowsuite
     def test_match_perms_bounded_and_self_excluded(self, spark, registry):
         rows = q(registry, "decontaminate_minhash", spark).collect()
         assert rows, "corpus side must be non-empty"
@@ -61,6 +62,7 @@ class TestDecontaminateMinhash:
             r.contaminated == (1 if r.max_match_perms >= 32 else 0) for r in rows
         )
 
+    @pytest.mark.slowsuite
     def test_plan_benchmark_side_is_broadcast(self, spark, registry):
         # the deliberate BNLJ: inner side is the broadcast-sized benchmark
         # (a band pre-filter would break the exact >=32-of-64 contract)
@@ -118,6 +120,7 @@ class TestCubeSegmentMetrics:
 
 
 class TestKmvSetIntersection:
+    @pytest.mark.slowsuite
     def test_sketch_estimates_track_exact(self, spark, registry):
         rows = q(registry, "kmv_set_intersection", spark).collect()
         assert len(rows) == 10  # C(5,2) event-type pairs
@@ -477,6 +480,7 @@ class TestBootstrapCI:
 
 
 class TestLshParameterSweep:
+    @pytest.mark.slowsuite
     def test_s_curve_monotonicity(self, spark, registry):
         """More bands (fewer rows per band) can only widen the candidate
         net: n_candidates and n_caught are non-decreasing in bands, and

@@ -139,18 +139,21 @@ class TestGlobalSuffixUnit:
         got = _span_stats(spark, [(1, "x y z w x y z w q")], threshold=3)
         assert got == {1: (4, 8, 4)}
 
+    @pytest.mark.slowsuite
     def test_equal_single_token_docs_hit_eq_branch(self, spark):
         # equal suffixes shorter than BASE: lcp = min length via the
         # equal-top-rank branch (a truncated base-slice tie), not the walk
         got = _span_stats(spark, [(1, "q"), (2, "q"), (3, "zz")])
         assert got == {1: (0, 0, 1), 2: (0, 0, 1), 3: (0, 0, 0)}
 
+    @pytest.mark.slowsuite
     def test_prefix_suffix_truncation_rule(self, spark):
         # 'a b' is a strict prefix of 'a b c': lcp 2 exactly (the
         # missing-partner sentinel must not over- or under-count)
         got = _span_stats(spark, [(1, "a b"), (2, "a b c")])
         assert got[1] == (0, 0, 2) and got[2] == (0, 0, 2)
 
+    @pytest.mark.slowsuite
     def test_long_shared_run_crosses_walk_levels(self, spark):
         # a 19-token shared run: 19 = 16 (level accept) + 3 (sub-BASE
         # residual) — exercises the walk and the residual count-while
@@ -158,6 +161,7 @@ class TestGlobalSuffixUnit:
         got = _span_stats(spark, [(1, run + " p q"), (2, run + " r s")])
         assert got[1][2] == 19 and got[2][2] == 19
 
+    @pytest.mark.slowsuite
     def test_matches_python_all_pairs_model(self, spark):
         # randomized small corpus vs the O(n^2) all-pairs model: pins the
         # nearest-neighbor-lemma reduction AND every branch at once
@@ -175,6 +179,7 @@ class TestGlobalSuffixUnit:
 
 
 class TestWeightedJaccardUnit:
+    @pytest.mark.slowsuite
     def test_multiset_semantics_diverge_from_set_jaccard(self, spark):
         # A = phrase x3, C = phrase x2: identical shingle SETS (set-J =
         # 1.0) but J_w = sum(min)/sum(max) = 4/7 — the weighted join must
@@ -265,6 +270,7 @@ class TestMaximalRepeatsUnit:
             ("c d e f g h i j", 8, 2, 2),
         }
 
+    @pytest.mark.slowsuite
     def test_self_overlapping_repetition_and_params(self, spark):
         # one doc = an 8-token phrase x3: occurrences overlap; counts
         # must be per-POSITION (suffix-array semantics), and min_len /
@@ -277,6 +283,7 @@ class TestMaximalRepeatsUnit:
         top = max(_repeats(spark, pairs), key=lambda r: r[1])
         assert top == (" ".join([phrase] * 2), 16, 2, 1)
 
+    @pytest.mark.slowsuite
     def test_min_len_below_base_now_supported(self, spark):
         # the r10 class-key form rejected min_len < 8 (node identity
         # keyed on the level-8 rank table); the r11 ANSV-interval form
@@ -292,6 +299,7 @@ class TestMaximalRepeatsUnit:
         with _pytest.raises(ValueError, match="min_len"):
             _repeats(spark, [(1, "a b c a b c")], 0, 5)
 
+    @pytest.mark.slowsuite
     def test_candidate_handle_destroyed_before_return(self, spark, monkeypatch):
         # ADVICE r11 + the r12 ship gate: the ANSV candidate handle
         # must be reclaimed as soon as the node checkpoint exists — a
@@ -459,6 +467,7 @@ class TestLcpIntervalCensusUnit:
         pairs = [(1, " ".join([phrase] * 3))]
         assert _census(spark, pairs) == _census_model(pairs, 8)
 
+    @pytest.mark.slowsuite
     def test_cross_partition_boundary_resolution(self, spark):
         # tiny corpora spread over defaultParallelism range partitions:
         # nearly every edge's PSV/NSV crosses a partition boundary, so
@@ -484,6 +493,7 @@ class TestLcpIntervalCensusUnit:
         pairs = [(1, " ".join(["dup"] * 60))]
         assert _census(spark, pairs) == _census_model(pairs, 8)
 
+    @pytest.mark.slowsuite
     def test_boilerplate_plateau_pair(self, spark):
         # constant-LCP plateaus: the same long boilerplate block
         # repeated across docs produces equal-LCP runs that pend in
@@ -496,6 +506,7 @@ class TestLcpIntervalCensusUnit:
         for t in (2, 8):
             assert _census(spark, pairs, t) == _census_model(pairs, t), t
 
+    @pytest.mark.slowsuite
     def test_census_consistent_with_maximal_repeats(self, spark):
         # cross-operator invariant: the census's n_nodes at the MAXIMUM
         # length must equal the number of top-length rows the top-N
@@ -609,6 +620,7 @@ class TestAnsvSweepUnit:
 
 
 class TestDocsBroadcastSwap:
+    @pytest.mark.slowsuite
     def test_shuffle_path_parity_with_broadcast_path(self, spark, monkeypatch):
         # the 100 TB branch (VERDICT r10 #3): above _DOCS_BCAST_MAX_TOKENS
         # the walk's sub-BASE residual joins swap from the whole-corpus

@@ -141,6 +141,7 @@ def load(reference_pipelines):
     return _load
 
 
+@pytest.mark.slowsuite
 def test_podcast_summary_pipeline(spark, tmp_path, server, client, load):
     server.mode = "podcast"
     spec = load("openai-podcast-summary")
@@ -185,6 +186,7 @@ def test_mux_subtitles_pipeline(spark, tmp_path, server, client, load):
     assert M.fvid_meta(final)[3] == 40  # frames untouched by mux
 
 
+@pytest.mark.slowsuite
 def test_motivational_quote_pipeline(spark, tmp_path, server, client, load):
     spec = load("openai-motivational-quote-to-video")
     runner = PipelineRunner(spark, str(tmp_path / "stages"), openai_client=client)

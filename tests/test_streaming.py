@@ -479,6 +479,7 @@ def test_block_dedup_stream_state_across_triggers(spark, tmp_path):
     assert got == {(5, 0), (5, 1), (2, 1)}
 
 
+@pytest.mark.slowsuite
 def test_windowed_hll_stream_matches_batch(spark, tmp_path, sf_dir):
     # the HLL register fold is max-only (idempotent/commutative), so the
     # streamed sketch must equal the batch sketch bit-for-bit regardless
@@ -1179,6 +1180,7 @@ def test_top_p_selection_replay_is_idempotent(spark, tmp_path, sf_dir):
     assert after == before
 
 
+@pytest.mark.slowsuite
 def test_bootstrap_stream_matches_batch_fold(spark, tmp_path, sf_dir):
     # the 16-replicate Poisson fold is additive, so the streaming windowed
     # aggregation must equal the same function run as a batch frame —
@@ -1410,6 +1412,7 @@ def test_top_p_selection_prune_keeps_previous_version(spark, tmp_path, sf_dir):
     assert versions == ["v1", "v2"]  # current + one grace version, v0 pruned
 
 
+@pytest.mark.slowsuite
 def test_greedy_coverage_stream_matches_batch(spark, tmp_path, sf_dir):
     # streaming manifest maintenance (gram-store append + CELF upper-
     # bound gate + suffix recompute from versioned covered sets) ≡ the
@@ -1447,6 +1450,7 @@ def test_greedy_coverage_stream_matches_batch(spark, tmp_path, sf_dir):
     assert len(batch) == 3
 
 
+@pytest.mark.slowsuite
 def test_greedy_coverage_fast_path_carries_over(spark, tmp_path, sf_dir):
     # a batch whose best new doc cannot beat any incumbent gain must NOT
     # publish a new version (the CELF gate short-circuits); the manifest
@@ -1485,6 +1489,7 @@ def test_greedy_coverage_fast_path_carries_over(spark, tmp_path, sf_dir):
     }
 
 
+@pytest.mark.slowsuite
 def test_greedy_coverage_replay_is_idempotent(spark, tmp_path, sf_dir):
     from data_pipelines_worker_spark.session import load_table
     from data_pipelines_worker_spark.streaming.coverage import (
@@ -1522,6 +1527,7 @@ def test_greedy_coverage_versioned_covered_sets(spark, tmp_path, sf_dir):
         assert covered.count() == r.covered_after
 
 
+@pytest.mark.slowsuite
 def test_merkle_tree_stream_matches_batch(spark, tmp_path, sf_dir):
     # incremental path recompute over 3 micro-batches (appends + an
     # upsert) must land on exactly the batch digest-tree of the final
@@ -1584,6 +1590,7 @@ def test_merkle_replayed_batch_is_noop(spark, tmp_path, sf_dir):
     assert after == before
 
 
+@pytest.mark.slowsuite
 def test_merkle_sink_end_to_end(spark, tmp_path, sf_dir):
     # real Structured Streaming run (file source, availableNow) lands on
     # the batch tree of the whole corpus
@@ -1619,6 +1626,7 @@ def test_merkle_sink_end_to_end(spark, tmp_path, sf_dir):
 # --- streaming prefix-filter index (round 9) --------------------------------
 
 
+@pytest.mark.slowsuite
 def test_prefix_index_stream_matches_batch(spark, tmp_path, sf_dir):
     # cumulative streamed pair set == the batch AllPairs operator over the
     # same final corpus: the one-sided prefix probe (probe prefix vs FULL
@@ -1681,6 +1689,7 @@ def test_prefix_index_cross_batch_pair_under_df_drift(spark, tmp_path):
     assert (1, 2) in got
 
 
+@pytest.mark.slowsuite
 def test_prefix_index_replay_is_idempotent(spark, tmp_path, sf_dir):
     # foreachBatch re-delivers the last batch after a crash anywhere in
     # merge_batch: every write is an idempotent batch=<id> overwrite and
@@ -1709,6 +1718,7 @@ def test_prefix_index_replay_is_idempotent(spark, tmp_path, sf_dir):
     } == df_first
 
 
+@pytest.mark.slowsuite
 def test_prefix_index_weighted_stream_matches_batch(spark, tmp_path, sf_dir):
     # the index machinery is signature-agnostic: streamed over
     # multiplicity-EXPANDED signatures it maintains the exact WEIGHTED

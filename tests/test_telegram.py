@@ -19,6 +19,7 @@ from data_pipelines_worker_spark.operators.telegram import (
     ModerationPoller,
     TelegramClient,
     TelegramTransport,
+    _resolve_chat,
     generate_message,
     generate_review_message,
     parse_review_message,
@@ -337,10 +338,10 @@ def test_transport_chat_resolution_placeholder_default(mock_tg):
     # group_id must win over the transport default
     client = _client(mock_tg)
     transport = TelegramTransport(client, group_id=42)
-    assert transport._chat_for({"group_id": "0"}) == 42
-    assert transport._chat_for({}) == 42
-    assert transport._chat_for({"group_id": ""}) == 42
-    assert transport._chat_for({"group_id": "-100123"}) == "-100123"
+    assert _resolve_chat(transport.group_id, {"group_id": "0"}) == 42
+    assert _resolve_chat(transport.group_id, {}) == 42
+    assert _resolve_chat(transport.group_id, {"group_id": ""}) == 42
+    assert _resolve_chat(transport.group_id, {"group_id": "-100123"}) == "-100123"
 
 
 def test_delivery_failure_schedules_backoff_retry(mock_tg, tmp_path, spark):
@@ -440,6 +441,60 @@ def test_partial_send_failure_strands_nothing(spark, tmp_path, mock_tg):
     assert parse_review_message(mock_tg.messages[1]["text"])["index"] == 1
 
 
+def test_unreadable_media_stage_fails_delivery(spark, tmp_path, mock_tg):
+    # a bound image stage that exists but cannot be read is not taken for
+    # an absent one: the delivery raises before any send and releases its
+    # claims, so once the file is readable again the retry sends every
+    # review as a photo (not as plain text, with the claims kept)
+    from pathlib import Path
+
+    from data_pipelines_worker_spark.plans.compiler import (
+        BlockSpec,
+        InputBinding,
+        PipelineRunner,
+        PipelineSpec,
+    )
+    from data_pipelines_worker_spark.sources.stage_store import (
+        STAGE_SCHEMA,
+        stage_path,
+        write_stage,
+    )
+
+    spec = PipelineSpec(
+        slug="tgunreadable",
+        blocks=[
+            BlockSpec(
+                id="send_moderation_tg",
+                slug="review",
+                bindings=[InputBinding(param="image", origin="imgstage")],
+            ),
+        ],
+    )
+    runner = PipelineRunner(spark, str(tmp_path / "stages"))
+    reviews = [(i, i, json.dumps({"data": f"x{i}", "media": "image"}), None, None)
+               for i in range(3)]
+    images = [(i, 0, None, b"\x89PNGfake" + bytes([i]), "image/png") for i in range(3)]
+    for slug, rows in (("review", reviews), ("imgstage", images)):
+        write_stage(
+            spark.createDataFrame(rows, STAGE_SCHEMA),
+            runner.store_root, "tgunreadable", "p1", slug,
+        )
+    part = Path(stage_path(runner.store_root, "tgunreadable", "p1", "imgstage"),
+                "part-00000.parquet")
+    good = part.read_bytes()
+    part.write_bytes(b"not a parquet file")
+
+    transport = TelegramTransport(_client(mock_tg), group_id=42)
+    with pytest.raises(Exception):
+        transport.deliver_processing(runner, spec, "p1")
+    assert mock_tg.messages == [] and transport.sent == []
+
+    part.write_bytes(good)
+    assert transport.deliver_processing(runner, spec, "p1") == 3
+    assert [m["method"] for m in mock_tg.messages] == ["sendPhoto"] * 3
+    assert [s["input_index"] for s in transport.sent] == [0, 1, 2]
+
+
 def test_delivery_error_never_pollutes_run_errors(spark, tmp_path, mock_tg):
     # ADVICE r4 #2: delivery failures are reported ONLY via the status
     # delivery_error field; a run with no pipeline error must not inherit
@@ -478,6 +533,7 @@ def test_delivery_error_never_pollutes_run_errors(spark, tmp_path, mock_tg):
     assert st["error"] is None
 
 
+@pytest.mark.slowsuite
 def test_regenerated_review_is_delivered_again(spark, tmp_path, mock_tg, monkeypatch):
     # a regenerate rewrites one review; the transport sends that review
     # again (the poller stripped the old keyboard) and nothing else, and
